@@ -108,11 +108,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if app_id not in _SESSION_CONFED:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        # Arrow for driver transfers (guide §6): toPandas /
-        # createDataFrame(pandas) ride Arrow instead of pickled rows
-        # — the CC driver path and every bounded training collect
-        # depend on it; session.py sets it for our own sessions, a
-        # bare driver session arrives here without it.
+        # Arrow for driver transfers (guide §6): toPandas rides Arrow
+        # instead of pickled rows — the CC driver path and every
+        # bounded training collect depend on it; session.py sets it
+        # for our own sessions, a session built with no custom conf
+        # arrives here without it. (Driver rows going the other way
+        # use local_frame, which needs no conf.)
         spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
         # PySpark 4 call-site capture + JVM function-handle resolution
         # both tax every DataFrame/Column API call; see

@@ -7,6 +7,11 @@ threshold expressions) -> Ban_settings_t rows -> hostgroup REST sink
 with overwrite semantics. The reference issues one ClickHouse query per
 network sequentially; this plan computes every network in a single
 distributed pass (see plans.baseline).
+
+The job runs on every cron tick at a size where fixed costs dominate,
+so each step keeps them low: the networks list is an Arrow-built
+``LocalRelation`` (no Python worker), the plan is built with few py4j
+round trips, and the sink collects only the columns it publishes.
 """
 
 from __future__ import annotations

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..local_frame import local_frame
 from .similarity import (
     _ivf_assign_relation,
     _ivf_probe_relation,
@@ -76,14 +77,13 @@ def ann_index_write(
     projection); the shuffle-free write lays postings out by cell so
     serves prune to the probed directories."""
     spark = embeddings.sparkSession
-    # repartition(1), NOT coalesce(1): coalescing a parallelized
-    # local relation into one task measured 5.2 s vs 0.6 s for the
-    # same 16-row write (single-task evaluation of all 32 empty
-    # parent slices); the 1-row shuffle is free
-    spark.createDataFrame(
+    # one centroids file: the centroids are a LocalRelation, so
+    # coalesce(1) is one task over the driver's rows, with no shuffle
+    local_frame(
+        spark,
         [(int(cid), [float(x) for x in cv]) for cid, cv in centroids],
         "cid long, cvec array<float>",
-    ).repartition(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     # repartition by cell before the partitioned write: one writer
     # (and one file) per cell instead of n_input_partitions x K tiny
     # files — the clustering a 100 TB build wants anyway (each cell's

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import tokens
+from ..local_frame import local_frame
 
 __all__ = [
     "bpe_vocab",
@@ -197,7 +198,8 @@ def _bpe_train_driver(
         StructType,
     )
 
-    state = spark.createDataFrame(
+    state = local_frame(
+        spark,
         [(w, c, syms) for w, c, syms in words],
         StructType(
             [

@@ -28,6 +28,8 @@ import os as _os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..local_frame import columns_frame, local_frame
+
 # rounds used by the most recent connected_components call — the
 # pointer-jumping regression signal (tests pin the log-depth bound)
 LAST_ROUNDS: int = 0
@@ -55,8 +57,6 @@ def _cc_driver(spark, pdf, a_type) -> DataFrame:
     Python loop (guide §4.2 applied to the driver itself; the old
     union-find walked 2 x |E| Python dict chains)."""
     import numpy as np
-    import pandas as pd
-
     from pyspark.sql.types import StructField, StructType
 
     schema = StructType(
@@ -66,7 +66,7 @@ def _cc_driver(spark, pdf, a_type) -> DataFrame:
         ]
     )
     if not len(pdf):
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     a = pdf["a"].to_numpy()
     b = pdf["b"].to_numpy()
     uniq, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
@@ -81,8 +81,7 @@ def _cc_driver(spark, pdf, a_type) -> DataFrame:
         lab = np.minimum(lab, lab[lab])  # pointer jump (path halving)
         if np.array_equal(lab, old):
             break
-    out = pd.DataFrame({"node": uniq, "cluster_id": uniq[lab]})
-    return spark.createDataFrame(out, schema)
+    return columns_frame(spark, [uniq, uniq[lab]], schema)
 
 
 def connected_components(

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..local_frame import local_frame
+
 # Hyperplane component for (plane p, dim d): pseudo-random signed value
 # from pure integer arithmetic — identical in Spark and any SQL oracle.
 _HP_MOD = 1_000_003
@@ -1744,7 +1746,8 @@ def ivf_cell_report(
         )
 
     spark = embeddings.sparkSession
-    cdf = spark.createDataFrame(
+    cdf = local_frame(
+        spark,
         [(int(cid), [float(x) for x in vec]) for cid, vec in centroids],
         f"cid int, cvec {embeddings.schema[vec_col].dataType.simpleString()}",
     )

@@ -21,6 +21,14 @@ sequential global-aggregate queries, one per network. Here the
 networks list is a broadcast dimension and the whole job is ONE
 range-join + groupBy pass over the fact table — one scan at any N,
 which is the shape that survives 100 TB.
+
+Fixed costs: the networks dimension is a ``LocalRelation``
+(``local_frame``), so no Python worker runs and the broadcast reads
+driver rows; the aggregates are SQL text (one py4j call each instead
+of one per Column node); thresholds and the name mangle are a single
+projection. Threshold expressions stay on the expression compiler:
+``expr/sqlgen.py`` renders govaluate as SQL for the oracles, not with
+Spark-exact semantics.
 """
 
 from __future__ import annotations
@@ -34,6 +42,7 @@ from pyspark.sql import functions as F
 
 from ..config import BaselineConfig
 from ..functions.ip import ip4_to_long, parse_cidr_py
+from ..local_frame import local_frame
 from ..operators.range_join import broadcast_range_join, bucketed_range_join
 
 log = logging.getLogger(__name__)
@@ -64,8 +73,8 @@ def networks_dataframe(spark: SparkSession, cidrs: list[str]) -> DataFrame:
             rows.append(parse_cidr_py(cidr))
         except ValueError as e:
             log.warning("skipping network %s: %s", cidr, e)
-    return spark.createDataFrame(
-        rows, "network string, start_long long, end_long long, masklen int"
+    return local_frame(
+        spark, rows, "network string, start_long long, end_long long, masklen int"
     )
 
 
@@ -115,7 +124,6 @@ def baseline_aggregate(
     """
     if agg not in ("avg", "max"):
         raise ValueError(f"unsupported aggregation {agg!r}")
-    agg_fn = F.avg if agg == "avg" else F.max
 
     # If the caller already carries a numeric ip column (common when
     # the fact table stores both forms), skip the dotted-quad parse —
@@ -127,8 +135,11 @@ def baseline_aggregate(
     join = bucketed_range_join if use_bucketed_join else broadcast_range_join
     joined = join(with_ip, networks, ip_col="_ip_long")
 
-    aggs = [F.count(F.lit(1)).alias("samples")] + [
-        F.floor(agg_fn(c)).cast("long").alias(c) for c in metric_cols
+    # SQL text: one py4j call per aggregate instead of one per Column
+    # node (count, lit, avg, floor, cast, alias)
+    aggs = [F.expr("count(1) AS samples")] + [
+        F.expr(f"CAST(floor({agg}(`{c}`)) AS BIGINT) AS `{c}`")
+        for c in metric_cols
     ]
     return (
         joined.groupBy("network")
@@ -136,7 +147,7 @@ def baseline_aggregate(
         # empty-slice filter (main.go:331-334); with an inner join,
         # zero-sample groups never appear, but keep the guard explicit
         # for outer-join callers.
-        .where(F.col("samples") > 0)
+        .where("samples > 0")
     )
 
 
@@ -182,12 +193,11 @@ def compile_channel_expressions(sources: dict[str, str]) -> dict[str, Expression
     return out
 
 
-def apply_thresholds(
-    aggregated: DataFrame,
-    expressions: dict[str, ExpressionFn],
-    channels: tuple[ThresholdChannel, ...] = REFERENCE_CHANNELS,
-) -> DataFrame:
-    """Apply per-channel threshold expressions.
+def threshold_columns(
+    columns: list[str], expressions: dict[str, ExpressionFn]
+) -> dict[str, Column]:
+    """Per-channel threshold and ban-flag columns, in output order, for
+    a frame with ``columns``.
 
     ``expressions`` maps channel name -> fn(value Column) -> Column,
     mirroring the govaluate expression with parameter `value`
@@ -196,19 +206,19 @@ def apply_thresholds(
     expression -> uint truncation -> (bits only) /1024/1024 integer
     division -> zero deactivates the flag.
     """
-    out = aggregated
-    for ch in channels:
+    out: dict[str, Column] = {}
+    for ch in REFERENCE_CHANNELS:
         fn = expressions.get(ch.name)
-        if fn is None or ch.source_col not in aggregated.columns:
-            out = out.withColumn(ch.threshold_col, F.lit(0).cast("long"))
-            out = out.withColumn(ch.ban_col, F.lit(False))
+        if fn is None or ch.source_col not in columns:
+            out[ch.threshold_col] = F.lit(0).cast("long")
+            out[ch.ban_col] = F.lit(False)
             continue
         value = F.col(ch.source_col).cast("double")
         result = cast_to_uint(fn(value))
         if ch.mbps:
             result = F.floor(result / 1024 / 1024).cast("long")
-        out = out.withColumn(ch.threshold_col, result)
-        out = out.withColumn(ch.ban_col, F.col(ch.threshold_col) > 0)
+        out[ch.threshold_col] = result
+        out[ch.ban_col] = result > 0
     return out
 
 
@@ -216,6 +226,17 @@ def mangle_hostgroup_name(network: Column | str) -> Column:
     """Hostgroup name = network with '.' and '/' -> '_' (main.go:342-347)."""
     c = F.col(network) if isinstance(network, str) else network
     return F.translate(c, "./", "__")
+
+
+def with_hostgroup_columns(
+    aggregated: DataFrame, expressions: dict[str, ExpressionFn]
+) -> DataFrame:
+    """Thresholds plus ``hostgroup_name``: the sink's input, in one
+    projection over the per-network aggregates (a column that already
+    exists is replaced in place, like ``withColumn``)."""
+    cols = threshold_columns(aggregated.columns, expressions)
+    cols["hostgroup_name"] = mangle_hostgroup_name("network")
+    return aggregated.withColumns(cols)
 
 
 def generate_hostgroups(
@@ -243,7 +264,4 @@ def generate_hostgroups(
         host_col=host_col,
         use_bucketed_join=use_bucketed_join,
     )
-    with_thresholds = apply_thresholds(aggregated, expressions)
-    return with_thresholds.withColumn(
-        "hostgroup_name", mangle_hostgroup_name("network")
-    )
+    return with_hostgroup_columns(aggregated, expressions)

@@ -44,6 +44,7 @@ import re
 
 from pyspark.sql import DataFrame
 
+from ..local_frame import local_frame
 from .ch_insert import BLOCK_SIZE
 from .ch_sql import run_ch_query
 
@@ -363,7 +364,7 @@ def _run_create_schema(m, tables: dict[str, DataFrame]) -> DataFrame:
         if tables
         else SparkSession.getActiveSession()
     )
-    df = spark.createDataFrame([], ", ".join(fields))
+    df = local_frame(spark, [], ", ".join(fields))
     tables[name] = df
     return df
 
@@ -484,7 +485,7 @@ def run_ch_ddl(
                     if tables
                     else SparkSession.getActiveSession()
                 )
-                return spark.createDataFrame([], "name string")
+                return local_frame(spark, [], "name string")
             raise ValueError(f"unknown table {name!r}")
         tables[name] = tables[name].limit(0)
         return tables[name]
@@ -511,7 +512,8 @@ def run_ch_ddl(
         if name not in tables:
             raise ValueError(f"unknown table {name!r}")
         df = tables[name]
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [(c, _ch_type(t)) for c, t in df.dtypes],
             "name string, type string",
         )
@@ -528,9 +530,7 @@ def run_ch_ddl(
             f"CREATE TABLE {name}\n(\n    {cols}\n)\n"
             f"ENGINE = MergeTree\nORDER BY {df.columns[0]}"
         )
-        return df.sparkSession.createDataFrame(
-            [(stmt,)], "statement string"
-        )
+        return local_frame(df.sparkSession, [(stmt,)], "statement string")
     m = _KILL_RE.match(sql)
     if m is not None:
         qid = m.group(1)
@@ -544,8 +544,8 @@ def run_ch_ddl(
         # interrupt every job tagged with the id (control.job_group);
         # unknown ids are a no-op, like CH's empty kill result
         spark.sparkContext.cancelJobGroup(qid)
-        return spark.createDataFrame(
-            [(qid, "finished")], "query_id string, kill_status string"
+        return local_frame(
+            spark, [(qid, "finished")], "query_id string, kill_status string"
         )
     if _SHOW_RE.match(sql) is not None:
         from pyspark.sql import SparkSession
@@ -555,9 +555,7 @@ def run_ch_ddl(
             if tables
             else SparkSession.getActiveSession()
         )
-        return spark.createDataFrame(
-            [(n,) for n in sorted(tables)], "name string"
-        )
+        return local_frame(spark, [(n,) for n in sorted(tables)], "name string")
     if _SHOW_DBS_RE.match(sql) is not None:
         from pyspark.sql import SparkSession
 
@@ -566,7 +564,8 @@ def run_ch_ddl(
             if tables
             else SparkSession.getActiveSession()
         )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [("default",), ("fastnetmon",), ("system",)],
             "name string",
         )
@@ -603,7 +602,7 @@ def run_ch_ddl(
                 pass  # forward-unknown, like the CH driver
             SESSION_SETTINGS[name] = sval
         # CH acknowledges SET with an empty result
-        return spark.createDataFrame([], "name string")
+        return local_frame(spark, [], "name string")
     m = _USE_RE.match(sql)
     if m is not None:
         from pyspark.sql import SparkSession
@@ -615,7 +614,7 @@ def run_ch_ddl(
         )
         # the env is flat (db-qualified names already resolve), so
         # USE is CH's empty acknowledgment
-        return spark.createDataFrame([], "name string")
+        return local_frame(spark, [], "name string")
     m = _EXISTS_RE.match(sql)
     if m is not None:
         from pyspark.sql import SparkSession
@@ -626,8 +625,8 @@ def run_ch_ddl(
             if tables
             else SparkSession.getActiveSession()
         )
-        return spark.createDataFrame(
-            [(1 if name in tables else 0,)], "result int"
+        return local_frame(
+            spark, [(1 if name in tables else 0,)], "result int"
         )
     m = _OPTIMIZE_RE.match(sql)
     if m is not None:
@@ -666,7 +665,7 @@ def run_ch_ddl(
                 if tables
                 else SparkSession.getActiveSession()
             )
-            return spark.createDataFrame([], "name string")
+            return local_frame(spark, [], "name string")
         dropped = tables.pop(name)
         return dropped.limit(0)
     raise ValueError(f"cannot parse DDL statement: {sql[:60]!r}")

@@ -32,6 +32,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..local_frame import local_frame
 from .ch_sql import _literal_value, _Parser, _tokenize, run_ch_query
 
 # the driver's block-flush threshold (ch/bootstrap.go:96)
@@ -277,7 +278,8 @@ def run_ch_insert(
         str_schema = T.StructType(
             [T.StructField(f.name, T.StringType()) for f in schema.fields]
         )
-        sdf = spark.createDataFrame(
+        sdf = local_frame(
+            spark,
             [[None if v is None else str(v) for v in r] for r in literal_rows],
             str_schema,
         )

@@ -93,6 +93,7 @@ from ..functions.ch_compat import (
     is_combinator_agg,
     resolve_agg_combinator,
 )
+from ..local_frame import local_frame
 
 _AGGS = {
     "count", "avg", "max", "min", "sum", "any", "uniq", "uniqexact",
@@ -2311,7 +2312,8 @@ def run_ch_query(
         from pyspark.sql.types import StructField, StructType
 
         _sess = next(iter(tables.values())).sparkSession
-        probe = _sess.createDataFrame(
+        probe = local_frame(
+            _sess,
             [],
             StructType(
                 [StructField(n, t) for n, t in fields.items()]
@@ -2378,7 +2380,8 @@ def _run_ch_parsed(
         else:
             text = qe.optimizedPlan().toString()
         sess = rest.sparkSession
-        return sess.createDataFrame(
+        return local_frame(
+            sess,
             [(ln,) for ln in text.rstrip("\n").split("\n")],
             "explain string",
         )
@@ -3569,14 +3572,16 @@ def _exec_select(
                         F.lit(0).cast("short").alias("dummy")
                     )
                 elif lsub == "tables":
-                    sysdf = sess.createDataFrame(
+                    sysdf = local_frame(
+                        sess,
                         [("default", n, "MergeTree") for n in sorted(tables)],
                         "database string, name string, engine string",
                     )
                 elif lsub == "columns":
                     from .ch_ddl import _ch_type
 
-                    sysdf = sess.createDataFrame(
+                    sysdf = local_frame(
+                        sess,
                         [
                             ("default", t, c, _ch_type(ty))
                             for t in sorted(tables)

@@ -138,7 +138,7 @@ def _oracle() -> str:
         " AS {m}".format(m=m, et=et, scale=scale)
         for m, (et, scale) in METRIC_MAP.items()
     )
-    # threshold math mirrors apply_thresholds: value(double) -> expr ->
+    # threshold math mirrors threshold_columns: value(double) -> expr ->
     # cast_to_uint (NULL/negative -> 0, else floor) -> mbps intdiv.
     thr_cols = []
     for ch in CHANNELS:

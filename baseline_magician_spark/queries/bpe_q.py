@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_for_compute
 from ..functions.hashing import tokens_duckdb
+from ..local_frame import local_frame
 from ..operators.bpe import bpe_train, bpe_vocab, doc_token_counts
 from ..operators.packing import pack_sequences
 from ..registry import query
@@ -97,8 +98,8 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     run would persist and ship to every encode site."""
     docs = load_for_compute(spark, sf_dir, "documents")
     merges, _state = bpe_train(bpe_vocab(docs), N_MERGES)
-    return spark.createDataFrame(
-        merges, "rank int, a string, b string, pair_freq bigint"
+    return local_frame(
+        spark, merges, "rank int, a string, b string, pair_freq bigint"
     )
 
 

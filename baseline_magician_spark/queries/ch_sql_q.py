@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..local_frame import local_frame
 from ..plans.ch_bind import ExternalTable
 from ..plans.ch_sql import run_ch_query
 from ..registry import query
@@ -149,7 +150,7 @@ ORDER BY event_type
 def ch_sql_in_external(spark: SparkSession, sf_dir: str) -> DataFrame:
     ext = ExternalTable(
         "allowed_types",
-        spark.createDataFrame([("click",), ("error",)], ["event_type"]),
+        local_frame(spark, [("click",), ("error",)], "event_type string"),
     )
     return run_ch_query(
         _EXT_SQL,
@@ -979,7 +980,8 @@ def ch_sql_insert_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.ch_insert import run_ch_insert
 
     tabs = _tables(spark, sf_dir, "events")
-    tabs["summary"] = spark.createDataFrame(
+    tabs["summary"] = local_frame(
+        spark,
         [],
         T.StructType(
             [
@@ -1013,7 +1015,7 @@ def ch_sql_insert_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows, schema = back.collect(), back.schema
     finally:
         shutil.rmtree(d, ignore_errors=True)
-    return spark.createDataFrame(rows, schema).orderBy("event_type")
+    return local_frame(spark, rows, schema).orderBy("event_type")
 
 
 # TPC-H q17 as pasted CH text (round 4): the correlated SCALAR

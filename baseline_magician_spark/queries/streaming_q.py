@@ -15,6 +15,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..local_frame import local_frame
 from ..registry import query
 from ..streaming.baseline_stream import (
     ip_expr_from_user_id,
@@ -350,8 +351,8 @@ def streaming_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         (hour, etype, int(n), float(sv))
         for (hour, etype), (n, sv) in state.items()
     ]
-    return spark.createDataFrame(
-        rows, "hour timestamp, event_type string, n long, total_value double"
+    return local_frame(
+        spark, rows, "hour timestamp, event_type string, n long, total_value double"
     ).select(
         "hour", "event_type", "n",
         F.round(F.col("total_value"), 2).alias("total_value"),
@@ -430,7 +431,8 @@ def streaming_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(src, ignore_errors=True)
 
-    merged = spark.createDataFrame(
+    merged = local_frame(
+        spark,
         [(r, b, n) for (r, b), n in cells_state.items()],
         "row int, bucket long, cnt long",
     )

@@ -15,7 +15,11 @@ Contract reminders (driver compare):
 
 from __future__ import annotations
 
+import functools
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,88 +46,45 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 _loaded = False
 
 # The external correctness harness checks a bounded prefix of the
-# registration order (50 names per round). Names listed here surface
-# first so queries that still need a hard signal — never-checked
-# families, freshly-fixed rows, and operators added this round — land
-# inside the checked window; everything else follows in registration
-# order. Rotate per round.
-# Round-11 window. Union of rounds 1-10: all 233 registered names
-# checked at least once, latest check green, max lag 4. EDF order:
-# - ALL 38 lag-4 names (last checked r6) first — they reach the
-#   MAX_LAG bound when CORRECTNESS_r11 lands, so every one must be
-#   in this window (tests/test_rotation_staleness.py enforces this);
-# - the 7 rows whose code or oracle changed this round (hash-probe
-#   dtype narrowing + cache, rounded constraint predicates,
-#   cache-tracker unpersist wiring);
-# - new round-11 registrations as they register (BPE tokenizer
-#   family; the ANN-persist and PNG rows take the last two slots).
-# CAPACITY POLICY (round 10): the staleness bound is ceil(N/50),
-# DERIVED from the live registry — growing it accepts a slower
-# re-check cadence automatically, with a deliberate hard ceiling of
-# 8 windows (400 queries) gated in tests/test_rotation_staleness.py
-# (full policy rationale lives there, next to the arithmetic).
-_PRIORITY: tuple[str, ...] = (
-    # --- round-11 window (50 slots; EDF order) ---
-    # all 38 lag-4 names (last checked r6) — they hit the
-    # MAX_LAG = ceil(N/50) bound when CORRECTNESS_r11 lands
-    "ch_sql_ansi_spellings",
-    "ch_sql_arrayjoin_expression",
-    "ch_sql_association_stats",
-    "ch_sql_comma_join_analytic",
-    "ch_sql_dictget_lookup",
-    "ch_sql_file_read",
-    "ch_sql_interval_aggs",
-    "ch_sql_jaro_similarity",
-    "ch_sql_mutations",
-    "ch_sql_network_functions",
-    "ch_sql_numbers_rollup",
-    "ch_sql_retention_sequence",
-    "ch_sql_round6b_functions",
-    "ch_sql_round6e_functions",
-    "ch_sql_round6i_functions",
-    "ch_sql_stat_tests",
-    "ch_sql_state_merge_rollup",
-    "ch_sql_stats_aggregates",
-    "ch_sql_string_search",
-    "ch_sql_string_similarity",
-    "ch_sql_uniq_state_merge",
-    "ch_sql_url_time_functions",
-    "ch_sql_vector_functions",
-    "ch_sql_window_funnel",
-    "dedup_connected_components",
-    "dedup_duplicated_spans",
-    "dedup_embedding_cosine_pairs",
-    "ip_function_roundtrip",
-    "multimodal_y4m_decode",
-    "q10_returned_items",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q19_disjunctive_predicates",
-    "q7_volume_shipping",
-    "q8_national_market_share",
-    "q9_product_type_profit",
-    "streaming_cms_merge",
-    "streaming_funnel_levels",
-    # rows whose code or oracle changed in round 11: hash-probe
-    # dtype narrowing + resolution cache (ADVICE r10 medium /
-    # VERDICT task 5), constraint predicates on rounded metrics
-    # (ADVICE r10), cache-tracker unpersist wiring (ADVICE r10)
-    "ch_sql_cityhash64",
-    "ch_sql_numeric_hashes",
-    "ch_sql_hash_combine_chains",
-    "profile_constraint_checks",
-    "dedup_cdc_duplication_ratio",
-    "pipeline_training_export",
-    "pipeline_corpus_cleanup",
-    # new round-11 registrations (BPE tokenizer: iterated train,
-    # token-exact encode, exact-count packing — VERDICT task 1;
-    # ANN-persist + PNG rows claim the last 2 slots as they land)
-    "text_bpe_train",
-    "text_bpe_encode_counts",
-    "pipeline_packing_exact_tokens",
-    "similarity_ivf_serve_persisted",
-    "multimodal_png_decode",
-)
+# registration order (WINDOW_SLOTS names per round), recording each
+# round as CORRECTNESS_r<N>.json at the repo root. The window is
+# derived from those records, earliest deadline first: names never
+# checked, then the oldest last check, ties by name; everything else
+# follows in registration order. With no records present the order is
+# plain registration order. Recording a new round rotates the window.
+WINDOW_SLOTS = 50
+_RECORDS = Path(__file__).resolve().parent.parent
+
+
+def _last_checked() -> dict[str, int]:
+    """The newest recorded round that checked each query name."""
+    last: dict[str, int] = {}
+    for path in _RECORDS.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m is None:
+            continue
+        rnd = int(m.group(1))
+        for name in json.loads(path.read_text()):
+            last[name] = max(rnd, last.get(name, rnd))
+    return last
+
+
+@functools.cache
+def _priority() -> tuple[str, ...]:
+    _load()
+    last = _last_checked()
+    order = list(_QUERIES)
+    if last:
+        order.sort(key=lambda n: (last.get(n, -1), n))
+    return tuple(order[:WINDOW_SLOTS])
+
+
+def __getattr__(name: str) -> object:
+    # ``_PRIORITY`` is derived on first use: it needs every query module
+    # registered, and those modules import this one.
+    if name == "_PRIORITY":
+        return _priority()
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 def _load() -> None:
@@ -154,7 +115,7 @@ def _load() -> None:
 
 
 def _ordered(mapping: dict[str, _V]) -> dict[str, _V]:
-    head = {n: mapping[n] for n in _PRIORITY if n in mapping}
+    head = {n: mapping[n] for n in _priority() if n in mapping}
     head.update((n, v) for n, v in mapping.items() if n not in head)
     return head
 
@@ -167,8 +128,6 @@ def _released(fn: QueryFn) -> QueryFn:
     query, the previous plan has been collected, so its caches are
     safe to drop (ADVICE r10: cache accumulation across the
     233-query driver sweep)."""
-    import functools
-
     from .cache_tracker import release_all
 
     @functools.wraps(fn)

@@ -13,6 +13,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+_MAX_DRIVER_MEM_MB = 16 * 1024
+
+
+def default_driver_memory() -> str:
+    """Half the machine's physical memory, capped at 16g: a heap larger
+    than the RAM it runs in can grow until the OS kills the JVM."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(_MAX_DRIVER_MEM_MB, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "baseline_magician_spark",
     cpus: int | None = None,
@@ -21,7 +31,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all cores. Shuffle
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all cores; the driver
+    heap to ``$SPARK_DRIVER_MEM`` or ``default_driver_memory()``. Shuffle
     partitions default to the core count — on a real cluster this would
     be ~2-3x total executor cores; AQE coalesces down from there.
     """
@@ -39,7 +50,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # Spark rejects TIMESTAMP(NANOS) parquet outright; read ns as
         # int64 and let the catalog convert to µs timestamps exactly

@@ -14,6 +14,8 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..local_frame import local_frame
+
 
 def register_external_table(
     spark: SparkSession,
@@ -24,6 +26,6 @@ def register_external_table(
     """Register driver-side rows as temp view ``name``; returns the
     DataFrame. Schema is a DDL string ("id long, v string") — external
     blocks always declared their column types (block.go:68-78)."""
-    df = spark.createDataFrame(list(rows), schema)
+    df = local_frame(spark, list(rows), schema)
     df.createOrReplaceTempView(name)
     return df

@@ -28,11 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import BaselineConfig
-from ..plans.baseline import (
-    ExpressionFn,
-    apply_thresholds,
-    mangle_hostgroup_name,
-)
+from ..plans.baseline import ExpressionFn, with_hostgroup_columns
 from ..sinks.hostgroups import HostgroupSink, hostgroup_rows
 from ..sources.rest import Transport
 
@@ -61,10 +57,7 @@ def publish_hostgroups_stream(
             return  # late-finalized old window; never regress
         high_water[0] = latest
         current = batch_df.where(F.col("window_start") == latest)
-        out = apply_thresholds(current, expressions).withColumn(
-            "hostgroup_name", mangle_hostgroup_name("network")
-        )
-        groups = hostgroup_rows(out)
+        groups = hostgroup_rows(with_hostgroup_columns(current, expressions))
         sink.publish(groups, [], remove_existing=False)
 
     writer = (
