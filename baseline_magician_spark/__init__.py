@@ -22,3 +22,9 @@ analysis, multimodal columns) designed for 100 TB scale.
 """
 
 __version__ = "0.1.0"
+
+# Python workers import this package for every engine kernel; from then
+# on their tasks stop re-reading each zip on sys.path (see pyship).
+from .pyship import patch_zipimport_invalidate as _patch_zipimport
+
+_patch_zipimport()

@@ -222,3 +222,49 @@ def test_create_dataframe_only_in_the_helper():
         if "createDataFrame(" in line
     ]
     assert not offenders, offenders
+
+
+def python_rdd_leaves(df) -> list[str]:
+    """Lineages of the analyzed plan's LogicalRDD leaves that parallelize
+    driver-side Python data. A LogicalRDD over a materialized local
+    checkpoint (ch_sql's recursive CTE rounds) holds no Python data."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD":
+            lineage = leaf.rdd().toDebugString()
+            if "PythonRDD" in lineage or "ParallelCollectionRDD" in lineage:
+                out.append(lineage)
+    return out
+
+
+def test_job_and_registered_queries_plan_no_python_rdd(spark, monkeypatch):
+    """Driver values reach every plan as a LocalRelation: neither
+    run_baseline_job's result nor any registered query, built without
+    being materialized, reads a parallelized Python list."""
+    from baseline_magician_spark import job
+    from baseline_magician_spark.config import BaselineConfig
+    from baseline_magician_spark.queries.baseline_q import METRIC_COLS, events_as_host_metrics
+    from baseline_magician_spark.registry import get_queries
+    from conftest import SF_SMOKE
+    from pyspark.sql import functions as F
+
+    assert python_rdd_leaves(spark.sparkContext.parallelize([(1,)]).toDF(["a"]))
+    results = []
+    monkeypatch.setattr(job, "hostgroup_rows", lambda df: results.append(df) or [])
+    config = BaselineConfig(
+        generate_incoming_packet_threshold=True, incoming_packet_expression="value * 2"
+    )
+    job.run_baseline_job(
+        spark, config, events_as_host_metrics(spark, SF_SMOKE),
+        cli_networks_list="10.0.0.0/18,10.1.0.0/16", metric_cols=METRIC_COLS,
+        now=F.col("now_ts"), publish=False,
+    )
+    assert len(results) == 1
+    frames = {"run_baseline_job": results[0]}
+    for name, build in get_queries().items():
+        frames[name] = build(spark, SF_SMOKE)
+    assert len(frames) > 200
+    offenders = sorted(n for n, df in frames.items() if python_rdd_leaves(df))
+    assert not offenders, offenders
