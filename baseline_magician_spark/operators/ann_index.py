@@ -15,11 +15,11 @@ postings instead of re-assigning the corpus:
   directories (static partition pruning via an isin filter over the
   collected probe set), never the full corpus.
 
-Serving reuses the exact same probe/rescore expressions as the
-in-memory path (ivf_probe_cells / cosine), so a persisted serve is
-value-identical to the in-memory plan — which is precisely what the
-``similarity_ivf_serve_persisted`` driver row checks by sharing the
-in-memory oracle. Incremental add assigns NEW vectors under the
+Serving reuses the exact same probe/rescore kernels as the in-memory
+path (_ivf_probe_relation / _pairwise_score_relation), so a persisted
+serve is value-identical to the in-memory plan — which is precisely
+what the ``similarity_ivf_serve_persisted`` driver row checks by
+sharing the in-memory oracle. Incremental add assigns NEW vectors under the
 PERSISTED centroids and appends their postings — the standard
 IVF maintenance story (retrain only when cell balance drifts; the
 drift signal is operators/similarity.py::ivf_cell_report).
@@ -52,8 +52,8 @@ def _assigned(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    # Arrow-batched numpy assignment (guide §4.2) — value-identical to
-    # the ivf_assign_cell expression, pinned in tests/test_similarity_np.py
+    # the in-memory IVF operators' Arrow-batched numpy assignment
+    # (guide §4.2), pinned in tests/test_similarity_np.py
     return _ivf_assign_relation(
         embeddings,
         sorted(centroids),

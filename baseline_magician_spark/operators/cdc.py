@@ -25,54 +25,25 @@ peaks at 256 * 2^31.5 — every intermediate fits a signed long, in
 Spark and in the DuckDB BIGINT oracle replay
 (queries/dedup_q.py:_cdc_*_oracle).
 
-Scale shape: one map-side pass, no shuffle until the caller
-aggregates chunk fingerprints. Two value-identical renderings: the
-JVM expression (O(window * len) interpreted-HOF work per row —
-the correctness carrier the oracle replays) and the default
-``mapInPandas`` throughput path, where the closed form runs as
-numpy vector ops — 32 shift-adds for the rolling states (uint64
-wraparound is exact mod 2^61 because 2^64 is a multiple of 2^61)
-and prefix polynomial hashes for the chunk fingerprints (every
-character read once, no per-char Python loop; round 10).
+Scale shape: one map-side ``mapInPandas`` pass, no shuffle until the
+caller aggregates chunk fingerprints. The closed form runs as numpy
+vector ops — 32 shift-adds for the rolling states (uint64 wraparound
+is exact mod 2^61 because 2^64 is a multiple of 2^61) and prefix
+polynomial hashes for the chunk fingerprints (every character read
+once, no per-char Python loop). tests/test_cdc.py pins it against a
+pure-Python gear-hash model; the DuckDB oracle replays the same
+closed form in SQL.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.hashing import _codes, poly_hash
 
 GOLD = 0x9E3779B9  # golden-ratio odd constant; gear table generator
 MOD = 1 << 61
 WINDOW = 32
 MASK_BITS = 6  # boundary iff h % 64 == 0 -> ~64-char expected chunks
-
-
-def _gear_table(codes: Column) -> Column:
-    """array<long> of gear values: G(b) = ((b % 256) + 1) * GOLD
-    mod 2^61 — deterministic, no stored random table, replayable."""
-    return F.transform(
-        codes,
-        lambda b: ((b % F.lit(256)) + 1) * F.lit(GOLD) % F.lit(MOD),
-    )
-
-
-def _rolling_states(g: Column, window: int) -> Column:
-    """h_i = fold(acc*2 + g_j) over the trailing ``window`` gear
-    values ending at i (1-based) — the closed form of the gear
-    recurrence mod 2^61, where taps older than 61 shifts vanish and
-    ``window`` truncates earlier for cost."""
-
-    def state(_x: Column, i: Column) -> Column:
-        start = F.greatest(F.lit(1), i + 2 - F.lit(window))
-        return F.aggregate(
-            F.slice(g, start, i + 1 - start + 1),
-            F.lit(0).cast("long"),
-            lambda acc, v: (acc * 2 + v) % F.lit(MOD),
-        )
-
-    return F.transform(g, state)
 
 
 def _pow_mod_np(base: int, n: int, mod: int):
@@ -93,12 +64,14 @@ def _pow_mod_np(base: int, n: int, mod: int):
 def _chunk_batch_np(texts, mask_bits: int, window: int, pw, ipw):
     """(doc_row, chunk_ord, start, len, fp) int64 arrays for a whole
     batch of non-empty documents — the numpy vectorized rendering of
-    the gear closed form, value-identical per document to the JVM
-    slice fold (same constants, same codepoint stream: utf-32-le
-    decoding and Spark's split('') both walk codepoints). The batch
-    concatenates into ONE code array so every stage is a single
-    large-vector op (per-doc numpy calls would be overhead-bound at
-    the corpus's ~300-char documents).
+    the gear closed form over the document's codepoints (utf-32-le
+    decoding walks codepoints): with gear G(c) = ((c % 256) + 1) *
+    GOLD, position i (1-based) ends a chunk iff h_i = fold(acc*2 + G)
+    mod 2^61 over the trailing ``window`` gear values has its low
+    ``mask_bits`` bits zero. The batch concatenates into ONE code
+    array so every stage is a single large-vector op (per-doc numpy
+    calls would be overhead-bound at the corpus's ~300-char
+    documents).
 
     Why plain uint64 wraparound is EXACT here: 2^64 is a multiple of
     2^61, so arithmetic done mod 2^64 (numpy's native overflow
@@ -107,8 +80,8 @@ def _chunk_batch_np(texts, mask_bits: int, window: int, pw, ipw):
     h_i = sum_k g_{i-k} * 2^k — 32 shift-adds over the concatenated
     gear array (gear values are < 2^40, so each shifted term and the
     wrap-sum are exact mod 2^61); taps at shift >= 61 vanish mod
-    2^61, so the window truncates at 61 like the JVM/oracle closed
-    form's modular arithmetic. The first window-1 positions of each
+    2^61, so the window truncates at 61 like the oracle closed form's
+    modular arithmetic. The first window-1 positions of each
     document must not see the previous document's tail, so a
     (docs x window-1) fix-up recomputes exactly those states from
     each document's own prefix.
@@ -199,22 +172,21 @@ def _chunk_batch_np(texts, mask_bits: int, window: int, pw, ipw):
     )
 
 
-def cdc_chunks_pandas(
+def cdc_chunks(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     mask_bits: int = MASK_BITS,
     window: int = WINDOW,
 ) -> DataFrame:
-    """The throughput rendering of :func:`cdc_chunks`: one
-    ``mapInPandas`` pass with the numpy vectorized closed form
-    (_chunk_doc_np — 32 shift-adds for the rolling states, prefix
-    polynomial hashes for the chunk fingerprints) instead of the JVM
-    expression's O(window) slice fold per position — value-identical
-    output (same constants, same codepoint stream; tests/test_cdc.py
-    pins equality against the JVM path). Narrow, no shuffle; Arrow
-    batches in, chunk rows out. The output id column keeps the SOURCE
-    id dtype (string doc ids work, not just bigint)."""
+    """(id, chunk_ord, chunk_start, chunk_len, chunk_fp) — one row
+    per content-defined chunk; chunk_start is 1-based and chunk_fp is
+    the engine's cross-engine polynomial hash of the chunk text.
+    Empty documents produce no rows (no characters, no chunks). One
+    ``mapInPandas`` pass with the numpy closed form
+    (:func:`_chunk_batch_np`); narrow, no shuffle. The output id
+    column keeps the SOURCE id dtype (string doc ids work, not just
+    bigint)."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from ..functions.hashing import POLY_BASE, POLY_MOD
@@ -267,73 +239,6 @@ def cdc_chunks_pandas(
     )
 
 
-def cdc_chunks(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    mask_bits: int = MASK_BITS,
-    window: int = WINDOW,
-) -> DataFrame:
-    """(id, chunk_ord, chunk_start, chunk_len, chunk_fp) — one row
-    per content-defined chunk; chunk_fp is the engine's cross-engine
-    polynomial hash of the chunk text. Empty documents produce no
-    rows (no characters, no chunks). This is the pure-JVM rendering
-    (the correctness carrier the DuckDB oracle replays verbatim);
-    :func:`cdc_chunks_pandas` is the value-identical throughput
-    path."""
-    text = F.col(text_col)
-    codes = _codes(text)
-    g = _gear_table(codes)
-    h = _rolling_states(g, window)
-    n = F.size(codes).cast("long")
-    mask = F.lit(1 << mask_bits)
-    ends = F.filter(
-        F.transform(
-            h,
-            lambda x, i: F.when(
-                x % mask == 0, (i + 1).cast("long")
-            ).otherwise(F.lit(-1).cast("long")),
-        ),
-        lambda e: e >= 0,
-    )
-    # interior boundaries only, then the document end — this dedups
-    # a boundary landing exactly on the last character
-    aug = F.concat(
-        F.array(F.lit(0).cast("long")),
-        F.filter(ends, lambda e: e < n),
-        F.array(n),
-    )
-    spans = F.zip_with(
-        F.slice(aug, 1, F.size(aug) - 1),
-        F.slice(aug, 2, F.size(aug) - 1),
-        lambda a, b: F.struct(
-            (a + 1).alias("start"), (b - a).alias("len")
-        ),
-    )
-    out = (
-        docs.where(F.length(text) > 0)
-        .select(
-            F.col(id_col),
-            text.alias("_t"),
-            F.posexplode(spans).alias("_ord0", "_span"),
-        )
-        .select(
-            F.col(id_col),
-            (F.col("_ord0") + 1).cast("long").alias("chunk_ord"),
-            F.col("_span.start").alias("chunk_start"),
-            F.col("_span.len").alias("chunk_len"),
-            poly_hash(
-                F.substring(
-                    F.col("_t"),
-                    F.col("_span.start").cast("int"),
-                    F.col("_span.len").cast("int"),
-                )
-            ).alias("chunk_fp"),
-        )
-    )
-    return out
-
-
 def cdc_shared_chunks(
     docs: DataFrame,
     text_col: str = "text",
@@ -342,7 +247,6 @@ def cdc_shared_chunks(
     min_len: int = 8,
     mask_bits: int = MASK_BITS,
     window: int = WINDOW,
-    impl: str = "pandas",
 ) -> DataFrame:
     """Chunk fingerprints appearing in >= min_docs distinct
     documents (the cross-document duplicate-content relation):
@@ -350,12 +254,8 @@ def cdc_shared_chunks(
     trivial slivers the 2^mask_bits boundary density makes common.
     Shuffle inventory: ONE groupBy on chunk_fp — fingerprints are
     uniform (polynomial hash), so no hot keys; at corpus scale this
-    is the same band-key shape as MinHash LSH. ``impl`` picks the
-    chunker rendering: "pandas" (default — the sliding-recurrence
-    throughput path) or "jvm" (the oracle-replayable expression;
-    value-identical)."""
-    builder = cdc_chunks if impl == "jvm" else cdc_chunks_pandas
-    chunks = builder(
+    is the same band-key shape as MinHash LSH."""
+    chunks = cdc_chunks(
         docs, text_col, id_col, mask_bits=mask_bits, window=window
     )
     return (
@@ -378,7 +278,6 @@ def cdc_duplication_ratio(
     min_len: int = 8,
     mask_bits: int = MASK_BITS,
     window: int = WINDOW,
-    impl: str = "pandas",
 ) -> DataFrame:
     """Per-document duplicate-content ratio: the fraction of a
     document's characters covered by chunks whose fingerprint
@@ -403,8 +302,7 @@ def cdc_duplication_ratio(
     semi-join, no second scan of the corpus. (min != max ⇔
     countDistinct >= 2; ``min_docs`` other than 2 falls back to the
     aggregate + semi-join rendering.)"""
-    builder = cdc_chunks if impl == "jvm" else cdc_chunks_pandas
-    chunks = builder(
+    chunks = cdc_chunks(
         docs, text_col, id_col, mask_bits=mask_bits, window=window
     )
     if min_docs != 2:

@@ -1,14 +1,13 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-All variants are pure DataFrame compositions (no Python UDFs), designed
-so the expensive parts are map-side:
+Every variant keeps the expensive parts map-side:
 
 - **exact**: hash-groupBy on md5(text). One shuffle on a uniform key.
-- **MinHash + LSH**: signatures are computed per-row with higher-order
-  functions (shingle -> k permuted hashes -> array_min) — NO
-  explode/shuffle for signature computation, unlike the textbook
-  unnest-and-regroup formulation. Only the tiny (doc, band, bandhash)
-  projection shuffles for the LSH bucket self-join.
+- **MinHash + LSH**: signatures and band hashes are computed per row in
+  one Arrow-batched numpy pass (shingle -> k permuted hashes -> min ->
+  band hash) — NO explode/shuffle for signature computation, unlike
+  the textbook unnest-and-regroup formulation. Only the tiny (doc,
+  band, bandhash) relation shuffles for the LSH bucket self-join.
 - **SimHash**: 30-bit fingerprint, again fully map-side per row.
 - **n-gram Jaccard**: shared-shingle equi-join with a frequent-shingle
   cutoff (df > max_shingle_df dropped) so hot shingles cannot explode
@@ -28,8 +27,6 @@ from ..functions.hashing import (
     POLY_MOD,
     POLY_SEED,
     minhash_params,
-    shingle_hashes,
-    tokens,
 )
 
 
@@ -48,58 +45,6 @@ def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             F.min(id_col).alias("keep_id"),
         )
     )
-
-
-def minhash_signature(text_col: str, k: int = 8, n: int = 3) -> Column:
-    """array<long> MinHash signature of a text column, computed per-row.
-
-    Single ``aggregate`` pass over the shingle-hash set with a k-wide
-    accumulator of running minima. One pass matters: k separate
-    ``array_min(transform(...))`` expressions would each inline the full
-    shingle-hashing subtree, and Catalyst does NOT common-subexpression-
-    eliminate under lambda functions — measured 8x slower at sf0.1.
-
-    Docs with no shingles yield the sentinel signature [POLY_MOD]*k
-    (every real permuted hash is < POLY_MOD).
-    """
-    hashes = shingle_hashes(text_col, n)
-    params = F.array(
-        *[
-            F.struct(
-                F.lit(a).cast("long").alias("a"), F.lit(b).cast("long").alias("b")
-            )
-            for a, b in minhash_params(k)
-        ]
-    )
-    init = F.array(*([F.lit(POLY_MOD).cast("long")] * k))
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            params,
-            lambda m, p: F.least(m, (h * p["a"] + p["b"]) % F.lit(POLY_MOD)),
-        ),
-    )
-
-
-def minhash_band_hashes(sig: Column, k: int, rows_per_band: int) -> Column:
-    """array<struct<band:int, bh:bigint>>: one combined hash per LSH band."""
-    if k % rows_per_band != 0:
-        raise ValueError(
-            f"rows_per_band={rows_per_band} must divide k={k}: the "
-            f"trailing {k % rows_per_band} signature rows would be "
-            "silently excluded from banding, lowering recall below "
-            "what the parameters imply"
-        )
-    n_bands = k // rows_per_band
-    bands = []
-    for b in range(n_bands):
-        bh = F.lit(7).cast("long")
-        for r in range(rows_per_band):
-            bh = (bh * 31 + F.element_at(sig, b * rows_per_band + r + 1)) % POLY_MOD
-        bands.append(F.struct(F.lit(b).alias("band"), bh.alias("bh")))
-    return F.array(*bands)
 
 
 def _token_hashes_np(texts):
@@ -215,45 +160,33 @@ def minhash_band_relation(
     k: int = 8,
     rows_per_band: int = 2,
     shingle_n: int = 3,
-    impl: str = "pandas",
 ) -> DataFrame:
     """(_id, band, bh) — one row per (document, LSH band): the bucket
     relation both sides of the LSH self-join consume. Docs with no
     shingles (< shingle_n tokens) emit nothing.
 
-    ``impl="pandas"`` (default) computes the relation in ONE
-    Arrow-batched numpy pass (guide §4.2 — the interpreted
-    higher-order-function fold was the measured hot spot of every
-    MinHash consumer at ~1.5-2 s per execution at sf0.1; the numpy
-    kernel is value-identical, per-row pinned in
-    tests/test_minhash_np.py). ``impl="jvm"`` is the pure-expression
-    rendering the DuckDB oracles replay.
+    Computed in ONE Arrow-batched numpy pass (guide §4.2 — the
+    interpreted higher-order-function fold it replaced was the
+    measured hot spot of every MinHash consumer at ~1.5-2 s per
+    execution at sf0.1): signature row i is the minimum over the
+    document's shingle hashes h of (h*a_i + b_i) % POLY_MOD
+    (``minhash_params``), and band b folds its rows as
+    bh = (bh*31 + sig) % POLY_MOD from 7.
     """
-    if impl == "jvm":
-        sig = minhash_signature(text_col, k, shingle_n)
-        with_sig = df.select(
-            F.col(id_col).alias("_id"), sig.alias("_sig")
-        ).where(F.element_at(F.col("_sig"), 1) < POLY_MOD)
-        return with_sig.select(
-            "_id",
-            F.explode(
-                minhash_band_hashes(F.col("_sig"), k, rows_per_band)
-            ).alias("_b"),
-        ).select(
-            "_id", F.col("_b.band").alias("band"), F.col("_b.bh").alias("bh")
+    if k % rows_per_band != 0:
+        raise ValueError(
+            f"rows_per_band={rows_per_band} must divide k={k}: the "
+            f"trailing {k % rows_per_band} signature rows would be "
+            "silently excluded from banding, lowering recall below "
+            "what the parameters imply"
         )
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
     from ..pyship import ensure_shipped
 
     ensure_shipped(df.sparkSession)
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
     params = minhash_params(k)
     n_bands = k // rows_per_band
-    if k % rows_per_band != 0:
-        raise ValueError(
-            f"rows_per_band={rows_per_band} must divide k={k}"
-        )
     id_type = df.schema[id_col].dataType
     src = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
 
@@ -309,25 +242,17 @@ def shingle_hash_relation(
     text_col: str,
     id_col: str,
     n: int = 3,
-    impl: str = "pandas",
 ) -> DataFrame:
     """(_id, h) — the exploded DISTINCT shingle-hash relation (the
-    per-doc distinct mirrors :func:`shingle_hashes`'s
+    per-doc distinct mirrors :func:`~..functions.hashing.shingle_hashes`'s
     ``array_distinct``, which the Jaccard set sizes and
     decontamination counts depend on). Docs with < n tokens emit
     nothing, like the empty-array explode.
 
-    ``impl="pandas"`` computes it in one Arrow-batched numpy pass
-    (guide §4.2 — same measured hot spot as the MinHash signature
-    fold; value-identical, pinned in tests/test_minhash_np.py);
-    ``impl="jvm"`` is the expression rendering the oracles replay.
+    Computed in one Arrow-batched numpy pass (guide §4.2 — same
+    measured hot spot as the MinHash signature fold); pinned against
+    ``explode(shingle_hashes(...))`` in tests/test_minhash_np.py.
     """
-    if impl == "jvm":
-        return df.select(
-            F.col(id_col).alias("_id"),
-            F.explode(shingle_hashes(text_col, n)).alias("h"),
-        )
-
     from ..pyship import ensure_shipped
 
     ensure_shipped(df.sparkSession)
@@ -446,14 +371,13 @@ def minhash_lsh_pairs(
     k: int = 8,
     rows_per_band: int = 2,
     shingle_n: int = 3,
-    impl: str = "pandas",
 ) -> DataFrame:
     """Candidate near-duplicate pairs: docs sharing >= 1 LSH band bucket.
 
     Output: (doc_a, doc_b, n_shared_bands), doc_a < doc_b.
     """
     bands = minhash_band_relation(
-        df, text_col, id_col, k, rows_per_band, shingle_n, impl=impl
+        df, text_col, id_col, k, rows_per_band, shingle_n
     )
     # shuffle_hash (not broadcast) for the self-join: both sides then
     # need the SAME shuffle of the SAME subplan, and AQE reuses the
@@ -477,28 +401,15 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash(text_col: str, bits: int = 30) -> Column:
-    """SimHash fingerprint over token poly-hashes (bits <= 30 because the
-    underlying hash is mod 1e9+7; enough for near-dup bucketing).
-
-    bit_j(doc) = 1 iff sum over tokens of (+1 if bit_j(hash) else -1) >= 0.
-    Entirely map-side per row, and single-pass: one aggregate over the
-    token hashes folds a bits-wide accumulator of per-bit vote sums
-    (hashing tokens inside the per-bit lambda would re-hash every token
-    `bits` times — Catalyst does not CSE under lambdas).
-    """
-    from ..functions.hashing import poly_hash
-
-    # the canonical cross-engine hash — NOT re-implemented inline, so
-    # simhash can never drift from hashing.poly_hash/its DuckDB twin
-    tok_hashes = F.transform(tokens(text_col), lambda t: poly_hash(t))
-    return simhash_of_hashes(tok_hashes, bits)
-
-
 def simhash_of_hashes(tok_hashes: Column, bits: int = 30) -> Column:
     """The SimHash vote fold over an arbitrary array<long> of feature
-    hashes — the seam the CH ngramSimHash / wordShingleSimHash
-    spellings share with the dedup operator above."""
+    hashes (bits <= 30: the hashes are mod 1e9+7): bit_j = 1 iff the
+    sum over hashes of (+1 if bit_j(h) else -1) is >= 0. One aggregate
+    folds a bits-wide accumulator of vote sums, so each hash is read
+    once (Catalyst does not CSE under lambdas). The CH ngramSimHash /
+    wordShingleSimHash spellings use it, and over
+    ``transform(tokens(t), poly_hash)`` it is the expression form of
+    :func:`simhash_relation`."""
     bit_idx = F.sequence(F.lit(0), F.lit(bits - 1))
     votes = F.aggregate(
         tok_hashes,
@@ -530,25 +441,15 @@ def simhash_relation(
     text_col: str,
     id_col: str,
     bits: int = 30,
-    impl: str = "pandas",
 ) -> DataFrame:
-    """(_id, sh) — one SimHash fingerprint per document.
-
-    ``impl="pandas"`` computes the vote fold in one Arrow-batched
-    numpy pass (guide §4.2 — the per-token x per-bit zip_with fold is
-    interpreted JVM expression evaluation, the same hot spot as the
-    MinHash signature); value-identical per row, pinned in
-    tests/test_minhash_np.py, including the degenerate rows: NULL
-    text -> NULL fingerprint (the fold over a null array), zero
+    """(_id, sh) — one SimHash fingerprint per document: the
+    :func:`simhash_of_hashes` vote fold over the document's token
+    poly-hashes, computed in one Arrow-batched numpy pass (guide §4.2
+    — as a per-token x per-bit zip_with fold it was interpreted JVM
+    expression evaluation, the same hot spot as the MinHash
+    signature). Degenerate rows: NULL text -> NULL fingerprint, zero
     tokens -> all ``bits`` bits set (zero votes are >= 0).
-    ``impl="jvm"`` is the expression rendering the oracles replay.
     """
-    if impl == "jvm":
-        return df.select(
-            F.col(id_col).alias("_id"),
-            simhash(text_col, bits).alias("sh"),
-        )
-
     from ..pyship import ensure_shipped
 
     ensure_shipped(df.sparkSession)

@@ -8,21 +8,24 @@
 
 - **Random-hyperplane LSH buckets** (the scale path): P deterministic
   pseudo-random hyperplanes (components derived from index arithmetic,
-  no RNG state) give each vector a P-bit sign bucket computed map-side.
-  Candidates = same-bucket pairs -> the cross join shrinks by ~2^P.
-  At 100 TB the bucket id is the shuffle key (uniform by construction)
-  and each bucket's candidate set is verified with the exact cosine.
+  no RNG state) give each vector a P-bit sign bucket, computed
+  map-side in one Arrow-batched numpy pass. Candidates = same-bucket
+  pairs -> the cross join shrinks by ~2^P. At 100 TB the bucket id is
+  the shuffle key (uniform by construction) and each bucket's
+  candidate set is verified with the exact cosine.
 
 - **Embedding near-dup pairs**: same-bucket exact-cosine >= threshold,
   the embedding analogue of MinHash dedup.
+
+- **IVF / PQ** (cell assignment, probing, PQ encoding, pairwise
+  rescoring): numpy kernels over Arrow batches, one rendering each
+  (see the kernel block below).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from ..local_frame import local_frame
 
 # Hyperplane component for (plane p, dim d): pseudo-random signed value
 # from pure integer arithmetic — identical in Spark and any SQL oracle.
@@ -69,169 +72,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def _hyperplane_component(p: int, d: Column) -> Column:
-    """Deterministic signed pseudo-random component in [-501001, 499001].
-
-    int64 arithmetic throughout (the a*p product overflows int32).
-    """
-    return (
-        F.lit(_HP_A).cast("long") * p + F.lit(_HP_B).cast("long") * d.cast("long")
-    ) % F.lit(_HP_MOD) - F.lit((_HP_MOD - 1) // 2)
-
-
-def lsh_bucket(
-    vec: Column,
-    n_planes: int = 8,
-    center: bool = False,
-    dim: int | None = None,
-) -> Column:
-    """P-bit sign bucket from deterministic random hyperplanes (map-side).
-
-    ``center=True`` subtracts each vector's own component mean before
-    projecting. Feature families that live in one orthant (byte
-    statistics, counts, intensities — anything nonnegative) share a
-    dominant all-ones component that makes every hyperplane projection
-    carry the same sign, collapsing the table into a handful of buckets
-    (measured: 5000 docs -> 4 buckets -> 5.6M candidate pairs at
-    sf0.1). Removing the per-row mean removes exactly that shared
-    direction and restores discrimination (same data -> 201 buckets ->
-    220k candidates, a 25x cut) while staying a deterministic per-row
-    transform: no data-dependent statistics, so an oracle can replay
-    the identical decision and the bucket function stays stable under
-    repartitioning/streaming. Pairs with cosine ~1 still collide —
-    centering is an isometry-shift applied to both vectors.
-
-    ``dim`` is accepted for signature parity with the dot-product
-    helpers but unused: a statically-unrolled variant was measured
-    4.7x SLOWER than the fold (512-term trees fall out of codegen
-    into interpreted per-node evaluation), so the projection stays a
-    per-plane fold — over ``transform(vec, (x, i) -> ...)``, whose
-    index-aware lambda replaces the former zip_with(vec,
-    sequence(...)) pair and saves two array materializations per
-    plane per row (the term order, and therefore every IEEE bucket
-    bit, is unchanged).
-    """
-    mean_expr = (
-        F.aggregate(vec, F.lit(0.0), lambda a, v: a + v.cast("double"))
-        / F.size(vec)
-        if center
-        else F.lit(0.0)
-    )
-
-    def with_mean(mean: Column) -> Column:
-        # the mean is a LET-bound runtime VALUE: a captured fold tree
-        # would re-evaluate per element per plane (O(d² · planes))
-        bucket = F.lit(0).cast("long")
-        for p in range(n_planes):
-            proj = F.aggregate(
-                F.transform(
-                    vec,
-                    lambda x, d: (x.cast("double") - mean)
-                    * _hyperplane_component(p, d),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            bucket = bucket + F.when(
-                proj >= 0, F.lit(1 << p)
-            ).otherwise(F.lit(0))
-        return bucket
-
-    from ..functions.stats_tests import _let
-
-    return _let(mean_expr, with_mean)
-
-
-def _centroid_literals(
-    centroids: list[tuple[int, list[float]]],
-) -> tuple[Column, Column, Column, int]:
-    """(ids, vectors, norms) as SINGLE literal array nodes + K.
-
-    One nested-array literal instead of K x dim individual F.lit nodes —
-    the expression tree stays O(1) in centroid count, which keeps
-    codegen fast (the per-lit formulation measured ~6s of pure plan
-    overhead at K=16, dim=64). Norms are precomputed driver-side with
-    the same sequential fold the in-engine norm() uses (left-to-right
-    sum of squares, IEEE sqrt) so results stay bit-identical.
-    """
-    import math
-
-    cids = F.lit([int(cid) for cid, _ in centroids])
-    cvecs = F.lit([[float(x) for x in cv] for _, cv in centroids])
-    norms = []
-    for _, cv in centroids:
-        acc = 0.0
-        for x in cv:
-            acc = acc + float(x) * float(x)
-        norms.append(math.sqrt(acc))
-    cnorms = F.lit(norms)
-    return cids, cvecs, cnorms, len(centroids)
-
-
-def _with_row_norm(vec: Column, body, init: Column) -> Column:
-    """Let-bind norm(vec) as a fold variable so expressions that use it
-    K times evaluate it once (Catalyst does not CSE under lambdas)."""
-    return F.aggregate(F.array(norm(vec)), init, body)
-
-
-def ivf_assign_cell(
-    vec: Column, centroids: list[tuple[int, list[float]]]
-) -> Column:
-    """Map-side IVF cell assignment: argmax centroid cosine, ties to the
-    lowest centroid id.
-
-    Centroids are driver-known (post-training, K x dim floats — tiny),
-    so assignment is ONE projection with no join and no shuffle: a
-    transform over the literal centroid matrix scores all K cells, and
-    the array-of-structs max gives argmax (struct fields (cos, -cid);
-    array_max is lexicographic). This is the property that makes IVF
-    work at 100 TB — the corpus gains its partition key map-side.
-    """
-    cids, cvecs, cnorms, k = _centroid_literals(centroids)
-
-    def body(_acc: Column, nv: Column) -> Column:
-        structs = F.transform(
-            F.sequence(F.lit(1), F.lit(k)),
-            lambda i: F.struct(
-                (
-                    dot(vec, F.element_at(cvecs, i))
-                    / (nv * F.element_at(cnorms, i))
-                ).alias("c"),
-                (-F.element_at(cids, i)).cast("long").alias("n"),
-            ),
-        )
-        return -F.array_max(structs)["n"]
-
-    return _with_row_norm(vec, body, F.lit(0).cast("long"))
-
-
-def ivf_probe_cells(
-    vec: Column, centroids: list[tuple[int, list[float]]], n_probe: int
-) -> Column:
-    """The n_probe nearest centroid ids for a query vector (cos DESC,
-    cid ASC), as an array — computed map-side like the assignment."""
-    cids, cvecs, cnorms, k = _centroid_literals(centroids)
-
-    def body(_acc: Column, nv: Column) -> Column:
-        scored = F.transform(
-            F.sequence(F.lit(1), F.lit(k)),
-            lambda i: F.struct(
-                (
-                    -(
-                        dot(vec, F.element_at(cvecs, i))
-                        / (nv * F.element_at(cnorms, i))
-                    )
-                ).alias("nc"),
-                F.element_at(cids, i).cast("long").alias("cid"),
-            ),
-        )
-        return F.transform(
-            F.slice(F.array_sort(scored), 1, n_probe), lambda s: s["cid"]
-        )
-
-    return _with_row_norm(vec, body, F.array().cast("array<long>"))
-
-
 def ivf_topk(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -241,7 +81,6 @@ def ivf_topk(
     n_centroids: int = 16,
     n_probe: int = 4,
     centroids: list[tuple[int, list[float]]] | None = None,
-    impl: str = "pandas",
 ) -> DataFrame:
     """IVF approximate top-k: assign corpus vectors to centroid cells
     map-side, probe each query's n_probe nearest cells, exact-rescore
@@ -253,11 +92,8 @@ def ivf_topk(
     map-side assign, probe, cell-join, rescore) is the real IVF
     dataflow. Plan shape: zero shuffles until the final per-query
     top-k, because the cell key is computed in the scan projection and
-    the probe set is broadcast. ``impl="pandas"`` (default) computes
-    the assignment, probe and rescore folds in Arrow-batched numpy
-    (guide §4.2 — value-identical, pinned in
-    tests/test_similarity_np.py); ``impl="jvm"`` is the expression
-    rendering the DuckDB oracle replays.
+    the probe set is broadcast. The assignment, probe and rescore
+    folds run in Arrow-batched numpy (guide §4.2).
     """
     from pyspark.sql import Window as W
 
@@ -270,61 +106,35 @@ def ivf_topk(
         ]
     centroids = sorted(centroids)
 
-    if impl == "pandas":
-        assigned = _ivf_assign_relation(
-            embeddings,
-            centroids,
-            id_col,
-            vec_col,
-            out_id="neighbor_id",
-            out_vec="_cvec",
-            keep_vec=True,
-        )
-        probes = _ivf_probe_relation(
-            embeddings.where(F.col(id_col) < n_query_vecs),
-            centroids,
-            n_probe,
-            id_col,
-            vec_col,
-        )
-        scored = _pairwise_score_relation(
-            assigned.join(F.broadcast(probes), "cell")
-            .where(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id", "_qvec", "_cvec"),
-            "_qvec",
-            "_cvec",
-            "_raw",
-            "cos",
-        ).select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("_raw"), 6).alias("cosine_sim"),
-        )
-    else:
-        assigned = embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cvec"),
-            ivf_assign_cell(F.col(vec_col), centroids).alias("cell"),
-        )
-        probes = (
-            embeddings.where(F.col(id_col) < n_query_vecs)
-            .select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("_qvec"),
-                F.explode(
-                    ivf_probe_cells(F.col(vec_col), centroids, n_probe)
-                ).alias("cell"),
-            )
-        )
-        scored = (
-            assigned.join(F.broadcast(probes), "cell")
-            .where(F.col("neighbor_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(cosine(F.col("_qvec"), F.col("_cvec")), 6).alias("cosine_sim"),
-            )
-        )
+    assigned = _ivf_assign_relation(
+        embeddings,
+        centroids,
+        id_col,
+        vec_col,
+        out_id="neighbor_id",
+        out_vec="_cvec",
+        keep_vec=True,
+    )
+    probes = _ivf_probe_relation(
+        embeddings.where(F.col(id_col) < n_query_vecs),
+        centroids,
+        n_probe,
+        id_col,
+        vec_col,
+    )
+    scored = _pairwise_score_relation(
+        assigned.join(F.broadcast(probes), "cell")
+        .where(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", "_qvec", "_cvec"),
+        "_qvec",
+        "_cvec",
+        "_raw",
+        "cos",
+    ).select(
+        "query_id",
+        "neighbor_id",
+        F.round(F.col("_raw"), 6).alias("cosine_sim"),
+    )
     w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
@@ -336,7 +146,6 @@ def brute_force_topk(
     vec_col: str = "embedding",
     k: int = 10,
     exclude_self: bool = True,
-    impl: str = "jvm",
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -350,15 +159,11 @@ def brute_force_topk(
     whose ids merely coincide numerically, or the colliding corpus
     vectors would be silently excluded from their top-k.
 
-    ``impl="pandas"`` computes the per-pair cosine fold in one
-    Arrow-batched numpy pass after the crossJoin (guide §4.2 —
-    value-identical, pinned in tests/test_similarity_np.py). The
-    DEFAULT stays ``impl="jvm"``: the interleaved sf0.1 A/B measured
-    the kernel 0.39 -> 0.62 s on this operator — the |corpus| x |Q|
-    pair relation is already wide across cores and the single fold is
-    cheap enough that the Arrow boundary costs more than interpreted
-    eval saves; the kernel is there for regimes with far larger pair
-    counts per task.
+    The per-pair cosine stays a JVM expression fold: an interleaved
+    sf0.1 A/B measured the numpy pairwise kernel slower on this
+    operator (0.39 -> 0.62 s) — the |corpus| x |Q| pair relation is
+    already wide across cores and the single fold is cheap enough that
+    the Arrow boundary costs more than interpreted eval saves.
     """
     from pyspark.sql import Window as W
 
@@ -371,27 +176,11 @@ def brute_force_topk(
     pairs = c.crossJoin(F.broadcast(q))
     if exclude_self:
         pairs = pairs.where(F.col("query_id") != F.col("neighbor_id"))
-    if impl == "pandas":
-        sim = _pairwise_score_relation(
-            pairs.select("query_id", "neighbor_id", "_qvec", "_cvec"),
-            "_qvec",
-            "_cvec",
-            "_raw",
-            "cos",
-        ).select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("_raw"), 6).alias("cosine_sim"),
-        )
-    else:
-        sim = (
-            pairs
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(cosine(F.col("_qvec"), F.col("_cvec")), 6).alias("cosine_sim"),
-            )
-        )
+    sim = pairs.select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine(F.col("_qvec"), F.col("_cvec")), 6).alias("cosine_sim"),
+    )
     w = W.partitionBy("query_id").orderBy(
         F.desc("cosine_sim"), F.asc("neighbor_id")
     )
@@ -418,7 +207,6 @@ def lsh_bucketed_pairs(
     dim: int | None = None,
     salt: int | str = "auto",
     center: bool = False,
-    impl: str = "pandas",
 ) -> DataFrame:
     """Near-duplicate vector pairs: same LSH bucket AND exact cosine >=
     threshold. Output: (vec_a, vec_b, cosine_sim).
@@ -440,8 +228,15 @@ def lsh_bucketed_pairs(
       pattern the IVF centroids use): S = ceil(max_bucket / 4096)
       clamped to [1, 8], and S == 1 skips the salt machinery
       entirely. Pass an int to pin S (0-skew known shapes).
-    - The norm is computed ONCE per row before the self-join (O(N) not
-      O(pairs); the value is IEEE-identical since the input array is).
+    - The norm and the bucket come from ONE Arrow-batched numpy pass
+      per row before the self-join (O(N) not O(pairs)).
+    - ``center=True`` subtracts each vector's own component mean
+      before projecting. Nonnegative feature families share a dominant
+      all-ones direction that gives every hyperplane projection the
+      same sign (measured: 5000 docs -> 4 buckets -> 5.6M candidate
+      pairs at sf0.1); removing the per-row mean restores 201 buckets
+      and 220k candidates while staying a deterministic per-row
+      transform an oracle can replay.
     - When ``dim`` is driver-known the per-pair dot is statically
       unrolled into whole-stage-codegen arithmetic (same left-to-right
       add order as the fold — bit-identical results).
@@ -449,28 +244,16 @@ def lsh_bucketed_pairs(
       once and reused by both join sides, so the upstream feature
       pipeline (often a Python mapInPandas stage) runs a single time.
     """
-    if impl == "pandas":
-        # one Arrow pass for norm + bucket (guide §4.2; the per-plane
-        # projection fold is interpreted on the jvm path)
-        with_bucket = _lsh_bucket_relation(
-            embeddings.select(
-                F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-            ),
-            keep=("_id", "_v"),
-            vec_col="_v",
-            n_planes=n_planes,
-            center=center,
-            with_norm=True,
-        ).repartition("_bucket")
-    else:
-        with_bucket = embeddings.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_v"),
-            norm(F.col(vec_col)).alias("_n"),
-            lsh_bucket(
-                F.col(vec_col), n_planes, center=center, dim=dim
-            ).alias("_bucket"),
-        ).repartition("_bucket")
+    with_bucket = _lsh_bucket_relation(
+        embeddings.select(
+            F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
+        ),
+        keep=("_id", "_v"),
+        vec_col="_v",
+        n_planes=n_planes,
+        center=center,
+        with_norm=True,
+    ).repartition("_bucket")
     if salt == "auto":
         # The histogram job would otherwise re-run the upstream
         # feature pipeline (often a Python mapInPandas stage) a third
@@ -547,7 +330,6 @@ def ivf_train_step_flat(
     n_centroids: int = 16,
     round_to: int = 6,
     centroids: list[tuple[int, list[float]]] | None = None,
-    impl: str = "pandas",
 ) -> DataFrame:
     """One Lloyd (k-means) iteration — the IVF TRAINING step that
     produces the centroids ivf_topk serves from — in exploded form.
@@ -576,21 +358,11 @@ def ivf_train_step_flat(
             .collect()
         ]
     centroids = sorted(centroids)
-    if impl == "pandas":
-        # Arrow-batched numpy assignment (guide §4.2), vec passthrough
-        # for the element-wise mean; the posexplode stays JVM-side.
-        assigned = _ivf_assign_relation(
-            embeddings, centroids, id_col, vec_col, keep_vec=True
-        ).select("cell", F.posexplode(F.col("_vec")).alias("pos", "x"))
-    else:
-        # two projection steps: a generator (posexplode) in the SAME
-        # select as the assignment expression makes Spark's generator
-        # rewrite strip the named-struct aliases inside ivf_assign_cell
-        # (FIELD_NOT_FOUND)
-        assigned = embeddings.select(
-            F.col(vec_col).alias("_v"),
-            ivf_assign_cell(F.col(vec_col), centroids).alias("cell"),
-        ).select("cell", F.posexplode(F.col("_v")).alias("pos", "x"))
+    # Arrow-batched numpy assignment (guide §4.2), vec passthrough for
+    # the element-wise mean; the posexplode stays JVM-side.
+    assigned = _ivf_assign_relation(
+        embeddings, centroids, id_col, vec_col, keep_vec=True
+    ).select("cell", F.posexplode(F.col("_vec")).alias("pos", "x"))
     return (
         assigned.groupBy("cell", "pos")
         .agg(F.avg("x").alias("m"), F.count(F.lit(1)).alias("c"))
@@ -658,99 +430,57 @@ def pq_codebooks_from_seeds(
     ]
 
 
-def pq_choose(
-    vec: Column, codebooks: list[list[tuple[int, list[float]]]]
-) -> list[Column]:
-    """Per-subspace nearest-code choice, entirely map-side: for each
-    subspace j, argmin squared-L2 over the literal codebook (ties to
-    the lowest code — struct (d, code, cvec) array_min is
-    lexicographic). Each element is a struct with the chosen ``c``
-    (code id) and ``v`` (codebook subvector, for reconstruction)."""
-    sub = len(codebooks[0][0][1])
-
-    def _scorer(cvecs: Column, cids: Column, subv: Column):
-        # closure factory: HOF lambdas must take exactly one arg
-        return lambda i: F.struct(
-            l2_sq(subv, F.element_at(cvecs, i)).alias("d"),
-            F.element_at(cids, i).cast("long").alias("c"),
-            F.element_at(cvecs, i).alias("v"),
-        )
-
-    chosen: list[Column] = []
-    for j, cb in enumerate(codebooks):
-        cvecs = F.lit([[float(x) for x in v] for _, v in cb])
-        cids = F.lit([int(c) for c, _ in cb])
-        subv = F.slice(vec, j * sub + 1, sub)
-        scored = F.transform(
-            F.sequence(F.lit(1), F.lit(len(cb))),
-            _scorer(cvecs, cids, subv),
-        )
-        chosen.append(F.array_min(scored))
-    return chosen
-
-
 def pq_encode(
     embeddings: DataFrame,
     codebooks: list[list[tuple[int, list[float]]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "pandas",
 ) -> DataFrame:
     """PQ-encode the corpus: (id, codes array<long>, _recon) — codes is
     the m-byte compressed representation (the 100 TB artifact: dim
     floats -> m uint8 codes, 64x smaller at dim=64/m=4), ``_recon`` the
-    codebook reconstruction used by ADC scoring. One narrow projection,
-    no shuffle — the codebooks are plan literals (impl="jvm") or a
-    task-local numpy table (impl="pandas", guide §4.2 — the m x codes
-    x sub argmin-L2 fold is interpreted expression evaluation on the
-    jvm path; value-identical, pinned in tests/test_similarity_np.py).
+    codebook reconstruction used by ADC scoring. One narrow
+    Arrow-batched numpy pass, no shuffle: per subspace the argmin
+    squared-L2 code, ties to the lowest code id (guide §4.2).
     """
-    if impl == "pandas":
-        from pyspark.sql.types import (
-            ArrayType,
-            DoubleType,
-            LongType,
-            StructField,
-            StructType,
-        )
-
-        from ..pyship import ensure_shipped
-
-        ensure_shipped(embeddings.sparkSession)
-        pq_tables = _pq_tables_np(codebooks)
-        schema = StructType(
-            [
-                StructField(id_col, embeddings.schema[id_col].dataType),
-                StructField("codes", ArrayType(LongType())),
-                StructField("_recon", ArrayType(DoubleType())),
-            ]
-        )
-        src = embeddings.select(id_col, F.col(vec_col).alias("_vec"))
-
-        def gen(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = _np_stack_vecs(pdf["_vec"], vec_col)
-                codes, recon = _np_pq_encode(V, pq_tables)
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        "codes": list(codes),
-                        "_recon": list(recon),
-                    }
-                )
-
-        return src.mapInPandas(gen, schema=schema)
-
-    chosen = pq_choose(F.col(vec_col), codebooks)
-    return embeddings.select(
-        F.col(id_col),
-        F.array(*[ch["c"] for ch in chosen]).alias("codes"),
-        F.flatten(F.array(*[ch["v"] for ch in chosen])).alias("_recon"),
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        LongType,
+        StructField,
+        StructType,
     )
+
+    from ..pyship import ensure_shipped
+
+    ensure_shipped(embeddings.sparkSession)
+    pq_tables = _pq_tables_np(codebooks)
+    schema = StructType(
+        [
+            StructField(id_col, embeddings.schema[id_col].dataType),
+            StructField("codes", ArrayType(LongType())),
+            StructField("_recon", ArrayType(DoubleType())),
+        ]
+    )
+    src = embeddings.select(id_col, F.col(vec_col).alias("_vec"))
+
+    def gen(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = _np_stack_vecs(pdf["_vec"], vec_col)
+            codes, recon = _np_pq_encode(V, pq_tables)
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    "codes": list(codes),
+                    "_recon": list(recon),
+                }
+            )
+
+    return src.mapInPandas(gen, schema=schema)
 
 
 def pq_adc_topk(
@@ -762,14 +492,13 @@ def pq_adc_topk(
     n_codes: int = 16,
     m: int = 4,
     codebooks: list[list[tuple[int, list[float]]]] | None = None,
-    impl: str = "pandas",
 ) -> DataFrame:
     """PQ + asymmetric-distance top-k (Jegou et al., "Product
     Quantization for Nearest Neighbor Search", TPAMI 2011): the corpus
     is scanned in its compressed form and each candidate's distance to
     the (full-precision) query is the distance to its reconstruction.
 
-    Plan shape: encode is map-side (literal codebooks), queries
+    Plan shape: encode is map-side (task-local codebooks), queries
     broadcast, so the only shuffle is the final per-query top-k window
     — identical to brute_force_topk but over a corpus that at scale is
     read as m bytes per vector instead of dim floats.
@@ -783,7 +512,7 @@ def pq_adc_topk(
         codebooks = pq_seed_codebooks(
             embeddings, id_col, vec_col, n_codes=n_codes, m=m
         )
-    enc = pq_encode(embeddings, codebooks, id_col, vec_col, impl).select(
+    enc = pq_encode(embeddings, codebooks, id_col, vec_col).select(
         F.col(id_col).alias("neighbor_id"), "_recon"
     )
     q = embeddings.where(F.col(id_col) < n_query_vecs).select(
@@ -792,26 +521,17 @@ def pq_adc_topk(
     pairs = enc.crossJoin(F.broadcast(q)).where(
         F.col("neighbor_id") != F.col("query_id")
     )
-    if impl == "pandas":
-        scored = _pairwise_score_relation(
-            pairs.select("query_id", "neighbor_id", "_qvec", "_recon"),
-            "_qvec",
-            "_recon",
-            "_raw",
-            "l2",
-        ).select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("_raw"), 6).alias("adc_dist"),
-        )
-    else:
-        scored = pairs.select(
-            "query_id",
-            "neighbor_id",
-            F.round(l2_sq(F.col("_qvec"), F.col("_recon")), 6).alias(
-                "adc_dist"
-            ),
-        )
+    scored = _pairwise_score_relation(
+        pairs.select("query_id", "neighbor_id", "_qvec", "_recon"),
+        "_qvec",
+        "_recon",
+        "_raw",
+        "l2",
+    ).select(
+        "query_id",
+        "neighbor_id",
+        F.round(F.col("_raw"), 6).alias("adc_dist"),
+    )
     w = W.partitionBy("query_id").orderBy(
         F.asc("adc_dist"), F.asc("neighbor_id")
     )
@@ -826,7 +546,6 @@ def semantic_keep_best(
     centroids: list[tuple[int, list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "pandas",
 ) -> DataFrame:
     """Cluster-based semantic dedup: assign every vector to its nearest
     centroid cell map-side (same argmax/tie rules as IVF serving) and
@@ -844,48 +563,13 @@ def semantic_keep_best(
     """
     from pyspark.sql import Window as W
 
-    if impl == "pandas":
-        assigned = _ivf_assign_relation(
-            embeddings, sorted(centroids), id_col, vec_col, with_sim=True
-        ).select(
-            "_id",
-            "cell",
-            F.round(F.col("_sim"), 6).alias("centroid_sim"),
-        )
-    else:
-        cids, cvecs, cnorms, k = _centroid_literals(centroids)
-
-        def body(_acc: Column, nv: Column) -> Column:
-            structs = F.transform(
-                F.sequence(F.lit(1), F.lit(k)),
-                lambda i: F.struct(
-                    (
-                        dot(F.col(vec_col), F.element_at(cvecs, i))
-                        / (nv * F.element_at(cnorms, i))
-                    ).alias("c"),
-                    (-F.element_at(cids, i)).cast("long").alias("n"),
-                ),
-            )
-            best = F.array_max(structs)
-            return F.struct(
-                (-best["n"]).alias("cell"), best["c"].alias("sim")
-            )
-
-        assigned = embeddings.select(
-            F.col(id_col).alias("_id"),
-            _with_row_norm(
-                F.col(vec_col),
-                body,
-                F.struct(
-                    F.lit(0).cast("long").alias("cell"),
-                    F.lit(0.0).alias("sim"),
-                ),
-            ).alias("_a"),
-        ).select(
-            "_id",
-            F.col("_a.cell").alias("cell"),
-            F.round(F.col("_a.sim"), 6).alias("centroid_sim"),
-        )
+    assigned = _ivf_assign_relation(
+        embeddings, sorted(centroids), id_col, vec_col, with_sim=True
+    ).select(
+        "_id",
+        "cell",
+        F.round(F.col("_sim"), 6).alias("centroid_sim"),
+    )
     w = W.partitionBy("cell").orderBy(
         F.desc("centroid_sim"), F.asc("_id")
     )
@@ -938,7 +622,6 @@ def ivfpq_topk(
     k: int = 10,
     n_query_vecs: int = 5,
     n_probe: int = 4,
-    impl: str = "pandas",
 ) -> DataFrame:
     """IVF cells over PQ codes — the standard billion-vector serving
     layout (IVFADC, Jegou et al. 2011): the corpus partitions into
@@ -947,7 +630,7 @@ def ivfpq_topk(
     candidates against its full-precision vector.
 
     Plan shape: cell assignment and PQ reconstruction are ONE narrow
-    scan projection against plan-literal centroids/codebooks (at scale
+    Arrow-batched pass against task-local centroids/codebooks (at scale
     this is the index build artifact: (cell, codes) per vector, read
     as a cell-pruned scan of m bytes/vector); the probe set
     broadcasts; the only shuffle is the final per-query top-k window.
@@ -956,61 +639,35 @@ def ivfpq_topk(
     """
     from pyspark.sql import Window as W
 
-    if impl == "pandas":
-        # ONE Arrow-batched pass computes assignment + PQ recon
-        assigned = _ivf_assign_relation(
-            embeddings,
-            sorted(centroids),
-            id_col,
-            vec_col,
-            out_id="neighbor_id",
-            codebooks=codebooks,
-        )
-        probes = _ivf_probe_relation(
-            embeddings.where(F.col(id_col) < n_query_vecs),
-            sorted(centroids),
-            n_probe,
-            id_col,
-            vec_col,
-        )
-        scored = _pairwise_score_relation(
-            assigned.join(F.broadcast(probes), "cell")
-            .where(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id", "_qvec", "_recon"),
-            "_qvec",
-            "_recon",
-            "_raw",
-            "l2",
-        ).select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("_raw"), 6).alias("adc_dist"),
-        )
-    else:
-        chosen = pq_choose(F.col(vec_col), codebooks)
-        assigned = embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            ivf_assign_cell(F.col(vec_col), centroids).alias("cell"),
-            F.flatten(F.array(*[ch["v"] for ch in chosen])).alias("_recon"),
-        )
-        probes = embeddings.where(F.col(id_col) < n_query_vecs).select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("_qvec"),
-            F.explode(
-                ivf_probe_cells(F.col(vec_col), centroids, n_probe)
-            ).alias("cell"),
-        )
-        scored = (
-            assigned.join(F.broadcast(probes), "cell")
-            .where(F.col("neighbor_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(l2_sq(F.col("_qvec"), F.col("_recon")), 6).alias(
-                    "adc_dist"
-                ),
-            )
-        )
+    # ONE Arrow-batched pass computes assignment + PQ recon
+    assigned = _ivf_assign_relation(
+        embeddings,
+        sorted(centroids),
+        id_col,
+        vec_col,
+        out_id="neighbor_id",
+        codebooks=codebooks,
+    )
+    probes = _ivf_probe_relation(
+        embeddings.where(F.col(id_col) < n_query_vecs),
+        sorted(centroids),
+        n_probe,
+        id_col,
+        vec_col,
+    )
+    scored = _pairwise_score_relation(
+        assigned.join(F.broadcast(probes), "cell")
+        .where(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", "_qvec", "_recon"),
+        "_qvec",
+        "_recon",
+        "_raw",
+        "l2",
+    ).select(
+        "query_id",
+        "neighbor_id",
+        F.round(F.col("_raw"), 6).alias("adc_dist"),
+    )
     w = W.partitionBy("query_id").orderBy(
         F.asc("adc_dist"), F.asc("neighbor_id")
     )
@@ -1125,7 +782,7 @@ def binary_quantize(
     iff x_i - mean(x) >= 0, packed 64 dims per long word.
 
     Output: (id, dim int, words array<long>). The per-row mean (the
-    same left-to-right fold as lsh_bucket(center=True), so a SQL
+    same left-to-right fold as the centered LSH bucket's, so a SQL
     oracle replays it bit-for-bit) removes the common offset that
     would otherwise collapse positive-orthant embeddings onto the
     all-ones code. At 100 TB this is the 32x compaction step of a
@@ -1277,19 +934,18 @@ def binary_rerank_topk(
     )
 
 
-# ------------------------------------------------ numpy kernels (r12)
-# Guide §4.2: the literal-matrix HOF folds above (ivf_assign_cell,
-# ivf_probe_cells, pq_choose) and the per-pair cosine/L2 folds are
-# interpreted JVM expression evaluation — Spark does not codegen
-# lambda bodies — and their expression trees also dominate BUILD time
-# (plan construction + analysis) for every ANN query. The kernels
-# below compute the IDENTICAL IEEE doubles: the fold order is
-# preserved by looping over dims and vectorizing over rows, and every
-# argmax/argmin/sort uses uint64 keys whose order equals
-# java.lang.Double.compare's total order, so tie/NaN/-0.0 behavior
-# matches the expression path bit for bit. The expression path stays
-# as ``impl="jvm"`` on each public operator — the rendering the DuckDB
-# oracles replay; tests/test_similarity_np.py pins pandas == jvm.
+# ------------------------------------------------------ numpy kernels
+# Guide §4.2: IVF assignment and probing, PQ encoding, LSH bucketing and
+# the per-pair cosine/L2 rescore run as Arrow-batched numpy. As JVM
+# higher-order-function folds they were interpreted per row (Spark does
+# not codegen lambda bodies) and their expression trees dominated plan
+# build time. The kernels keep the fold order of :func:`dot`,
+# :func:`norm` and :func:`l2_sq` (loop over dims, vectorize over rows),
+# so each double equals the DuckDB oracles' left-to-right folds, and
+# every argmax/argmin/sort uses uint64 keys whose order equals
+# java.lang.Double.compare's total order (ties, NaN, -0.0).
+# tests/test_similarity_np.py pins each kernel against a pure-Python
+# fold.
 
 
 def _np_dkeys(x):
@@ -1314,8 +970,7 @@ def _np_stack_vecs(series, what: str):
     Raises on NULL or ragged rows: every relation these kernels serve
     (the embeddings table and projections of it) is uniform-dim and
     non-null by construction, and silently padding/propagating would
-    corrupt results — fail loudly instead (the jvm path would produce
-    nulls here, a case the pin tests document as out of contract)."""
+    corrupt results — fail loudly instead."""
     import numpy as np
 
     vals = series.to_numpy()
@@ -1373,9 +1028,9 @@ def _np_seq_l2_pairs(A, B):
 
 
 def _centroid_np(centroids: list[tuple[int, list[float]]]):
-    """(cids int64, C (K,d) float64, cnorms float64) — the norms use
-    the same driver-side sequential fold as :func:`_centroid_literals`
-    so both impls score against bit-identical denominators."""
+    """(cids int64, C (K,d) float64, cnorms float64) — the norms are a
+    driver-side left-to-right sum of squares then IEEE sqrt, the fold
+    order of :func:`norm` and of the row norms."""
     import math
 
     import numpy as np
@@ -1409,16 +1064,16 @@ def _pq_tables_np(codebooks: list[list[tuple[int, list[float]]]]):
 
 
 def _np_cos_matrix(V, cids, C, cnorms):
-    """(n, K) cosines: dot / (row_norm * centroid_norm), the exact
-    expression-order arithmetic of ivf_assign_cell/ivf_probe_cells."""
+    """(n, K) cosines: dot / (row_norm * centroid_norm), in that
+    arithmetic order."""
     nv = _np_seq_norm(V)
     return _np_seq_dot_mat(V, C) / (nv[:, None] * cnorms[None, :])
 
 
 def _np_pq_encode(V, pq_tables):
     """(codes (n, m) int64, recon (n, d) float64) — per subspace the
-    argmin squared-L2 code with ties to the lowest code id, matching
-    :func:`pq_choose`'s struct array_min exactly."""
+    argmin squared-L2 code under Double.compare, ties to the lowest
+    code id."""
     import numpy as np
 
     n = V.shape[0]
@@ -1534,7 +1189,7 @@ def _ivf_probe_relation(
     out_vec: str = "_qvec",
 ) -> DataFrame:
     """(out_id, out_vec, cell) — the exploded n_probe nearest-centroid
-    rows per query (cos DESC, cid ASC — ivf_probe_cells order)."""
+    rows per query (cos DESC, cid ASC under Double.compare)."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from ..pyship import ensure_shipped
@@ -1585,13 +1240,13 @@ def _lsh_bucket_relation(
     with_norm: bool = False,
 ) -> DataFrame:
     """(keep..., [_n,] _bucket) — the P-bit sign-bucket relation in one
-    Arrow-batched numpy pass (round 12, guide §4.2): value-identical
-    to :func:`lsh_bucket` (same per-plane left-to-right fold over
-    (x - mean) * hyperplane component, same integer component table,
-    and Spark's NaN >= 0 comparison semantics — NaN counts as
-    non-negative — replicated for degenerate inputs) plus optionally
-    the row norm (the exact :func:`norm` fold). Pinned against the
-    expression path in tests/test_similarity_np.py."""
+    Arrow-batched numpy pass (guide §4.2). Bit p is set iff the
+    left-to-right fold of (x_d - mean) * component(p, d) is >= 0, with
+    component(p, d) = (_HP_A*p + _HP_B*d) % _HP_MOD - (_HP_MOD-1)/2
+    and mean the row's left-to-right component mean when ``center``
+    (else 0); a NaN projection counts as non-negative, as Spark's
+    NaN >= 0 does. ``with_norm`` adds the row norm (the :func:`norm`
+    fold order)."""
     import numpy as np
 
     from pyspark.sql.types import (
@@ -1610,9 +1265,8 @@ def _lsh_bucket_relation(
     fields.append(StructField("_bucket", LongType()))
     src = df.select(*keep, F.col(vec_col).alias("_vec"))
     half = (_HP_MOD - 1) // 2
-    # hyperplane component table, computed once driver-side: int64
-    # arithmetic identical to _hyperplane_component, exact as float64
-    # (|component| <= 501001 << 2^53)
+    # hyperplane component table in int64 arithmetic (a*p overflows
+    # int32), exact as float64 (|component| <= 501001 << 2^53)
     def _hp_row(p: int, d: int):
         return (
             (_HP_A * p + _HP_B * np.arange(d, dtype=np.int64))
@@ -1702,7 +1356,6 @@ def ivf_cell_report(
     centroids: list[tuple[int, list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "pandas",
 ) -> DataFrame:
     """IVF index-quality report: per cell (the argmax-cosine
     assignment, same tie-break as ivf_topk — cos DESC, cid ASC),
@@ -1713,59 +1366,24 @@ def ivf_cell_report(
     cells mean rebalancing, thin margins mean more probes.
 
     Output: (cell, n_vectors, mean_top1_cos, mean_top2_cos,
-    mean_margin), all rounded to 6. Shape (impl="pandas", guide §4.2 +
-    §2.4): ONE Arrow-batched numpy pass emits each vector's top-2
-    cells directly — no crossJoin row blow-up, no per-vector window
-    shuffle — followed by the per-cell groupBy. impl="jvm" is the
-    corpus x broadcast-centroid window rendering the oracle replays:
-    one window per vector over K scores, one groupBy on the cell."""
-    from pyspark.sql import Window as W
-
-    if impl == "pandas":
-        top2 = _ivf_assign_relation(
-            embeddings,
-            sorted(centroids),
-            id_col,
-            vec_col,
-            with_sim=True,
-            top2=True,
-        ).select(
-            # the jvm rendering's cell is IntegerType (it comes from
-            # the cid int centroid relation) — keep the schema identical
-            F.col("cell").cast("int").alias("cell"),
-            F.col("_sim").alias("_c1"),
-            F.col("_c2"),
-        )
-        return top2.groupBy("cell").agg(
-            F.count(F.lit(1)).alias("n_vectors"),
-            F.round(F.avg("_c1"), 6).alias("mean_top1_cos"),
-            F.round(F.avg("_c2"), 6).alias("mean_top2_cos"),
-            F.round(F.avg(F.col("_c1") - F.col("_c2")), 6).alias(
-                "mean_margin"
-            ),
-        )
-
-    spark = embeddings.sparkSession
-    cdf = local_frame(
-        spark,
-        [(int(cid), [float(x) for x in vec]) for cid, vec in centroids],
-        f"cid int, cvec {embeddings.schema[vec_col].dataType.simpleString()}",
-    )
-    scored = embeddings.crossJoin(F.broadcast(cdf)).select(
-        F.col(id_col).alias("_id"),
-        F.col("cid"),
-        cosine(F.col(vec_col), F.col("cvec")).alias("_cos"),
-    )
-    w = W.partitionBy("_id").orderBy(F.desc("_cos"), F.asc("cid"))
-    top2 = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= 2)
-        .groupBy("_id")
-        .agg(
-            F.max(F.when(F.col("_rn") == 1, F.col("cid"))).alias("cell"),
-            F.max(F.when(F.col("_rn") == 1, F.col("_cos"))).alias("_c1"),
-            F.max(F.when(F.col("_rn") == 2, F.col("_cos"))).alias("_c2"),
-        )
+    mean_margin), all rounded to 6; with one centroid the runner-up
+    columns are NULL. Shape (guide §4.2 + §2.4): ONE Arrow-batched
+    numpy pass emits each vector's top-2 cells directly — no crossJoin
+    row blow-up, no per-vector window shuffle — followed by the
+    per-cell groupBy."""
+    top2 = _ivf_assign_relation(
+        embeddings,
+        sorted(centroids),
+        id_col,
+        vec_col,
+        with_sim=True,
+        top2=True,
+    ).select(
+        # the report's output schema types cell as int; the kernel's
+        # long cell is narrowed to keep that contract
+        F.col("cell").cast("int").alias("cell"),
+        F.col("_sim").alias("_c1"),
+        F.col("_c2"),
     )
     return top2.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_vectors"),

@@ -20,7 +20,6 @@ from ..operators.dedup import (
     exact_dedup_groups,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    simhash,
 )
 from ..registry import query
 
@@ -417,7 +416,7 @@ def corpus_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 8 planes + per-row mean centering (round 6): the raw positive-orthant
 # features collapsed to 4 buckets (5.6M candidate pairs at sf0.1);
 # centering restores 200+ buckets / 220k candidates — see
-# operators.similarity.lsh_bucket(center=True).
+# operators.similarity.lsh_bucketed_pairs(center=True).
 EMB_DUP_PLANES = 8
 EMB_DUP_THRESHOLD = 0.99995
 
@@ -437,9 +436,9 @@ def _doc_embedding_pairs_oracle() -> str:
     feat = "[" + ", ".join(terms) + "]"
 
     half = (_HP_MOD - 1) // 2
-    # Per-row mean centering mirrors lsh_bucket(center=True): the same
-    # left-to-right fold sum divided by the length, subtracted from
-    # each component before projecting (bit-identical double ops).
+    # Per-row mean centering mirrors lsh_bucketed_pairs(center=True):
+    # the same left-to-right fold sum divided by the length, subtracted
+    # from each component before projecting (bit-identical double ops).
     mean = (
         "(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
         "list_transform(f, x -> CAST(x AS DOUBLE))), (x, y) -> x + y)"
@@ -1125,10 +1124,10 @@ def pipeline_leakage_safe_split(
 # 100 TB shape; all constants are shared between engines through the
 # operator module so they cannot drift.
 
-CDC_SPAN_SUBSET = 25  # the JVM fold pays O(window) per position;
-# 1-in-25 docs keeps the oracle-replayed carrier a microbenchmark
-# (the signal is per-length-class, not row count — the pandas
-# throughput path covers the full corpus in dedup_cdc_shared_chunks)
+CDC_SPAN_SUBSET = 25  # the SQL replay pays O(window) per position;
+# 1-in-25 docs keeps the span check a microbenchmark (the signal is
+# per-length-class, not row count — dedup_cdc_shared_chunks covers
+# the full corpus)
 CDC_SHARED_SUBSET = 2  # a microbenchmark at driver-check scale
 CDC_MIN_SHARED_LEN = 8
 
@@ -1206,24 +1205,20 @@ def _cdc_spans_oracle() -> str:
 
 @query("dedup_cdc_chunk_spans", _cdc_spans_oracle())
 def dedup_cdc_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.cdc import cdc_chunks_pandas
+    from ..operators.cdc import cdc_chunks
 
-    # Round 12 (VERDICT r11 task 4): the numpy chunker — the same
-    # kernel the full-corpus CDC queries run, value-identical to the
-    # JVM expression per tests/test_cdc.py — replaces the O(window)
-    # per-position slice fold that made this row the suite's one
-    # honest budget violator (4.8 s at 8 cores); the expression
-    # rendering remains the oracle-replay carrier (the DuckDB oracle
-    # replays it verbatim) and stays pinned by the test suite. The
-    # plain scan replaces the former hard-coded repartition(32): the
-    # Arrow kernel wants few large batches, and at 100 TB the scan
-    # arrives pre-split.
+    # The numpy chunker (the kernel every CDC query runs) replaced an
+    # O(window) per-position expression fold that made this row the
+    # suite's one budget violator (4.8 s at 8 cores). The plain scan
+    # replaces the former hard-coded repartition(32): the Arrow kernel
+    # wants few large batches, and at 100 TB the scan arrives
+    # pre-split.
     from ..catalog import load_table
 
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % CDC_SPAN_SUBSET == 0
     )
-    return cdc_chunks_pandas(docs)
+    return cdc_chunks(docs)
 
 
 def _cdc_shared_oracle() -> str:
@@ -1296,8 +1291,8 @@ def dedup_cdc_duplication_ratio(
     covered by chunks shared with other documents — the doc-level
     signal a 100 TB pipeline gates boilerplate on. One chunking
     pass (cached — two consumers), one fingerprint groupBy, one
-    semi-join back, one per-doc rollup; the oracle replays the JVM
-    gear closed form and the same shared-fp decisions."""
+    semi-join back, one per-doc rollup; the oracle replays the
+    gear closed form in SQL and the same shared-fp decisions."""
     from ..operators.cdc import cdc_duplication_ratio
 
     from ..catalog import load_table

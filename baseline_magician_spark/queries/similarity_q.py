@@ -14,7 +14,6 @@ from ..operators.similarity import (
     _HP_MOD,
     brute_force_topk,
     ivf_topk,
-    lsh_bucket,
     lsh_bucketed_pairs,
 )
 from ..registry import query

@@ -10,16 +10,23 @@ oracle parity the driver checks.
   sub-document dedup (fixed-size blocks lose it).
 - Determinism under repartitioning: the boundary decision is a pure
   per-row function, so output is identical at any parallelism.
+- Value identity with a pure-Python gear-hash model of the chunker
+  (``ref_chunks``), which does not call the numpy kernel.
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
+from baseline_magician_spark.functions.hashing import (
+    POLY_BASE,
+    POLY_MOD,
+    POLY_SEED,
+)
 from baseline_magician_spark.operators.cdc import (
+    GOLD,
+    MASK_BITS,
+    MOD,
     WINDOW,
     cdc_chunks,
-    cdc_chunks_pandas,
     cdc_shared_chunks,
 )
 
@@ -29,6 +36,28 @@ DOC = (
     "again until the rolling state forgets everything older than "
     "its own tail and the cut points depend on content alone"
 )
+
+
+def ref_chunks(doc_id, text, mask_bits=MASK_BITS, window=WINDOW):
+    """(id, chunk_ord, chunk_start, chunk_len, chunk_fp) rows: position
+    i ends a chunk iff the fold acc*2 + gear over the trailing window
+    of gear values, mod 2^61, has its low mask_bits bits zero."""
+    g = [((ord(c) % 256) + 1) * GOLD % MOD for c in text]
+    ends = []
+    for i in range(len(g)):
+        h = 0
+        for v in g[max(0, i + 1 - window) : i + 1]:
+            h = (h * 2 + v) % MOD
+        if h % (1 << mask_bits) == 0 and i + 1 < len(g):
+            ends.append(i + 1)
+    rows, start = [], 0
+    for o, end in enumerate(ends + [len(g)] if g else [], 1):
+        fp = POLY_SEED
+        for c in text[start:end]:
+            fp = (fp * POLY_BASE + ord(c)) % POLY_MOD
+        rows.append((doc_id, o, start + 1, end - start, fp))
+        start = end
+    return rows
 
 
 def _chunks(spark, rows):
@@ -91,23 +120,24 @@ def test_empty_and_tiny_documents(spark):
         assert sum(ln for _s, ln in spans) == len(txt)
 
 
-def test_pandas_path_value_identical_to_jvm(spark):
-    """The sliding-recurrence mapInPandas chunker must emit exactly
-    the JVM slice-fold's rows — same constants, same codepoint
-    stream, same spans, same fingerprints — including multibyte
-    codepoints and boundary-free tiny docs."""
+def test_chunks_equal_gear_model(spark):
+    """The numpy chunker emits exactly the model's rows — same
+    constants, same codepoint stream, same spans, same fingerprints —
+    including multibyte and non-BMP codepoints, boundary-free tiny docs,
+    and many documents in one Arrow batch (a document's first positions
+    must not see the previous document's tail)."""
     import random
 
     rng = random.Random(17)
+    lens = [0, 1, 5, 33, 64, 200, 401] + [rng.randrange(90) for _ in range(60)]
     rows = [
-        (i, "".join(rng.choice("abcdef ghijé世") for _ in range(n)))
-        for i, n in enumerate([0, 1, 5, 33, 64, 200, 401])
+        (i, "".join(rng.choice("abcdef ghijé世\U0001f600") for _ in range(n)))
+        for i, n in enumerate(lens)
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(map(tuple, cdc_chunks(df).collect()))
-    b = sorted(map(tuple, cdc_chunks_pandas(df).collect()))
-    assert a == b
-    assert a, "non-empty docs must produce chunks"
+    df = spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
+    got = sorted(map(tuple, cdc_chunks(df).collect()))
+    assert got == sorted(r for i, t in rows for r in ref_chunks(i, t))
+    assert got, "non-empty docs must produce chunks"
 
 
 def test_repartition_invariant_and_shared_chunks(spark):
@@ -136,14 +166,14 @@ def test_repartition_invariant_and_shared_chunks(spark):
     )
 
 
-def test_pandas_path_preserves_string_doc_ids(spark):
+def test_string_doc_ids_preserved(spark):
     """The mapInPandas schema takes the id field's dtype from the
-    SOURCE column (ADVICE r9) — string doc ids must round-trip with
-    the same spans a long-id rendering of the same texts produces."""
+    SOURCE column — string doc ids must round-trip with the same spans
+    a long-id rendering of the same texts produces."""
     rows = [("doc-a", DOC), ("doc-b", "short one"), ("doc-c", DOC + " tail")]
     sdf = spark.createDataFrame(rows, "doc_id string, text string")
-    got = cdc_chunks_pandas(sdf).collect()
-    assert got and dict(cdc_chunks_pandas(sdf).dtypes)["doc_id"] == "string"
+    got = cdc_chunks(sdf).collect()
+    assert got and dict(cdc_chunks(sdf).dtypes)["doc_id"] == "string"
     by_id = {}
     for r in got:
         by_id.setdefault(r["doc_id"], []).append(
@@ -153,7 +183,7 @@ def test_pandas_path_preserves_string_doc_ids(spark):
         [(i, t) for i, (_s, t) in enumerate(rows)], "doc_id long, text string"
     )
     by_num = {}
-    for r in cdc_chunks_pandas(ldf).collect():
+    for r in cdc_chunks(ldf).collect():
         by_num.setdefault(r["doc_id"], []).append(
             (r["chunk_ord"], r["chunk_start"], r["chunk_len"], r["chunk_fp"])
         )
@@ -164,7 +194,8 @@ def test_pandas_path_preserves_string_doc_ids(spark):
 def test_duplication_ratio_bounds_and_signal(spark):
     """cdc_duplication_ratio: ratios in [0, 1]; a doc sharing a long
     run with another doc scores high; a unique-content doc scores 0;
-    dup_chars never exceeds n_chars; JVM and pandas paths agree."""
+    dup_chars never exceeds n_chars; the counts equal the gear model's
+    shared-fingerprint rollup."""
     import random
 
     from baseline_magician_spark.operators.cdc import (
@@ -195,8 +226,12 @@ def test_duplication_ratio_bounds_and_signal(spark):
     assert got[1]["dup_ratio"] > 0.5, "shared-run doc must score high"
     assert got[2]["dup_ratio"] > 0.5
     assert got[3]["dup_ratio"] == 0.0, "unique doc must score 0"
-    a = sorted(map(tuple, cdc_duplication_ratio(df).collect()))
-    b = sorted(
-        map(tuple, cdc_duplication_ratio(df, impl="jvm").collect())
-    )
-    assert a == b
+    chunks = [c for i, t in rows for c in ref_chunks(i, t) if c[3] >= 8]
+    docs_of: dict = {}
+    for i, _o, _s, _ln, fp in chunks:
+        docs_of.setdefault(fp, set()).add(i)
+    for i, t in rows:
+        dup = [c[3] for c in chunks if c[0] == i and len(docs_of[c[4]]) >= 2]
+        r = got[i]
+        assert (r["dup_chars"], r["n_dup_chunks"]) == (sum(dup), len(dup)), i
+        assert abs(r["dup_ratio"] - sum(dup) / len(t)) <= 5e-7, i
