@@ -11,9 +11,14 @@ re-aligns on the same cut points regardless of offset.
 This implementation is the PURE variant: a position ends a chunk iff
 gear(window) % 2^mask_bits == 0, with no min/max clamps. That choice
 is deliberate at 100 TB: the boundary decision is a function of the
-trailing ``window`` characters ONLY, so it is embarrassingly
-parallel per position, stable under repartitioning, replayable by a
-SQL oracle, and shift-invariant (the dedup property). Min/max
+trailing characters ONLY, so it is embarrassingly parallel per
+position, stable under repartitioning, replayable by a SQL oracle,
+and shift-invariant (the dedup property). The effective window is
+the last ``MASK_BITS`` (6) characters, not ``WINDOW`` (32): the test
+reads the low ``mask_bits`` bits of the state, and a character
+folded in k >= mask_bits positions back adds a multiple of 2^k,
+which cannot reach them (tests/test_cdc.py pins
+``window=MASK_BITS`` against ``window=WINDOW``). Min/max
 clamps make boundary selection a sequential scan per document —
 cheap in a byte loop, hostile to a declarative replay — and are the
 FastCDC speed trick, not the dedup semantics.
@@ -68,7 +73,11 @@ def _chunk_batch_np(texts, mask_bits: int, window: int, pw, ipw):
     decoding walks codepoints): with gear G(c) = ((c % 256) + 1) *
     GOLD, position i (1-based) ends a chunk iff h_i = fold(acc*2 + G)
     mod 2^61 over the trailing ``window`` gear values has its low
-    ``mask_bits`` bits zero. The batch concatenates into ONE code
+    ``mask_bits`` bits zero. Only the last ``mask_bits`` gear values
+    can move those bits (a tap at shift k >= mask_bits adds a multiple
+    of 2^k), so the effective window is min(window, mask_bits)
+    characters; the other taps never change a cut. The batch
+    concatenates into ONE code
     array so every stage is a single large-vector op (per-doc numpy
     calls would be overhead-bound at the corpus's ~300-char
     documents).

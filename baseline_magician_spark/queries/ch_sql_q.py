@@ -3910,33 +3910,24 @@ def _xxhash_oracle() -> str:
 @query("ch_sql_xxhash", _xxhash_oracle())
 def ch_sql_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     tabs = _tables(spark, sf_dir, "events")
-    tabs["events"] = tabs["events"].repartition(16)
     return run_ch_query(_XXHASH_SQL, tabs)
 
 
 @query("ch_sql_murmur_hashes", _murmur_oracle())
 def ch_sql_murmur_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     tabs = _tables(spark, sf_dir, "events")
-    tabs["events"] = tabs["events"].repartition(16)
     return run_ch_query(_MURMUR_SQL, tabs)
 
 
 @query("ch_sql_siphash64", _siphash_oracle())
 def ch_sql_siphash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     tabs = _tables(spark, sf_dir, "events")
-    tabs["events"] = tabs["events"].repartition(16)
     return run_ch_query(_SIPHASH_SQL, tabs)
 
 
 @query("ch_sql_cityhash64", _cityhash_oracle())
 def ch_sql_cityhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # repartition the probe scan: the per-row CityHash projection is
-    # interpreted-HOF CPU-bound, and the events file is a single
-    # parquet split locally — without this the whole projection runs
-    # on one core (at 100 TB the scan arrives pre-split; this is the
-    # local[N] equivalent)
     tabs = _tables(spark, sf_dir, "events")
-    tabs["events"] = tabs["events"].repartition(16)
     return run_ch_query(_CITYHASH_SQL, tabs)
 
 
@@ -4051,7 +4042,6 @@ def _numeric_hash_oracle() -> str:
 @query("ch_sql_numeric_hashes", _numeric_hash_oracle())
 def ch_sql_numeric_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     tabs = _tables(spark, sf_dir, "events")
-    tabs["events"] = tabs["events"].repartition(16)
     return run_ch_query(_NUMHASH_SQL, tabs)
 
 
@@ -4130,7 +4120,6 @@ def _murmur3_oracle() -> str:
 @query("ch_sql_murmur3_hashes", _murmur3_oracle())
 def ch_sql_murmur3_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     tabs = _tables(spark, sf_dir, "events")
-    tabs["events"] = tabs["events"].repartition(16)
     return run_ch_query(_MURMUR3_SQL, tabs)
 
 
@@ -4207,7 +4196,6 @@ def _kafka_oracle() -> str:
 @query("ch_sql_kafka_hashes", _kafka_oracle())
 def ch_sql_kafka_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     tabs = _tables(spark, sf_dir, "events")
-    tabs["events"] = tabs["events"].repartition(16)
     return run_ch_query(_KAFKA_SQL, tabs)
 
 
@@ -4343,7 +4331,6 @@ def ch_sql_hash_combine_chains(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     tabs = _tables(spark, sf_dir, "events")
-    tabs["events"] = tabs["events"].repartition(16)
     return run_ch_query(_COMBINE_SQL, tabs)
 
 

@@ -1118,7 +1118,8 @@ def pipeline_leakage_safe_split(
 # --- content-defined chunking (round 9) ------------------------------------
 # Sub-document dedup primitive: Gear rolling-hash boundaries (pure
 # variant — no min/max clamps, so the cut decision is a function of
-# the trailing WINDOW chars only: parallel per position, stable
+# the last MASK_BITS (6) chars only, since the mask test reads the
+# state's low bits: parallel per position, stable
 # under repartitioning, shift-invariant, and exactly replayable
 # below in DuckDB list algebra). operators/cdc.py documents the
 # 100 TB shape; all constants are shared between engines through the

@@ -235,8 +235,9 @@ def main() -> None:
         )
 
         docs = replicate(docs0, k, ["doc_id"], salt_text=True)
-        # widen the single-split scan like load_for_compute does for
-        # the real query — shingling is the per-row-expensive stage
+        # the replicated frame is a synthetic single-split input k x the
+        # real one; widen it over every slot as load_for_compute widens
+        # the real query's scan — shingling is the per-row-expensive stage
         docs = docs.repartition(spark.sparkContext.defaultParallelism)
         term = F.explode(
             F.array_distinct(token_shingles(F.lower(F.col("text")), 3))

@@ -60,6 +60,20 @@ def ref_chunks(doc_id, text, mask_bits=MASK_BITS, window=WINDOW):
     return rows
 
 
+def _mixed_docs():
+    """67 documents: multibyte and non-BMP codepoints, empty and
+    boundary-free tiny docs, and enough of them to share an Arrow
+    batch."""
+    import random
+
+    rng = random.Random(17)
+    lens = [0, 1, 5, 33, 64, 200, 401] + [rng.randrange(90) for _ in range(60)]
+    return [
+        (i, "".join(rng.choice("abcdef ghijé世\U0001f600") for _ in range(n)))
+        for i, n in enumerate(lens)
+    ]
+
+
 def _chunks(spark, rows):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     return {
@@ -126,18 +140,22 @@ def test_chunks_equal_gear_model(spark):
     including multibyte and non-BMP codepoints, boundary-free tiny docs,
     and many documents in one Arrow batch (a document's first positions
     must not see the previous document's tail)."""
-    import random
-
-    rng = random.Random(17)
-    lens = [0, 1, 5, 33, 64, 200, 401] + [rng.randrange(90) for _ in range(60)]
-    rows = [
-        (i, "".join(rng.choice("abcdef ghijé世\U0001f600") for _ in range(n)))
-        for i, n in enumerate(lens)
-    ]
+    rows = _mixed_docs()
     df = spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
     got = sorted(map(tuple, cdc_chunks(df).collect()))
     assert got == sorted(r for i, t in rows for r in ref_chunks(i, t))
     assert got, "non-empty docs must produce chunks"
+
+
+def test_cuts_read_only_the_last_mask_bits_chars(spark):
+    """The effective window is MASK_BITS characters, not WINDOW: the
+    cut test reads the low mask_bits bits of the state, and a tap at
+    shift k >= mask_bits adds a multiple of 2^k, which cannot reach
+    them. A change that lets the high bits decide a cut (a FastCDC-style
+    spread mask) breaks this equality and must update this test."""
+    df = spark.createDataFrame(_mixed_docs(), "doc_id long, text string").coalesce(1)
+    narrow = sorted(map(tuple, cdc_chunks(df, window=MASK_BITS).collect()))
+    assert narrow == sorted(map(tuple, cdc_chunks(df, window=WINDOW).collect()))
 
 
 def test_repartition_invariant_and_shared_chunks(spark):
