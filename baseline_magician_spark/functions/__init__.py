@@ -1,18 +1,14 @@
 """Scalar function library: IP/CIDR arithmetic, ClickHouse-compat shims,
 cross-engine deterministic hashing.
 
-Everything here emits built-in Column expressions (JVM-side, inside
-whole-stage codegen) — no Python UDFs in the hot path.
-"""
+Most functions emit built-in Column expressions (JVM-side, inside
+whole-stage codegen). The exception is the numeric-argument hash family:
+``ch_compat`` renders cityHash64, sipHash64, xxHash64/32, the murmur
+hashes, gccMurmurHash and kafkaMurmurHash over numeric arguments as one
+Arrow UDF over the numpy kernels of ``hash_np``.
 
-from .ip import (  # noqa: F401
-    cidr_address_count,
-    cidr_to_range,
-    ip4_to_long,
-    ip4_to_long_py,
-    long_to_ip4,
-    long_to_ip4_py,
-    parse_cidr_py,
-)
-from .hashing import poly_hash, shingle_hashes, token_shingles  # noqa: F401
-from .ch_compat import CH_FUNCTIONS, ch_fn  # noqa: F401
+The package imports none of its modules; import the one you need
+(``from baseline_magician_spark.functions.ch_compat import ch_fn``). A
+Python worker that unpickles a kernel then loads only that kernel's
+module, not the 6k-line ``ch_compat``.
+"""

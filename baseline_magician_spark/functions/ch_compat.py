@@ -238,13 +238,15 @@ def _num_le_bytes(c: Column, dt: str) -> Column | None:
 # --- vectorized numeric hash path (round 12, guide §4.2) -------------
 # The expression renderings of the byte-exact hash family are built on
 # HOF lets — interpreted at exec time (~90 µs/row measured on
-# sipHash64 over two bigints). For NUMERIC-only argument lists the
-# byte stream is a fixed-width LE layout of the zero-extended bit
-# pattern, so the whole chain runs as one Arrow-batched numpy pass
-# (functions/hash_np.py — pinned bit-exact against the same Python
-# byte models the expression renderings are pinned against, so all
-# renderings share one ground truth; tests/test_hash_np.py). String
-# arguments keep the expression paths.
+# sipHash64 over two bigints) — and their JVM expression trees cost
+# plan handling and JIT work per query. For NUMERIC-only argument
+# lists the byte stream is a fixed-width LE layout of the
+# zero-extended bit pattern, so every numeric hash (the ten names
+# routed below) runs as one Arrow-batched numpy pass through an
+# ``arrow_udf`` (functions/hash_np.py — pinned bit-exact against the
+# same Python byte models the expression renderings are pinned
+# against, so all renderings share one ground truth;
+# tests/test_hash_np.py). String arguments keep the expression paths.
 
 _NP_HASH_KINDS = {
     # kind -> (one(v, w, seed) -> h, combine(h0, h1, seed) -> h)
@@ -255,6 +257,10 @@ _NP_HASH_KINDS = {
     "xx": (
         lambda H, v, w, s: H.xxh64_np(v, w),
         lambda H, a, b, s: H.hl16_np(a, b),
+    ),
+    "xx32": (
+        lambda H, v, w, s: H.xxh32_np(v, w),
+        lambda H, a, b, s: H.xxh32_pair_np(a, b),
     ),
     "sip": (
         lambda H, v, w, s: H.sip64_np(v, w),
@@ -268,6 +274,10 @@ _NP_HASH_KINDS = {
         lambda H, v, w, s: H.murmur3_64_np(v, w),
         lambda H, a, b, s: H.murmur3_64_pair_np(a, b),
     ),
+    "m3_32": (
+        lambda H, v, w, s: H.murmur3_32_np(v, w),
+        lambda H, a, b, s: H.murmur3_32_pair_np(a, b),
+    ),
     "m2_32": (
         lambda H, v, w, s: H.murmur2_32_np(v, w, s),
         lambda H, a, b, s: H.murmur2_32_pair_np(a, b, s),
@@ -278,11 +288,12 @@ _NP_HASH_KINDS = {
 def _np_hash_multi(
     kind: str, cs, seed: int = 0, mask: int | None = None
 ) -> Column | None:
-    """The pandas-UDF rendering of a combineHashes chain, or None
+    """The Arrow-UDF rendering of a combineHashes chain, or None
     when any argument lacks a fixed numeric layout (string/binary —
-    the expression paths handle those). NULL in any argument yields
-    NULL, like the expression chain (a NULL per-arg hash poisons the
-    combine fold)."""
+    the expression paths handle those). Each argument reaches the
+    kernel as an Arrow int64 array of its zero-extended bit pattern;
+    NULL in any argument yields NULL, like the expression chain (a
+    NULL per-arg hash poisons the combine fold)."""
     resolved = []
     for c in cs:
         dt = _arg_dtype(c)
@@ -293,14 +304,7 @@ def _np_hash_multi(
             return None
         resolved.append(uw)
     widths = tuple(w for w, _ in resolved)
-    # nulls are resolved JVM-side: a nullable int64 Series arrives in
-    # pandas as FLOAT64 (lossy past 2^53 — measured corrupting every
-    # hash of a large value next to a null row), so the UDF receives
-    # null-free coalesced values plus one explicit any-null flag.
-    vals = [F.coalesce(v, F.lit(0)) for _, v in resolved]
-    any_null = F.lit(False)
-    for _, v in resolved:
-        any_null = any_null | v.isNull()
+    one, combine = _NP_HASH_KINDS[kind]
 
     from pyspark.sql import SparkSession
 
@@ -310,38 +314,32 @@ def _np_hash_multi(
 
         ensure_shipped(sess)
 
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    @pandas_udf("long")
     def _h(*cols):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
         from . import hash_np as H
 
-        one, combine = _NP_HASH_KINDS[kind]
-        *val_cols, null_col = cols
-        nulls = null_col.to_numpy(dtype=bool)
-        arrs = [
-            s.to_numpy(dtype=np.int64).view(np.uint64)
-            for s in val_cols
-        ]
-
         def masked(h):
-            return (
-                h & np.uint64(mask) if mask is not None else h
-            )
+            return h & np.uint64(mask) if mask is not None else h
 
+        # int64 bit patterns, NULL slots zeroed (the kernel sees every
+        # row; validity is restored below)
+        arrs = [c.fill_null(0).to_numpy().view(np.uint64) for c in cols]
         out = masked(one(H, arrs[0], widths[0], seed))
         for a, w in zip(arrs[1:], widths[1:]):
             out = masked(combine(H, out, masked(one(H, a, w, seed)), seed))
-        res = pd.Series(out.view(np.int64))
-        if nulls.any():
-            res = res.astype("object")
-            res[nulls] = None
-        return res
+        nulls = None
+        for c in cols:
+            if c.null_count:
+                n = c.is_null().to_numpy(zero_copy_only=False)
+                nulls = n if nulls is None else nulls | n
+        return pa.array(out.view(np.int64), mask=nulls)
 
-    return _h(*vals, any_null)
+    # no type hints: arrow_udf defaults to the scalar Array -> Array form
+    return arrow_udf(_h, "long")(*[v for _, v in resolved])
 
 
 def _hash_arg_bytes(c) -> Column:
@@ -501,6 +499,9 @@ def _murmur3_32_multi(*cs) -> Column:
     (seed 0) per argument; multi-arg combines as the hash of the
     8-byte LE pair of the two UInt32 values. Single-parse text path
     when every argument renders safely (round 10)."""
+    col = _np_hash_multi("m3_32", cs)
+    if col is not None:
+        return col
     from .murmur import murmur3_32 as _m3_col
     from .murmur import murmur3_32_fast as _m3
 
@@ -569,6 +570,9 @@ def _xxh32_multi(*cs) -> Column:
     multi-arg combines as XXH32 of the 8-byte LE pair of the two
     UInt32 values. Single-parse text path when every argument
     renders safely (round 10)."""
+    col = _np_hash_multi("xx32", cs)
+    if col is not None:
+        return col
     from .xxhash import xxh32 as _xxh32_col
 
     if len(cs) > 1:

@@ -2,26 +2,37 @@
 family (round 12, guide §4.2).
 
 The Spark expression renderings of cityHash64 / sipHash64 / xxHash64 /
-murmurHash3_64 / murmurHash2 / kafkaMurmurHash are built on
-``_let1``-style HOF lets — interpreted expression islands at exec
-time (~90 µs/row measured on sipHash64(user_id, event_id)). For
-NUMERIC arguments the byte stream is a fixed-width little-endian
-layout of the zero-extended bit pattern, so the whole algorithm
-vectorizes over rows as plain uint64 arithmetic (numpy wraparound ==
-mod-2^64). ch_compat routes numeric-only argument lists through a
-pandas UDF over these kernels; the expression paths remain for string
-inputs and as the oracle-replayable rendering.
+xxHash32 / murmurHash3_64 / murmurHash3_32 / murmurHash2 /
+gccMurmurHash / kafkaMurmurHash are built on ``_let1``-style HOF lets
+— interpreted expression islands at exec time (~90 µs/row measured
+on sipHash64(user_id, event_id)) and large JVM plans to analyze and
+JIT. For NUMERIC arguments the byte stream is a fixed-width
+little-endian layout of the zero-extended bit pattern, so the whole
+algorithm vectorizes over rows as plain uint64 arithmetic (numpy
+wraparound == mod-2^64; the 32-bit members keep their state in the
+low half of a uint64 and mask after each step). ch_compat routes
+numeric-only argument lists through one ``arrow_udf`` over these
+kernels: each argument arrives as an Arrow int64 array, NULL slots
+zero-filled and viewed as uint64, and the result's validity is the
+AND of the arguments'. No pandas on the way, so no float64 detour
+for a nullable int64. The expression paths remain for string inputs
+and as the oracle-replayable rendering.
 
 Every kernel is pinned against the existing pure-Python byte models
-(sip_hash64_py, xxh64_py, murmur2_64_py, murmur2_32_py,
-murmur3_64_py, int_hash64_py, _hl16_py) over random 64-bit values in
-tests/test_hash_np.py — the same models the Column/text renderings
-are pinned against, so all three renderings share one ground truth.
+(sip_hash64_py, xxh64_py, xxh32_py, murmur2_64_py, murmur2_32_py,
+murmur3_64_py, murmur3_32_py, int_hash64_py, _hl16_py) over random
+64-bit values in tests/test_hash_np.py — the same models the
+Column/text renderings are pinned against, so all three renderings
+share one ground truth.
 
 All inputs are np.uint64 arrays holding the CH-native zero-extended
 bit pattern; ``nbytes`` is sizeof(T) of the argument's CH type
-(1/2/4/8). Combines take two uint64 hash arrays (the 16-byte or
-8-byte LE pair streams of the scalar models).
+(1/2/4/8). Combines take two uint64 hash arrays (the 16-byte LE pair
+streams of the 64-bit members, the 8-byte LE pair of two UInt32 for
+the 32-bit ones).
+
+The module imports numpy only, so a Python worker that unpickles the
+hash UDF loads it without the rest of ``functions``.
 """
 
 from __future__ import annotations
@@ -286,7 +297,81 @@ def murmur2_32_np(v, nbytes: int, seed: int = 0):
     return h ^ (h >> np.uint64(15))
 
 
+def _pair32(h0, h1):
+    """The 8-byte LE pair of two UInt32 hashes as one uint64 value —
+    the combine stream of the 32-bit family members."""
+    return (h0 & _M32) | ((h1 & _M32) << np.uint64(32))
+
+
 def murmur2_32_pair_np(h0, h1, seed: int = 0):
     """murmur2_32 of the 8-byte LE pair of two UInt32 values."""
-    v = (h0 & _M32) | ((h1 & _M32) << np.uint64(32))
-    return murmur2_32_np(v, 8, seed)
+    return murmur2_32_np(_pair32(h0, h1), 8, seed)
+
+
+# xx32
+_Q1 = np.uint64(2654435761)
+_Q2 = np.uint64(2246822519)
+_Q3 = np.uint64(3266489917)
+_Q4 = np.uint64(668265263)
+_Q5 = np.uint64(374761393)
+
+
+def xxh32_np(v, nbytes: int):
+    """XXH32 (seed 0) over the value's nbytes-wide LE layout
+    (nbytes <= 8, so no 16-byte stripe)."""
+    h = np.full(len(v), (_Q5 + np.uint64(nbytes)) & _M32)
+    nwords = nbytes // 4
+    for i in range(nwords):
+        lane = (v >> np.uint64(32 * i)) & _M32
+        h = (_rotl32((h + lane * _Q3) & _M32, 17) * _Q4) & _M32
+    for k in range(4 * nwords, nbytes):
+        byte = (v >> np.uint64(8 * k)) & np.uint64(0xFF)
+        h = (_rotl32((h + byte * _Q5) & _M32, 11) * _Q1) & _M32
+    h = h ^ (h >> np.uint64(15))
+    h = (h * _Q2) & _M32
+    h = h ^ (h >> np.uint64(13))
+    h = (h * _Q3) & _M32
+    return h ^ (h >> np.uint64(16))
+
+
+def xxh32_pair_np(h0, h1):
+    """xxh32 of the 8-byte LE pair of two UInt32 values."""
+    return xxh32_np(_pair32(h0, h1), 8)
+
+
+# murmur3 x86_32
+_3C1_32 = np.uint64(0xCC9E2D51)
+_3C2_32 = np.uint64(0x1B873593)
+_3F1_32 = np.uint64(0x85EBCA6B)
+_3F2_32 = np.uint64(0xC2B2AE35)
+
+
+def _m3_32_k(k):
+    k = (k * _3C1_32) & _M32
+    return (_rotl32(k, 15) * _3C2_32) & _M32
+
+
+def murmur3_32_np(v, nbytes: int):
+    """MurmurHash3 x86_32 (seed 0) over nbytes <= 8 of LE layout."""
+    h = np.zeros(len(v), dtype=np.uint64)
+    nwords = nbytes // 4
+    for i in range(nwords):
+        h = h ^ _m3_32_k((v >> np.uint64(32 * i)) & _M32)
+        h = (_rotl32(h, 13) * np.uint64(5) + np.uint64(0xE6546B64)) & _M32
+    rem = nbytes % 4
+    if rem:
+        tail = (v >> np.uint64(32 * nwords)) & np.uint64(
+            (1 << (8 * rem)) - 1
+        )
+        h = h ^ _m3_32_k(tail)
+    h = h ^ np.uint64(nbytes)
+    h = h ^ (h >> np.uint64(16))
+    h = (h * _3F1_32) & _M32
+    h = h ^ (h >> np.uint64(13))
+    h = (h * _3F2_32) & _M32
+    return h ^ (h >> np.uint64(16))
+
+
+def murmur3_32_pair_np(h0, h1):
+    """murmur3_32 of the 8-byte LE pair of two UInt32 values."""
+    return murmur3_32_np(_pair32(h0, h1), 8)

@@ -1,7 +1,7 @@
 """The vectorized numeric-hash kernels (functions/hash_np.py) must be
 bit-exact against the pure-Python byte models — the same ground truth
 the Column/text expression renderings are pinned against — and the
-pandas-UDF rendering in ch_compat must agree with the expression
+Arrow-UDF rendering in ch_compat must agree with the expression
 rendering end-to-end, including NULL propagation and the string-
 argument fallback."""
 
@@ -21,10 +21,11 @@ from baseline_magician_spark.functions.murmur import (
     KAFKA_SEED,
     murmur2_32_py,
     murmur2_64_py,
+    murmur3_32_py,
 )
 from baseline_magician_spark.functions.murmur3_128 import murmur3_64_py
 from baseline_magician_spark.functions.siphash import sip_hash64_py
-from baseline_magician_spark.functions.xxhash import xxh64_py
+from baseline_magician_spark.functions.xxhash import xxh32_py, xxh64_py
 
 rng = random.Random(411)
 VALS = [0, 1, 2**63, 2**64 - 1, 2**63 - 1, 0xDEADBEEF] + [
@@ -59,6 +60,11 @@ def test_single_arg_kernels_match_models(w):
             H.murmur2_32_np(Vw, w, KAFKA_SEED),
             [murmur2_32_py(_le(v, w), KAFKA_SEED) for v in VALS],
         ),
+        "xx32": (H.xxh32_np(Vw, w), [xxh32_py(_le(v, w)) for v in VALS]),
+        "m3_32": (
+            H.murmur3_32_np(Vw, w),
+            [murmur3_32_py(_le(v, w)) for v in VALS],
+        ),
     }
     for name, (got, want) in cases.items():
         assert (got == np.array(want, dtype=np.uint64)).all(), (name, w)
@@ -89,19 +95,17 @@ def test_pair_and_scalar_kernels_match_models():
         )
     ).all()
     a32, b32 = A & np.uint64(0xFFFFFFFF), B & np.uint64(0xFFFFFFFF)
-    assert (
-        H.murmur2_32_pair_np(a32, b32, KAFKA_SEED)
-        == np.array(
-            [
-                murmur2_32_py(
-                    _le(a & 0xFFFFFFFF, 4) + _le(b & 0xFFFFFFFF, 4),
-                    KAFKA_SEED,
-                )
-                for a, b in pairs
-            ],
-            dtype=np.uint64,
-        )
-    ).all()
+    pair32 = [_le(a, 4) + _le(b, 4) for a, b in pairs]
+    for got, model in [
+        (
+            H.murmur2_32_pair_np(a32, b32, KAFKA_SEED),
+            lambda b: murmur2_32_py(b, KAFKA_SEED),
+        ),
+        (H.xxh32_pair_np(a32, b32), xxh32_py),
+        (H.murmur3_32_pair_np(a32, b32), murmur3_32_py),
+    ]:
+        want = np.array([model(b) for b in pair32], dtype=np.uint64)
+        assert (got == want).all(), model
     assert (
         H.int_hash64_np(A)
         == np.array([int_hash64_py(v) for v in VALS], dtype=np.uint64)
@@ -116,7 +120,8 @@ _HASH_SQL = (
     "SELECT i, cityHash64(a, b) AS cc, sipHash64(a, b) AS sc, "
     "xxHash64(a, b) AS xc, murmurHash3_64(a, b) AS mc, "
     "kafkaMurmurHash(a, b) AS kc, murmurHash2_64(a, b) AS m2, "
-    "gccMurmurHash(a, b) AS gc FROM t"
+    "gccMurmurHash(a, b) AS gc, xxHash32(a, b) AS x32, "
+    "murmurHash3_32(a, b) AS m32 FROM t"
 )
 
 
@@ -169,7 +174,13 @@ def test_mixed_width_arguments(spark):
     df = spark.createDataFrame(
         [(7, -3), (0, 0), (2**31 - 1, -(2**62))], "a int, b long"
     )
-    for fn in ("sipHash64", "xxHash64", "murmurHash3_64"):
+    for fn in (
+        "sipHash64",
+        "xxHash64",
+        "murmurHash3_64",
+        "xxHash32",
+        "murmurHash3_32",
+    ):
         got = _run2 = sorted(
             r.h
             for r in run_ch_query(
@@ -190,3 +201,76 @@ def test_mixed_width_arguments(spark):
         finally:
             ch_compat._np_hash_multi = orig
         assert got == want, fn
+
+
+def _sl64(u: int) -> int:
+    return u - (1 << 64) if u >= 1 << 63 else u
+
+
+def _pair(model, w):
+    return lambda h0, h1: model(_le(h0, w) + _le(h1, w))
+
+
+_KAFKA = 0x7FFFFFFF
+# CH name -> (per-argument hash of the 8 LE bytes, pair combine,
+# signed 64-bit result)
+_MODELS = {
+    "cityHash64": (lambda b: int_hash64_py(int.from_bytes(b, "little")),
+                   _hl16_py, True),
+    "sipHash64": (sip_hash64_py, _pair(sip_hash64_py, 8), True),
+    "xxHash64": (xxh64_py, _hl16_py, True),
+    "xxHash32": (xxh32_py, _pair(xxh32_py, 4), False),
+    "murmurHash2_64": (murmur2_64_py, _pair(murmur2_64_py, 8), True),
+    "murmurHash2_32": (murmur2_32_py, _pair(murmur2_32_py, 4), False),
+    "murmurHash3_32": (murmur3_32_py, _pair(murmur3_32_py, 4), False),
+    "murmurHash3_64": (murmur3_64_py, _pair(murmur3_64_py, 8), True),
+    "gccMurmurHash": (
+        lambda b: murmur2_64_py(b, GCC_SEED),
+        _pair(lambda b: murmur2_64_py(b, GCC_SEED), 8),
+        True,
+    ),
+    "kafkaMurmurHash": (
+        lambda b: murmur2_32_py(b, KAFKA_SEED) & _KAFKA,
+        _pair(lambda b: murmur2_32_py(b, KAFKA_SEED) & _KAFKA, 4),
+        False,
+    ),
+}
+
+
+def test_adversarial_single_batch_matches_models(spark):
+    """Values a float64 detour would corrupt (above 2^53, the ±2^63
+    edges) and 0, each in the same Arrow batch as a NULL in its own and
+    in the other argument: every numeric hash must equal its Python
+    model exactly, and NULL in either argument must give NULL."""
+    from baseline_magician_spark.plans.ch_sql import run_ch_query
+
+    edges = [2**53 + 1, -(2**53) - 1, 2**62 + 3, 2**63 - 1, -(2**63), 0]
+    rows = []
+    for v in edges:
+        rows += [(v, 2**60 + 7), (None, v), (v, None), (-v - 1, v)]
+    rows = [(i, a, b) for i, (a, b) in enumerate(rows)]
+    df = spark.createDataFrame(rows, "i long, a long, b long").coalesce(1)
+    items = ", ".join(
+        f"{fn}(a) AS s{k}, {fn}(a, b) AS p{k}"
+        for k, fn in enumerate(_MODELS)
+    )
+    got = {
+        r["i"]: r
+        for r in run_ch_query(
+            f"SELECT i, {items} FROM t", {"t": df}
+        ).collect()
+    }
+    for i, a, b in rows:
+        r = got[i]
+        for k, (fn, (one, combine, signed)) in enumerate(_MODELS.items()):
+            out = _sl64 if signed else (lambda u: u)
+            if a is None:
+                want_s = want_p = None
+            else:
+                ha = one(_le(a, 8))
+                want_s = out(ha)
+                want_p = (
+                    None if b is None else out(combine(ha, one(_le(b, 8))))
+                )
+            assert r[f"s{k}"] == want_s, (fn, a)
+            assert r[f"p{k}"] == want_p, (fn, a, b)

@@ -307,7 +307,11 @@ def test_text_combines_equal_column_fallback(spark):
         " murmurHash2_64(a, b) AS m1, murmurHash3_32(a, b) AS m2,"
         " murmurHash3_64(a, b) AS m3, murmurHash3_64(s, b) AS m4,"
         " kafkaMurmurHash(a, b) AS k1, murmurHash2_32(a, s) AS k2,"
-        " gccMurmurHash(a, b) AS g1"
+        " gccMurmurHash(a, b) AS g1,"
+        # numeric-only xxHash32/murmurHash3_32 take the Arrow kernel on
+        # both sides; a string argument keeps their text and Column
+        # combine renderings compared
+        " xxHash32(s, b) AS x3, murmurHash3_32(a, s) AS m5"
         " FROM t"
     )
     fast = sorted(
