@@ -29,6 +29,7 @@ from .xxhash import xxh64_fast as _xxh64
 from .funnel import retention as _retention
 from .hashing import int_hash32 as _int_hash32
 from .hashing import int_hash64 as _int_hash64
+from .hashing import le_hex
 from .ip import ip4_to_long, long_to_ip4
 
 
@@ -490,7 +491,7 @@ def _murmur2_64_multi(*cs) -> Column:
     hashes = [_m2(_hash_arg_bytes(c)) for c in cs]
     out = hashes[0]
     for h in hashes[1:]:
-        out = _m2_col(F.unhex(F.concat(_le16(out), _le16(h))))
+        out = _m2_col(F.unhex(F.concat(le_hex(out, 8), le_hex(h, 8))))
     return out
 
 
@@ -514,25 +515,8 @@ def _murmur3_32_multi(*cs) -> Column:
     hashes = [_m3(_hash_arg_bytes(c)) for c in cs]
     out = hashes[0]
     for h in hashes[1:]:
-        le8 = lambda x: F.regexp_replace(  # noqa: E731
-            F.reverse(F.lpad(F.hex(x), 8, "0")), "(.)(.)", "$2$1"
-        )
-        out = _m3_col(F.unhex(F.concat(le8(out), le8(h))))
+        out = _m3_col(F.unhex(F.concat(le_hex(out, 4), le_hex(h, 4))))
     return out
-
-
-def _le16(h: Column) -> Column:
-    """Long -> 16 hex chars of its 8-byte little-endian layout."""
-    return F.regexp_replace(
-        F.reverse(F.lpad(F.hex(h), 16, "0")), "(.)(.)", "$2$1"
-    )
-
-
-def _le8(h: Column) -> Column:
-    """UInt32-valued long -> 8 hex chars of its 4-byte LE layout."""
-    return F.regexp_replace(
-        F.reverse(F.lpad(F.hex(h), 8, "0")), "(.)(.)", "$2$1"
-    )
 
 
 def _xxh64_multi(*cs) -> Column:
@@ -584,7 +568,7 @@ def _xxh32_multi(*cs) -> Column:
     hashes = [_xxh32(_hash_arg_bytes(c)) for c in cs]
     out = hashes[0]
     for h in hashes[1:]:
-        out = _xxh32_col(F.unhex(F.concat(_le8(out), _le8(h))))
+        out = _xxh32_col(F.unhex(F.concat(le_hex(out, 4), le_hex(h, 4))))
     return out
 
 
@@ -620,7 +604,7 @@ def _murmur2_32_seeded_multi(seed: int, mask: int | None = None):
         hashes = [one(_hash_arg_bytes(c)) for c in cs]
         out = hashes[0]
         for h in hashes[1:]:
-            out = one(F.unhex(F.concat(_le8(out), _le8(h))))
+            out = one(F.unhex(F.concat(le_hex(out, 4), le_hex(h, 4))))
         return out
 
     return build
@@ -651,7 +635,7 @@ def _gcc_murmur_multi(*cs) -> Column:
     out = hashes[0]
     for h in hashes[1:]:
         out = _m2_col(
-            F.unhex(F.concat(_le16(out), _le16(h))), GCC_SEED
+            F.unhex(F.concat(le_hex(out, 8), le_hex(h, 8))), GCC_SEED
         )
     return out
 
@@ -674,7 +658,7 @@ def _murmur3_64_multi(*cs) -> Column:
     hashes = [_m3_64(_hash_arg_bytes(c)) for c in cs]
     out = hashes[0]
     for h in hashes[1:]:
-        out = _m3_64(F.unhex(F.concat(_le16(out), _le16(h))))
+        out = _m3_64(F.unhex(F.concat(le_hex(out, 8), le_hex(h, 8))))
     return out
 
 
@@ -707,16 +691,11 @@ def _sip_hash64_multi(*cs) -> Column:
         if col is not None:
             return col
 
-    def le_bytes(h: Column) -> Column:
-        return F.regexp_replace(
-            F.reverse(F.lpad(F.hex(h), 16, "0")), "(.)(.)", "$2$1"
-        )
-
     hashes = [_sip_hash64(_hash_arg_bytes(c)) for c in cs]
     out = hashes[0]
     for h in hashes[1:]:
         out = _sip_hash64_col(
-            F.unhex(F.concat(le_bytes(out), le_bytes(h)))
+            F.unhex(F.concat(le_hex(out, 8), le_hex(h, 8)))
         )
     return out
 

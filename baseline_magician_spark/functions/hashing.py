@@ -193,6 +193,14 @@ def _ushr(x: Column, n: int) -> Column:
     return F.shiftrightunsigned(x, n)
 
 
+def le_hex(h: Column, width: int) -> Column:
+    """Long -> 2*``width`` hex chars of its ``width``-byte
+    little-endian layout (the Column twin of ``le_bytes_sql``)."""
+    return F.regexp_replace(
+        F.reverse(F.lpad(F.hex(h), 2 * width, "0")), "(.)(.)", "$2$1"
+    )
+
+
 def _let_chain(seed: Column, steps) -> Column:
     """Thread ``seed`` through ``steps`` with each intermediate bound
     ONCE as a lambda variable (transform over a 1-element array).

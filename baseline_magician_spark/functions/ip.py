@@ -9,9 +9,9 @@ re-derived from public CIDR math, code written Spark-first):
   vendor/github.com/apparentlymart/go-cidr/cidr.go:106-139
   (AddressRange / AddressCount).
 - The reference's IP upper bound is ``start + AddressCount`` — one past
-  the broadcast address (off-by-one, main.go:238). `cidr_to_range`
-  reproduces that bound when ``reference_quirk=True`` (default), and the
-  strict-correct inclusive bound otherwise.
+  the broadcast address (off-by-one, main.go:238). `parse_cidr_py`
+  reproduces that bound; it is the only CIDR parser, and the networks
+  dimension is built from it on the driver.
 
 All Column builders are built-in-function compositions: they stay inside
 whole-stage codegen and never leave the JVM.
@@ -47,33 +47,6 @@ def long_to_ip4(col: Column | str) -> Column:
     )
 
 
-def cidr_address_count(masklen: Column | str) -> Column:
-    """2^(32 - masklen) as int64 (go-cidr AddressCount for IPv4)."""
-    m = F.col(masklen) if isinstance(masklen, str) else masklen
-    return F.shiftleft(F.lit(1).cast("long"), (32 - m).cast("int"))
-
-
-def cidr_to_range(cidr: Column | str, reference_quirk: bool = True) -> list[Column]:
-    """CIDR string column -> [network, start_long, end_long, masklen].
-
-    ``end_long`` is ``start + 2^(32-mask)`` with the quirk (one past the
-    broadcast address, matching the reference's generated predicate), or
-    ``start + 2^(32-mask) - 1`` strict.
-    """
-    c = F.col(cidr) if isinstance(cidr, str) else cidr
-    base = F.split(c, "/")
-    masklen = base[1].cast("int")
-    start = ip4_to_long(base[0])
-    count = cidr_address_count(masklen)
-    end = start + count if reference_quirk else start + count - 1
-    return [
-        c.alias("network"),
-        start.alias("start_long"),
-        end.alias("end_long"),
-        masklen.alias("masklen"),
-    ]
-
-
 # ---------------------------------------------------------------- driver side
 
 
@@ -86,8 +59,13 @@ def long_to_ip4_py(v: int) -> str:
     return f"{(v >> 24) & 255}.{(v >> 16) & 255}.{(v >> 8) & 255}.{v & 255}"
 
 
-def parse_cidr_py(cidr: str, reference_quirk: bool = True) -> tuple[str, int, int, int]:
+def parse_cidr_py(cidr: str) -> tuple[str, int, int, int]:
     """CIDR -> (network, start_long, end_long, masklen); raises on bad input.
+
+    ``end_long`` is ``start + 2^(32-mask)``: one past the broadcast
+    address, the reference's off-by-one upper bound (main.go:238,
+    go-cidr cidr.go:136-139): under the inclusive range predicate the
+    next network's base address matches too.
 
     IPv6 input raises ValueError — callers skip those networks like the
     reference does (main.go:223-226).
@@ -104,6 +82,4 @@ def parse_cidr_py(cidr: str, reference_quirk: bool = True) -> tuple[str, int, in
     start = ip4_to_long_py(addr)
     # Canonicalize to the network base address.
     start &= ~((1 << (32 - masklen)) - 1) & 0xFFFFFFFF
-    count = 1 << (32 - masklen)
-    end = start + count if reference_quirk else start + count - 1
-    return cidr, start, end, masklen
+    return cidr, start, start + (1 << (32 - masklen)), masklen

@@ -27,7 +27,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .cityhash import _sl
-from .hashing import _let1, _ushr
+from .hashing import _let1, _ushr, le_hex
 
 _M64 = (1 << 64) - 1
 
@@ -225,15 +225,9 @@ def murmur3_128_hex(col, seed: int = 0) -> Column:
     """CH murmurHash3_128's FixedString(16) result rendered as 32
     uppercase hex chars of the output BYTE stream (h1 LE then h2 LE
     — the order the reference wire format would carry)."""
-
-    def le16(h: Column) -> Column:
-        return F.regexp_replace(
-            F.reverse(F.lpad(F.hex(h), 16, "0")), "(.)(.)", "$2$1"
-        )
-
     return _let1(
         murmur3_128_struct(col, seed),
-        lambda s: F.concat(le16(s["h1"]), le16(s["h2"])),
+        lambda s: F.concat(le_hex(s["h1"], 8), le_hex(s["h2"], 8)),
     )
 
 

@@ -13,12 +13,14 @@ gear(window) % 2^mask_bits == 0, with no min/max clamps. That choice
 is deliberate at 100 TB: the boundary decision is a function of the
 trailing characters ONLY, so it is embarrassingly parallel per
 position, stable under repartitioning, replayable by a SQL oracle,
-and shift-invariant (the dedup property). The effective window is
-the last ``MASK_BITS`` (6) characters, not ``WINDOW`` (32): the test
-reads the low ``mask_bits`` bits of the state, and a character
-folded in k >= mask_bits positions back adds a multiple of 2^k,
-which cannot reach them (tests/test_cdc.py pins
-``window=MASK_BITS`` against ``window=WINDOW``). Min/max
+and shift-invariant (the dedup property). The window is the last
+``mask_bits`` (``MASK_BITS`` = 6) characters: the test reads the low
+``mask_bits`` bits of the state, and a character folded in
+k >= mask_bits positions back adds a multiple of 2^k, which cannot
+reach them. The DuckDB oracles and the pure-Python test model replay
+the wider ``WINDOW`` (32) instead, as an independent reference that
+the narrow kernel must match (tests/test_cdc.py also pins the model
+at both widths). Min/max
 clamps make boundary selection a sequential scan per document —
 cheap in a byte loop, hostile to a declarative replay — and are the
 FastCDC speed trick, not the dedup semantics.
@@ -32,9 +34,9 @@ Spark and in the DuckDB BIGINT oracle replay
 
 Scale shape: one map-side ``mapInPandas`` pass, no shuffle until the
 caller aggregates chunk fingerprints. The closed form runs as numpy
-vector ops — 32 shift-adds for the rolling states (uint64 wraparound
-is exact mod 2^61 because 2^64 is a multiple of 2^61) and prefix
-polynomial hashes for the chunk fingerprints (every character read
+vector ops — ``mask_bits`` shift-adds for the rolling states
+(uint64 wraparound is exact mod 2^61 because 2^64 is a multiple of
+2^61) and prefix polynomial hashes for the chunk fingerprints (every character read
 once, no per-char Python loop). tests/test_cdc.py pins it against a
 pure-Python gear-hash model; the DuckDB oracle replays the same
 closed form in SQL.
@@ -47,7 +49,7 @@ from pyspark.sql import functions as F
 
 GOLD = 0x9E3779B9  # golden-ratio odd constant; gear table generator
 MOD = 1 << 61
-WINDOW = 32
+WINDOW = 32  # the oracles' and the test model's replay width
 MASK_BITS = 6  # boundary iff h % 64 == 0 -> ~64-char expected chunks
 
 
@@ -66,17 +68,17 @@ def _pow_mod_np(base: int, n: int, mod: int):
     return out
 
 
-def _chunk_batch_np(texts, mask_bits: int, window: int, pw, ipw):
+def _chunk_batch_np(texts, mask_bits: int, pw, ipw):
     """(doc_row, chunk_ord, start, len, fp) int64 arrays for a whole
     batch of non-empty documents — the numpy vectorized rendering of
     the gear closed form over the document's codepoints (utf-32-le
     decoding walks codepoints): with gear G(c) = ((c % 256) + 1) *
     GOLD, position i (1-based) ends a chunk iff h_i = fold(acc*2 + G)
-    mod 2^61 over the trailing ``window`` gear values has its low
-    ``mask_bits`` bits zero. Only the last ``mask_bits`` gear values
-    can move those bits (a tap at shift k >= mask_bits adds a multiple
-    of 2^k), so the effective window is min(window, mask_bits)
-    characters; the other taps never change a cut. The batch
+    mod 2^61 over the trailing gear values has its low ``mask_bits``
+    bits zero. Only the last ``mask_bits`` gear values can move those
+    bits (a tap at shift k >= mask_bits adds a multiple of 2^k), so
+    the kernel folds exactly ``mask_bits`` taps; a wider window gives
+    the same cuts. The batch
     concatenates into ONE code
     array so every stage is a single large-vector op (per-doc numpy
     calls would be overhead-bound at the corpus's ~300-char
@@ -86,14 +88,12 @@ def _chunk_batch_np(texts, mask_bits: int, window: int, pw, ipw):
     2^61, so arithmetic done mod 2^64 (numpy's native overflow
     behavior) followed by ``& (2^61 - 1)`` equals the mod-2^61
     result. The rolling state is the windowed dot
-    h_i = sum_k g_{i-k} * 2^k — 32 shift-adds over the concatenated
-    gear array (gear values are < 2^40, so each shifted term and the
-    wrap-sum are exact mod 2^61); taps at shift >= 61 vanish mod
-    2^61, so the window truncates at 61 like the oracle closed form's
-    modular arithmetic. The first window-1 positions of each
-    document must not see the previous document's tail, so a
-    (docs x window-1) fix-up recomputes exactly those states from
-    each document's own prefix.
+    h_i = sum_{k < mask_bits} g_{i-k} * 2^k — ``mask_bits`` shift-adds
+    over the concatenated gear array (gear values are < 2^40, so each
+    shifted term and the wrap-sum are exact mod 2^61). The first
+    mask_bits-1 positions of each document must not see the previous
+    document's tail, so a (docs x mask_bits-1) fix-up recomputes
+    exactly those states from each document's own prefix.
 
     Chunk assembly exploits contiguity: document ends C[d] are
     themselves chunk ends, and docs abut, so the sorted union of
@@ -128,12 +128,11 @@ def _chunk_batch_np(texts, mask_bits: int, window: int, pw, ipw):
         joined.encode("utf-32-le"), dtype=np.uint32
     ).astype(np.uint64)
     g = (codes % np.uint64(256) + np.uint64(1)) * np.uint64(GOLD)
-    w = min(window, 61)
     h = g.copy()
-    for k in range(1, min(w, n)):
+    for k in range(1, min(mask_bits, n)):
         h[k:] += g[: n - k] << np.uint64(k)
-    # fix-up: position o_d + j (j < w-1) may only sum taps k <= j
-    fw = min(w - 1, int(lens.max()))
+    # fix-up: position o_d + j (j < mask_bits-1) may only sum taps k <= j
+    fw = min(mask_bits - 1, int(lens.max()))
     if fw > 0:
         J = np.arange(fw)
         P2 = O[:, None] + J[None, :]  # docs x fw global positions
@@ -186,7 +185,6 @@ def cdc_chunks(
     text_col: str = "text",
     id_col: str = "doc_id",
     mask_bits: int = MASK_BITS,
-    window: int = WINDOW,
 ) -> DataFrame:
     """(id, chunk_ord, chunk_start, chunk_len, chunk_fp) — one row
     per content-defined chunk; chunk_start is 1-based and chunk_fp is
@@ -220,7 +218,7 @@ def cdc_chunks(
                 pw = _pow_mod_np(POLY_BASE, maxlen, POLY_MOD)
                 ipw = _pow_mod_np(binv, maxlen, POLY_MOD)
             d_of, ords, starts, lens, fps = _chunk_batch_np(
-                texts, mask_bits, window, pw, ipw
+                texts, mask_bits, pw, ipw
             )
             yield pd.DataFrame(
                 {
@@ -255,7 +253,6 @@ def cdc_shared_chunks(
     min_docs: int = 2,
     min_len: int = 8,
     mask_bits: int = MASK_BITS,
-    window: int = WINDOW,
 ) -> DataFrame:
     """Chunk fingerprints appearing in >= min_docs distinct
     documents (the cross-document duplicate-content relation):
@@ -264,9 +261,7 @@ def cdc_shared_chunks(
     Shuffle inventory: ONE groupBy on chunk_fp — fingerprints are
     uniform (polynomial hash), so no hot keys; at corpus scale this
     is the same band-key shape as MinHash LSH."""
-    chunks = cdc_chunks(
-        docs, text_col, id_col, mask_bits=mask_bits, window=window
-    )
+    chunks = cdc_chunks(docs, text_col, id_col, mask_bits=mask_bits)
     return (
         chunks.where(F.col("chunk_len") >= min_len)
         .groupBy("chunk_fp")
@@ -283,14 +278,12 @@ def cdc_duplication_ratio(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_docs: int = 2,
     min_len: int = 8,
     mask_bits: int = MASK_BITS,
-    window: int = WINDOW,
 ) -> DataFrame:
     """Per-document duplicate-content ratio: the fraction of a
     document's characters covered by chunks whose fingerprint
-    appears in >= min_docs distinct documents — the DOC-LEVEL gating
+    appears in >= 2 distinct documents — the DOC-LEVEL gating
     signal CDC exists to produce (drop or down-weight documents that
     are mostly boilerplate shared with the rest of the corpus).
 
@@ -308,48 +301,11 @@ def cdc_duplication_ratio(
     conditional min/max so ineligible rows still flow through for
     the ``n_chars`` sum — then one groupBy on the document id rolls
     everything up. Two uniform-key shuffles total; no persist, no
-    semi-join, no second scan of the corpus. (min != max ⇔
-    countDistinct >= 2; ``min_docs`` other than 2 falls back to the
-    aggregate + semi-join rendering.)"""
-    chunks = cdc_chunks(
-        docs, text_col, id_col, mask_bits=mask_bits, window=window
-    )
-    if min_docs != 2:
-        from ..cache_tracker import track
-
-        eligible = track(
-            chunks.where(F.col("chunk_len") >= min_len).persist()
-        )
-        shared = (
-            eligible.groupBy("chunk_fp")
-            .agg(F.countDistinct(id_col).alias("_nd"))
-            .where(F.col("_nd") >= min_docs)
-            .select("chunk_fp")
-        )
-        per_doc = (
-            eligible.join(shared, "chunk_fp", "left_semi")
-            .groupBy(id_col)
-            .agg(
-                F.sum("chunk_len").alias("dup_chars"),
-                F.count(F.lit(1)).alias("n_dup_chunks"),
-            )
-        )
-        base = docs.where(F.length(F.col(text_col)) > 0).select(
-            F.col(id_col),
-            F.length(F.col(text_col)).cast("long").alias("n_chars"),
-        )
-        dup = F.coalesce(F.col("dup_chars"), F.lit(0).cast("long"))
-        return base.join(per_doc, id_col, "left").select(
-            id_col,
-            "n_chars",
-            dup.alias("dup_chars"),
-            F.coalesce(
-                F.col("n_dup_chunks"), F.lit(0).cast("long")
-            ).alias("n_dup_chunks"),
-            F.round(dup / F.col("n_chars"), 6).alias("dup_ratio"),
-        )
-
+    semi-join, no second scan of the corpus (min != max ⇔
+    countDistinct >= 2)."""
     from pyspark.sql import Window
+
+    chunks = cdc_chunks(docs, text_col, id_col, mask_bits=mask_bits)
 
     w = Window.partitionBy("chunk_fp")
     elig_id = F.when(

@@ -2,26 +2,14 @@
 
 The reference runs one full-scan query PER network, sequentially
 (main.go:215-287) — N scans of the fact table. Spark-first, this is a
-single pass:
+single pass: the networks dimension is tiny (tens to thousands of
+rows), so broadcast it and let Catalyst use a BroadcastNestedLoopJoin
+with the range predicate. One scan of the fact table regardless of N.
 
-- **broadcast range join** (default): the networks dimension is tiny
-  (thousands of rows), so broadcast it and let Catalyst use a
-  BroadcastNestedLoopJoin with the range predicate. One scan of the
-  fact table regardless of N.
-
-- **bucketed equi-join** (scale path, ``prefix_bits``): at 100 TB with
-  100k+ networks a nested-loop against every row is wasteful. Bucket
-  the IPv4 space by a fixed prefix (default /16 → 65536 buckets):
-  each fact row computes its bucket with one shift (map-side, no
-  shuffle), each network explodes into the buckets it covers (a /20
-  lands in 1 bucket; a /8 spans 256). The join becomes a hash
-  equi-join on bucket id with a residual range filter — shuffle-free
-  when the networks side is still broadcast, and an ordinary shuffled
-  hash join keyed on a uniformly-distributed bucket id when it is not.
-
-Both variants keep the range predicate `ip >= start AND ip <= end`
-exactly as the reference generates it (including its off-by-one upper
-bound — see functions.ip.cidr_to_range).
+The predicate is ``ip >= start AND ip <= end`` exactly as the reference
+generates it, including its off-by-one upper bound (see
+``functions.ip.parse_cidr_py``). SCALE.md records why a prefix-bucketed
+hash join is not kept alongside it.
 """
 
 from __future__ import annotations
@@ -34,43 +22,9 @@ def broadcast_range_join(
     facts: DataFrame,
     networks: DataFrame,
     ip_col: Column | str = "ip_long",
-    how: str = "inner",
 ) -> DataFrame:
-    """facts ⋈ networks ON ip BETWEEN start_long AND end_long (broadcast)."""
+    """facts ⋈ networks ON ip BETWEEN start_long AND end_long (inner,
+    broadcast): a fact row outside every network is dropped."""
     ip = F.col(ip_col) if isinstance(ip_col, str) else ip_col
     cond = (ip >= networks["start_long"]) & (ip <= networks["end_long"])
-    return facts.join(F.broadcast(networks), cond, how)
-
-
-def bucketed_range_join(
-    facts: DataFrame,
-    networks: DataFrame,
-    ip_col: Column | str = "ip_long",
-    prefix_bits: int = 16,
-    broadcast_networks: bool = True,
-) -> DataFrame:
-    """Equi-join on IP prefix bucket + residual range filter.
-
-    Requires every network's [start_long, end_long] to be bucket-
-    exploded; correct for any range, not just CIDR-aligned ones.
-    """
-    ip = F.col(ip_col) if isinstance(ip_col, str) else ip_col
-    shift = 32 - prefix_bits
-
-    nets = networks.withColumn(
-        "_bucket",
-        F.explode(
-            F.sequence(
-                F.shiftright(F.col("start_long"), shift),
-                F.shiftright(F.col("end_long"), shift),
-            )
-        ),
-    )
-    if broadcast_networks:
-        nets = F.broadcast(nets)
-
-    f = facts.withColumn("_bucket", F.shiftright(ip, shift))
-    joined = f.join(nets, "_bucket").where(
-        (ip >= F.col("start_long")) & (ip <= F.col("end_long"))
-    )
-    return joined.drop("_bucket")
+    return facts.join(F.broadcast(networks), cond)

@@ -9,7 +9,8 @@ code here is written Spark-first, not translated):
   go-cidr cidr.go:136-139)
 - 27 aggregates in a single pass, ``toInt64(agg(metric))`` truncation
   (main.go:240-279)
-- empty-network skip: count(*)==0 groups dropped (main.go:331-334)
+- empty-network skip: the inner join never forms a group for a network
+  no row falls in (main.go:331-334)
 - IPv6 networks skipped (main.go:223-226)
 - threshold = uint-truncated expression result; bits channel divided
   /1024/1024 after truncation (main.go:372-434)
@@ -43,7 +44,7 @@ from pyspark.sql import functions as F
 from ..config import BaselineConfig
 from ..functions.ip import ip4_to_long, parse_cidr_py
 from ..local_frame import local_frame
-from ..operators.range_join import broadcast_range_join, bucketed_range_join
+from ..operators.range_join import broadcast_range_join
 
 log = logging.getLogger(__name__)
 
@@ -113,14 +114,15 @@ def baseline_aggregate(
     metric_cols: tuple[str, ...] = REFERENCE_METRICS,
     agg: str = "avg",
     host_col: str = "host",
-    use_bucketed_join: bool = False,
 ) -> DataFrame:
     """One-pass per-network aggregation: the reference's NETWORKS_LOOP
     (N sequential scans) collapsed into range-join + groupBy.
 
     Output: one row per network with ``samples`` (count(*)) and one
     int64 column per metric (``toInt64(agg(metric))`` semantics —
-    truncating cast after avg/max).
+    truncating cast after avg/max). The inner range join drops a
+    network no row falls in, which is the reference's empty-slice skip
+    (main.go:331-334).
     """
     if agg not in ("avg", "max"):
         raise ValueError(f"unsupported aggregation {agg!r}")
@@ -132,8 +134,7 @@ def baseline_aggregate(
         with_ip = metrics
     else:
         with_ip = metrics.withColumn("_ip_long", ip4_to_long(host_col))
-    join = bucketed_range_join if use_bucketed_join else broadcast_range_join
-    joined = join(with_ip, networks, ip_col="_ip_long")
+    joined = broadcast_range_join(with_ip, networks, ip_col="_ip_long")
 
     # SQL text: one py4j call per aggregate instead of one per Column
     # node (count, lit, avg, floor, cast, alias)
@@ -141,14 +142,7 @@ def baseline_aggregate(
         F.expr(f"CAST(floor({agg}(`{c}`)) AS BIGINT) AS `{c}`")
         for c in metric_cols
     ]
-    return (
-        joined.groupBy("network")
-        .agg(*aggs)
-        # empty-slice filter (main.go:331-334); with an inner join,
-        # zero-sample groups never appear, but keep the guard explicit
-        # for outer-join callers.
-        .where("samples > 0")
-    )
+    return joined.groupBy("network").agg(*aggs)
 
 
 @dataclass(frozen=True)
@@ -249,7 +243,6 @@ def generate_hostgroups(
     time_col: str = "metricDateTime",
     date_col: str | None = None,
     now: Column | None = None,
-    use_bucketed_join: bool = False,
 ) -> DataFrame:
     """Full pipeline: window filter -> range join -> multi-agg ->
     thresholds -> hostgroup rows (Ban_settings_t-shaped)."""
@@ -262,6 +255,5 @@ def generate_hostgroups(
         metric_cols=metric_cols,
         agg=config.spark_agg,
         host_col=host_col,
-        use_bucketed_join=use_bucketed_join,
     )
     return with_hostgroup_columns(aggregated, expressions)

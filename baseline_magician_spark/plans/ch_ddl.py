@@ -432,7 +432,6 @@ def run_ch_ddl(
     named: dict | None = None,
     path: str | None = None,
     mode: str = "overwrite",
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """Execute one CREATE/DROP statement against ``tables`` (mutated
     in place). Returns the created relation, or an empty frame with
@@ -444,10 +443,7 @@ def run_ch_ddl(
             raise ValueError(f"table {name!r} already exists")
         if name in tables and if_not_exists:
             return tables[name]
-        df = run_ch_query(
-            body, tables, args=args, named=named,
-            broadcast_dims=broadcast_dims,
-        )
+        df = run_ch_query(body, tables, args=args, named=named)
         if path is not None:
             (
                 df.write.mode(mode)

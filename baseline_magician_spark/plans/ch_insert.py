@@ -360,10 +360,7 @@ def run_ch_statement(
         if "rows" in kwargs:
             raise ValueError("rows= applies to INSERT statements only")
         return run_ch_ddl(sql, tables, **kwargs)
-    query_kwargs = {
-        k: v for k, v in kwargs.items()
-        if k in ("args", "named", "broadcast_dims")
-    }
+    query_kwargs = {k: v for k, v in kwargs.items() if k in ("args", "named")}
     if set(kwargs) - set(query_kwargs):
         raise ValueError(
             "rows/path/mode apply to INSERT or DDL statements only"

@@ -264,15 +264,14 @@ MAX_RECURSIVE_CTE_DEPTH = 1000
 @dataclass
 class _Subq:
     """A captured-but-unplanned subquery: its token slice plus the
-    parse-time environment (table env, broadcast policy, scalar WITH
-    aliases in scope). Planning is deferred so the WHERE-stage rewriter
+    parse-time environment (table env and the scalar WITH aliases in
+    scope). Planning is deferred so the WHERE-stage rewriter
     can first try inner-only name resolution and fall back to the
     correlated semi-join path — eager planning (the round-3 behavior)
     made every correlated subquery an unconditional analysis error."""
 
     toks: tuple
     tables: dict | None
-    broadcast_dims: bool
     with_aliases: dict
 
 
@@ -280,13 +279,9 @@ def _plan_subq(payload: _Subq) -> DataFrame:
     """Plan a captured subquery as a standalone (uncorrelated) SELECT.
     Raises Spark's AnalysisException if it references outer columns —
     the signal the WHERE rewriter uses to take the correlated path."""
-    sp = _Parser(
-        list(payload.toks), payload.tables, payload.broadcast_dims
-    )
+    sp = _Parser(list(payload.toks), payload.tables)
     sp.with_aliases = dict(payload.with_aliases)
-    df = _exec_with_set_expr(
-        sp, payload.tables or {}, payload.broadcast_dims
-    )
+    df = _exec_with_set_expr(sp, payload.tables or {})
     if sp.peek() is not None:
         raise ValueError(
             f"unexpected tokens in subquery: {self_toks(sp)}"
@@ -304,7 +299,6 @@ class _Parser:
         self,
         tokens: list[str],
         tables: dict[str, DataFrame] | None = None,
-        broadcast_dims: bool = True,
     ):
         self.toks = tokens
         self.i = 0
@@ -312,7 +306,6 @@ class _Parser:
         # planned inline against the same table env (lazily — no
         # action runs at parse time)
         self.tables = tables
-        self.broadcast_dims = broadcast_dims
         # classic-CH scalar WITH aliases (WITH expr AS name):
         # name -> expression node, substituted at bare-identifier use
         self.with_aliases: dict[str, _Node] = {}
@@ -356,9 +349,7 @@ class _Parser:
             raise ValueError("unterminated subquery")
         toks = tuple(self.toks[self.i : j])
         self.i = j
-        return _Subq(
-            toks, self.tables, self.broadcast_dims, dict(self.with_aliases)
-        )
+        return _Subq(toks, self.tables, dict(self.with_aliases))
 
     # expression grammar: or > and > comparison > additive > multiplicative > unary
     def parse_expr(self) -> _Node:
@@ -2100,7 +2091,6 @@ _RESERVED = {
 def _exec_with_set_expr(
     p: _Parser,
     tables: dict[str, DataFrame],
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """``[WITH ...] SELECT-or-set-chain`` — the shape the statement
     level shares with derived tables, scalar/IN subqueries, and CTE
@@ -2181,16 +2171,13 @@ def _exec_with_set_expr(
                         cte_name,
                         body,
                         tables,
-                        broadcast_dims,
                         p.with_aliases,
                         columns=cte_cols,
                     )
                 else:
-                    bp = _Parser(body, tables, broadcast_dims)
+                    bp = _Parser(body, tables)
                     bp.with_aliases = dict(p.with_aliases)
-                    cte_df = _exec_with_set_expr(
-                        bp, tables, broadcast_dims
-                    )
+                    cte_df = _exec_with_set_expr(bp, tables)
                     if bp.peek() is not None:
                         raise ValueError(
                             "unexpected trailing tokens in CTE body: "
@@ -2213,7 +2200,7 @@ def _exec_with_set_expr(
             if p.peek() != ",":
                 break
             p.next()
-    return _exec_set_expr(p, tables, broadcast_dims)
+    return _exec_set_expr(p, tables)
 
 
 # hash functions whose compiled form needs wrap-mode (non-ANSI) long
@@ -2250,7 +2237,6 @@ def run_ch_query(
     tables: dict[str, DataFrame],
     args: tuple | list = (),
     named: dict | None = None,
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """Parse + execute a reference-dialect query against ``tables``
     (keyed by bare table name; the db qualifier is accepted and
@@ -2262,14 +2248,15 @@ def run_ch_query(
     :class:`~.ch_bind.ExternalTable` argument registers its DataFrame
     under its name (S6) for ``FROM``/``JOIN``/``IN`` use.
 
-    JOINs broadcast the right side by default: ClickHouse's only join
+    JOINs always broadcast the right side: ClickHouse's only join
     strategy in the reference's driver era materializes the RIGHT
     relation as an in-memory hash table on every node (the
     max_rows_in_join / max_bytes_in_join guards,
     ch/query_settings.go:108-109, bound exactly that build side), so
-    ``F.broadcast`` is the faithful physical mapping. Pass
-    ``broadcast_dims=False`` to let AQE pick shuffle joins for big-big
-    shapes the reference dialect itself could not run.
+    ``F.broadcast`` is the faithful physical mapping. The same holds
+    for ASOF, ANY, correlated semi/anti and decorrelated scalar joins.
+    Big-big shapes the reference dialect itself could not run are out
+    of scope.
 
     Subqueries: ``(SELECT ...)`` nests as a scalar expression or an
     ``IN (SELECT ...)`` membership set — both planned against the same
@@ -2320,13 +2307,12 @@ def run_ch_query(
             ),
         )
     with hash_arg_types(dmap, probe):
-        return _run_ch_parsed(sql, tables, broadcast_dims)
+        return _run_ch_parsed(sql, tables)
 
 
 def _run_ch_parsed(
     sql: str,
     tables: dict[str, DataFrame],
-    broadcast_dims: bool,
 ) -> DataFrame:
     # Wrap-dependent hash functions (intHash64/32, cityHash64,
     # URLHash) compile to PLAIN long arithmetic that relies on Java
@@ -2352,11 +2338,9 @@ def _run_ch_parsed(
             # recursion terminates: inside wrap_arith the conf reads
             # "false" and this branch is skipped
             with wrap_arith(sess):
-                return run_ch_query(
-                    sql, tables, broadcast_dims=broadcast_dims
-                )
+                return run_ch_query(sql, tables)
 
-    p = _Parser(_tokenize(sql), tables, broadcast_dims)
+    p = _Parser(_tokenize(sql), tables)
     # EXPLAIN [AST|SYNTAX|PLAN|PIPELINE|ESTIMATE] SELECT ...: the CH
     # introspection statement — one text row per plan line, like the
     # server's output shape. PLAN/ESTIMATE show the optimized logical
@@ -2368,10 +2352,7 @@ def _run_ch_parsed(
         mode = "plan"
         if p.peek_kw() in ("ast", "syntax", "plan", "pipeline", "estimate"):
             mode = p.next().lower()
-        rest = run_ch_query(
-            " ".join(p.toks[p.i :]), tables,
-            broadcast_dims=broadcast_dims,
-        )
+        rest = run_ch_query(" ".join(p.toks[p.i :]), tables)
         qe = rest._jdf.queryExecution()
         if mode == "pipeline":
             text = qe.executedPlan().toString()
@@ -2385,7 +2366,7 @@ def _run_ch_parsed(
             [(ln,) for ln in text.rstrip("\n").split("\n")],
             "explain string",
         )
-    out = _exec_with_set_expr(p, tables, broadcast_dims)
+    out = _exec_with_set_expr(p, tables)
 
     # trailing SETTINGS k = v [, ...] and FORMAT <name>. CH SETTINGS is
     # QUERY-scoped; Spark confs are session-scoped and read at
@@ -2431,7 +2412,6 @@ def _run_ch_parsed(
 def _exec_set_expr(
     p: _Parser,
     tables: dict[str, DataFrame],
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """One SELECT or a set-operation chain of SELECTs. CH combines by
     POSITION (column names come from the first select), each branch
@@ -2442,7 +2422,7 @@ def _exec_set_expr(
     Shared by the statement level, derived tables, subqueries, and CTE
     bodies (round 4 — set ops previously parsed at statement level
     only)."""
-    branches: list[DataFrame] = [_exec_select(p, tables, broadcast_dims)]
+    branches: list[DataFrame] = [_exec_select(p, tables)]
     ops: list[tuple[str, str]] = []
     while p.peek_kw() in ("union", "intersect", "except"):
         op = p.next().lower()
@@ -2459,7 +2439,7 @@ def _exec_set_expr(
             p.next()
         else:
             mod = "all"
-        branch = _exec_select(p, tables, broadcast_dims)
+        branch = _exec_select(p, tables)
         if len(branch.columns) != len(branches[0].columns):
             raise ValueError(
                 f"{op.upper()} branches have "
@@ -2516,7 +2496,6 @@ def _exec_recursive_cte(
     name: str,
     toks: list[str],
     tables: dict[str, DataFrame],
-    broadcast_dims: bool,
     with_aliases: dict[str, _Node],
     columns: list[str] | None = None,
 ) -> DataFrame:
@@ -2601,9 +2580,9 @@ def _exec_recursive_cte(
     def run_branch(
         slice_: list[str], env: dict[str, DataFrame]
     ) -> DataFrame:
-        bp = _Parser(list(slice_), env, broadcast_dims)
+        bp = _Parser(list(slice_), env)
         bp.with_aliases = dict(with_aliases)
-        df = _exec_with_set_expr(bp, env, broadcast_dims)
+        df = _exec_with_set_expr(bp, env)
         if bp.peek() is not None:
             raise ValueError(
                 "unexpected trailing tokens in recursive CTE branch: "
@@ -2691,7 +2670,6 @@ def _asof_join(
     cond: _Node | tuple | None,
     how: str,
     tables: dict[str, DataFrame] | None,
-    broadcast_dims: bool,
 ) -> DataFrame:
     """CH ASOF JOIN: per equality-key group, match each left row to the
     closest right row satisfying the timestamp inequality (``l.ts >=
@@ -2779,8 +2757,7 @@ def _asof_join(
     right = right0.withColumn(
         "_asof_edge", edge_fn(F.col(rts_bare)).over(w)
     ).alias(ralias)
-    if broadcast_dims:
-        right = F.broadcast(right)
+    right = F.broadcast(right)
 
     lts_col = _compile(lts, tables)
     rts_col = F.col(f"{ralias}.{rts_bare}")
@@ -2983,7 +2960,7 @@ def _plan_correlated(payload: _Subq, tables: dict[str, DataFrame]):
     pushdown below the join), the compiled AND of the correlated
     conjuncts, and the compiled first select item (None for ``*``).
     """
-    sp = _Parser(list(payload.toks), payload.tables, payload.broadcast_dims)
+    sp = _Parser(list(payload.toks), payload.tables)
     sp.with_aliases = dict(payload.with_aliases)
     sp.expect("select")
     if sp.peek_kw() == "distinct":
@@ -3090,12 +3067,11 @@ def _apply_correlated(
     payload: _Subq,
     left: _Node | None,
     tables: dict[str, DataFrame],
-    broadcast_dims: bool,
 ) -> DataFrame:
     """Rewrite one correlated EXISTS / IN conjunct as a LEFT SEMI
-    (or LEFT ANTI) join — the distributed shape of the predicate: one
-    keyed shuffle (or broadcast, matching the dialect's CH-era
-    broadcast-right join strategy), no per-row subquery re-execution.
+    (or LEFT ANTI) join — the distributed shape of the predicate: the
+    inner relation is broadcast, matching the dialect's CH-era
+    broadcast-right join strategy, and no subquery re-runs per row.
 
     NOT IN keeps ANSI three-valued semantics exactly: the anti-join
     condition is ``corr AND (x = y OR x IS NULL OR y IS NULL)``, so a
@@ -3138,8 +3114,7 @@ def _apply_correlated(
                 m = x == sc
             memb = m if memb is None else memb & m
         cond = memb if corr_cond is None else corr_cond & memb
-    if broadcast_dims:
-        inner = F.broadcast(inner)
+    inner = F.broadcast(inner)
     how = "left_anti" if negate else "left_semi"
     return df.join(inner, on=cond, how=how)
 
@@ -3155,7 +3130,6 @@ def _attach_scalar_join(
     df: DataFrame,
     payload: _Subq,
     tables: dict[str, DataFrame],
-    broadcast_dims: bool,
 ) -> tuple[DataFrame, Column, list[str]]:
     """Decorrelate ``(SELECT agg(...) FROM t WHERE k = outer.k [AND
     filters])`` as a grouped derived table LEFT-joined onto ``df`` on
@@ -3172,7 +3146,7 @@ def _attach_scalar_join(
     expressions recover their empty-input value (0, or 0-derived) by
     coalescing with the aggregate evaluated over an empty relation.
     One aggregation + one keyed join instead of a per-row subquery."""
-    sp = _Parser(list(payload.toks), payload.tables, payload.broadcast_dims)
+    sp = _Parser(list(payload.toks), payload.tables)
     sp.with_aliases = dict(payload.with_aliases)
     sp.expect("select")
     sel = sp.parse_expr()
@@ -3284,8 +3258,7 @@ def _attach_scalar_join(
     grouped = inner.groupBy(
         *[k.alias(nm) for (k, _), nm in zip(pairs, knames)]
     ).agg(_compile(qualify(sel), payload.tables).alias(vname))
-    if broadcast_dims:
-        grouped = F.broadcast(grouped)
+    grouped = F.broadcast(grouped)
     cond = None
     for (_, outer_k), nm in zip(pairs, knames):
         c = outer_k == F.col(nm)
@@ -3308,14 +3281,11 @@ def _apply_correlated_scalar(
     payload: _Subq,
     detail: tuple,
     tables: dict[str, DataFrame],
-    broadcast_dims: bool,
 ) -> DataFrame:
     """WHERE-conjunct form: ``x CMP (SELECT agg ... correlated)``
     (TPC-H q17 shape) — attach the decorrelated value and filter."""
     op, other, subq_on_left = detail
-    joined, v, hidden = _attach_scalar_join(
-        df, payload, tables, broadcast_dims
-    )
+    joined, v, hidden = _attach_scalar_join(df, payload, tables)
     x = _compile(other, tables)
     lhs, rhs = (v, x) if subq_on_left else (x, v)
     cmp = {
@@ -3335,7 +3305,6 @@ def _apply_correlated_scalar(
 def _exec_select(
     p: _Parser,
     tables: dict[str, DataFrame],
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """Parse one SELECT (the parser positioned at its ``select``
     keyword) and build its DataFrame plan; stops at the first token
@@ -3545,7 +3514,7 @@ def _exec_select(
                 p.expect(")")
                 alias = _opt_alias() or f"_vt{p.i}"
                 return _alias_columns(vdf), alias
-            sub = _exec_with_set_expr(p, tables, broadcast_dims)
+            sub = _exec_with_set_expr(p, tables)
             p.expect(")")
             return sub, _opt_alias() or f"_dt{p.i}"
         name = p.next()
@@ -4215,7 +4184,7 @@ def _exec_select(
         if how.startswith("asof_"):
             df = _asof_join(
                 df, _resolve(jname), jalias or jname, cond,
-                how[len("asof_"):], tables, broadcast_dims,
+                how[len("asof_"):], tables,
             )
             continue
         if how.startswith("any_"):
@@ -4223,16 +4192,14 @@ def _exec_select(
             right = _any_dedup_right(
                 _resolve(jname), jalias or jname, cond
             )
-            if broadcast_dims:
-                right = F.broadcast(right)
+            right = F.broadcast(right)
             if isinstance(cond, tuple):
                 df = df.join(right, on=list(cond[1]), how=how)
             else:
                 df = df.join(right, on=_compile(cond, tables), how=how)
             continue
         right = _resolve(jname).alias(jalias or jname)
-        if broadcast_dims:
-            right = F.broadcast(right)
+        right = F.broadcast(right)
         if cond is None:
             df = df.crossJoin(right)
         elif isinstance(cond, tuple):  # USING (k, ...)
@@ -4565,12 +4532,11 @@ def _exec_select(
         for kind, neg, payload, detail in corr_rewrites:
             if kind == "scalar_cmp":
                 df = _apply_correlated_scalar(
-                    df, neg, payload, detail, tables, broadcast_dims
+                    df, neg, payload, detail, tables
                 )
             else:
                 df = _apply_correlated(
-                    df, kind, neg, payload, detail, tables,
-                    broadcast_dims,
+                    df, kind, neg, payload, detail, tables
                 )
 
     # SELECT * / SELECT alias.* — expand top-level stars into concrete
@@ -4760,9 +4726,7 @@ def _exec_select(
                             return n
                         except AnalysisException:
                             pass
-                    df, v, _hidden = _attach_scalar_join(
-                        df, payload, tables, broadcast_dims
-                    )
+                    df, v, _hidden = _attach_scalar_join(df, payload, tables)
                     return _Node("rawcol", v)
                 if n.args:
                     return _Node(

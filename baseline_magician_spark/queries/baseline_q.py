@@ -98,9 +98,7 @@ def events_as_host_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.crossJoin(F.broadcast(now_df)).select(*cols)
 
 
-def _flagship(
-    spark: SparkSession, sf_dir: str, use_bucketed_join: bool = False
-) -> DataFrame:
+def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics = events_as_host_metrics(spark, sf_dir)
     networks = networks_dataframe(spark, NETWORKS)
     config = BaselineConfig(aggregation_function="avg")
@@ -113,19 +111,11 @@ def _flagship(
         host_col="host",
         time_col="metricDateTime",
         now=F.col("now_ts"),
-        use_bucketed_join=use_bucketed_join,
     )
     ordered = ["network", "hostgroup_name", "samples", *METRIC_COLS]
     for ch in CHANNELS:
         ordered += [ch.threshold_col, ch.ban_col]
     return out.select(*ordered)
-
-
-def _flagship_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100k-networks scale path: prefix-bucket equi-join instead of
-    the broadcast nested-loop range join; must be value-identical
-    (same oracle as baseline_thresholds)."""
-    return _flagship(spark, sf_dir, use_bucketed_join=True)
 
 
 def _oracle() -> str:
@@ -187,4 +177,3 @@ def _oracle() -> str:
 
 
 query("baseline_thresholds", _oracle())(_flagship)
-query("baseline_thresholds_bucketed_join", _oracle())(_flagship_bucketed)

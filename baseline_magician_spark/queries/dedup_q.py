@@ -1290,10 +1290,11 @@ def dedup_cdc_duplication_ratio(
     """Per-document duplicate-content ratio over the CDC chunk
     relation (round 10): the fraction of each document's characters
     covered by chunks shared with other documents — the doc-level
-    signal a 100 TB pipeline gates boilerplate on. One chunking
-    pass (cached — two consumers), one fingerprint groupBy, one
-    semi-join back, one per-doc rollup; the oracle replays the
-    gear closed form in SQL and the same shared-fp decisions."""
+    signal a 100 TB pipeline gates boilerplate on. One chunking pass,
+    one window over the fingerprint that marks shared chunks, one
+    per-doc rollup (``operators.cdc.cdc_duplication_ratio``); the
+    oracle replays the gear closed form in SQL and decides sharing
+    with an aggregate plus IN-subquery."""
     from ..operators.cdc import cdc_duplication_ratio
 
     from ..catalog import load_table

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.ip import ip4_to_long
+from ..operators.range_join import broadcast_range_join
 
 def _events_schema(
     spark: SparkSession, sf_dir: str
@@ -143,11 +144,7 @@ def streaming_baseline_aggregate(
     long (the events->host_metrics adapter, queries.baseline_q).
     """
     with_ip = events.withColumn("_ip_long", ip_expr)
-    joined = with_ip.join(
-        F.broadcast(networks),
-        (F.col("_ip_long") >= F.col("start_long"))
-        & (F.col("_ip_long") <= F.col("end_long")),
-    )
+    joined = broadcast_range_join(with_ip, networks, ip_col="_ip_long")
     aggs = [F.count(F.lit(1)).alias("samples")]
     for metric, (etype, scale) in metric_map.items():
         aggs.append(

@@ -698,7 +698,6 @@ def test_prewhere_filters_base_before_outer_join(spark):
         "SELECT b.k AS k, b.tag AS tag FROM a RIGHT JOIN b ON a.k = b.k "
         "PREWHERE a.x > 0 ORDER BY k",
         {"a": a, "b": b},
-        broadcast_dims=False,
     ).collect()
     # a is pre-filtered to k=1; b's unmatched k=3 row survives the join
     assert [(r["k"], r["tag"]) for r in rows] == [(1, "p"), (3, "q")]

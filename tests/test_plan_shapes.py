@@ -54,14 +54,6 @@ def test_baseline_networks_broadcast_not_shuffled(spark, queries):
     assert "Exchange hashpartitioning(network" in agg_part
 
 
-def test_bucketed_join_is_hash_equi(spark, queries):
-    plan = plan_of(queries["baseline_thresholds_bucketed_join"](spark, SF_ORACLE))
-    # the networks join must be a hash equi-join on the prefix bucket
-    # (the remaining nested-loop join is the scalar now_ts cross join)
-    assert re.search(r"(Broadcast|Shuffled)HashJoin \[_bucket", plan)
-    assert "BroadcastNestedLoopJoin BuildRight, Inner" not in plan
-
-
 def test_minhash_selfjoin_single_band_shuffle(spark, queries):
     plan = plan_of(queries["dedup_minhash_lsh_pairs"](spark, SF_ORACLE))
     # shuffle_hash hint -> ShuffledHashJoin; the two identical band
