@@ -161,9 +161,3 @@ def load_for_compute(
     if n_parts < target:
         df = df.repartition(target)
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view (for the SQL API path)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

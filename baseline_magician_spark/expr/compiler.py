@@ -364,15 +364,4 @@ def compile_column(
     return col
 
 
-def fold_constant(expr: str | Node) -> object | None:
-    """Best-effort driver-side constant folding for display/debug; returns
-    None unless the expression is parameter-free."""
-    from .interp import evaluate
-
-    try:
-        return evaluate(expr, {})
-    except Exception:
-        return None
-
-
 _ = math  # referenced in docstrings

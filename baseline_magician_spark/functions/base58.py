@@ -64,38 +64,41 @@ def _rebase_step(acc: Column, unit: Column, mul: int, base: int) -> Column:
 
     The inner fold's accumulator is a (digits, carry) struct; every
     intermediate value is <= (base-1)*mul + carry_in < 2^24."""
+
+    def step(st: Column, d: Column) -> Column:
+        v = d * mul + st["carry"]
+        return F.struct(
+            F.concat(st["ds"], F.array(v % base)).alias("ds"),
+            F.floor(v / base).cast("long").alias("carry"),
+        )
+
     folded = F.aggregate(
         acc,
         F.struct(
             _empty_longs().alias("ds"),
             unit.cast("long").alias("carry"),
         ),
-        lambda st, d: _let(
-            d * mul + st["carry"],
-            lambda v: F.struct(
-                F.concat(st["ds"], F.array(v % base)).alias("ds"),
-                F.floor(v / base).cast("long").alias("carry"),
-            ),
-        ),
+        step,
     )
+
     # carry after the fold is < base*mul/(base-1) + 1 — at most two
-    # more digits in either direction used here
-    return _let(
-        folded,
-        lambda st: _let(
-            st["carry"],
-            lambda c: F.concat(
-                st["ds"],
-                F.when(
-                    c > 0, F.array((c % base).cast("bigint"))
-                ).otherwise(_empty_longs()),
-                F.when(
-                    c >= base,
-                    F.array(F.floor(c / base).cast("bigint")),
-                ).otherwise(_empty_longs()),
+    # more digits in either direction used here. No lambda here reads
+    # an enclosing lambda's variable (v and the carry are inlined): a
+    # closure would keep a CH hash over the result from running (see
+    # ch_compat._url_hierarchy).
+    def close(st: Column) -> Column:
+        c = st["carry"]
+        return F.concat(
+            st["ds"],
+            F.when(c > 0, F.array((c % base).cast("bigint"))).otherwise(
+                _empty_longs()
             ),
-        ),
-    )
+            F.when(
+                c >= base, F.array(F.floor(c / base).cast("bigint"))
+            ).otherwise(_empty_longs()),
+        )
+
+    return _let(folded, close)
 
 
 def _leading(vals: Column, zero_digit: int = 0) -> Column:

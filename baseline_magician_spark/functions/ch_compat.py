@@ -20,17 +20,9 @@ from collections.abc import Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .cityhash import city_hash64_fast as _city_hash64
-from .cityhash import city_hash64_combine as _city_combine
-from .siphash import sip_hash64 as _sip_hash64_col
-from .siphash import sip_hash64_fast as _sip_hash64
-from .xxhash import xxh32_fast as _xxh32
-from .xxhash import xxh64_fast as _xxh64
 from .funnel import retention as _retention
-from .hashing import int_hash32 as _int_hash32
-from .hashing import int_hash64 as _int_hash64
-from .hashing import le_hex
 from .ip import ip4_to_long, long_to_ip4
+from .murmur import GCC_SEED, KAFKA_SEED
 
 
 # ---------------------------------------------------------------------------
@@ -42,7 +34,7 @@ from .ip import ip4_to_long, long_to_ip4
 # (sizeof(T) bytes: UInt64 LE bytes, Float64 bit pattern, Date as
 # UInt16 days, DateTime as UInt32 seconds) for the
 # use_int_hash_for_pods=false family (sipHash64, xxHash64/32, the
-# murmur family). The Column builders here are type-blind, so the CH
+# murmur family). A compiled Column carries no CH type, so the CH
 # SQL compiler (plans/ch_sql.py) resolves each hash argument's
 # identity where the AST is known and passes a HashArg marker:
 # literals always hash their string rendering (repr sniffing could
@@ -177,9 +169,7 @@ def _num_u64(c: Column, dt: str) -> tuple[int, Column] | None:
     """(width, value): the argument's CH-native zero-extended bit
     pattern as a long (signed-long carrier for the UInt64 domain),
     or None for dtypes with no fixed CH layout here. ``width`` is
-    sizeof(T) in bytes. Spellings stay inside the col_sql-safe text
-    subset where possible (pmod, plain casts) so downstream byte
-    hashes can take the single-parse F.expr path."""
+    sizeof(T) in bytes."""
     if dt == "bigint":
         return 8, c
     if dt == "int":
@@ -213,99 +203,37 @@ def _num_u64(c: Column, dt: str) -> tuple[int, Column] | None:
     return None
 
 
-def _num_le_bytes(c: Column, dt: str) -> Column | None:
-    """The value's CH-native little-endian byte layout as a BINARY
-    column, or None for dtypes with no fixed CH layout here. The
-    byte-swap is spelled as concat-of-substrings over the zero-padded
-    hex (no regex, no CASE) so the whole rendering stays inside
-    col_sql's proven-safe text subset — the byte-exact builders then
-    compile it through their single-parse F.expr path instead of the
-    Column-builder tree (NULL propagates through hex/lpad/unhex, so
-    no guard is needed)."""
-    uw = _num_u64(c, dt)
-    if uw is None:
-        return None
-    width, v = uw
-    hx = F.lpad(F.hex(v), 2 * width, "0")
-    le = F.concat(
-        *[
-            F.substring(hx, 2 * width - 2 * k - 1, 2)
-            for k in range(width)
-        ]
-    )
-    return F.unhex(le)
+# --- the one hash rendering ----------------------------------------
+# Every CH hash call is one scalar ``arrow_udf`` over
+# functions/hash_np.hash_arrow. A numeric argument reaches it as an
+# Arrow int64 array of its zero-extended bit pattern and runs through
+# the numpy kernels; any other argument arrives as the binary of its
+# string rendering (byte-preserving for string/binary — Spark's
+# binary->string cast reinterprets, it does not transcode) and is
+# hashed row by row by the family's pure-Python model. Multi-argument
+# calls fold through the pair kernels. The kinds (which kernel, which
+# model, which combine) are hash_np.HASH_KINDS; tests/test_hash_np.py
+# and tests/test_hash_kernel.py pin them against the models. A Python
+# UDF cannot run inside a higher-order function, so hashing a lambda
+# variable raises Spark's LAMBDA_FUNCTION_WITH_PYTHON_UDF; nor over an
+# argument holding a closure (see _url_hierarchy), so the CH functions
+# built from nested folds pass values between steps without one.
 
 
-# --- vectorized numeric hash path (round 12, guide §4.2) -------------
-# The expression renderings of the byte-exact hash family are built on
-# HOF lets — interpreted at exec time (~90 µs/row measured on
-# sipHash64 over two bigints) — and their JVM expression trees cost
-# plan handling and JIT work per query. For NUMERIC-only argument
-# lists the byte stream is a fixed-width LE layout of the
-# zero-extended bit pattern, so every numeric hash (the ten names
-# routed below) runs as one Arrow-batched numpy pass through an
-# ``arrow_udf`` (functions/hash_np.py — pinned bit-exact against the
-# same Python byte models the expression renderings are pinned
-# against, so all renderings share one ground truth;
-# tests/test_hash_np.py). String arguments keep the expression paths.
-
-_NP_HASH_KINDS = {
-    # kind -> (one(v, w, seed) -> h, combine(h0, h1, seed) -> h)
-    "city": (
-        lambda H, v, w, s: H.int_hash64_np(v),
-        lambda H, a, b, s: H.hl16_np(a, b),
-    ),
-    "xx": (
-        lambda H, v, w, s: H.xxh64_np(v, w),
-        lambda H, a, b, s: H.hl16_np(a, b),
-    ),
-    "xx32": (
-        lambda H, v, w, s: H.xxh32_np(v, w),
-        lambda H, a, b, s: H.xxh32_pair_np(a, b),
-    ),
-    "sip": (
-        lambda H, v, w, s: H.sip64_np(v, w),
-        lambda H, a, b, s: H.sip64_pair_np(a, b),
-    ),
-    "m2_64": (
-        lambda H, v, w, s: H.murmur2_64_np(v, w, s),
-        lambda H, a, b, s: H.murmur2_64_pair_np(a, b, s),
-    ),
-    "m3_64": (
-        lambda H, v, w, s: H.murmur3_64_np(v, w),
-        lambda H, a, b, s: H.murmur3_64_pair_np(a, b),
-    ),
-    "m3_32": (
-        lambda H, v, w, s: H.murmur3_32_np(v, w),
-        lambda H, a, b, s: H.murmur3_32_pair_np(a, b),
-    ),
-    "m2_32": (
-        lambda H, v, w, s: H.murmur2_32_np(v, w, s),
-        lambda H, a, b, s: H.murmur2_32_pair_np(a, b, s),
-    ),
-}
-
-
-def _np_hash_multi(
+def _hash_udf(
     kind: str, cs, seed: int = 0, mask: int | None = None
-) -> Column | None:
-    """The Arrow-UDF rendering of a combineHashes chain, or None
-    when any argument lacks a fixed numeric layout (string/binary —
-    the expression paths handle those). Each argument reaches the
-    kernel as an Arrow int64 array of its zero-extended bit pattern;
-    NULL in any argument yields NULL, like the expression chain (a
-    NULL per-arg hash poisons the combine fold)."""
-    resolved = []
+) -> Column:
+    widths: list[int | None] = []
+    cols: list[Column] = []
     for c in cs:
-        dt = _arg_dtype(c)
-        if dt is None:
-            return None
-        uw = _num_u64(_arg_col(c), dt)
+        col, dt = _arg_col(c), _arg_dtype(c)
+        uw = _num_u64(col, dt) if dt is not None else None
         if uw is None:
-            return None
-        resolved.append(uw)
-    widths = tuple(w for w, _ in resolved)
-    one, combine = _NP_HASH_KINDS[kind]
+            widths.append(None)
+            cols.append(col.cast("string").cast("binary"))
+        else:
+            widths.append(uw[0])
+            cols.append(uw[1])
 
     from pyspark.sql import SparkSession
 
@@ -317,387 +245,32 @@ def _np_hash_multi(
 
     from pyspark.sql.functions import arrow_udf
 
-    def _h(*cols):
-        import numpy as np
-        import pyarrow as pa
+    def _h(*arrs):
+        from . import hash_np
 
-        from . import hash_np as H
-
-        def masked(h):
-            return h & np.uint64(mask) if mask is not None else h
-
-        # int64 bit patterns, NULL slots zeroed (the kernel sees every
-        # row; validity is restored below)
-        arrs = [c.fill_null(0).to_numpy().view(np.uint64) for c in cols]
-        out = masked(one(H, arrs[0], widths[0], seed))
-        for a, w in zip(arrs[1:], widths[1:]):
-            out = masked(combine(H, out, masked(one(H, a, w, seed)), seed))
-        nulls = None
-        for c in cols:
-            if c.null_count:
-                n = c.is_null().to_numpy(zero_copy_only=False)
-                nulls = n if nulls is None else nulls | n
-        return pa.array(out.view(np.int64), mask=nulls)
+        return hash_np.hash_arrow(kind, widths, seed, mask, arrs)
 
     # no type hints: arrow_udf defaults to the scalar Array -> Array form
-    return arrow_udf(_h, "long")(*[v for _, v in resolved])
+    out = "string" if kind == "m3_128" else "long"
+    return arrow_udf(_h, out)(*cols)
 
 
-def _hash_arg_bytes(c) -> Column:
-    """The byte stream CH would hash for this argument: native LE
-    bytes for a numeric-dtype argument (resolved by the compiler's
-    HashArg marker), the string rendering otherwise (byte-preserving
-    for string/binary — Spark's binary->string cast reinterprets, it
-    does not transcode)."""
-    dt = _arg_dtype(c)
-    col = _arg_col(c)
-    if dt is not None:
-        b = _num_le_bytes(col, dt)
-        if b is not None:
-            return b
-    return col.cast("string")
+def _hash_fn(kind: str, seed: int = 0, mask: int | None = None):
+    return lambda *cs: _hash_udf(kind, cs, seed, mask)
 
 
-def _hash_arg_txt(c) -> str | None:
-    """SQL text of the SAME byte stream `_hash_arg_bytes` builds, or
-    None when it cannot be rendered inside the proven-safe text
-    subset (callers then fall back to the Column builders — the text
-    path never downgrades a numeric layout to a string rendering)."""
-    from .cityhash import col_sql
-
-    dt = _arg_dtype(c)
-    col = _arg_col(c)
-    if dt is not None:
-        b = _num_le_bytes(col, dt)
-        if b is not None:
-            return col_sql(b)
-    return col_sql(col.cast("string"))
-
-
-def _multi_txt(cs, one_sql, pair_width: int, seed=None) -> str | None:
-    """Single-parse text for a combineHashesFunc-style multi-arg
-    chain: per-arg hash via ``one_sql(byte_stream_text)``, then a
-    left fold rehashing the LE-byte pair of the running and next
-    hash (``pair_width`` bytes each). Returns None unless EVERY
-    argument renders in the safe text subset. Round-10 rationale:
-    the Column-built pair chains cost ~0.3-1.1 s of py4j tree
-    construction PER CALL SITE (measured on the combine-chain
-    probe); one F.expr parse replaces all of it."""
-    from .hashing import le_bytes_sql
-
-    texts = [_hash_arg_txt(c) for c in cs]
-    if not all(texts):
-        return None
-    call = (
-        (lambda t: one_sql(t, seed)) if seed is not None else one_sql
+def _int_hash(kind: str):
+    """intHash64/intHash32 take the argument as UInt64: cast to long,
+    then hashed as an 8-byte value."""
+    return lambda c: _hash_udf(
+        kind, [HashArg(_as_col(c).cast("long"), "bigint")]
     )
-    parts = [call(f"({t})") for t in texts]
-    cur = parts[0]
-    for h in parts[1:]:
-        pair = (
-            f"concat({le_bytes_sql(cur, pair_width)}, "
-            f"{le_bytes_sql(h, pair_width)})"
-        )
-        cur = call(pair)
-    return cur
 
 
-def _try_expr(txt: str | None) -> Column | None:
-    if txt is None:
-        return None
-    try:
-        return F.expr(txt)
-    except Exception:
-        return None
-
-
-def _city_one(c) -> Column:
-    """One cityHash64 argument: CH's ImplCityHash64 sets
-    use_int_hash_for_pods=true, so a numeric argument hashes through
-    IntHash64Impl (the salted fmix64) over the zero-extended bit
-    pattern — NOT CityHash64 of the LE bytes (ADVICE r9); strings
-    and binaries take genuine CityHash64 over their bytes."""
-    dt = _arg_dtype(c)
-    col = _arg_col(c)
-    if dt is not None:
-        uw = _num_u64(col, dt)
-        if uw is not None:
-            return _int_hash64(uw[1])
-    return _city_hash64(_hash_arg_bytes(c))
-
-
-def _city_one_txt(c) -> str | None:
-    """SQL text of `_city_one` for the single-parse path, or None
-    when the argument is outside the safe text subset."""
-    from .cityhash import city_hash64_sql, col_sql
-    from .hashing import int_hash64_sql
-
-    dt = _arg_dtype(c)
-    col = _arg_col(c)
-    if dt is not None:
-        uw = _num_u64(col, dt)
-        if uw is not None:
-            vt = col_sql(uw[1])
-            return int_hash64_sql(vt) if vt is not None else None
-    t = col_sql(col.cast("string"))
-    return city_hash64_sql(f"({t})") if t is not None else None
-
-
-def _city_hash64_multi(*cs) -> Column:
-    """cityHash64(a[, b, ...]): each argument hashed per CH's
-    ImplCityHash64 (IntHash64Impl for numeric PODs, CityHash64 for
-    strings), then left-folded through CH's combineHashes
-    (Hash128to64). Single-arg strings are byte-exact with CH. The
-    whole chain compiles as ONE F.expr parse when every argument
-    renders in the safe text subset (round 10 — the Column pair
-    trees cost ~0.4 s of py4j construction per call site)."""
-    col = _np_hash_multi("city", cs)
-    if col is not None:
-        return col
-    from .hashing import hash128to64_sql
-
-    texts = [_city_one_txt(c) for c in cs]
-    if all(t is not None for t in texts):
-        cur = texts[0]
-        for h in texts[1:]:
-            cur = hash128to64_sql(cur, h)
-        col = _try_expr(cur)
-        if col is not None:
-            return col
-    hashes = [_city_one(c) for c in cs]
-    out = hashes[0]
-    for h in hashes[1:]:
-        out = _city_combine(out, h)
-    return out
-
-
-def _murmur2_64_multi(*cs) -> Column:
-    """murmurHash2_64(a[, b, ...]): canonical MurmurHash64A(seed 0)
-    per argument (string rendering); multi-arg combines as the hash
-    of the 16-byte LE pair. Single-parse text path when every
-    argument renders safely (round 10)."""
-    col = _np_hash_multi("m2_64", cs)
-    if col is not None:
-        return col
-    from .murmur import murmur2_64 as _m2_col
-    from .murmur import murmur2_64_fast as _m2
-
-    if len(cs) > 1:
-        from .murmur import murmur2_64_sql
-
-        col = _try_expr(_multi_txt(cs, murmur2_64_sql, 8))
-        if col is not None:
-            return col
-    hashes = [_m2(_hash_arg_bytes(c)) for c in cs]
-    out = hashes[0]
-    for h in hashes[1:]:
-        out = _m2_col(F.unhex(F.concat(le_hex(out, 8), le_hex(h, 8))))
-    return out
-
-
-def _murmur3_32_multi(*cs) -> Column:
-    """murmurHash3_32(a[, b, ...]): canonical MurmurHash3 x86_32
-    (seed 0) per argument; multi-arg combines as the hash of the
-    8-byte LE pair of the two UInt32 values. Single-parse text path
-    when every argument renders safely (round 10)."""
-    col = _np_hash_multi("m3_32", cs)
-    if col is not None:
-        return col
-    from .murmur import murmur3_32 as _m3_col
-    from .murmur import murmur3_32_fast as _m3
-
-    if len(cs) > 1:
-        from .murmur import murmur3_32_sql
-
-        col = _try_expr(_multi_txt(cs, murmur3_32_sql, 4))
-        if col is not None:
-            return col
-    hashes = [_m3(_hash_arg_bytes(c)) for c in cs]
-    out = hashes[0]
-    for h in hashes[1:]:
-        out = _m3_col(F.unhex(F.concat(le_hex(out, 4), le_hex(h, 4))))
-    return out
-
-
-def _xxh64_multi(*cs) -> Column:
-    """xxHash64(a[, b, ...]): canonical XXH64 (seed 0) per argument;
-    multi-arg combines like CH's ImplXxHash64::combineHashes —
-    CityHash_v1_0_2::Hash128to64(h_prev, h_i). xxHash64 is the one
-    64-bit family member whose combine is NOT the pair-rehash
-    combineHashesFunc pattern (that applies to sipHash64, the murmur
-    family and xxHash32); round 9 combined as XXH64 of the 16-byte
-    LE pair, which diverged from CH (ADVICE r9)."""
-    col = _np_hash_multi("xx", cs)
-    if col is not None:
-        return col
-    if len(cs) > 1:
-        from .hashing import hash128to64_sql
-        from .xxhash import xxh64_sql
-
-        texts = [_hash_arg_txt(c) for c in cs]
-        if all(texts):
-            cur = xxh64_sql(f"({texts[0]})")
-            for t in texts[1:]:
-                cur = hash128to64_sql(cur, xxh64_sql(f"({t})"))
-            col = _try_expr(cur)
-            if col is not None:
-                return col
-    hashes = [_xxh64(_hash_arg_bytes(c)) for c in cs]
-    out = hashes[0]
-    for h in hashes[1:]:
-        out = _city_combine(out, h)
-    return out
-
-
-def _xxh32_multi(*cs) -> Column:
-    """xxHash32(a[, b, ...]): canonical XXH32 (seed 0) per argument;
-    multi-arg combines as XXH32 of the 8-byte LE pair of the two
-    UInt32 values. Single-parse text path when every argument
-    renders safely (round 10)."""
-    col = _np_hash_multi("xx32", cs)
-    if col is not None:
-        return col
-    from .xxhash import xxh32 as _xxh32_col
-
-    if len(cs) > 1:
-        from .xxhash import xxh32_sql
-
-        col = _try_expr(_multi_txt(cs, xxh32_sql, 4))
-        if col is not None:
-            return col
-    hashes = [_xxh32(_hash_arg_bytes(c)) for c in cs]
-    out = hashes[0]
-    for h in hashes[1:]:
-        out = _xxh32_col(F.unhex(F.concat(le_hex(out, 4), le_hex(h, 4))))
-    return out
-
-
-def _murmur2_32_seeded_multi(seed: int, mask: int | None = None):
-    """MurmurHash2-32 family builder: murmurHash2_32 (seed 0) and
-    kafkaMurmurHash (Kafka's Utils.murmur2 seed 0x9747b28c with the
-    toPositive sign mask, applied per hash like CH's Impl). Multi-arg
-    combines as the hash of the 8-byte LE pair."""
-
-    def build(*cs) -> Column:
-        col = _np_hash_multi("m2_32", cs, seed=seed, mask=mask)
-        if col is not None:
-            return col
-        from .murmur import murmur2_32 as _m232
-
-        if len(cs) > 1:
-            from .murmur import murmur2_32_sql
-
-            def one_sql(t: str) -> str:
-                h = murmur2_32_sql(t, seed)
-                return f"(({h}) & {mask})" if mask is not None else h
-
-            col = _try_expr(_multi_txt(cs, one_sql, 4))
-            if col is not None:
-                return col
-
-        def one(b: Column) -> Column:
-            h = _m232(b, seed)
-            return (
-                h.bitwiseAND(F.lit(mask)) if mask is not None else h
-            )
-
-        hashes = [one(_hash_arg_bytes(c)) for c in cs]
-        out = hashes[0]
-        for h in hashes[1:]:
-            out = one(F.unhex(F.concat(le_hex(out, 4), le_hex(h, 4))))
-        return out
-
-    return build
-
-
-def _gcc_murmur_multi(*cs) -> Column:
-    """gccMurmurHash: libstdc++ _Hash_bytes = MurmurHash64A at seed
-    0xc70f6907 (byte-identical chunk/tail/final mixes — see
-    murmur.murmur2_64_sql); multi-arg combines as the hash of the
-    16-byte LE pair."""
-    from .murmur import GCC_SEED
-
-    col = _np_hash_multi("m2_64", cs, seed=GCC_SEED)
-    if col is not None:
-        return col
-    from .murmur import murmur2_64 as _m2_col
-    from .murmur import murmur2_64_fast as _m2
-
-    if len(cs) > 1:
-        from .murmur import murmur2_64_sql
-
-        col = _try_expr(
-            _multi_txt(cs, murmur2_64_sql, 8, seed=GCC_SEED)
-        )
-        if col is not None:
-            return col
-    hashes = [_m2(_hash_arg_bytes(c), GCC_SEED) for c in cs]
-    out = hashes[0]
-    for h in hashes[1:]:
-        out = _m2_col(
-            F.unhex(F.concat(le_hex(out, 8), le_hex(h, 8))), GCC_SEED
-        )
-    return out
-
-
-def _murmur3_64_multi(*cs) -> Column:
-    """murmurHash3_64: XOR of the two MurmurHash3_x64_128 halves
-    (FunctionsHashing.h MurmurHash3Impl64); multi-arg combines as the
-    hash of the 16-byte LE pair. Single-parse text path when every
-    argument renders safely (round 10 — the struct fold's Column
-    tree was the costliest build in the combine probe)."""
-    col = _np_hash_multi("m3_64", cs)
-    if col is not None:
-        return col
-    from .murmur3_128 import murmur3_64 as _m3_64
-    from .murmur3_128 import murmur3_64_sql
-
-    col = _try_expr(_multi_txt(cs, murmur3_64_sql, 8))
-    if col is not None:
-        return col
-    hashes = [_m3_64(_hash_arg_bytes(c)) for c in cs]
-    out = hashes[0]
-    for h in hashes[1:]:
-        out = _m3_64(F.unhex(F.concat(le_hex(out, 8), le_hex(h, 8))))
-    return out
-
-
-def _murmur3_128_multi(*cs) -> Column:
-    """murmurHash3_128: canonical x64_128, rendered as the 32
-    uppercase hex chars of the 16 output bytes (h1 LE, h2 LE) — the
-    engine's carrier for CH's FixedString(16). Multi-arg folds by
-    hashing the 32-byte concatenation of the two digests."""
-    from .murmur3_128 import murmur3_128_hex as _m3_hex
-
-    digests = [_m3_hex(_hash_arg_bytes(c)) for c in cs]
-    out = digests[0]
-    for d in digests[1:]:
-        out = _m3_hex(F.unhex(F.concat(out, d)))
-    return out
-
-
-def _sip_hash64_multi(*cs) -> Column:
-    """sipHash64(a[, b, ...]): each argument hashed as its string
-    rendering; multi-arg combines CH-style — SipHash of the 16-byte
-    little-endian concatenation of (h_prev, h_i). Single-parse text
-    path when every argument renders safely (round 10)."""
-    col = _np_hash_multi("sip", cs)
-    if col is not None:
-        return col
-    if len(cs) > 1:
-        from .siphash import sip_hash64_sql
-
-        col = _try_expr(_multi_txt(cs, sip_hash64_sql, 8))
-        if col is not None:
-            return col
-
-    hashes = [_sip_hash64(_hash_arg_bytes(c)) for c in cs]
-    out = hashes[0]
-    for h in hashes[1:]:
-        out = _sip_hash64_col(
-            F.unhex(F.concat(le_hex(out, 8), le_hex(h, 8)))
-        )
-    return out
+def _url_hash(url) -> Column:
+    """CH URLHash: CityHash64 of the URL with ONE trailing /, ? or #
+    trimmed (the trim stays in the JVM)."""
+    return _hash_udf("city", [F.regexp_replace(url, r"[/?#]$", "")])
 
 
 def _to_int(width: str) -> Callable[[Column], Column]:
@@ -2006,43 +1579,27 @@ CH_FUNCTIONS.update(
         # is the DATE-truncation builtin, not numeric)
         "ceiling": F.ceil,
         "truncate": CH_FUNCTIONS["trunc"],
-        # hashes. xxHash64 is genuinely XXH64-based in Spark but over
-        # the engine's internal row encoding, NOT CH's byte stream —
-        # stable within this engine, not across engines. The named
-        # alternatives get a distinguishing literal so the families
-        # stay mutually independent.
         "SHA1": lambda c: F.sha1(_as_col(c).cast("binary")),
-        # BYTE-COMPATIBLE with CH since round 8: canonical XXH64 /
-        # XXH32 at seed 0 over the value's RAW BYTES
+        # BYTE-COMPATIBLE with CH: canonical XXH64 / XXH32 at seed 0
         # (functions/xxhash.py — the Python model is bit-identical to
         # Spark's own JVM XXH64, an independent implementation of the
         # same public spec, and reproduces the CH docs' own
-        # xxHash32('Hello, world!') = 834093149). The pre-round-8
-        # spelling (Spark's xxhash64 = seed 42 over the type-tagged
-        # row encoding) could never match CH for strings. Multi-arg
-        # combines as the hash of the 16-/8-byte LE pair since round
-        # 9 — the same combineHashesFunc pattern the rest of the
-        # byte-exact family uses.
-        "xxHash64": _xxh64_multi,
-        "xxHash32": _xxh32_multi,
+        # xxHash32('Hello, world!') = 834093149). Multi-arg xxHash64
+        # combines through Hash128to64 like CH's ImplXxHash64,
+        # xxHash32 as the hash of the 8-byte LE pair.
+        "xxHash64": _hash_fn("xx"),
+        "xxHash32": _hash_fn("xx32"),
         # canonical SipHash-2-4 with zero key — the algorithm CH
         # documents for sipHash64 (functions/siphash.py; validated
         # against the SipHash paper's reference vectors; CH-server
         # byte-compat asserted from the documented algorithm — the
         # reference vendors CityHash but not SipHash, README table).
-        # Wrap-mode arithmetic via run_ch_query's auto wrap_arith.
-        "sipHash64": _sip_hash64_multi,
-        # BYTE-COMPATIBLE with CH since round 8: genuine CityHash64
-        # v1.0.2 (functions/cityhash.py; spec: the reference's
-        # vendored cityhash102/cityhash.go:122-248). Arguments hash
-        # over their STRING rendering — byte-exact for
-        # String/FixedString args, the dominant use; CH hashes native
-        # binary layouts for numerics (documented divergence, README
-        # hash table). Multi-arg combines like CH: h = Hash128to64(
-        # uint128(h_prev, h_i)). Wrap-mode arithmetic: analysis
-        # happens inside cityhash.wrap_arith (run_ch_query enters it
-        # automatically).
-        "cityHash64": _city_hash64_multi,
+        "sipHash64": _hash_fn("sip"),
+        # BYTE-COMPATIBLE with CH: genuine CityHash64 v1.0.2
+        # (functions/cityhash.py; spec: the reference's vendored
+        # cityhash102/cityhash.go:122-248). Multi-arg combines like
+        # CH: h = Hash128to64(uint128(h_prev, h_i)).
+        "cityHash64": _hash_fn("city"),
         # farmHash64 is a PERMANENT bucketing stand-in (round-10
         # disposition): FarmHash Fingerprint64 has no vendored spec
         # in the reference and no offline-verifiable vectors in this
@@ -2053,20 +1610,12 @@ CH_FUNCTIONS.update(
         "farmHash64": lambda *cs: F.xxhash64(
             F.lit("farm"), *[_as_col(c) for c in cs]
         ),
-        # BYTE-COMPATIBLE with CH: the SAMPLE BY sampling keys.
-        # Wrap-around mod-2^64 arithmetic is plain long math analyzed
-        # under cityhash.wrap_arith since round 8
-        # (functions/hashing.int_hash64/int_hash32; CH spec:
-        # src/Functions/FunctionsHashing.h IntHash64Impl/IntHash32Impl,
-        # src/Common/HashTable/Hash.h).
-        "intHash64": lambda c: _int_hash64(_as_col(c)),
-        "intHash32": lambda c: _int_hash32(_as_col(c)),
-        # CH URLHash: CityHash64 of the URL with ONE trailing /, ?
-        # or # trimmed — byte-exact since round 8 (rode the seeded
-        # xxhash64 stand-in before; functions/cityhash.py).
-        "URLHash": lambda c: _city_hash64(
-            F.regexp_replace(_as_col(c), r"[/?#]$", "")
-        ),
+        # BYTE-COMPATIBLE with CH: the SAMPLE BY sampling keys (CH
+        # spec: src/Functions/FunctionsHashing.h
+        # IntHash64Impl/IntHash32Impl, src/Common/HashTable/Hash.h).
+        "intHash64": _int_hash("city"),
+        "intHash32": _int_hash("int32"),
+        "URLHash": lambda c: _url_hash(_as_col(c)),
         "tryBase64Decode": CH_FUNCTIONS["base64Decode"],
         "bin": lambda c: F.bin(_as_col(c)),
         "bitmaskToList": _bitmask_to_list,
@@ -2099,15 +1648,7 @@ CH_FUNCTIONS.update(
         "toFloat32OrNull": lambda c: _as_col(c).try_cast("float"),
         "toUUID": lambda c: _as_col(c).cast("string"),
         # arrays
-        # the distinct array is LET-bound: a captured
-        # array_distinct tree would re-build per element (O(n²))
-        "arrayEnumerateDense": lambda arr: _let_once(
-            F.array_distinct(_as_col(arr)),
-            lambda dist: F.transform(
-                _as_col(arr),
-                lambda x: F.array_position(dist, x).cast("int"),
-            ),
-        ),
+        "arrayEnumerateDense": lambda arr: _array_enumerate_dense(arr),
         "arrayReverseSort": lambda arr: F.sort_array(
             _as_col(arr), asc=False
         ),
@@ -2305,6 +1846,29 @@ CH_FUNCTIONS.update(
         "arrayAUC": _array_auc,
     }
 )
+
+
+def _array_enumerate_dense(arr) -> Column:
+    """CH arrayEnumerateDense(): each element's 1-based position in
+    the array's distinct values. The distinct array rides in the fold
+    accumulator, built once per row; a lambda capturing it would be a
+    closure, which a CH hash over the result cannot run (see
+    _url_hierarchy)."""
+    ac = _as_col(arr)
+    return F.aggregate(
+        ac,
+        F.struct(
+            F.array_distinct(ac).alias("d"),
+            F.array().cast("array<int>").alias("r"),
+        ),
+        lambda acc, x: F.struct(
+            acc["d"].alias("d"),
+            F.concat(
+                acc["r"], F.array(F.array_position(acc["d"], x).cast("int"))
+            ).alias("r"),
+        ),
+        lambda acc: acc["r"],
+    )
 
 
 def _let_once(value, body):
@@ -2769,12 +2333,17 @@ def _array_enumerate_uniq(arr) -> Column:
     among its equals so far. Quadratic in the array length (prefix
     rescan per element) — for row-local arrays, not corpus columns."""
     arr = _as_col(arr)
-    return F.transform(
-        arr,
-        lambda x, i: F.size(
-            F.filter(F.slice(arr, F.lit(1), i + 1), lambda y: y.eqNullSafe(x))
-        ).cast("int"),
-    )
+
+    def rank(x: Column, i: Column) -> Column:
+        # equals of x in the prefix = prefix size minus the prefix with
+        # them removed (NULLs count NULLs), so no lambda captures x
+        pre = F.slice(arr, F.lit(1), i + 1)
+        rest = F.when(x.isNull(), F.array_compact(pre)).otherwise(
+            F.array_remove(pre, x)
+        )
+        return (F.size(pre) - F.size(rest)).cast("int")
+
+    return F.transform(arr, rank)
 
 
 def _json_base(j, path) -> Column:
@@ -3138,10 +2707,6 @@ from .text_similarity import (  # noqa: E402
     soundex_difference,
     string_jaccard_index,
 )
-
-
-def _chars_r6c(s) -> Column:
-    return F.filter(F.split(_as_col(s), ""), lambda c: c != "")
 
 
 def _unbin(s) -> Column:
@@ -4101,24 +3666,22 @@ _MAP_AGG_SUM = CH_FUNCTIONS["sumMap"]
 def _has_subsequence(h, n, ci: bool = False) -> Column:
     """CH hasSubsequence[CaseInsensitive](haystack, needle): needle's
     characters appear in order (not necessarily contiguously)."""
-    hc, nc = _as_col(h), _as_col(n)
+    hc, needle = _as_col(h), _as_col(n)
     if ci:
-        hc, nc = F.lower(hc), F.lower(nc)
-
-    def build(needle: Column) -> Column:
-        chars = F.filter(F.split(hc, ""), lambda c: c != "")
-        final = F.aggregate(
-            chars,
-            F.lit(1),
-            lambda acc, c: F.when(
-                (acc <= F.length(needle))
-                & (c == F.substring(needle, acc, F.lit(1))),
-                acc + 1,
-            ).otherwise(acc),
-        )
-        return final > F.length(needle)
-
-    return _let_once(nc, build)
+        hc, needle = F.lower(hc), F.lower(needle)
+    # the needle is not let-bound, so a CH hash over the result can run
+    # (see _url_hierarchy); re-reading it per character is cheap
+    chars = F.filter(F.split(hc, ""), lambda c: c != "")
+    final = F.aggregate(
+        chars,
+        F.lit(1),
+        lambda acc, c: F.when(
+            (acc <= F.length(needle))
+            & (c == F.substring(needle, acc, F.lit(1))),
+            acc + 1,
+        ).otherwise(acc),
+    )
+    return final > F.length(needle)
 
 
 def _extract_all_groups(s, pat, vertical: bool) -> Column:
@@ -4141,25 +3704,13 @@ def _extract_all_groups(s, pat, vertical: bool) -> Column:
     ]
     if not vertical:
         return F.array(*per_group)
-    # Zero-match rows: sequence(1, 0) descends to [1, 0] and the inner
-    # element_at(garr, 1) on the empty group array raises under ANSI —
-    # clamp the bound and gate on n > 0 (same fix as the -ForEach fold).
-    return _let_once(
-        F.array(*per_group),
-        lambda cols: _let_once(
-            F.size(F.element_at(cols, 1)),
-            lambda n: F.when(
-                n > 0,
-                F.transform(
-                    F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
-                    lambda i: F.transform(
-                        cols, lambda garr: F.element_at(garr, i)
-                    ),
-                ),
-            ).otherwise(
-                F.array().cast("array<array<string>>")
-            ),
-        ),
+    # one array per match: zip the group arrays (equal lengths, one
+    # entry per match); a NULL haystack gives no matches
+    names = [f"g{g}" for g in range(1, ngroups + 1)]
+    zipped = F.arrays_zip(*[c.alias(n) for c, n in zip(per_group, names)])
+    return F.coalesce(
+        F.transform(zipped, lambda z: F.array(*[z[n] for n in names])),
+        F.array().cast("array<array<string>>"),
     )
 
 
@@ -4298,54 +3849,49 @@ def _series_outliers_tukey(arr, min_p=0.25, max_p=0.75, k=1.5):
     grid boundaries are sub-ulp)."""
     lo_p, hi_p, kf = float(str(min_p)), float(str(max_p)), float(str(k))
     ac = _as_col(arr)
+    vals = F.transform(ac, lambda v: v.cast("double"))
 
-    def build(a: Column) -> Column:
-        srt = F.array_sort(F.transform(a, lambda v: v.cast("double")))
+    def quartiles(s: Column) -> Column:  # s sorted, size(s) > 0
+        n = F.size(s)
 
-        def with_sorted(s: Column) -> Column:
-            n = F.size(s)
-
-            def pct(p: float) -> Column:  # requires n > 0
-                pos = F.lit(p) * (n - 1).cast("double")
-                lo_i = F.floor(pos).cast("int") + 1
-                hi_i = F.ceil(pos).cast("int") + 1
-                frac = pos - F.floor(pos)
-                return F.try_element_at(s, lo_i) * (1 - frac) + (
-                    F.try_element_at(s, hi_i) * frac
-                )
-
-            def with_q(q: Column) -> Column:
-                q1, q3 = q["a"], q["b"]
-                iqr = q3 - q1
-                lo_f = q1 - F.lit(kf) * iqr
-                hi_f = q3 + F.lit(kf) * iqr
-                return F.transform(
-                    a,
-                    lambda v: F.when(
-                        v.cast("double") > hi_f, v.cast("double") - hi_f
-                    )
-                    .when(
-                        v.cast("double") < lo_f, v.cast("double") - lo_f
-                    )
-                    .otherwise(F.lit(0.0)),
-                )
-
-            # empty input -> empty scores (evaluating pct() on an
-            # empty array would index position 0 and raise)
-            return F.when(
-                n == 0, F.array().cast("array<double>")
-            ).otherwise(
-                _let(
-                    F.struct(
-                        pct(lo_p).alias("a"), pct(hi_p).alias("b")
-                    ),
-                    with_q,
-                )
+        def pct(p: float) -> Column:
+            pos = F.lit(p) * (n - 1).cast("double")
+            lo_i = F.floor(pos).cast("int") + 1
+            hi_i = F.ceil(pos).cast("int") + 1
+            frac = pos - F.floor(pos)
+            return F.try_element_at(s, lo_i) * (1 - frac) + (
+                F.try_element_at(s, hi_i) * frac
             )
 
-        return _let(srt, with_sorted)
+        return F.struct(pct(lo_p).alias("a"), pct(hi_p).alias("b"))
 
-    return _let_once(ac, build)
+    def score(z: Column) -> Column:
+        v, q1, q3 = z["v"], z["q"]["a"], z["q"]["b"]
+        iqr = q3 - q1
+        lo_f = q1 - F.lit(kf) * iqr
+        hi_f = q3 + F.lit(kf) * iqr
+        return (
+            F.when(v > hi_f, v - hi_f)
+            .when(v < lo_f, v - lo_f)
+            .otherwise(F.lit(0.0))
+        )
+
+    # The sorted series is bound by a one-level LET and the quartiles
+    # ride along each point (arrays_zip), so no lambda reads an
+    # enclosing lambda's variable: such a closure would keep a CH hash
+    # over the scores from running (see _url_hierarchy).
+    q = _let(F.array_sort(vals), quartiles)
+    scores = F.transform(
+        F.arrays_zip(
+            vals.alias("v"), F.array_repeat(q, F.size(ac)).alias("q")
+        ),
+        score,
+    )
+    # empty input -> empty scores (evaluating the quartiles on an
+    # empty array would index position 0 and raise)
+    return F.when(
+        F.size(ac) == 0, F.array().cast("array<double>")
+    ).otherwise(scores)
 
 
 from .stats_tests import _let  # noqa: E402  (the one binder)
@@ -4818,9 +4364,9 @@ CH_FUNCTIONS.update(
         # seed 0x9747b28c with the toPositive sign mask — the 32-bit
         # core is pinned against Kafka's published UtilsTest vectors
         # (murmur.murmur2_32_py).
-        "gccMurmurHash": _gcc_murmur_multi,
-        "kafkaMurmurHash": _murmur2_32_seeded_multi(
-            0x9747B28C, mask=0x7FFFFFFF
+        "gccMurmurHash": _hash_fn("m2_64", seed=GCC_SEED),
+        "kafkaMurmurHash": _hash_fn(
+            "m2_32", seed=KAFKA_SEED, mask=0x7FFFFFFF
         ),
     }
 )
@@ -4836,9 +4382,6 @@ CH_FUNCTIONS.update(
 # N (1-based) with the same single-trailing-separator trim as the
 # 1-arg form, over genuine CityHash64 (byte-exact since round 8).
 
-_URL_SEPS = ("/", "?", "#")
-
-
 def _url_base_rest(u) -> tuple[Column, Column]:
     s = _as_col(u)
     base = F.regexp_extract(s, r"^([a-z][a-z0-9+.\-]*://[^/?#]*)", 1)
@@ -4846,51 +4389,45 @@ def _url_base_rest(u) -> tuple[Column, Column]:
     return base, rest
 
 
-def _sep_cut_points(rest: Column) -> Column:
-    """1-based positions i where rest[i] is a separator and rest[i+1]
-    is not — the 'cut after the whole separator run' rule."""
-    is_sep = lambda c: c.isin(*_URL_SEPS)  # noqa: E731
-    return F.filter(
-        F.sequence(F.lit(1), F.greatest(F.length(rest), F.lit(1))),
-        lambda i: (F.length(rest) > 0)
-        & is_sep(F.substring(rest, i, F.lit(1)))
-        & (
-            (i == F.length(rest))
-            | ~is_sep(F.substring(rest, i + 1, F.lit(1)))
+def _url_hierarchy(u, with_base: bool = True) -> Column:
+    """Each item is the previous one plus the next run of
+    non-separators closed by its whole separator run: one regex split
+    of the path and one fold whose lambda reads only its own
+    variables. (A CH hash over the hierarchy is a Python UDF, which
+    Spark cannot run when a lambda reads an enclosing lambda's
+    variable — see README, below the hash table.)"""
+    s = _as_col(u)
+    base, rest = _url_base_rest(u)
+    prefix = base if with_base else F.lit("")
+    empty = F.array().cast("array<string>")
+    runs = F.coalesce(
+        F.regexp_extract_all(rest, F.lit(r"[^/?#]*[/?#]+"), 0), empty
+    )
+    items = F.aggregate(
+        runs,
+        empty,
+        lambda acc, run: F.concat(
+            acc,
+            F.array(
+                F.concat(
+                    F.coalesce(F.try_element_at(acc, F.lit(-1)), prefix),
+                    run,
+                )
+            ),
         ),
     )
-
-
-def _url_hierarchy(u, with_base: bool = True) -> Column:
-    s = _as_col(u)
-    base, rest_expr = _url_base_rest(u)
-
-    def build(rest: Column) -> Column:
-        cuts = _sep_cut_points(rest)
-        prefix = base if with_base else F.lit("")
-        items = F.transform(
-            cuts,
-            lambda i: F.concat(prefix, F.substring(rest, 1, i)),
-        )
-        endsep = F.substring(rest, F.length(rest), F.lit(1)).isin(
-            *_URL_SEPS
-        )
-        tail_item = F.concat(prefix, rest)
-        closed = F.concat(
-            items,
-            F.when(
-                (F.length(rest) > 0) & ~endsep, F.array(tail_item)
-            ).otherwise(F.array().cast("array<string>")),
-        )
-        if not with_base:
-            # CH excludes the bare root '/' from the PATH hierarchy
-            return F.filter(closed, lambda e: e != "/")
-        # a URL with no path/query at all hierarchies to itself
-        return F.when(F.length(rest) == 0, F.array(s)).otherwise(
-            closed
-        )
-
-    return _let_once(rest_expr, build)
+    # the full URL closes the list when it has a trailing component
+    tail = F.regexp_extract(rest, r"[^/?#]+$", 0)
+    closed = F.concat(
+        items,
+        F.when(F.length(tail) > 0, F.array(F.concat(prefix, rest)))
+        .otherwise(empty),
+    )
+    if not with_base:
+        # CH excludes the bare root '/' from the PATH hierarchy
+        return F.filter(closed, lambda e: e != "/")
+    # a URL with no path/query at all hierarchies to itself
+    return F.when(F.length(rest) == 0, F.array(s)).otherwise(closed)
 
 
 def _url_hash_level(u, n) -> Column:
@@ -4898,9 +4435,8 @@ def _url_hash_level(u, n) -> Column:
         _url_hierarchy(u), (_as_col(n) if isinstance(n, Column)
                             else F.lit(int(float(str(n))))).cast("int")
     )
-    # genuine CityHash64 since round 8 (NULL-propagating on an
-    # out-of-range level by construction)
-    return _city_hash64(F.regexp_replace(lvl, r"[/?#]$", ""))
+    # NULL-propagating on an out-of-range level by construction
+    return _url_hash(lvl)
 
 
 CH_FUNCTIONS.update(
@@ -4987,7 +4523,7 @@ def _bit_slice(s, off, *ln) -> Column:
     from per-output-byte shifts — no Python."""
     bin_expr = _as_col(s).cast("binary")
 
-    def build(b: Column) -> Column:
+    def bounds(b: Column) -> Column:
         nbits = F.length(b).cast("long") * 8
         o = _as_col(off).cast("long")
         start = F.when(o >= 0, o).otherwise(nbits + o + 1)
@@ -5007,37 +4543,45 @@ def _bit_slice(s, off, *ln) -> Column:
                 F.least(want, nbits - start + 1), F.lit(0).cast("long")
             )
         )
-        out_bytes = F.ceil(eff / 8).cast("int")
+        return F.struct(b.alias("b"), start.alias("s"), eff.alias("e"))
 
-        # F.shiftleft/right take Python-int amounts only; shift
-        # amounts here are per-row Columns, so shift via exact
-        # power-of-two arithmetic (values < 2^16 — doubles exact)
-        def pow2(e: Column) -> Column:
-            return F.pow(F.lit(2.0), e.cast("double")).cast("long")
+    # F.shiftleft/right take Python-int amounts only; shift amounts
+    # here are per-row Columns, so shift via exact power-of-two
+    # arithmetic (values < 2^16 — doubles exact)
+    def pow2(e: Column) -> Column:
+        return F.pow(F.lit(2.0), e.cast("double")).cast("long")
 
-        def out_byte(j: Column) -> Column:
-            bitpos = start + (j.cast("long") - 1) * 8
-            k = (F.floor((bitpos - 1) / 8) + 1).cast("int")
-            sh = ((bitpos - 1) % 8).cast("long")
-            merged = (
-                _byte_at(b, k) * pow2(sh)
-                + F.floor(
-                    _byte_at(b, k + 1) / pow2(F.lit(8) - sh)
-                ).cast("long")
-            ) % 256
-            # mask the zero-padded tail of the last byte: keep the
-            # top `keep` bits -> AND with 256 - 2^(8-keep)
-            rem = eff - (j.cast("long") - 1) * 8
-            keep = F.least(rem, F.lit(8).cast("long"))
-            masked = merged.bitwiseAND(
-                F.lit(256).cast("long") - pow2(F.lit(8) - keep)
-            )
-            return F.lpad(F.conv(masked, 10, 16), 2, "0")
+    def out_byte(z: Column) -> Column:
+        j, b, start, eff = z["j"], z["p"]["b"], z["p"]["s"], z["p"]["e"]
+        bitpos = start + (j.cast("long") - 1) * 8
+        k = (F.floor((bitpos - 1) / 8) + 1).cast("int")
+        sh = ((bitpos - 1) % 8).cast("long")
+        merged = (
+            _byte_at(b, k) * pow2(sh)
+            + F.floor(
+                _byte_at(b, k + 1) / pow2(F.lit(8) - sh)
+            ).cast("long")
+        ) % 256
+        # mask the zero-padded tail of the last byte: keep the top
+        # `keep` bits -> AND with 256 - 2^(8-keep)
+        rem = eff - (j.cast("long") - 1) * 8
+        keep = F.least(rem, F.lit(8).cast("long"))
+        masked = merged.bitwiseAND(
+            F.lit(256).cast("long") - pow2(F.lit(8) - keep)
+        )
+        return F.lpad(F.conv(masked, 10, 16), 2, "0")
 
+    def build(p: Column) -> Column:
+        # the bound bytes and bit range ride along each output byte
+        # (arrays_zip), so out_byte reads only its own variable: a
+        # closure would keep a CH hash over the result from running
+        # (see _url_hierarchy)
+        out_bytes = F.ceil(p["e"] / 8).cast("int")
+        n = F.greatest(out_bytes, F.lit(1))
         hexes = F.transform(
-            F.sequence(
-                F.lit(1),
-                F.greatest(out_bytes, F.lit(1)),
+            F.arrays_zip(
+                F.sequence(F.lit(1), n).alias("j"),
+                F.array_repeat(p, n).alias("p"),
             ),
             out_byte,
         )
@@ -5047,7 +4591,7 @@ def _bit_slice(s, off, *ln) -> Column:
         ).otherwise(F.lit(""))
         return F.unhex(hx).cast("string")
 
-    return _let_once(bin_expr, build)
+    return _let_once(_let_once(bin_expr, bounds), build)
 
 
 def _array_shingles(arr, n) -> Column:
@@ -5605,24 +5149,24 @@ def _array_normalized_gini(pred, label) -> Column:
 
     def gini_of(seq: Column, n: Column) -> Column:
         # seq: labels in scoring order; fold carries (running sum,
-        # sum of running sums)
-        return _let_once(
-            F.aggregate(
-                seq,
-                F.struct(
-                    F.lit(0.0).alias("cum"),
-                    F.lit(0.0).alias("acc"),
-                ),
-                lambda st, x: F.struct(
-                    (st["cum"] + x).alias("cum"),
-                    (st["acc"] + st["cum"] + x).alias("acc"),
-                ),
+        # sum of running sums) and n, which rides in the zero value so
+        # the finishing lambda reads only its own variable (a closure
+        # would keep a CH hash over the result from running — see
+        # _url_hierarchy)
+        return F.aggregate(
+            seq,
+            F.struct(
+                F.lit(0.0).alias("cum"),
+                F.lit(0.0).alias("acc"),
+                n.cast("double").alias("n"),
             ),
-            lambda s: (
-                s["acc"] / s["cum"]
-                - (n.cast("double") + 1.0) / 2.0
-            )
-            / n.cast("double"),
+            lambda st, x: F.struct(
+                (st["cum"] + x).alias("cum"),
+                (st["acc"] + st["cum"] + x).alias("acc"),
+                st["n"].alias("n"),
+            ),
+            lambda s: (s["acc"] / s["cum"] - (s["n"] + 1.0) / 2.0)
+            / s["n"],
         )
 
     by_pred_expr = F.transform(
@@ -5644,29 +5188,28 @@ def _array_normalized_gini(pred, label) -> Column:
         F.array_sort(F.transform(lc, lambda x: x.cast("double")))
     )
 
-    def build(by_pred: Column) -> Column:
-        n = F.size(by_pred)
-        return _let_once(
-            ideal_expr,
-            lambda ideal: F.when(
-                n > 0,
-                _let_once(
-                    gini_of(by_pred, n),
-                    lambda gm: _let_once(
-                        gini_of(ideal, n),
-                        lambda gi: F.struct(
-                            gm.alias("gini"),
-                            gi.alias("gini_ideal"),
-                            F.when(gi != 0, gm / gi).alias(
-                                "normalized"
-                            ),
-                        ),
+    def build(e: Column) -> Column:
+        n = F.size(e["bp"])
+        g = F.struct(
+            gini_of(e["bp"], n).alias("gm"), gini_of(e["id"], n).alias("gi")
+        )
+        return F.when(
+            n > 0,
+            _let_once(
+                g,
+                lambda g: F.struct(
+                    g["gm"].alias("gini"),
+                    g["gi"].alias("gini_ideal"),
+                    F.when(g["gi"] != 0, g["gm"] / g["gi"]).alias(
+                        "normalized"
                     ),
                 ),
             ),
         )
 
-    return _let_once(by_pred_expr, build)
+    return _let_once(
+        F.struct(by_pred_expr.alias("bp"), ideal_expr.alias("id")), build
+    )
 
 
 def _to_start_of_week(d, mode=0) -> Column:
@@ -5775,19 +5318,21 @@ CH_FUNCTIONS.update(
         # word path is additionally cross-checked against Spark's own
         # JVM Murmur3_x86_32, which is canonical for aligned inputs).
         # Multi-arg combines hash the 16-/8-byte LE pair, the
-        # combineHashesFunc pattern (README hash table). Wrap-mode
-        # arithmetic via run_ch_query's auto wrap_arith.
-        "murmurHash2_64": _murmur2_64_multi,
-        "murmurHash3_32": _murmur3_32_multi,
+        # combineHashesFunc pattern (README hash table).
+        "murmurHash2_64": _hash_fn("m2_64"),
+        "murmurHash3_32": _hash_fn("m3_32"),
         # canonical since round 9 (were bucketing stand-ins):
         # MurmurHash2-32 at seed 0 (the Kafka-vector-validated core,
         # murmur.murmur2_32_py) and MurmurHash3 x64_128
         # (mmh3-README-vector-validated, functions/murmur3_128.py);
         # murmurHash3_64 = XOR of the two 128 halves per
         # FunctionsHashing.h MurmurHash3Impl64.
-        "murmurHash2_32": _murmur2_32_seeded_multi(0),
-        "murmurHash3_64": _murmur3_64_multi,
-        "murmurHash3_128": _murmur3_128_multi,
+        # murmurHash3_128's FixedString(16) renders as the 32
+        # uppercase hex chars of its bytes; multi-arg folds hash the
+        # 32-byte concatenation of the two digests.
+        "murmurHash2_32": _hash_fn("m2_32"),
+        "murmurHash3_64": _hash_fn("m3_64"),
+        "murmurHash3_128": _hash_fn("m3_128"),
     }
 )
 

@@ -1,25 +1,19 @@
-"""Byte-exact CityHash64 (v1.0.2) as a pure Column expression.
+"""Byte-exact CityHash64 (v1.0.2): the pure-Python model and the
+DuckDB emitter.
 
 CH's `cityHash64` / `URLHash` / wire checksums use Google CityHash
 v1.0.2 — the reference vendors the exact spec in Go
 (vendor/github.com/ClickHouse/clickhouse-go/lib/cityhash102/
 cityhash.go:122-248, used by compress_writer.go for block checksums).
-Until round 8 the engine shipped a *bucketing-compatible stand-in*
-(seeded xxhash64); this module retires that divergence for string
-inputs: the value returned here is bit-for-bit CH's UInt64 (as the
+The value computed here is bit-for-bit CH's UInt64 (as the
 engine-wide signed-long bit pattern).
 
-Three faces, one algorithm:
+Two faces, one algorithm:
 
-- ``city_hash64(col)``      — Spark Column over a string/binary
-  column. All length classes of the spec, including the unbounded
-  >64-byte chunk loop (an ``F.aggregate`` fold over 64-byte chunk
-  offsets). Wrap-around mod-2^64 arithmetic is plain long math
-  analyzed under ``wrap_arith`` (see the spark section header). No
-  Python, no UDF — one JVM expression, partition-parallel, map-side
-  only.
-- ``city_hash64_py(data)``  — pure-Python reference model (tests,
-  and the source of truth the other two are checked against).
+- ``city_hash64_py(data)``  — pure-Python model, transcribed from the
+  spec. It is also the executed code: a string argument of
+  cityHash64/URLHash is hashed row by row by it inside the one Arrow
+  hash kernel (functions/hash_np.hash_arrow).
 - ``CityEmitter``           — generates straight-line DuckDB HUGEINT
   SQL replaying the algorithm for a statically-known length class
   (the branch taken is pinned; offsets may still be per-row
@@ -31,14 +25,11 @@ At 100 TB: the hash is a narrow per-row projection — no shuffle, no
 state; it exists to make `SAMPLE BY cityHash64(...)` keys and stored
 CH hash columns portable, so the VALUES must match CH, not just the
 distribution.
+
+The module imports no pyspark.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from .hashing import _let1, _ushr
 
 K0 = 0xC3A5C85C97CB3127
 K1 = 0xB492B66FBE98F273
@@ -50,8 +41,8 @@ _M64 = (1 << 64) - 1
 
 
 def _sl(c: int) -> int:
-    """Unsigned 64-bit constant -> its signed-long bit pattern (the
-    only form F.lit accepts for values >= 2^63)."""
+    """Unsigned 64-bit value -> its signed-long bit pattern (how the
+    engine carries a UInt64)."""
     return c - (1 << 64) if c >= (1 << 63) else c
 
 
@@ -170,786 +161,6 @@ def city_hash64_py(s: bytes) -> int:
         (_hl16_py(v[0], w[0]) + _smix_py(y) * K1 + z) & _M64,
         (_hl16_py(v[1], w[1]) + x) & _M64,
     )
-
-
-# ---------------------------------------------------------------- spark
-
-# Column rendering. Conventions: UInt64 values ride the signed-long
-# bit pattern. Wrap-around mod-2^64 arithmetic is the PLAIN +/-/* on
-# longs — which means the expression MUST be analyzed under
-# spark.sql.ansi.enabled=false (Java wrap semantics); under ANSI the
-# same ops raise on overflow. ``wrap_arith(spark)`` scopes exactly
-# that: evalMode is baked into the expressions AT ANALYSIS TIME, so a
-# DataFrame analyzed inside the context keeps wrap semantics forever
-# after, regardless of the session's ANSI setting at execution. This
-# keeps the tree ~20x smaller than the ANSI-safe 16-bit-limb
-# convolution spelling (a full CityHash64 in limb form costs ~10 s of
-# driver-side py4j construction + analysis PER USE — measured, not
-# guessed), and the generated code is primitive-long, branch-free,
-# whole-stage-codegen friendly.
-#
-# Byte access: fetch64/fetch32 read straight off the BINARY value —
-# hex() the 8-byte slice, reverse the nibble string, swap nibble
-# pairs (regexp (.)(.) -> $2$1) to get the little-endian hex, and
-# conv(hex, 16, -10) to the SIGNED decimal (the -10 base wraps
-# values >= 2^63 into the long bit pattern). Six expression nodes per
-# fetch instead of the 24 an element_at byte-array spelling costs.
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def wrap_arith(spark):
-    """Analyze-under-wrap scope: ANSI off (Java wrap on long
-    arithmetic) + a raised analyzer fixpoint budget for the deep
-    LET-chains. Restores both confs on exit; DataFrames ANALYZED
-    inside keep wrap semantics at execution time."""
-    old_ansi = spark.conf.get("spark.sql.ansi.enabled", "true")
-    try:
-        old_iter = spark.conf.get("spark.sql.analyzer.maxIterations")
-    except Exception:
-        old_iter = None
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.analyzer.maxIterations", "500")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", old_ansi)
-        if old_iter is not None:
-            spark.conf.set("spark.sql.analyzer.maxIterations", old_iter)
-
-
-def _mul(x: Column, c: int) -> Column:
-    """x * constant mod 2^64 (wrap-mode multiply)."""
-    return x * F.lit(_sl(c))
-
-
-def _rotc(x: Column, s: int) -> Column:
-    """rotate right by a CONSTANT shift (1..63)."""
-    return _let1(
-        x, lambda v: _ushr(v, s).bitwiseOR(F.shiftleft(v, 64 - s))
-    )
-
-
-def _smix(x: Column) -> Column:
-    return _let1(x, lambda v: v.bitwiseXOR(_ushr(v, 47)))
-
-
-def _hl16(u: Column, v: Column) -> Column:
-    """hashLen16 = Hash128to64 (the kMul Murmur fold)."""
-    return _let1(
-        F.struct(u.alias("u"), v.alias("v")),
-        lambda s: _let1(
-            _mul(s["u"].bitwiseXOR(s["v"]), KMUL),
-            lambda a: _let1(
-                _mul(s["v"].bitwiseXOR(_smix(a)), KMUL),
-                lambda b: _mul(_smix(b), KMUL),
-            ),
-        ),
-    )
-
-
-def _pos(p) -> Column:
-    return F.lit(p) if isinstance(p, int) else p.cast("int")
-
-
-def _f64b(b: Column, p) -> Column:
-    """Little-endian u64 at 1-BASED byte position p of binary b."""
-    hx = F.hex(F.substring(b, _pos(p), F.lit(8)))
-    le = F.regexp_replace(F.reverse(hx), "(.)(.)", "$2$1")
-    return F.conv(le, 16, -10).cast("long")
-
-
-def _f32b(b: Column, p) -> Column:
-    hx = F.hex(F.substring(b, _pos(p), F.lit(4)))
-    le = F.regexp_replace(F.reverse(hx), "(.)(.)", "$2$1")
-    return F.conv(le, 16, 10).cast("long")
-
-
-def _byte(b: Column, p) -> Column:
-    return F.conv(
-        F.hex(F.substring(b, _pos(p), F.lit(1))), 16, 10
-    ).cast("long")
-
-
-def _weak(b: Column, pos, a: Column, bb: Column) -> Column:
-    """weakHashLen32WithSeeds over bytes pos..pos+31 (1-based) ->
-    struct(lo, hi)."""
-    p8 = pos + 8 if isinstance(pos, int) else pos + F.lit(8)
-    p16 = pos + 16 if isinstance(pos, int) else pos + F.lit(16)
-    p24 = pos + 24 if isinstance(pos, int) else pos + F.lit(24)
-    return _let1(
-        F.struct(
-            _f64b(b, pos).alias("w"),
-            _f64b(b, p8).alias("x"),
-            _f64b(b, p16).alias("y"),
-            _f64b(b, p24).alias("z"),
-            a.alias("a"),
-            bb.alias("b"),
-        ),
-        lambda t: _let1(
-            t["a"] + t["w"],
-            lambda a1: _let1(
-                F.struct(
-                    _rotc(t["b"] + a1 + t["z"], 21).alias("b1"),
-                    (a1 + t["x"] + t["y"]).alias("a2"),
-                ),
-                lambda u: F.struct(
-                    (u["a2"] + t["z"]).alias("lo"),
-                    (u["b1"] + _rotc(u["a2"], 44) + a1).alias("hi"),
-                ),
-            ),
-        ),
-    )
-
-
-def _h0to3(b: Column, nn: Column) -> Column:
-    # y,z < 2^32: plain long arith is exact pre-multiply
-    y = _byte(b, F.lit(1)) + F.shiftleft(
-        _byte(b, F.shiftrightunsigned(nn, 1) + 1), 8
-    )
-    z = nn.cast("long") + F.shiftleft(_byte(b, nn), 2)
-    return _mul(_smix(_mul(y, K2).bitwiseXOR(_mul(z, K3))), K2)
-
-
-def _h4to8(b: Column, nn: Column) -> Column:
-    return _hl16(
-        nn.cast("long") + F.shiftleft(_f32b(b, F.lit(1)), 3),
-        _f32b(b, nn - 3),
-    )
-
-
-def _h9to16(b: Column, nn: Column) -> Column:
-    def rot_var(v: Column, s: Column) -> Column:
-        # variable shift, s in 9..16 — unrolled constant rotates
-        out = None
-        for k in range(9, 17):
-            r = _ushr(v, k).bitwiseOR(F.shiftleft(v, 64 - k))
-            out = F.when(s == k, r) if out is None else out.when(s == k, r)
-        return out
-
-    return _let1(
-        F.struct(
-            _f64b(b, F.lit(1)).alias("a"),
-            _f64b(b, nn - 7).alias("b"),
-            nn.cast("long").alias("n"),
-        ),
-        lambda t: _hl16(
-            t["a"],
-            _let1(t["b"] + t["n"], lambda bn: rot_var(bn, t["n"])),
-        ).bitwiseXOR(t["b"]),
-    )
-
-
-def _h17to32(b: Column, nn: Column) -> Column:
-    return _let1(
-        F.struct(
-            _mul(_f64b(b, F.lit(1)), K1).alias("a"),
-            _f64b(b, F.lit(9)).alias("b"),
-            _mul(_f64b(b, nn - 7), K2).alias("c"),
-            _mul(_f64b(b, nn - 15), K0).alias("d"),
-            nn.cast("long").alias("n"),
-        ),
-        lambda t: _hl16(
-            _rotc(t["a"] - t["b"], 43) + _rotc(t["c"], 30) + t["d"],
-            t["a"] + _rotc(t["b"].bitwiseXOR(F.lit(_sl(K3))), 20)
-            - t["c"] + t["n"],
-        ),
-    )
-
-
-def _h33to64(b: Column, nn: Column) -> Column:
-    # direct transcription; a/b/c/z threaded through LET structs
-    return _let1(
-        F.struct(
-            _f64b(b, F.lit(1)).alias("f0"),
-            _f64b(b, F.lit(9)).alias("f8"),
-            _f64b(b, F.lit(17)).alias("f16"),
-            _f64b(b, F.lit(25)).alias("f24"),
-            _f64b(b, nn - 7).alias("fn8"),
-            _f64b(b, nn - 15).alias("fn16"),
-            _f64b(b, nn - 23).alias("fn24"),
-            _f64b(b, nn - 31).alias("fn32"),
-            nn.cast("long").alias("n"),
-        ),
-        lambda t: _let1(
-            t["f0"] + _mul(t["n"] + t["fn16"], K0),
-            lambda a0: _let1(
-                F.struct(
-                    _rotc(a0 + t["f24"], 52).alias("b"),
-                    _rotc(a0, 37).alias("c0"),
-                    (a0 + t["f8"]).alias("a1"),
-                ),
-                lambda u: _let1(
-                    F.struct(
-                        (u["a1"] + t["f16"]).alias("a2"),
-                        (u["c0"] + _rotc(u["a1"], 7)).alias("c1"),
-                    ),
-                    lambda v: _let1(
-                        F.struct(
-                            (v["a2"] + t["f24"]).alias("vf"),
-                            (u["b"] + _rotc(v["a2"], 31) + v["c1"]).alias(
-                                "vs"
-                            ),
-                        ),
-                        lambda vv: _let1(
-                            t["f16"] + t["fn32"],
-                            lambda a3: _let1(
-                                F.struct(
-                                    _rotc(a3 + t["fn8"], 52).alias("b2"),
-                                    _rotc(a3, 37).alias("c2"),
-                                    (a3 + t["fn24"]).alias("a4"),
-                                ),
-                                lambda w: _let1(
-                                    F.struct(
-                                        (w["a4"] + t["fn16"]).alias("a5"),
-                                        (
-                                            w["c2"] + _rotc(w["a4"], 7)
-                                        ).alias("c3"),
-                                    ),
-                                    lambda x: _let1(
-                                        F.struct(
-                                            (x["a5"] + t["fn8"]).alias(
-                                                "wf"
-                                            ),
-                                            (
-                                                w["b2"]
-                                                + _rotc(x["a5"], 31)
-                                                + x["c3"]
-                                            ).alias("ws"),
-                                        ),
-                                        lambda ww: _let1(
-                                            _smix(
-                                                _mul(
-                                                    vv["vf"] + ww["ws"],
-                                                    K2,
-                                                )
-                                                + _mul(
-                                                    ww["wf"] + vv["vs"],
-                                                    K0,
-                                                )
-                                            ),
-                                            lambda r: _mul(
-                                                _smix(
-                                                    _mul(r, K0) + vv["vs"]
-                                                ),
-                                                K2,
-                                            ),
-                                        ),
-                                    ),
-                                ),
-                            ),
-                        ),
-                    ),
-                ),
-            ),
-        ),
-    )
-
-
-def _h_long(b: Column, nn: Column) -> Column:
-    """> 64 bytes: seeded state + the 64-byte chunk fold."""
-    nl = nn.cast("long")
-
-    def state0() -> Column:
-        return _let1(
-            F.struct(
-                _f64b(b, F.lit(1)).alias("x0"),
-                _f64b(b, nn - 15).bitwiseXOR(F.lit(_sl(K1))).alias("y0"),
-                _f64b(b, nn - 55).bitwiseXOR(F.lit(_sl(K0))).alias("z0"),
-                _weak(
-                    b,
-                    nn - 63,
-                    nl,
-                    _f64b(b, nn - 15).bitwiseXOR(F.lit(_sl(K1))),
-                ).alias("v"),
-                _weak(
-                    b, nn - 31, _mul(nl, K1), F.lit(_sl(K0)).cast("long")
-                ).alias("w"),
-            ),
-            lambda t: _let1(
-                t["z0"] + _mul(_smix(t["v"]["hi"]), K1),
-                lambda z1: F.struct(
-                    _mul(_rotc(z1 + t["x0"], 39), K1).alias("x"),
-                    _mul(_rotc(t["y0"], 33), K1).alias("y"),
-                    z1.alias("z"),
-                    t["v"]["lo"].alias("vl"),
-                    t["v"]["hi"].alias("vh"),
-                    t["w"]["lo"].alias("wl"),
-                    t["w"]["hi"].alias("wh"),
-                ),
-            ),
-        )
-
-    def round_body(st: Column, base: Column) -> Column:
-        # base = 1-based position of the chunk start
-        return _let1(
-            F.struct(
-                _mul(
-                    _rotc(
-                        st["x"] + st["y"] + st["vl"]
-                        + _f64b(b, base + F.lit(16)),
-                        37,
-                    ),
-                    K1,
-                ).alias("x1"),
-                _mul(
-                    _rotc(
-                        st["y"] + st["vh"] + _f64b(b, base + F.lit(48)),
-                        42,
-                    ),
-                    K1,
-                ).alias("y1"),
-            ),
-            lambda p: _let1(
-                F.struct(
-                    p["x1"].bitwiseXOR(st["wh"]).alias("x2"),
-                    p["y1"].bitwiseXOR(st["vl"]).alias("y2"),
-                    _rotc(st["z"].bitwiseXOR(st["wl"]), 33).alias("z1"),
-                ),
-                lambda q: _let1(
-                    F.struct(
-                        _weak(
-                            b, base, _mul(st["vh"], K1), q["x2"] + st["wl"]
-                        ).alias("v1"),
-                        _weak(
-                            b,
-                            base + F.lit(32),
-                            q["z1"] + st["wh"],
-                            q["y2"],
-                        ).alias("w1"),
-                    ),
-                    lambda r: F.struct(
-                        q["z1"].alias("x"),  # swap64(&z, &x)
-                        q["y2"].alias("y"),
-                        q["x2"].alias("z"),
-                        r["v1"]["lo"].alias("vl"),
-                        r["v1"]["hi"].alias("vh"),
-                        r["w1"]["lo"].alias("wl"),
-                        r["w1"]["hi"].alias("wh"),
-                    ),
-                ),
-            ),
-        )
-
-    rounds = F.shiftrightunsigned(
-        (nn.cast("long") - 1).bitwiseAND(F.lit(~63)), 6
-    ).cast("int")
-    folded = F.aggregate(
-        F.sequence(F.lit(0), rounds - 1),
-        state0(),
-        lambda st, i: round_body(st, (i * 64 + 1).cast("int")),
-    )
-    return _let1(
-        folded,
-        lambda st: _hl16(
-            _hl16(st["vl"], st["wl"]) + _mul(_smix(st["y"]), K1) + st["z"],
-            _hl16(st["vh"], st["wh"]) + st["x"],
-        ),
-    )
-
-
-def city_hash64(col) -> Column:
-    """CityHash64 of a string/binary column — CH `cityHash64(s)`
-    byte-for-byte (signed-long bit pattern of the UInt64). NULL in ->
-    NULL out. The returned Column MUST be analyzed inside
-    ``wrap_arith(spark)`` (wrap-mode long arithmetic)."""
-    c = col if isinstance(col, Column) else F.col(col)
-    return F.when(
-        c.isNotNull(),
-        _let1(
-            c.cast("binary"),
-            lambda b: _let1(
-                F.length(b),
-                lambda nn: F.when(nn == 0, F.lit(_sl(K2)).cast("long"))
-                .when(nn <= 3, _h0to3(b, nn))
-                .when(nn <= 8, _h4to8(b, nn))
-                .when(nn <= 16, _h9to16(b, nn))
-                .when(nn <= 32, _h17to32(b, nn))
-                .when(nn <= 64, _h33to64(b, nn))
-                .otherwise(_h_long(b, nn)),
-            ),
-        ),
-    )
-
-
-# ------------------------------------------------- spark SQL text path
-# The Column builder above costs ~1.5-2 s of py4j round trips PER USE
-# (every expression node is a JVM call) plus ~0.5 s of analysis. This
-# emitter renders the IDENTICAL expression as ONE Spark-SQL text
-# string (nested transform()-lets, aggregate() chunk fold) parsed by
-# a single F.expr call — construction drops to ~0.1 s. Same wrap-mode
-# contract: analyze under wrap_arith. The Column builder stays as the
-# fallback for inputs whose SQL rendering does not round-trip
-# (lambda-bound variables, subqueries).
-
-
-_SIMPLE_REF = __import__("re").compile(r"^[A-Za-z0-9_.]+$")
-
-
-class _TextCity:
-    """Every let is one analyzer fixpoint iteration of nesting depth,
-    and analysis cost is O(depth x tree size) — so lets are emitted
-    ONLY when the bound value is itself compound; arguments that are
-    already variable/field references are inlined (text duplication
-    of a name costs nothing at analysis or execution time)."""
-
-    def __init__(self) -> None:
-        self._k = 0
-
-    def v(self) -> str:
-        self._k += 1
-        return f"cv{self._k}"
-
-    def let(self, val: str, body) -> str:
-        if _SIMPLE_REF.match(val):
-            return body(val)
-        var = self.v()
-        return (
-            f"element_at(transform(array({val}),{var}->{body(var)}),1)"
-        )
-
-    # primitives (wrap-mode long text)
-    def mul(self, x: str, c: int) -> str:
-        return f"({x}*{_sl(c)}L)"
-
-    def rot(self, x: str, s: int) -> str:
-        return self.let(
-            x,
-            lambda t: f"(shiftrightunsigned({t},{s})|shiftleft({t},{64 - s}))",
-        )
-
-    def smix(self, x: str) -> str:
-        return self.let(
-            x, lambda t: f"({t}^shiftrightunsigned({t},47))"
-        )
-
-    def hl16(self, u: str, v: str) -> str:
-        def inner(uu: str, vv: str) -> str:
-            return self.let(
-                self.mul(f"({uu}^{vv})", KMUL),
-                lambda a: self.let(
-                    self.mul(f"({vv}^{self._smix_v(a)})", KMUL),
-                    lambda b: self.mul(self._smix_v(b), KMUL),
-                ),
-            )
-
-        if _SIMPLE_REF.match(u) and _SIMPLE_REF.match(v):
-            return inner(u, v)
-        return self.let(
-            f"named_struct('u',{u},'v',{v})",
-            lambda s: inner(f"{s}.u", f"{s}.v"),
-        )
-
-    @staticmethod
-    def _smix_v(var: str) -> str:
-        # smix of an already-bound variable: no extra let needed
-        return f"({var}^shiftrightunsigned({var},47))"
-
-    # fetches; pos is a 1-based SQL int expression
-    @staticmethod
-    def f64(b: str, pos) -> str:
-        return (
-            f"CAST(conv(regexp_replace(reverse(hex(substring({b},{pos},8)))"
-            f",'(.)(.)','$2$1'),16,-10) AS BIGINT)"
-        )
-
-    @staticmethod
-    def f32(b: str, pos) -> str:
-        return (
-            f"CAST(conv(regexp_replace(reverse(hex(substring({b},{pos},4)))"
-            f",'(.)(.)','$2$1'),16,10) AS BIGINT)"
-        )
-
-    @staticmethod
-    def byte(b: str, pos) -> str:
-        return f"CAST(conv(hex(substring({b},{pos},1)),16,10) AS BIGINT)"
-
-    def weak(self, b: str, pos: str, a: str, bb: str) -> str:
-        """-> named_struct('lo', ., 'hi', .)"""
-        return self.let(
-            f"named_struct('w',{self.f64(b, pos)},'x',{self.f64(b, f'({pos})+8')},"
-            f"'y',{self.f64(b, f'({pos})+16')},'z',{self.f64(b, f'({pos})+24')},"
-            f"'a',{a},'b',{bb})",
-            lambda t: self.let(
-                f"({t}.a+{t}.w)",
-                lambda a1: self.let(
-                    f"named_struct('b1',{self.rot(f'({t}.b+{a1}+{t}.z)', 21)},"
-                    f"'a2',({a1}+{t}.x+{t}.y))",
-                    lambda u: f"named_struct('lo',({u}.a2+{t}.z),"
-                    f"'hi',({u}.b1+{self.rot(f'{u}.a2', 44)}+{a1}))",
-                ),
-            ),
-        )
-
-    def h0to3(self, b: str, nn: str) -> str:
-        y = (
-            f"({self.byte(b, 1)}+shiftleft("
-            f"{self.byte(b, f'CAST(shiftrightunsigned({nn},1)+1 AS INT)')},8))"
-        )
-        z = f"(CAST({nn} AS BIGINT)+shiftleft({self.byte(b, f'CAST({nn} AS INT)')},2))"
-        return self.mul(
-            self.smix(f"({self.mul(y, K2)}^{self.mul(z, K3)})"), K2
-        )
-
-    def h4to8(self, b: str, nn: str) -> str:
-        return self.hl16(
-            f"(CAST({nn} AS BIGINT)+shiftleft({self.f32(b, 1)},3))",
-            self.f32(b, f"({nn})-3"),
-        )
-
-    def h9to16(self, b: str, nn: str) -> str:
-        def rot_var(v: str, s: str) -> str:
-            arms = " ".join(
-                f"WHEN {k} THEN (shiftrightunsigned({v},{k})"
-                f"|shiftleft({v},{64 - k}))"
-                for k in range(9, 17)
-            )
-            return f"(CASE {s} {arms} END)"
-
-        return self.let(
-            f"named_struct('a',{self.f64(b, 1)},'b',{self.f64(b, f'({nn})-7')},"
-            f"'n',CAST({nn} AS BIGINT))",
-            lambda t: f"({self.hl16(f'{t}.a', self.let(f'({t}.b+{t}.n)', lambda bn: rot_var(bn, f'{t}.n')))}^{t}.b)",
-        )
-
-    def h17to32(self, b: str, nn: str) -> str:
-        return self.let(
-            f"named_struct('a',{self.mul(self.f64(b, 1), K1)},"
-            f"'b',{self.f64(b, 9)},"
-            f"'c',{self.mul(self.f64(b, f'({nn})-7'), K2)},"
-            f"'d',{self.mul(self.f64(b, f'({nn})-15'), K0)},"
-            f"'n',CAST({nn} AS BIGINT))",
-            lambda t: self.hl16(
-                f"({self.rot(f'({t}.a-{t}.b)', 43)}+{self.rot(f'{t}.c', 30)}+{t}.d)",
-                f"({t}.a+{self.rot(f'({t}.b^{_sl(K3)}L)', 20)}-{t}.c+{t}.n)",
-            ),
-        )
-
-    def h33to64(self, b: str, nn: str) -> str:
-        return self.let(
-            f"named_struct('f0',{self.f64(b, 1)},'f8',{self.f64(b, 9)},"
-            f"'f16',{self.f64(b, 17)},'f24',{self.f64(b, 25)},"
-            f"'fn8',{self.f64(b, f'({nn})-7')},'fn16',{self.f64(b, f'({nn})-15')},"
-            f"'fn24',{self.f64(b, f'({nn})-23')},'fn32',{self.f64(b, f'({nn})-31')},"
-            f"'n',CAST({nn} AS BIGINT))",
-            lambda t: self.let(
-                f"({t}.f0+{self.mul(f'({t}.n+{t}.fn16)', K0)})",
-                lambda a0: self.let(
-                    f"named_struct('b',{self.rot(f'({a0}+{t}.f24)', 52)},"
-                    f"'c0',{self.rot(a0, 37)},'a1',({a0}+{t}.f8))",
-                    lambda u: self.let(
-                        f"named_struct('a2',({u}.a1+{t}.f16),"
-                        f"'c1',({u}.c0+{self.rot(f'{u}.a1', 7)}))",
-                        lambda v: self.let(
-                            f"named_struct('vf',({v}.a2+{t}.f24),"
-                            f"'vs',({u}.b+{self.rot(f'{v}.a2', 31)}+{v}.c1))",
-                            lambda vv: self.let(
-                                f"({t}.f16+{t}.fn32)",
-                                lambda a3: self.let(
-                                    f"named_struct('b2',{self.rot(f'({a3}+{t}.fn8)', 52)},"
-                                    f"'c2',{self.rot(a3, 37)},'a4',({a3}+{t}.fn24))",
-                                    lambda w: self.let(
-                                        f"named_struct('a5',({w}.a4+{t}.fn16),"
-                                        f"'c3',({w}.c2+{self.rot(f'{w}.a4', 7)}))",
-                                        lambda x: self.let(
-                                            f"named_struct('wf',({x}.a5+{t}.fn8),"
-                                            f"'ws',({w}.b2+{self.rot(f'{x}.a5', 31)}+{x}.c3))",
-                                            lambda ww: self.let(
-                                                self.smix(
-                                                    f"({self.mul(f'({vv}.vf+{ww}.ws)', K2)}"
-                                                    f"+{self.mul(f'({ww}.wf+{vv}.vs)', K0)})"
-                                                ),
-                                                lambda r: self.mul(
-                                                    self.smix(
-                                                        f"({self.mul(r, K0)}+{vv}.vs)"
-                                                    ),
-                                                    K2,
-                                                ),
-                                            ),
-                                        ),
-                                    ),
-                                ),
-                            ),
-                        ),
-                    ),
-                ),
-            ),
-        )
-
-    def h_long(self, b: str, nn: str) -> str:
-        nl = f"CAST({nn} AS BIGINT)"
-        y_seed = f"({self.f64(b, f'({nn})-15')}^{_sl(K1)}L)"
-        state0 = self.let(
-            f"named_struct('x0',{self.f64(b, 1)},"
-            f"'y0',({self.f64(b, f'({nn})-15')}^{_sl(K1)}L),"
-            f"'z0',({self.f64(b, f'({nn})-55')}^{_sl(K0)}L),"
-            f"'v',{self.weak(b, f'({nn})-63', nl, y_seed)},"
-            f"'w',{self.weak(b, f'({nn})-31', self.mul(nl, K1), f'{_sl(K0)}L')})",
-            lambda t: self.let(
-                f"({t}.z0+{self.mul(self.smix(f'{t}.v.hi'), K1)})",
-                lambda z1: f"named_struct("
-                f"'x',{self.mul(self.rot(f'({z1}+{t}.x0)', 39), K1)},"
-                f"'y',{self.mul(self.rot(f'{t}.y0', 33), K1)},"
-                f"'z',{z1},"
-                f"'vl',{t}.v.lo,'vh',{t}.v.hi,'wl',{t}.w.lo,'wh',{t}.w.hi)",
-            ),
-        )
-        st, i = self.v(), self.v()
-        base = f"({i}*64+1)"
-        fx = self.f64(b, f"{base}+16")
-        fy = self.f64(b, f"{base}+48")
-        round_body = self.let(
-            f"named_struct("
-            f"'x1',{self.mul(self.rot(f'({st}.x+{st}.y+{st}.vl+{fx})', 37), K1)},"
-            f"'y1',{self.mul(self.rot(f'({st}.y+{st}.vh+{fy})', 42), K1)})",
-            lambda p: self.let(
-                f"named_struct('x2',({p}.x1^{st}.wh),'y2',({p}.y1^{st}.vl),"
-                f"'z1',{self.rot(f'({st}.z^{st}.wl)', 33)})",
-                lambda q: self.let(
-                    f"named_struct("
-                    f"'v1',{self.weak(b, base, self.mul(f'{st}.vh', K1), f'({q}.x2+{st}.wl)')},"
-                    f"'w1',{self.weak(b, f'{base}+32', f'({q}.z1+{st}.wh)', f'{q}.y2')})",
-                    lambda r: f"named_struct('x',{q}.z1,'y',{q}.y2,'z',{q}.x2,"
-                    f"'vl',{r}.v1.lo,'vh',{r}.v1.hi,'wl',{r}.w1.lo,'wh',{r}.w1.hi)",
-                ),
-            ),
-        )
-        rounds = (
-            f"CAST(shiftrightunsigned((CAST({nn} AS BIGINT)-1)&-64,6) AS INT)"
-        )
-        folded = (
-            f"aggregate(sequence(0,{rounds}-1),{state0},"
-            f"({st},{i})->{round_body})"
-        )
-        return self.let(
-            folded,
-            lambda f: self.hl16(
-                f"({self.hl16(f'{f}.vl', f'{f}.wl')}+{self.mul(self.smix(f'{f}.y'), K1)}+{f}.z)",
-                f"({self.hl16(f'{f}.vh', f'{f}.wh')}+{f}.x)",
-            ),
-        )
-
-    def top(self, inp: str) -> str:
-        body = self.let(
-            f"CAST(({inp}) AS BINARY)",
-            lambda b: self.let(
-                f"length({b})",
-                lambda nn: (
-                    f"(CASE WHEN {nn}=0 THEN {_sl(K2)}L"
-                    f" WHEN {nn}<=3 THEN {self.h0to3(b, nn)}"
-                    f" WHEN {nn}<=8 THEN {self.h4to8(b, nn)}"
-                    f" WHEN {nn}<=16 THEN {self.h9to16(b, nn)}"
-                    f" WHEN {nn}<=32 THEN {self.h17to32(b, nn)}"
-                    f" WHEN {nn}<=64 THEN {self.h33to64(b, nn)}"
-                    f" ELSE {self.h_long(b, nn)} END)"
-                ),
-            ),
-        )
-        return f"(CASE WHEN ({inp}) IS NULL THEN CAST(NULL AS BIGINT) ELSE {body} END)"
-
-
-def city_hash64_sql(input_sql: str) -> str:
-    """The full CityHash64 expression as ONE Spark-SQL text string
-    over ``input_sql`` (any string/binary-typed SQL fragment).
-    Analyze under wrap_arith."""
-    return _TextCity().top(input_sql)
-
-
-_BAD_SQL_TOKEN = __import__("re").compile(
-    r"lambdavariable|subquery|[=%!<>|&^+*/-]\("
-)
-
-# Allowlist gate for the text path (round 9, ADVICE). F.expr parses
-# eagerly but analyzes lazily: a repr outside the old denylist that
-# parses yet fails to RESOLVE used to surface as a user-facing
-# AnalysisException at action time instead of the documented builder
-# fallback — and a repr that coincidentally resolved to a real column
-# would silently hash the wrong value. Since resolution cannot be
-# probed without the target DataFrame, the text path now accepts only
-# renderings built from (a) calls to this fixed set of functions
-# whose repr is verified to reparse-and-resolve to themselves, (b) a
-# conservative character set (plain identifiers = column refs,
-# literals, parens/commas), and (c) a parse/print round-trip
-# (str(F.expr(inner)) == repr) that catches quoting or structure lost
-# in the repr. Anything else — unknown call names, backticked
-# identifiers, operator prefix forms — takes the Column builder,
-# which is always semantically exact.
-_SQL_STR_LIT = __import__("re").compile(r"'(?:[^'\\]|\\.)*'")
-_CALLED_NAME = __import__("re").compile(r"([A-Za-z_][A-Za-z0-9_]*)\s*\(")
-_SAFE_TEXT = __import__("re").compile(r"[A-Za-z0-9_ ,.()]*\Z")
-_SAFE_CALLS = frozenset(
-    {
-        "substring", "substr", "concat", "concat_ws", "cast",
-        "try_cast", "regexp_replace", "regexp_extract", "lower",
-        "upper", "trim", "ltrim", "rtrim", "lpad", "rpad", "reverse",
-        "replace", "translate", "left", "right", "split_part",
-        "coalesce", "ifnull", "nullif", "nvl", "unhex", "hex",
-        "unbase64", "base64", "length", "octet_length", "char_length",
-        "encode", "decode", "repeat", "initcap", "format_string",
-        "elt", "space", "to_binary",
-        # NULL-guard spellings Column reprs use (the numeric byte
-        # path wraps in CASE WHEN isNotNull(col) ...), plus the
-        # deterministic builtins that path composes for the
-        # double/float/date/timestamp layouts
-        "isnotnull", "isnull", "reflect", "datediff", "to_date",
-        "unix_timestamp", "pmod",
-    }
-)
-
-
-def col_sql(col) -> str | None:
-    """Best-effort SQL text of a Column, or None when it is not in
-    the PROVEN-safe subset for F.expr. Spark 4 classic removed
-    ``Column.expr()``; the ColumnNode's repr ("Column<'...'>") is the
-    remaining rendering. It prints SOME operators in prefix form
-    ("=(a, b)") which the parser accepts as a function call but may
-    not resolve — those, lambda variables, subqueries, and any call
-    outside _SAFE_CALLS disqualify the text path (callers fall back
-    to their Column builder)."""
-    try:
-        txt = str(col)
-    except Exception:
-        return None
-    if not (txt.startswith("Column<'") and txt.endswith("'>")):
-        return None
-    inner = txt[len("Column<'") : -2]
-    low = inner.lower()
-    if _BAD_SQL_TOKEN.search(low):
-        return None
-    stripped = _SQL_STR_LIT.sub("", low)
-    if "'" in stripped or not _SAFE_TEXT.fullmatch(stripped):
-        return None
-    for name in _CALLED_NAME.findall(stripped):
-        if name not in _SAFE_CALLS:
-            return None
-    try:
-        if str(F.expr(inner)) != txt:
-            return None
-    except Exception:
-        return None
-    return inner
-
-
-def city_hash64_fast(col) -> Column:
-    """city_hash64 via the single-parse SQL text path when the input
-    Column's SQL rendering round-trips (col_sql); Column-builder
-    fallback otherwise."""
-    c = col if isinstance(col, Column) else F.col(col)
-    inp = col_sql(c)
-    if inp is None:
-        return city_hash64(c)
-    try:
-        return F.expr(city_hash64_sql(f"({inp})"))
-    except Exception:
-        return city_hash64(c)
-
-
-def city_hash64_combine(h1: Column, h2: Column) -> Column:
-    """CH combineHashes for the CityHash64 family:
-    Hash128to64(uint128(h1, h2))."""
-    return _hl16(h1, h2)
 
 
 # --------------------------------------------------------------- duckdb

@@ -273,49 +273,51 @@ def geohash_decode(h) -> Column:
     exactly in either representation), so the centers are
     bit-identical."""
     s = F.lower(h if isinstance(h, Column) else F.lit(h))
-    vals_expr = F.transform(
+    vals = F.transform(
         # split('') yields a trailing empty string element; filter it
         F.filter(F.split(s, ""), lambda c: c != ""),
         lambda c: F.array_position(_b32_arr(), c).cast("int") - 1,
     )
+    # One fold yields the bit integer and the char count, so the LET
+    # body below reads only its own variable: a lambda reading an
+    # enclosing lambda's variable would keep a CH hash over the
+    # result from running (see ch_compat._url_hierarchy).
+    fold = F.aggregate(
+        vals,
+        F.struct(F.lit(0).cast("long").alias("n"), F.lit(0).alias("k")),
+        lambda acc, v: F.struct(
+            (acc["n"] * 32 + v.cast("long")).alias("n"),
+            (acc["k"] + 1).alias("k"),
+        ),
+    )
 
-    def build(vals: Column) -> Column:
-        nchars = F.size(vals)
+    def centers(st: Column) -> Column:
+        nchars = st["k"]
         nbits = nchars * 5
         nlon = ((nbits + 1) / 2).cast("int")  # even g positions
         nlat = (nbits / 2).cast("int")
         pad = nbits % 2  # one zero LSB makes the bit count even
-        n_expr = F.aggregate(
-            vals,
-            F.lit(0).cast("long"),
-            lambda acc, v: acc * 32 + v.cast("long"),
-        ) * F.when(pad == 1, F.lit(2)).otherwise(F.lit(1)).cast("long")
+        n = st["n"] * F.when(pad == 1, F.lit(2)).otherwise(F.lit(1)).cast(
+            "long"
+        )
+        # with an even bit count, bit g=0 (longitude, MSB) sits at an
+        # ODD position; the pad bit lands in the latitude slot and
+        # divides out
+        klon = _compact_even_bits(F.shiftrightunsigned(n, 1))
+        klat_p = _compact_even_bits(n)
+        klat = F.when(
+            pad == 1, F.floor(klat_p / 2).cast("long")
+        ).otherwise(klat_p)
+        lon = F.lit(-180.0) + 360.0 * (
+            klon.cast("double") + 0.5
+        ) / F.pow(F.lit(2.0), nlon.cast("double"))
+        lat = F.lit(-90.0) + 180.0 * (
+            klat.cast("double") + 0.5
+        ) / F.pow(F.lit(2.0), nlat.cast("double"))
+        # the empty string decodes to the world center (0, 0)
+        return F.struct(
+            F.when(nchars == 0, F.lit(0.0)).otherwise(lon).alias("1"),
+            F.when(nchars == 0, F.lit(0.0)).otherwise(lat).alias("2"),
+        )
 
-        def centers(n: Column) -> Column:
-            # with an even bit count, bit g=0 (longitude, MSB) sits at
-            # an ODD position; the pad bit lands in the latitude slot
-            # and divides out
-            klon = _compact_even_bits(F.shiftrightunsigned(n, 1))
-            klat_p = _compact_even_bits(n)
-            klat = F.when(
-                pad == 1, F.floor(klat_p / 2).cast("long")
-            ).otherwise(klat_p)
-            lon = F.lit(-180.0) + 360.0 * (
-                klon.cast("double") + 0.5
-            ) / F.pow(F.lit(2.0), nlon.cast("double"))
-            lat = F.lit(-90.0) + 180.0 * (
-                klat.cast("double") + 0.5
-            ) / F.pow(F.lit(2.0), nlat.cast("double"))
-            # the empty string decodes to the world center (0, 0)
-            return F.struct(
-                F.when(nchars == 0, F.lit(0.0))
-                .otherwise(lon)
-                .alias("1"),
-                F.when(nchars == 0, F.lit(0.0))
-                .otherwise(lat)
-                .alias("2"),
-            )
-
-        return _let(n_expr, centers)
-
-    return _let(vals_expr, build)
+    return _let(fold, centers)

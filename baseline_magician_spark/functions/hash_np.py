@@ -1,38 +1,38 @@
-"""Vectorized numpy kernels for the numeric-input byte-exact hash
-family (round 12, guide §4.2).
+"""The one executable rendering of the byte-exact ClickHouse hash
+family: numpy kernels for numeric arguments, the pure-Python models
+for any other argument, one Arrow batch at a time.
 
-The Spark expression renderings of cityHash64 / sipHash64 / xxHash64 /
-xxHash32 / murmurHash3_64 / murmurHash3_32 / murmurHash2 /
-gccMurmurHash / kafkaMurmurHash are built on ``_let1``-style HOF lets
-— interpreted expression islands at exec time (~90 µs/row measured
-on sipHash64(user_id, event_id)) and large JVM plans to analyze and
-JIT. For NUMERIC arguments the byte stream is a fixed-width
-little-endian layout of the zero-extended bit pattern, so the whole
-algorithm vectorizes over rows as plain uint64 arithmetic (numpy
-wraparound == mod-2^64; the 32-bit members keep their state in the
-low half of a uint64 and mask after each step). ch_compat routes
-numeric-only argument lists through one ``arrow_udf`` over these
-kernels: each argument arrives as an Arrow int64 array, NULL slots
-zero-filled and viewed as uint64, and the result's validity is the
-AND of the arguments'. No pandas on the way, so no float64 detour
-for a nullable int64. The expression paths remain for string inputs
-and as the oracle-replayable rendering.
+``ch_compat`` wraps every CH hash call (cityHash64, URLHash,
+intHash64/32, sipHash64, xxHash64/32, murmurHash2_32/64,
+murmurHash3_32/64/128, gccMurmurHash, kafkaMurmurHash) in one scalar
+``arrow_udf`` whose body is :func:`hash_arrow`. Each argument arrives
+as an Arrow array of one of two shapes:
 
-Every kernel is pinned against the existing pure-Python byte models
-(sip_hash64_py, xxh64_py, xxh32_py, murmur2_64_py, murmur2_32_py,
-murmur3_64_py, murmur3_32_py, int_hash64_py, _hl16_py) over random
-64-bit values in tests/test_hash_np.py — the same models the
-Column/text renderings are pinned against, so all three renderings
-share one ground truth.
+- a NUMERIC argument is an int64 array holding the CH-native
+  zero-extended bit pattern, and ``nbytes`` is sizeof(T) of its CH
+  type (1/2/4/8). Its byte stream is a fixed-width little-endian
+  layout, so the algorithm vectorizes over rows as plain uint64
+  arithmetic (numpy wraparound == mod-2^64; the 32-bit members keep
+  their state in the low half of a uint64 and mask after each step).
+- any OTHER argument is the binary of its string rendering, hashed
+  row by row by the family's pure-Python model (``city_hash64_py``,
+  ``xxh64_py``, ...). The model module is imported only when such an
+  argument is present, so a numeric-only call loads this module and
+  nothing else of the package.
 
-All inputs are np.uint64 arrays holding the CH-native zero-extended
-bit pattern; ``nbytes`` is sizeof(T) of the argument's CH type
-(1/2/4/8). Combines take two uint64 hash arrays (the 16-byte LE pair
-streams of the 64-bit members, the 8-byte LE pair of two UInt32 for
-the 32-bit ones).
+Multi-argument calls fold the per-argument hashes through the pair
+kernels (CH's combineHashes). A NULL in any argument makes the row
+NULL; NULL slots are zero-filled before the kernels see them.
 
-The module imports numpy only, so a Python worker that unpickles the
-hash UDF loads it without the rest of ``functions``.
+Every kernel is pinned against the pure-Python models over random
+64-bit values in tests/test_hash_np.py, and the whole boundary
+against the models on adversarial rows in tests/test_hash_kernel.py.
+
+Combines take two hash arrays (the 16-byte LE pair streams of the
+64-bit members, the 8-byte LE pair of two UInt32 for the 32-bit
+ones, the 32-byte pair of two digests for murmurHash3_128).
+
+The module imports numpy only (pyarrow inside :func:`hash_arrow`).
 """
 
 from __future__ import annotations
@@ -71,11 +71,6 @@ def _rotl(x, s: int):
     return (x << s) | (x >> (np.uint64(64) - s))
 
 
-def _rotr(x, s: int):
-    s = np.uint64(s)
-    return (x >> s) | (x << (np.uint64(64) - s))
-
-
 def int_hash64_np(v):
     """CH IntHash64Impl (fmix64 of x ^ salt) — cityHash64's numeric
     per-argument hash (hashing.int_hash64_py)."""
@@ -85,6 +80,20 @@ def int_hash64_np(v):
     x = x ^ (x >> np.uint64(33))
     x = x * _FM2
     return x ^ (x >> np.uint64(33))
+
+
+def int_hash32_np(v):
+    """CH IntHash32Impl: Thomas Wang's 64->32 mix over
+    v ^ 0x75D9543DE018BF45 (src/Common/HashTable/Hash.h intHash32),
+    low 32 bits (hashing.int_hash32_py)."""
+    k = v ^ np.uint64(0x75D9543DE018BF45)
+    k = ~k + (k << np.uint64(18))
+    k = k ^ ((k >> np.uint64(31)) | (k << np.uint64(33)))
+    k = k * np.uint64(21)
+    k = k ^ (k >> np.uint64(11))
+    k = k + (k << np.uint64(6))
+    k = k ^ (k >> np.uint64(22))
+    return k & _M32
 
 
 def hl16_np(u, v):
@@ -224,17 +233,23 @@ def _fmix_np(k):
     return k ^ (k >> np.uint64(33))
 
 
-def _m3_tail_k1(k1):
-    return _rotl(k1 * _3C1, 31) * _3C2
-
-
-def murmur3_64_np(v, nbytes: int):
-    """CH murmurHash3_64 (x64_128's h1 ^ h2) over nbytes <= 8."""
-    n = len(v)
+def _m3_words(words, nbytes: int):
+    """MurmurHash3 x64_128 (seed 0) over ``nbytes`` little-endian
+    bytes carried as 8-byte words (zero beyond ``nbytes``): (h1, h2)."""
+    n = len(words[0])
     h1 = np.zeros(n, dtype=np.uint64)
     h2 = np.zeros(n, dtype=np.uint64)
-    if nbytes:
-        h1 = h1 ^ _m3_tail_k1(v)
+    nblocks = nbytes // 16
+    for i in range(nblocks):
+        h1 = h1 ^ (_rotl(words[2 * i] * _3C1, 31) * _3C2)
+        h1 = (_rotl(h1, 27) + h2) * np.uint64(5) + _3A1
+        h2 = h2 ^ (_rotl(words[2 * i + 1] * _3C2, 33) * _3C1)
+        h2 = (_rotl(h2, 31) + h1) * np.uint64(5) + _3A2
+    rem = nbytes % 16
+    if rem > 8:
+        h2 = h2 ^ (_rotl(words[2 * nblocks + 1] * _3C2, 33) * _3C1)
+    if rem:
+        h1 = h1 ^ (_rotl(words[2 * nblocks] * _3C1, 31) * _3C2)
     h1 = h1 ^ np.uint64(nbytes)
     h2 = h2 ^ np.uint64(nbytes)
     h1 = h1 + h2
@@ -243,27 +258,32 @@ def murmur3_64_np(v, nbytes: int):
     h2 = _fmix_np(h2)
     h1 = h1 + h2
     h2 = h2 + h1
+    return h1, h2
+
+
+def murmur3_64_np(v, nbytes: int):
+    """CH murmurHash3_64 (x64_128's h1 ^ h2) over nbytes <= 8."""
+    h1, h2 = _m3_words([v], nbytes)
     return h1 ^ h2
 
 
 def murmur3_64_pair_np(p0, p1):
     """murmur3_64 of the 16-byte LE pair — one full x64_128 block."""
-    n = len(p0)
-    k1 = _rotl(p0 * _3C1, 31) * _3C2
-    h1 = k1  # h1 was 0; h1 ^= k1
-    h1 = (_rotl(h1, 27)) * np.uint64(5) + _3A1  # + h2 (= 0)
-    k2 = _rotl(p1 * _3C2, 33) * _3C1
-    h2 = k2  # h2 was 0; h2 ^= k2
-    h2 = (_rotl(h2, 31) + h1) * np.uint64(5) + _3A2
-    h1 = h1 ^ np.uint64(16)
-    h2 = h2 ^ np.uint64(16)
-    h1 = h1 + h2
-    h2 = h2 + h1
-    h1 = _fmix_np(h1)
-    h2 = _fmix_np(h2)
-    h1 = h1 + h2
-    h2 = h2 + h1
+    h1, h2 = _m3_words([p0, p1], 16)
     return h1 ^ h2
+
+
+def murmur3_128_np(v, nbytes: int):
+    """CH murmurHash3_128 over nbytes <= 8: an (n, 2) array of the
+    digest's halves (h1, h2)."""
+    return np.stack(_m3_words([v], nbytes), axis=1)
+
+
+def murmur3_128_pair_np(d0, d1):
+    """murmur3_128 of the 32-byte concatenation of two digests."""
+    return np.stack(
+        _m3_words([d0[:, 0], d0[:, 1], d1[:, 0], d1[:, 1]], 32), axis=1
+    )
 
 
 def _rotl32(x, s: int):
@@ -375,3 +395,120 @@ def murmur3_32_np(v, nbytes: int):
 def murmur3_32_pair_np(h0, h1):
     """murmur3_32 of the 8-byte LE pair of two UInt32 values."""
     return murmur3_32_np(_pair32(h0, h1), 8)
+
+
+# kind -> (numeric kernel(v, nbytes, seed), pair combine(h0, h1, seed),
+#          (module, function) of the pure-Python model for any other
+#          argument). CH's combineHashes: cityHash64 and xxHash64 fold
+#          through CityHash's Hash128to64 of (h_prev, h_i); the rest
+#          rehash the little-endian pair of the two hashes.
+HASH_KINDS = {
+    # cityHash64 / URLHash / intHash64: CH's ImplCityHash64 sets
+    # use_int_hash_for_pods, so a numeric argument goes through
+    # IntHash64Impl (the salted fmix64), not CityHash64 of its bytes
+    "city": (
+        lambda v, w, s: int_hash64_np(v),
+        lambda a, b, s: hl16_np(a, b),
+        ("cityhash", "city_hash64_py"),
+    ),
+    "int32": (lambda v, w, s: int_hash32_np(v), None, None),
+    "sip": (
+        lambda v, w, s: sip64_np(v, w),
+        lambda a, b, s: sip64_pair_np(a, b),
+        ("siphash", "sip_hash64_py"),
+    ),
+    "xx": (
+        lambda v, w, s: xxh64_np(v, w),
+        lambda a, b, s: hl16_np(a, b),
+        ("xxhash", "xxh64_py"),
+    ),
+    "xx32": (
+        lambda v, w, s: xxh32_np(v, w),
+        lambda a, b, s: xxh32_pair_np(a, b),
+        ("xxhash", "xxh32_py"),
+    ),
+    # murmurHash2_64 (seed 0) and gccMurmurHash (libstdc++ seed)
+    "m2_64": (
+        murmur2_64_np,
+        murmur2_64_pair_np,
+        ("murmur", "murmur2_64_py"),
+    ),
+    # murmurHash2_32 (seed 0) and kafkaMurmurHash (Kafka's seed, with
+    # the toPositive mask applied to every hash and combine)
+    "m2_32": (
+        murmur2_32_np,
+        murmur2_32_pair_np,
+        ("murmur", "murmur2_32_py"),
+    ),
+    "m3_32": (
+        lambda v, w, s: murmur3_32_np(v, w),
+        lambda a, b, s: murmur3_32_pair_np(a, b),
+        ("murmur", "murmur3_32_py"),
+    ),
+    "m3_64": (
+        lambda v, w, s: murmur3_64_np(v, w),
+        lambda a, b, s: murmur3_64_pair_np(a, b),
+        ("murmur3_128", "murmur3_64_py"),
+    ),
+    # the FixedString(16) digest, returned as 32 uppercase hex chars of
+    # its bytes (h1 LE, then h2 LE)
+    "m3_128": (
+        lambda v, w, s: murmur3_128_np(v, w),
+        lambda a, b, s: murmur3_128_pair_np(a, b),
+        ("murmur3_128", "murmur3_128_py"),
+    ),
+}
+
+
+def _model_rows(fn, arr):
+    """The model over every row of a binary array (NULL rows hash the
+    empty input; the caller masks them)."""
+    empty = fn(b"")
+    vals = [empty if b is None else fn(b) for b in arr.to_pylist()]
+    return np.array(vals, dtype=np.uint64).reshape(
+        (len(arr),) + np.shape(empty)
+    )
+
+
+def hash_arrow(kind: str, widths, seed: int, mask, cols):
+    """One CH hash call over its Arrow argument arrays. ``widths[i]``
+    is the CH byte width of a numeric argument (an int64 bit-pattern
+    array), or None for an argument that arrives as binary. Returns
+    an int64 array, or the hex digests for ``m3_128``."""
+    import pyarrow as pa
+
+    one, combine, model = HASH_KINDS[kind]
+
+    def masked(h):
+        return h & np.uint64(mask) if mask is not None else h
+
+    fn = None
+    out = None
+    for c, w in zip(cols, widths):
+        if w is None:
+            if fn is None:
+                import functools
+                import importlib
+
+                m = importlib.import_module(f"{__package__}.{model[0]}")
+                fn = getattr(m, model[1])
+                if seed:
+                    fn = functools.partial(fn, seed=seed)
+            h = _model_rows(fn, c)
+        else:
+            h = one(c.fill_null(0).to_numpy().view(np.uint64), w, seed)
+        h = masked(h)
+        out = h if out is None else masked(combine(out, h, seed))
+    nulls = None
+    for c in cols:
+        if c.null_count:
+            n = c.is_null().to_numpy(zero_copy_only=False)
+            nulls = n if nulls is None else nulls | n
+    if out.ndim == 2:
+        hx = out.astype("<u8").tobytes().hex().upper()
+        return pa.array(
+            [hx[32 * i : 32 * i + 32] for i in range(len(out))],
+            pa.string(),
+            mask=nulls,
+        )
+    return pa.array(out.view(np.int64), mask=nulls)

@@ -170,57 +170,11 @@ def minhash_params(k: int) -> list[tuple[int, int]]:
 # CH's SAMPLE BY keys: intHash64 (fmix64 of x ^ seed;
 # src/Functions/FunctionsHashing.h IntHash64Impl) and intHash32
 # (Thomas Wang's 64->32 mix with CH's salt;
-# src/Common/HashTable/Hash.h intHash32<0x75D9543DE018BF45>). Both
-# need wrap-around mod-2^64 arithmetic. Rounds 7 ran the multiplies
-# as ANSI-safe 16-bit-limb convolution; round 8 switched to PLAIN
-# long arithmetic ANALYZED UNDER spark.sql.ansi.enabled=false
-# (cityhash.wrap_arith — Java wrap semantics are exactly mod 2^64),
-# which collapses each multiply from ~50 expression nodes to one.
-# That retires the measured failure mode of the limb spelling: the
-# driver re-analyzed a ~3000-node tree on every bench pass
-# (ch_sql_sampling_hashes 3.29 s suite vs 1.04 s warm-isolated).
-# run_ch_query auto-enters wrap_arith when a wrap-dependent hash
-# appears in the SQL; direct Column users analyze inside
-# ``cityhash.wrap_arith(spark)`` themselves.
+# src/Common/HashTable/Hash.h intHash32<0x75D9543DE018BF45>). The
+# executed renderings are the numpy kernels hash_np.int_hash64_np /
+# int_hash32_np; these are their Python models.
 
-
-def _let1(value: Column, body) -> Column:
-    """Bind once as a lambda variable (single-element transform)."""
-    return F.element_at(F.transform(F.array(value), body), 1)
-
-
-def _ushr(x: Column, n: int) -> Column:
-    return F.shiftrightunsigned(x, n)
-
-
-def le_hex(h: Column, width: int) -> Column:
-    """Long -> 2*``width`` hex chars of its ``width``-byte
-    little-endian layout (the Column twin of ``le_bytes_sql``)."""
-    return F.regexp_replace(
-        F.reverse(F.lpad(F.hex(h), 2 * width, "0")), "(.)(.)", "$2$1"
-    )
-
-
-def _let_chain(seed: Column, steps) -> Column:
-    """Thread ``seed`` through ``steps`` with each intermediate bound
-    ONCE as a lambda variable (transform over a 1-element array).
-    Without the binds, every step that references its input k times
-    multiplies the expression tree k-fold. Bound lambda variables are
-    O(1) slots, so the tree stays linear in the step count."""
-    if not steps:
-        return seed
-    head, *rest = steps
-    return F.element_at(
-        F.transform(
-            F.array(seed), lambda h: _let_chain(head(h), rest)
-        ),
-        1,
-    )
-
-
-def _slit(c: int) -> int:
-    """Unsigned 64-bit constant -> signed-long bit pattern literal."""
-    return c - (1 << 64) if c >= (1 << 63) else c
+_M64 = (1 << 64) - 1
 
 
 def int_hash64_py(x: int) -> int:
@@ -229,127 +183,24 @@ def int_hash64_py(x: int) -> int:
     also what CH's use_int_hash_for_pods hash functions (cityHash64)
     apply to NUMERIC arguments (FunctionsHashing.h executeIntType
     routes POD columns through IntHash64Impl::apply(bit_cast), not
-    through the byte hash). Test/oracle ring for :func:`int_hash64`
-    and ch_compat's cityHash64 numeric path."""
-    m = (1 << 64) - 1
-    x = (x ^ 0x4CF2D2BAAE6DA887) & m
+    through the byte hash)."""
+    x = (x ^ 0x4CF2D2BAAE6DA887) & _M64
     x ^= x >> 33
-    x = (x * 0xFF51AFD7ED558CCD) & m
+    x = (x * 0xFF51AFD7ED558CCD) & _M64
     x ^= x >> 33
-    x = (x * 0xC4CEB9FE1A85EC53) & m
+    x = (x * 0xC4CEB9FE1A85EC53) & _M64
     x ^= x >> 33
     return x
 
 
-def int_hash64(x: Column) -> Column:
-    """CH intHash64(UInt64) — fmix64(x ^ 0x4CF2D2BAAE6DA887), returned
-    as the signed-long BIT PATTERN of CH's UInt64 (the engine-wide
-    UInt64 convention). Wrap-mode arithmetic: analyze under
-    ``cityhash.wrap_arith``."""
-    seed = x.cast("long").bitwiseXOR(F.lit(0x4CF2D2BAAE6DA887))
-    return _let_chain(
-        seed,
-        [
-            lambda h: h.bitwiseXOR(_ushr(h, 33)),
-            lambda h: h * F.lit(_slit(0xFF51AFD7ED558CCD)),
-            lambda h: h.bitwiseXOR(_ushr(h, 33)),
-            lambda h: h * F.lit(_slit(0xC4CEB9FE1A85EC53)),
-            lambda h: h.bitwiseXOR(_ushr(h, 33)),
-        ],
-    )
-
-
-def int_hash32(x: Column) -> Column:
-    """CH intHash32(UInt64) -> UInt32: Wang's 64->32 mix over
-    x ^ 0x75D9543DE018BF45, truncated to the low 32 bits (returned as
-    a non-negative long, CH UInt32 widened). Wrap-mode arithmetic:
-    analyze under ``cityhash.wrap_arith``."""
-    seed = x.cast("long").bitwiseXOR(F.lit(0x75D9543DE018BF45))
-    return _let_chain(
-        seed,
-        [
-            lambda k: F.bitwise_not(k) + F.shiftleft(k, 18),
-            lambda k: k.bitwiseXOR(
-                _ushr(k, 31).bitwiseOR(F.shiftleft(k, 33))
-            ),
-            lambda k: k * F.lit(21),
-            lambda k: k.bitwiseXOR(_ushr(k, 11)),
-            lambda k: k + F.shiftleft(k, 6),
-            lambda k: k.bitwiseXOR(_ushr(k, 22)),
-            lambda k: k.bitwiseAND(F.lit(0xFFFFFFFF)),
-        ],
-    )
-
-
-# ------------------------------------------------- SQL-text renderings
-# Single-parse F.expr compositions (round 10): the multi-argument
-# hash combines used to build their pair chains as Column trees —
-# thousands of py4j calls per call site (measured: the combine-chain
-# probe spent ~4 s per bench pass in pure Python-side tree
-# construction). These helpers render the same math as ONE SQL text
-# string; let-bindings ride element_at(transform(array(v), x ->
-# body), 1) exactly like the Column _let_chain, so no subexpression
-# is inlined twice. Analyze under cityhash.wrap_arith (plain long
-# arithmetic, wrap-on-overflow).
-import itertools as _it
-
-_TXT_N = _it.count()
-
-
-def _let_sql(val: str, body) -> str:
-    v = f"lb{next(_TXT_N)}"
-    return f"element_at(transform(array({val}), {v} -> {body(v)}), 1)"
-
-
-def int_hash64_sql(x_sql: str) -> str:
-    """CH IntHash64Impl — fmix64(x ^ salt) — over a BIGINT-valued SQL
-    fragment (bit-pattern domain); same math as :func:`int_hash64`."""
-    salt = _slit(0x4CF2D2BAAE6DA887)
-    m1 = _slit(0xFF51AFD7ED558CCD)
-    m2 = _slit(0xC4CEB9FE1A85EC53)
-    t = f"(CAST(({x_sql}) AS BIGINT) ^ {salt}L)"
-    t = _let_sql(t, lambda v: f"({v} ^ shiftrightunsigned({v}, 33))")
-    t = f"({t} * {m1}L)"
-    t = _let_sql(t, lambda v: f"({v} ^ shiftrightunsigned({v}, 33))")
-    t = f"({t} * {m2}L)"
-    t = _let_sql(t, lambda v: f"({v} ^ shiftrightunsigned({v}, 33))")
-    return t
-
-
-def hash128to64_sql(u: str, v: str) -> str:
-    """CityHash_v1_0_2::Hash128to64(u, v) over two BIGINT-valued SQL
-    fragments — the combineHashes of the cityHash64/xxHash64 family;
-    same math as cityhash.city_hash64_combine."""
-    km = f"{_slit(0x9DDFEA08EB382D69)}L"
-    return _let_sql(
-        f"({v})",
-        lambda V: _let_sql(
-            f"((({u}) ^ {V}) * {km})",
-            lambda A0: _let_sql(
-                f"({A0} ^ shiftrightunsigned({A0}, 47))",
-                lambda A: _let_sql(
-                    f"(({V} ^ {A}) * {km})",
-                    lambda B0: _let_sql(
-                        f"({B0} ^ shiftrightunsigned({B0}, 47))",
-                        lambda B: f"({B} * {km})",
-                    ),
-                ),
-            ),
-        ),
-    )
-
-
-def le_bytes_sql(t: str, width: int) -> str:
-    """The little-endian ``width``-byte binary layout of a
-    BIGINT-valued SQL fragment (the combineHashesFunc pair input),
-    as one text expression — hex bound once, byte-swap spelled as
-    concat-of-substrings like ch_compat._num_le_bytes."""
-    w2 = 2 * width
-    return _let_sql(
-        f"lpad(hex({t}), {w2}, '0')",
-        lambda H: "unhex(concat("
-        + ", ".join(
-            f"substring({H}, {w2 - 2 * k - 1}, 2)" for k in range(width)
-        )
-        + "))",
-    )
+def int_hash32_py(x: int) -> int:
+    """Python model of CH intHash32(UInt64) -> UInt32: Wang's 64->32
+    mix over x ^ 0x75D9543DE018BF45, truncated to the low 32 bits."""
+    k = (x ^ 0x75D9543DE018BF45) & _M64
+    k = ((~k & _M64) + (k << 18)) & _M64
+    k ^= ((k >> 31) | (k << 33)) & _M64
+    k = (k * 21) & _M64
+    k ^= k >> 11
+    k = (k + (k << 6)) & _M64
+    k ^= k >> 22
+    return k & 0xFFFFFFFF

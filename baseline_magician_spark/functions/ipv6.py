@@ -55,89 +55,91 @@ def is_ipv4_string(s) -> Column:
 
 def _ipv6_hex(s) -> Column:
     """Parse IPv6 text -> 32-char lowercase hex, NULL when invalid.
-    Handles ``::`` compression and an embedded dotted-IPv4 tail."""
-    t0 = F.lower(F.trim(_c(s)))
+    Handles ``::`` compression and an embedded dotted-IPv4 tail.
 
-    def with_text(t: Column) -> Column:
+    Each LET step hands the next one a struct of what it needs, so no
+    lambda reads an enclosing lambda's variable: such a closure would
+    keep a CH hash over the result from running (see
+    ch_compat._url_hierarchy)."""
+
+    def with_v4(t: Column) -> Column:
         v4 = F.regexp_extract(t, r"(?:^|:)((\d{1,3}\.){3}\d{1,3})$", 1)
+        return F.struct(t.alias("t"), v4.alias("v4"))
 
-        def with_v4(v4c: Column) -> Column:
-            v4_ok = v4c.rlike(_V4_RE)
-            v4hex = F.lpad(
-                F.lower(F.hex(ip4_to_long(v4c))), 8, "0"
-            )
-            rewritten = F.concat(
-                F.substring(t, F.lit(1), F.length(t) - F.length(v4c)),
-                F.substring(v4hex, 1, 4),
-                F.lit(":"),
-                F.substring(v4hex, 5, 4),
-            )
-            t2 = F.when(v4c == "", t).when(v4_ok, rewritten)
-            return _let(t2, _hex_from_groups_text)
+    def rewrite(e: Column) -> Column:
+        t, v4c = e["t"], e["v4"]
+        v4_ok = v4c.rlike(_V4_RE)
+        v4hex = F.lpad(F.lower(F.hex(ip4_to_long(v4c))), 8, "0")
+        rewritten = F.concat(
+            F.substring(t, F.lit(1), F.length(t) - F.length(v4c)),
+            F.substring(v4hex, 1, 4),
+            F.lit(":"),
+            F.substring(v4hex, 5, 4),
+        )
+        return F.when(v4c == "", t).when(v4_ok, rewritten)
 
-        return _let(v4, with_v4)
-
-    return _let(t0, with_text)
+    t2 = _let(_let(F.lower(F.trim(_c(s))), with_v4), rewrite)
+    return _hex_from_groups_text(t2)
 
 
 def _hex_from_groups_text(t2: Column) -> Column:
     """Colon-group text (no dotted tail) -> 32-char hex or NULL."""
-    bad_dot = t2.contains(".")
-    parts = F.split(t2, "::")
 
-    def with_parts(p: Column) -> Column:
-        dc = F.size(p) - 1
+    def split_text(t: Column) -> Column:
+        return F.struct(
+            t.contains(".").alias("bad_dot"),
+            F.split(t, "::").alias("p"),
+            F.split(t, ":").alias("full"),
+        )
+
+    def sides(e: Column) -> Column:
+        p = e["p"]
         p0 = F.try_element_at(p, F.lit(1))
-        p1 = F.try_element_at(p, F.lit(2))
-        full = F.split(t2, ":")
-        l_arr = F.when(p0 == "", _empty_str_arr()).otherwise(
-            F.split(p0, ":")
-        )
-        r_arr = F.when(
-            F.coalesce(p1, F.lit("")) == "", _empty_str_arr()
-        ).otherwise(F.split(F.coalesce(p1, F.lit("")), ":"))
-
-        def with_lr(lr: Column) -> Column:
-            l_, r_ = lr["l"], lr["r"]
-            ok1 = (
-                F.forall(l_, lambda g: g.rlike(_HEXG))
-                & F.forall(r_, lambda g: g.rlike(_HEXG))
-                & ((F.size(l_) + F.size(r_)) <= 7)
-            )
-            groups1 = F.concat(
-                l_,
-                F.array_repeat(
-                    F.lit("0"), 8 - F.size(l_) - F.size(r_)
-                ),
-                r_,
-            )
-            ok0 = (F.size(full) == 8) & F.forall(
-                full, lambda g: g.rlike(_HEXG)
-            )
-            groups = (
-                F.when(bad_dot | (dc > 1), F.lit(None))
-                .when(dc == 1, F.when(ok1, groups1))
-                .otherwise(F.when(ok0, full))
-            )
-            return _let(
-                groups,
-                lambda g: F.when(
-                    g.isNotNull(),
-                    F.aggregate(
-                        g,
-                        F.lit(""),
-                        lambda acc, e: F.concat(
-                            acc, F.lpad(e, 4, "0")
-                        ),
-                    ),
-                ),
-            )
-
-        return _let(
-            F.struct(l_arr.alias("l"), r_arr.alias("r")), with_lr
+        p1 = F.coalesce(F.try_element_at(p, F.lit(2)), F.lit(""))
+        return F.struct(
+            e["bad_dot"].alias("bad_dot"),
+            (F.size(p) - 1).alias("dc"),
+            e["full"].alias("full"),
+            F.when(p0 == "", _empty_str_arr())
+            .otherwise(F.split(p0, ":"))
+            .alias("l"),
+            F.when(p1 == "", _empty_str_arr())
+            .otherwise(F.split(p1, ":"))
+            .alias("r"),
         )
 
-    return _let(parts, with_parts)
+    def groups(e: Column) -> Column:
+        l_, r_, full, dc = e["l"], e["r"], e["full"], e["dc"]
+        ok1 = (
+            F.forall(l_, lambda g: g.rlike(_HEXG))
+            & F.forall(r_, lambda g: g.rlike(_HEXG))
+            & ((F.size(l_) + F.size(r_)) <= 7)
+        )
+        groups1 = F.concat(
+            l_,
+            F.array_repeat(F.lit("0"), 8 - F.size(l_) - F.size(r_)),
+            r_,
+        )
+        ok0 = (F.size(full) == 8) & F.forall(
+            full, lambda g: g.rlike(_HEXG)
+        )
+        return (
+            F.when(e["bad_dot"] | (dc > 1), F.lit(None))
+            .when(dc == 1, F.when(ok1, groups1))
+            .otherwise(F.when(ok0, full))
+        )
+
+    return _let(
+        _let(_let(_let(t2, split_text), sides), groups),
+        lambda g: F.when(
+            g.isNotNull(),
+            F.aggregate(
+                g,
+                F.lit(""),
+                lambda acc, e: F.concat(acc, F.lpad(e, 4, "0")),
+            ),
+        ),
+    )
 
 
 def is_ipv6_string(s) -> Column:
@@ -183,107 +185,94 @@ def _v4_tail_dotted(h: Column) -> Column:
 
 def ipv6_num_to_string(b) -> Column:
     """CH IPv6NumToString(): 16 bytes -> canonical compressed text
-    (glibc inet_ntop rules; see module docstring)."""
+    (glibc inet_ntop rules; see module docstring). Closure-free like
+    _ipv6_hex."""
     h0 = F.lower(F.hex(_c(b)))
 
-    def with_hex(h: Column) -> Column:
-        gvals = F.transform(
-            F.sequence(F.lit(0), F.lit(7)),
-            lambda i: F.conv(
-                F.substring(h, i * 4 + 1, 4), 16, 10
-            ).cast("int"),
+    def with_groups(h: Column) -> Column:
+        gv = F.transform(
+            F.regexp_extract_all(h, F.lit(".{4}"), 0),
+            lambda g: F.conv(g, 16, 10).cast("int"),
+        )
+        return F.struct(h.alias("h"), gv.alias("gv"))
+
+    def with_lead(e: Column) -> Column:
+        lead = F.aggregate(
+            e["gv"],
+            F.struct(F.lit(0).alias("n"), F.lit(False).alias("stop")),
+            lambda acc, v: F.struct(
+                F.when(acc["stop"] | (v != 0), acc["n"])
+                .otherwise(acc["n"] + 1)
+                .alias("n"),
+                (acc["stop"] | (v != 0)).alias("stop"),
+            ),
+        )["n"]
+        return F.struct(
+            e["h"].alias("h"), e["gv"].alias("gv"), lead.alias("ld")
         )
 
-        def with_gvals(gv: Column) -> Column:
-            lead = F.aggregate(
-                gv,
-                F.struct(
-                    F.lit(0).alias("n"), F.lit(False).alias("stop")
-                ),
-                lambda acc, v: F.struct(
-                    F.when(acc["stop"] | (v != 0), acc["n"])
-                    .otherwise(acc["n"] + 1)
-                    .alias("n"),
-                    (acc["stop"] | (v != 0)).alias("stop"),
-                ),
-            )["n"]
+    def render(e: Column) -> Column:
+        gv, ld = e["gv"], e["ld"]
+        g6 = F.element_at(gv, 6)
+        g8 = F.element_at(gv, 8)
+        mapped = (ld == 5) & (g6 == 0xFFFF)
+        v4tail = (ld == 6) | ((ld == 7) & (g8 != 1)) | mapped
+        v4out = F.concat(
+            F.lit("::"),
+            F.when(mapped, F.lit("ffff:")).otherwise(F.lit("")),
+            _v4_tail_dotted(e["h"]),
+        )
+        trimmed = F.transform(gv, lambda v: F.lower(F.hex(v)))
+        return F.when(v4tail, v4out).otherwise(_compress(trimmed, gv))
 
-            def with_lead(ld: Column) -> Column:
-                g6 = F.element_at(gv, 6)
-                g8 = F.element_at(gv, 8)
-                mapped = (ld == 5) & (g6 == 0xFFFF)
-                v4tail = (
-                    (ld == 6)
-                    | ((ld == 7) & (g8 != 1))
-                    | mapped
-                )
-                v4out = F.concat(
-                    F.lit("::"),
-                    F.when(mapped, F.lit("ffff:")).otherwise(
-                        F.lit("")
-                    ),
-                    _v4_tail_dotted(h),
-                )
-                trimmed = F.transform(
-                    gv, lambda v: F.lower(F.hex(v))
-                )
-                return F.when(v4tail, v4out).otherwise(
-                    _let(trimmed, lambda tg: _compress(tg, gv))
-                )
-
-            return _let(lead, with_lead)
-
-        return _let(gvals, with_gvals)
-
-    return F.when(F.length(h0) == 32, _let(h0, with_hex))
+    return F.when(
+        F.length(h0) == 32,
+        _let(_let(_let(h0, with_groups), with_lead), render),
+    )
 
 
 def _compress(tg: Column, gv: Column) -> Column:
     """Join 8 trimmed groups with the longest zero run (first on
-    tie, length >= 2) compressed to ``::``."""
+    tie, length >= 2) compressed to ``::``. The fold walks the group
+    values themselves (its index rides in the accumulator), and the
+    trimmed groups ride along with its result, so no lambda reads an
+    enclosing lambda's variable."""
+
+    def step(acc: Column, v: Column) -> Column:
+        i = acc["i"] + 1
+        cs = F.when(
+            v == 0, F.when(acc["cl"] == 0, i).otherwise(acc["cs"])
+        ).otherwise(F.lit(0))
+        cl = F.when(v == 0, acc["cl"] + 1).otherwise(F.lit(0))
+        return F.struct(
+            i.alias("i"),
+            cs.alias("cs"),
+            cl.alias("cl"),
+            F.when(cl > acc["bl"], cs).otherwise(acc["bs"]).alias("bs"),
+            F.greatest(cl, acc["bl"]).alias("bl"),
+        )
+
     best = F.aggregate(
-        F.sequence(F.lit(1), F.lit(8)),
+        gv,
         F.struct(
+            F.lit(0).alias("i"),
             F.lit(0).alias("cs"), F.lit(0).alias("cl"),
             F.lit(0).alias("bs"), F.lit(0).alias("bl"),
         ),
-        lambda acc, i: _let(
-            F.when(
-                F.element_at(gv, i) == 0,
-                F.struct(
-                    F.when(acc["cl"] == 0, i)
-                    .otherwise(acc["cs"])
-                    .alias("cs"),
-                    (acc["cl"] + 1).alias("cl"),
-                ),
-            ).otherwise(
-                F.struct(F.lit(0).alias("cs"), F.lit(0).alias("cl"))
-            ),
-            lambda cur: F.struct(
-                cur["cs"].alias("cs"),
-                cur["cl"].alias("cl"),
-                F.when(cur["cl"] > acc["bl"], cur["cs"])
-                .otherwise(acc["bs"])
-                .alias("bs"),
-                F.greatest(cur["cl"], acc["bl"]).alias("bl"),
-            ),
-        ),
+        step,
     )
 
-    def with_best(b: Column) -> Column:
-        bs, bl = b["bs"], b["bl"]
+    def join(e: Column) -> Column:
+        tg, bs, bl = e["tg"], e["b"]["bs"], e["b"]["bl"]
         left = F.array_join(F.slice(tg, 1, bs - 1), ":")
         right = F.array_join(
-            F.slice(
-                tg, bs + bl, F.lit(8) - (bs + bl) + 1
-            ),
-            ":",
+            F.slice(tg, bs + bl, F.lit(8) - (bs + bl) + 1), ":"
         )
         return F.when(
             bl >= 2, F.concat(left, F.lit("::"), right)
         ).otherwise(F.array_join(tg, ":"))
 
-    return _let(best, with_best)
+    return _let(F.struct(tg.alias("tg"), best.alias("b")), join)
 
 
 def cut_ipv6(b, bytes_v6, bytes_v4) -> Column:
@@ -294,25 +283,16 @@ def cut_ipv6(b, bytes_v6, bytes_v4) -> Column:
     b6 = _c(int(bytes_v6) if not isinstance(bytes_v6, Column) else bytes_v6)
     b4 = _c(int(bytes_v4) if not isinstance(bytes_v4, Column) else bytes_v4)
 
-    def with_hex(h: Column) -> Column:
+    def cut(h: Column) -> Column:
         mapped = h.startswith("00000000000000000000ffff")
         k = F.when(mapped, b4).otherwise(b6).cast("int")
-        return _let(
-            k,
-            lambda kc: ipv6_num_to_string(
-                F.unhex(
-                    F.rpad(
-                        F.substring(
-                            h, F.lit(1), F.lit(32) - kc * 2
-                        ),
-                        32,
-                        "0",
-                    )
-                )
-            ),
+        return F.unhex(
+            F.rpad(F.substring(h, F.lit(1), F.lit(32) - k * 2), 32, "0")
         )
 
-    return F.when(F.length(h0) == 32, _let(h0, with_hex))
+    return F.when(
+        F.length(h0) == 32, ipv6_num_to_string(_let(h0, cut))
+    )
 
 
 # ------------------------------------------------------------------ MAC

@@ -1,31 +1,23 @@
-"""Canonical MurmurHash64A and MurmurHash3 x86_32 (seed 0) as pure
-Column expressions.
+"""Canonical MurmurHash64A, MurmurHash2-32 and MurmurHash3 x86_32.
 
 CH's `murmurHash2_64` is Appleby's MurmurHash64A and
 `murmurHash3_32` is MurmurHash3 x86_32, both seed 0 — public-domain
-algorithms (smhasher). Both were seeded-xxhash bucketing stand-ins
-until round 8; these renderings are the canonical algorithms,
-validated three ways (Python model / Spark expression / DuckDB
-emitter agree bit-for-bit) plus, for murmur3's word path, against
-Spark's own JVM Murmur3_x86_32 (identical for 4-byte-aligned inputs;
-Spark's tail handling deviates from canonical, ours does not —
-tests/test_murmur.py). CH-server byte-compat is asserted from the
-documented algorithm (README hash table).
+algorithms (smhasher); `murmurHash2_32`, `gccMurmurHash` and
+`kafkaMurmurHash` are the same cores at other seeds. The models are
+validated against Spark's own JVM Murmur3_x86_32 for murmur3's word
+path (identical for 4-byte-aligned inputs; Spark's tail handling
+deviates from canonical, ours does not — tests/test_murmur.py) and
+against Kafka's published vectors for MurmurHash2-32. CH-server
+byte-compat is asserted from the documented algorithm (README hash
+table).
 
-Same wrap-mode contract as cityhash/siphash: analyze under
-``cityhash.wrap_arith`` (run_ch_query auto-enters on the function
-names). Loops run as constant-depth ``aggregate`` folds — nesting
-rounds as continuation-lets is analyzer-hostile (see
-siphash._TextSip.round_body).
+Two faces, as in cityhash.py: the pure-Python models (the executed
+code for string arguments, row by row inside the one Arrow hash
+kernel, functions/hash_np.hash_arrow) and the DuckDB HUGEINT emitter
+for oracles. The module imports no pyspark.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from .cityhash import _sl
-from .hashing import _let1, _ushr
 
 _M64 = (1 << 64) - 1
 _M32 = (1 << 32) - 1
@@ -117,341 +109,6 @@ def murmur3_32_py(data: bytes, seed: int = 0) -> int:
     h = (h * F2) & _M32
     h ^= h >> 16
     return h
-
-
-# ------------------------------------------------- spark SQL text path
-def _f64le_sql(b: str, pos: str) -> str:
-    return (
-        f"CAST(conv(regexp_replace(reverse(hex(substring({b},{pos},8)))"
-        f",'(.)(.)','$2$1'),16,-10) AS BIGINT)"
-    )
-
-
-def _f32le_sql(b: str, pos: str) -> str:
-    return (
-        f"CAST(conv(regexp_replace(reverse(hex(substring({b},{pos},4)))"
-        f",'(.)(.)','$2$1'),16,10) AS BIGINT)"
-    )
-
-
-def murmur2_64_sql(input_sql: str, seed: int = 0) -> str:
-    """MurmurHash64A as ONE Spark-SQL text expression. Analyze
-    under wrap_arith. ``seed`` covers gccMurmurHash (libstdc++
-    _Hash_bytes seed 0xc70f6907 — byte-identical algorithm: its
-    shift_mix(load*m)*m chunk step and tail/final mixes are
-    MurmurHash64A's, only the seed differs)."""
-    m = f"{_sl(M2)}L"
-    h0 = f"({_sl(seed)}L^(nb*{m}))" if seed else f"nb*{m}"
-    # word step (state h, index wi): bind k mixed, then fold into h
-    word = _f64le_sql("bb", "(wi*8+1)")
-    step = (
-        f"element_at(transform(array(({word})*{m}),"
-        f"mk0->element_at(transform(array("
-        f"(mk0^shiftrightunsigned(mk0,47))*{m}),"
-        f"mk1->((mh^mk1)*{m})),1)),1)"
-    )
-    # tail: zero-padded LE fetch of the trailing n%8 bytes (no length
-    # byte in murmur2 — unlike siphash)
-    tail = _f64le_sql(
-        "concat(bb,unhex('0000000000000000'))", "(nb-(nb%8)+1)"
-    )
-    body = (
-        f"element_at(transform(array("
-        # h0 = seed ^ (n * m), then the word fold
-        f"CASE WHEN CAST(nb DIV 8 AS INT)>0 THEN "
-        f"aggregate(sequence(0,CAST(nb DIV 8 AS INT)-1),{h0},"
-        f"(mh,wi)->{step}) ELSE {h0} END),"
-        f"mh2->element_at(transform(array("
-        f"CASE WHEN nb%8>0 THEN (mh2^({tail}))*{m} ELSE mh2 END),"
-        f"mh3->element_at(transform(array("
-        f"(mh3^shiftrightunsigned(mh3,47))*{m}),"
-        f"mh4->mh4^shiftrightunsigned(mh4,47)),1)),1)),1)"
-    )
-    wrapped = (
-        f"element_at(transform(array(CAST(({input_sql}) AS BINARY)),"
-        f"bb->element_at(transform(array(CAST(length(bb) AS BIGINT)),"
-        f"nb->{body}),1)),1)"
-    )
-    return (
-        f"(CASE WHEN ({input_sql}) IS NULL THEN CAST(NULL AS BIGINT) "
-        f"ELSE {wrapped} END)"
-    )
-
-
-def murmur2_32_sql(input_sql: str, seed: int = 0) -> str:
-    """MurmurHash2 (32-bit) as ONE Spark-SQL text expression (UInt32
-    as a non-negative BIGINT; NULL in -> NULL out) — seed 0 =
-    murmurHash2_32, Kafka's 0x9747b28c = the kafkaMurmurHash base.
-    Mirrors the murmur2_32 Column builder step-for-step (zero-padded
-    LE tail word, no separate length byte). Analyze under
-    wrap_arith."""
-    m = str(M2_32)
-    mm = str(_M32)
-    word = _f32le_sql("bb", "(wi*4+1)")
-    step = (
-        f"element_at(transform(array((({word})*{m})&{mm}),"
-        f"k0->element_at(transform(array("
-        f"((k0^shiftrightunsigned(k0,24))*{m})&{mm}),"
-        f"k1->(((mh*{m})&{mm})^k1)),1)),1)"
-    )
-    tail = _f32le_sql("concat(bb,unhex('00000000'))", "(nb-(nb%4)+1)")
-    h0 = f"({seed}L^nb)"
-    body = (
-        f"element_at(transform(array("
-        f"CASE WHEN CAST(nb DIV 4 AS INT)>0 THEN "
-        f"aggregate(sequence(0,CAST(nb DIV 4 AS INT)-1),{h0},"
-        f"(mh,wi)->{step}) ELSE {h0} END),"
-        f"mh2->element_at(transform(array("
-        f"CASE WHEN nb%4>0 THEN ((mh2^({tail}))*{m})&{mm} "
-        f"ELSE mh2 END),"
-        f"mh3->element_at(transform(array("
-        f"((mh3^shiftrightunsigned(mh3,13))*{m})&{mm}),"
-        f"mh4->mh4^shiftrightunsigned(mh4,15)),1)),1)),1)"
-    )
-    wrapped = (
-        f"element_at(transform(array(CAST(({input_sql}) AS BINARY)),"
-        f"bb->element_at(transform(array(CAST(length(bb) AS BIGINT)),"
-        f"nb->{body}),1)),1)"
-    )
-    return (
-        f"(CASE WHEN ({input_sql}) IS NULL THEN CAST(NULL AS BIGINT) "
-        f"ELSE {wrapped} END)"
-    )
-
-
-def murmur3_32_sql(input_sql: str) -> str:
-    """MurmurHash3 x86_32 (seed 0) as ONE Spark-SQL text expression
-    (result is the UInt32 as a non-negative BIGINT). Analyze under
-    wrap_arith — intermediates use 64-bit wrap then mask."""
-    word = _f32le_sql("bb", "(wi*4+1)")
-
-    def mixk(k: str) -> str:
-        return (
-            f"element_at(transform(array((({k})*{C1})&{_M32}),"
-            f"k1->element_at(transform(array("
-            f"((shiftleft(k1,15)|shiftrightunsigned(k1,17))&{_M32})"
-            f"*{C2}&{_M32}),"
-            f"k2->k2),1)),1)"
-        )
-
-    step = (
-        f"element_at(transform(array({mixk(word)}),"
-        f"wk->element_at(transform(array((mh^wk)&{_M32}),"
-        f"h1->((((shiftleft(h1,13)|shiftrightunsigned(h1,19))&{_M32})"
-        f"*5+3864292196)&{_M32})),1)),1)"
-    )
-    tail = _f32le_sql("concat(bb,unhex('00000000'))", "(nb-(nb%4)+1)")
-    body = (
-        f"element_at(transform(array("
-        f"CASE WHEN CAST(nb DIV 4 AS INT)>0 THEN "
-        f"aggregate(sequence(0,CAST(nb DIV 4 AS INT)-1),0L,"
-        f"(mh,wi)->{step}) ELSE 0L END),"
-        f"mh2->element_at(transform(array("
-        f"(CASE WHEN nb%4>0 THEN mh2^{mixk(tail)} ELSE mh2 END)^nb),"
-        f"mh3->element_at(transform(array("
-        f"((mh3^shiftrightunsigned(mh3,16))*{F1})&{_M32}),"
-        f"mh4->element_at(transform(array("
-        f"((mh4^shiftrightunsigned(mh4,13))*{F2})&{_M32}),"
-        f"mh5->mh5^shiftrightunsigned(mh5,16)),1)),1)),1)),1)"
-    )
-    wrapped = (
-        f"element_at(transform(array(CAST(({input_sql}) AS BINARY)),"
-        f"bb->element_at(transform(array(CAST(length(bb) AS BIGINT)),"
-        f"nb->{body}),1)),1)"
-    )
-    return (
-        f"(CASE WHEN ({input_sql}) IS NULL THEN CAST(NULL AS BIGINT) "
-        f"ELSE {wrapped} END)"
-    )
-
-
-def _fast(col, sql_fn, col_fn) -> Column:
-    from .cityhash import col_sql
-
-    c = col if isinstance(col, Column) else F.col(col)
-    inp = col_sql(c)
-    if inp is None:
-        return col_fn(c)
-    try:
-        return F.expr(sql_fn(f"({inp})"))
-    except Exception:
-        return col_fn(c)
-
-
-# ------------------------------------------------------ column builders
-def murmur2_64(col, seed: int = 0) -> Column:
-    c = col if isinstance(col, Column) else F.col(col)
-
-    def build(b: Column) -> Column:
-        nn = F.length(b).cast("long")
-        m = F.lit(_sl(M2))
-        nwords = F.floor(nn / F.lit(8)).cast("int")
-
-        def f64le(pos: Column) -> Column:
-            hx = F.hex(F.substring(b, pos.cast("int"), F.lit(8)))
-            le = F.regexp_replace(F.reverse(hx), "(.)(.)", "$2$1")
-            return F.conv(le, 16, -10).cast("long")
-
-        def step(h: Column, wi: Column) -> Column:
-            return _let1(
-                f64le(wi * 8 + 1) * m,
-                lambda k0: _let1(
-                    (k0.bitwiseXOR(_ushr(k0, 47))) * m,
-                    lambda k1: (h.bitwiseXOR(k1)) * m,
-                ),
-            )
-
-        h0 = nn * m if not seed else F.lit(_sl(seed)).bitwiseXOR(nn * m)
-        folded = F.when(
-            nwords > 0,
-            F.aggregate(F.sequence(F.lit(0), nwords - 1), h0, step),
-        ).otherwise(h0)
-        padded = F.concat(b, F.lit(bytes(8)))
-        hx = F.hex(F.substring(padded, (nn - nn % 8 + 1).cast("int"), F.lit(8)))
-        tail = F.conv(
-            F.regexp_replace(F.reverse(hx), "(.)(.)", "$2$1"), 16, -10
-        ).cast("long")
-        return _let1(
-            folded,
-            lambda h2: _let1(
-                F.when(nn % 8 > 0, (h2.bitwiseXOR(tail)) * m).otherwise(h2),
-                lambda h3: _let1(
-                    (h3.bitwiseXOR(_ushr(h3, 47))) * m,
-                    lambda h4: h4.bitwiseXOR(_ushr(h4, 47)),
-                ),
-            ),
-        )
-
-    return F.when(c.isNotNull(), _let1(c.cast("binary"), build))
-
-
-def murmur2_32(col, seed: int = 0) -> Column:
-    """Appleby's MurmurHash2 (32-bit) as a Column (UInt32 as a
-    non-negative BIGINT; NULL in -> NULL out). seed 0 = CH
-    murmurHash2_32; seed 0x9747b28c = Kafka Utils.murmur2 (the
-    kafkaMurmurHash base). Analyze under wrap_arith."""
-    c = col if isinstance(col, Column) else F.col(col)
-    m32c = F.lit(_M32)
-    m = F.lit(M2_32)
-
-    def build(b: Column) -> Column:
-        nn = F.length(b).cast("long")
-        nwords = F.floor(nn / F.lit(4)).cast("int")
-
-        def f32le(src: Column, pos: Column) -> Column:
-            hx = F.hex(F.substring(src, pos.cast("int"), F.lit(4)))
-            le = F.regexp_replace(F.reverse(hx), "(.)(.)", "$2$1")
-            return F.conv(le, 16, 10).cast("long")
-
-        def step(h: Column, wi: Column) -> Column:
-            return _let1(
-                (f32le(b, wi * 4 + 1) * m).bitwiseAND(m32c),
-                lambda k0: _let1(
-                    (k0.bitwiseXOR(_ushr(k0, 24)) * m).bitwiseAND(m32c),
-                    lambda k1: (h * m).bitwiseAND(m32c).bitwiseXOR(k1),
-                ),
-            )
-
-        h0 = F.lit(seed).bitwiseXOR(nn)
-        folded = F.when(
-            nwords > 0,
-            F.aggregate(F.sequence(F.lit(0), nwords - 1), h0, step),
-        ).otherwise(h0)
-        padded = F.concat(b, F.lit(bytes(4)))
-        tail = f32le(padded, nn - nn % 4 + 1)
-        return _let1(
-            folded,
-            lambda h2: _let1(
-                F.when(
-                    nn % 4 > 0,
-                    (h2.bitwiseXOR(tail) * m).bitwiseAND(m32c),
-                ).otherwise(h2),
-                lambda h3: _let1(
-                    (h3.bitwiseXOR(_ushr(h3, 13)) * m).bitwiseAND(m32c),
-                    lambda h4: h4.bitwiseXOR(_ushr(h4, 15)),
-                ),
-            ),
-        )
-
-    return F.when(c.isNotNull(), _let1(c.cast("binary"), build))
-
-
-def murmur3_32(col) -> Column:
-    c = col if isinstance(col, Column) else F.col(col)
-    m32 = F.lit(_M32)
-
-    def rotl(x: Column, r: int) -> Column:
-        return (
-            F.shiftleft(x, r).bitwiseOR(_ushr(x, 32 - r))
-        ).bitwiseAND(m32)
-
-    def build(b: Column) -> Column:
-        nn = F.length(b).cast("long")
-        nwords = F.floor(nn / F.lit(4)).cast("int")
-
-        def f32le(src: Column, pos: Column) -> Column:
-            hx = F.hex(F.substring(src, pos.cast("int"), F.lit(4)))
-            le = F.regexp_replace(F.reverse(hx), "(.)(.)", "$2$1")
-            return F.conv(le, 16, 10).cast("long")
-
-        def mixk(k: Column) -> Column:
-            return _let1(
-                (k * F.lit(C1)).bitwiseAND(m32),
-                lambda k1: (rotl(k1, 15) * F.lit(C2)).bitwiseAND(m32),
-            )
-
-        def step(h: Column, wi: Column) -> Column:
-            return _let1(
-                mixk(f32le(b, wi * 4 + 1)),
-                lambda wk: _let1(
-                    h.bitwiseXOR(wk).bitwiseAND(m32),
-                    lambda h1: (rotl(h1, 13) * 5 + F.lit(0xE6546B64))
-                    .bitwiseAND(m32),
-                ),
-            )
-
-        folded = F.when(
-            nwords > 0,
-            F.aggregate(
-                F.sequence(F.lit(0), nwords - 1),
-                F.lit(0).cast("long"),
-                step,
-            ),
-        ).otherwise(F.lit(0).cast("long"))
-        padded = F.concat(b, F.lit(bytes(4)))
-        tail = mixk(f32le(padded, nn - nn % 4 + 1))
-        return _let1(
-            folded,
-            lambda h2: _let1(
-                F.when(nn % 4 > 0, h2.bitwiseXOR(tail))
-                .otherwise(h2)
-                .bitwiseXOR(nn),
-                lambda h3: _let1(
-                    (h3.bitwiseXOR(_ushr(h3, 16)) * F.lit(F1)).bitwiseAND(
-                        m32
-                    ),
-                    lambda h4: _let1(
-                        (h4.bitwiseXOR(_ushr(h4, 13)) * F.lit(F2))
-                        .bitwiseAND(m32),
-                        lambda h5: h5.bitwiseXOR(_ushr(h5, 16)),
-                    ),
-                ),
-            ),
-        )
-
-    return F.when(c.isNotNull(), _let1(c.cast("binary"), build))
-
-
-def murmur2_64_fast(col, seed: int = 0) -> Column:
-    return _fast(
-        col,
-        lambda s: murmur2_64_sql(s, seed),
-        lambda c: murmur2_64(c, seed),
-    )
-
-
-def murmur3_32_fast(col) -> Column:
-    return _fast(col, murmur3_32_sql, murmur3_32)
 
 
 # --------------------------------------------------------------- duckdb

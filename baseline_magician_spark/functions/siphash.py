@@ -1,4 +1,5 @@
-"""SipHash-2-4 (zero key) as a pure Column expression.
+"""SipHash-2-4 (zero key): the pure-Python model and the DuckDB
+emitter.
 
 CH's `sipHash64` is SipHash-2-4 with k0 = k1 = 0 over the value's
 bytes. The algorithm is public (Aumasson & Bernstein, the SipHash
@@ -9,29 +10,17 @@ vendors CityHash for wire checksums but not SipHash, so CH-server
 byte-compatibility is asserted from the documented algorithm, not
 re-verified against a live server (README hash table notes this).
 
-Same engineering as cityhash.py, one size smaller (no length-class
-dispatch — one word loop + a tail block):
-
-- ``sip_hash64_sql(input_sql)``  — the whole hash as ONE Spark-SQL
-  text string (single F.expr parse; the shipped path). Wrap-mode
-  long arithmetic: analyze under ``cityhash.wrap_arith``.
-- ``sip_hash64(col)``            — Column-builder fallback for
-  inputs whose SQL rendering does not round-trip.
-- ``sip_hash64_py(data)``        — Python reference model.
+- ``sip_hash64_py(data)``        — Python reference model; the
+  executed code for string arguments, row by row inside the one
+  Arrow hash kernel (functions/hash_np.hash_arrow).
 - ``SipEmitter``                 — straight-line DuckDB HUGEINT SQL
   for oracles (word count CASE-dispatched up to a caller max).
 
 At 100 TB: narrow map-side projection, no shuffle — same profile as
-cityHash64.
+cityHash64. The module imports no pyspark.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from .cityhash import _sl
-from .hashing import _let1, _ushr
 
 _M64 = (1 << 64) - 1
 
@@ -78,295 +67,6 @@ def sip_hash64_py(data: bytes, k0: int = 0, k1: int = 0) -> int:
     for _ in range(4):
         v0, v1, v2, v3 = _round_py(v0, v1, v2, v3)
     return v0 ^ v1 ^ v2 ^ v3
-
-
-# ------------------------------------------------- spark SQL text path
-class _TextSip:
-    def __init__(self) -> None:
-        self._k = 0
-
-    def v(self) -> str:
-        self._k += 1
-        return f"sv{self._k}"
-
-    def let(self, val: str, body) -> str:
-        var = self.v()
-        return (
-            f"element_at(transform(array({val}),{var}->{body(var)}),1)"
-        )
-
-    @staticmethod
-    def rotl(x: str, s: int) -> str:
-        # x must be a bound variable reference
-        return f"(shiftleft({x},{s})|shiftrightunsigned({x},{64 - s}))"
-
-    def round_body(self, s: str) -> str:
-        """ONE SIPROUND over the state var `s` (fields v0..v3) — used
-        as an inner-aggregate merge body so N rounds cost constant
-        lambda DEPTH (the analyzer's lambda resolution is
-        super-linear in nesting depth: 24 nested round-lets hang it,
-        measured; an aggregate over sequence(1, N) keeps the whole
-        chain at ~4 levels regardless of N)."""
-        r = self.rotl
-        return self.let(
-            f"named_struct('a0',({s}.v0+{s}.v1),'c0',({s}.v2+{s}.v3))",
-            lambda p: self.let(
-                f"named_struct("
-                f"'v1a',({r(f'{s}.v1', 13)}^{p}.a0),"
-                f"'v3a',({r(f'{s}.v3', 16)}^{p}.c0),"
-                f"'v0b',{r(f'{p}.a0', 32)})",
-                lambda q: self.let(
-                    f"named_struct('v0c',({q}.v0b+{q}.v3a),"
-                    f"'v2b',({p}.c0+{q}.v1a))",
-                    lambda u: f"named_struct("
-                    f"'v0',{u}.v0c,"
-                    f"'v1',({r(f'{q}.v1a', 17)}^{u}.v2b),"
-                    f"'v2',{r(f'{u}.v2b', 32)},"
-                    f"'v3',({r(f'{q}.v3a', 21)}^{u}.v0c))",
-                ),
-            ),
-        )
-
-    def rounds(self, st: str, count: int, body) -> str:
-        """Apply `count` SIPROUNDs to the state struct expr `st`
-        (fields v0..v3), then `body(final_state_var)` — via an inner
-        aggregate so lambda depth stays constant."""
-        rb = self.round_body("rs")
-        return self.let(
-            f"aggregate(sequence(1,{count}),{st},(rs,ri)->{rb})",
-            body,
-        )
-
-    @staticmethod
-    def f64le(b: str, pos: str) -> str:
-        return (
-            f"CAST(conv(regexp_replace(reverse(hex(substring({b},{pos},8)))"
-            f",'(.)(.)','$2$1'),16,-10) AS BIGINT)"
-        )
-
-    def top(self, inp: str) -> str:
-        init = (
-            f"named_struct('v0',{_C0}L,'v1',{_C1}L,"
-            f"'v2',{_sl(_C2)}L,'v3',{_C3}L)"
-        )
-
-        def with_bin(b: str) -> str:
-            def with_n(nn: str) -> str:
-                nwords = f"CAST(({nn}) DIV 8 AS INT)"
-                # full-word fold; guard the empty sequence (DIV 8 = 0)
-                word = self.f64le(b, "(wi*8+1)")
-                folded = self.let(
-                    word,
-                    lambda m: self.rounds(
-                        f"named_struct('v0',ws.v0,'v1',ws.v1,"
-                        f"'v2',ws.v2,'v3',(ws.v3^{m}))",
-                        2,
-                        lambda s2: f"named_struct('v0',({s2}.v0^{m}),"
-                        f"'v1',{s2}.v1,'v2',{s2}.v2,'v3',{s2}.v3)",
-                    ),
-                )
-                loop = (
-                    f"(CASE WHEN {nwords}>0 THEN "
-                    f"aggregate(sequence(0,{nwords}-1),{init},"
-                    f"(ws,wi)->{folded}) ELSE {init} END)"
-                )
-                # tail block: remaining bytes zero-padded to 8, then
-                # the length byte ORed into byte 7 (pad keeps it 0)
-                tail = self.f64le(
-                    f"concat({b},unhex('0000000000000000'))",
-                    f"(({nn})-(({nn})%8)+1)",
-                )
-                blk = (
-                    f"(shiftleft(({nn})&255,56)|{tail})"
-                )
-                return self.let(
-                    blk,
-                    lambda bb: self.let(
-                        loop,
-                        lambda st: self.rounds(
-                            f"named_struct('v0',{st}.v0,'v1',{st}.v1,"
-                            f"'v2',{st}.v2,'v3',({st}.v3^{bb}))",
-                            2,
-                            lambda s2: self.rounds(
-                                f"named_struct('v0',({s2}.v0^{bb}),"
-                                f"'v1',{s2}.v1,"
-                                f"'v2',({s2}.v2^255),'v3',{s2}.v3)",
-                                4,
-                                lambda s3: f"({s3}.v0^{s3}.v1"
-                                f"^{s3}.v2^{s3}.v3)",
-                            ),
-                        ),
-                    ),
-                )
-
-            return self.let(f"CAST(length({b}) AS BIGINT)", with_n)
-
-        body = self.let(f"CAST(({inp}) AS BINARY)", with_bin)
-        return (
-            f"(CASE WHEN ({inp}) IS NULL THEN CAST(NULL AS BIGINT) "
-            f"ELSE {body} END)"
-        )
-
-
-def sip_hash64_sql(input_sql: str) -> str:
-    """SipHash-2-4(k=0) of a string/binary SQL fragment as ONE
-    Spark-SQL text expression. Analyze under wrap_arith."""
-    return _TextSip().top(input_sql)
-
-
-# ---------------------------------------------------------------- spark
-def _rotl(x: Column, s: int) -> Column:
-    return _let1(
-        x, lambda v: F.shiftleft(v, s).bitwiseOR(_ushr(v, 64 - s))
-    )
-
-
-def _sround(st: Column, body) -> Column:
-    """One SIPROUND over struct(v0..v3), continuation-passing."""
-    return _let1(
-        st,
-        lambda s: _let1(
-            F.struct(
-                (s["v0"] + s["v1"]).alias("a0"),
-                (s["v2"] + s["v3"]).alias("c0"),
-            ),
-            lambda p: _let1(
-                F.struct(
-                    _rotl(s["v1"], 13).bitwiseXOR(p["a0"]).alias("v1a"),
-                    _rotl(s["v3"], 16).bitwiseXOR(p["c0"]).alias("v3a"),
-                    _rotl(p["a0"], 32).alias("v0b"),
-                ),
-                lambda q: _let1(
-                    F.struct(
-                        (q["v0b"] + q["v3a"]).alias("v0c"),
-                        (p["c0"] + q["v1a"]).alias("v2b"),
-                    ),
-                    lambda u: body(
-                        F.struct(
-                            u["v0c"].alias("v0"),
-                            _rotl(q["v1a"], 17)
-                            .bitwiseXOR(u["v2b"])
-                            .alias("v1"),
-                            _rotl(u["v2b"], 32).alias("v2"),
-                            _rotl(q["v3a"], 21)
-                            .bitwiseXOR(u["v0c"])
-                            .alias("v3"),
-                        )
-                    ),
-                ),
-            ),
-        ),
-    )
-
-
-def _srounds(st: Column, count: int, body) -> Column:
-    """N SIPROUNDs at constant lambda depth (inner aggregate over
-    sequence(1, N) — see _TextSip.round_body on why nesting rounds
-    directly is not viable)."""
-    folded = F.aggregate(
-        F.sequence(F.lit(1), F.lit(count)),
-        st,
-        lambda s, _i: _sround(s, lambda out: out),
-    )
-    return _let1(folded, body)
-
-
-def _f64le(b: Column, pos: Column) -> Column:
-    hx = F.hex(F.substring(b, pos.cast("int"), F.lit(8)))
-    le = F.regexp_replace(F.reverse(hx), "(.)(.)", "$2$1")
-    return F.conv(le, 16, -10).cast("long")
-
-
-def sip_hash64(col) -> Column:
-    """SipHash-2-4(k=0) — Column-builder rendering (fallback; the
-    text path in ``sip_hash64_fast`` is ~2x cheaper to build).
-    Analyze under ``cityhash.wrap_arith``."""
-    c = col if isinstance(col, Column) else F.col(col)
-
-    def build(b: Column) -> Column:
-        nn = F.length(b).cast("long")
-        init = F.struct(
-            F.lit(_C0).alias("v0"),
-            F.lit(_C1).alias("v1"),
-            F.lit(_sl(_C2)).alias("v2"),
-            F.lit(_C3).alias("v3"),
-        )
-        nwords = F.floor(nn / F.lit(8)).cast("int")
-
-        def word_step(ws: Column, wi: Column) -> Column:
-            return _let1(
-                _f64le(b, wi * 8 + 1),
-                lambda m: _srounds(
-                    F.struct(
-                        ws["v0"].alias("v0"),
-                        ws["v1"].alias("v1"),
-                        ws["v2"].alias("v2"),
-                        ws["v3"].bitwiseXOR(m).alias("v3"),
-                    ),
-                    2,
-                    lambda s2: F.struct(
-                        s2["v0"].bitwiseXOR(m).alias("v0"),
-                        s2["v1"].alias("v1"),
-                        s2["v2"].alias("v2"),
-                        s2["v3"].alias("v3"),
-                    ),
-                ),
-            )
-
-        loop = F.when(
-            nwords > 0,
-            F.aggregate(
-                F.sequence(F.lit(0), nwords - 1), init, word_step
-            ),
-        ).otherwise(init)
-        padded = F.concat(b, F.lit(bytes(8)))
-        tail = _f64le(padded, nn - (nn % 8) + 1)
-        blk = F.shiftleft(nn.bitwiseAND(F.lit(255)), 56).bitwiseOR(tail)
-        return _let1(
-            blk,
-            lambda bb: _let1(
-                loop,
-                lambda st: _srounds(
-                    F.struct(
-                        st["v0"].alias("v0"),
-                        st["v1"].alias("v1"),
-                        st["v2"].alias("v2"),
-                        st["v3"].bitwiseXOR(bb).alias("v3"),
-                    ),
-                    2,
-                    lambda s2: _srounds(
-                        F.struct(
-                            s2["v0"].bitwiseXOR(bb).alias("v0"),
-                            s2["v1"].alias("v1"),
-                            s2["v2"].bitwiseXOR(F.lit(255)).alias("v2"),
-                            s2["v3"].alias("v3"),
-                        ),
-                        4,
-                        lambda s3: s3["v0"]
-                        .bitwiseXOR(s3["v1"])
-                        .bitwiseXOR(s3["v2"])
-                        .bitwiseXOR(s3["v3"]),
-                    ),
-                ),
-            ),
-        )
-
-    return F.when(c.isNotNull(), _let1(c.cast("binary"), build))
-
-
-def sip_hash64_fast(col) -> Column:
-    """Text path when the input's SQL rendering round-trips
-    (cityhash.col_sql); Column builder otherwise."""
-    from .cityhash import col_sql
-
-    c = col if isinstance(col, Column) else F.col(col)
-    inp = col_sql(c)
-    if inp is None:
-        return sip_hash64(c)
-    try:
-        return F.expr(sip_hash64_sql(f"({inp})"))
-    except Exception:
-        return sip_hash64(c)
 
 
 # --------------------------------------------------------------- duckdb

@@ -1,33 +1,25 @@
-"""Genuine XXH64 / XXH32 (seed 0) over RAW BYTES as pure Column
-expressions — byte-exact with CH's `xxHash64` / `xxHash32`.
+"""Genuine XXH64 / XXH32 (seed 0) over RAW BYTES — byte-exact with
+CH's `xxHash64` / `xxHash32`.
 
 CH hashes the value's bytes with the canonical xxHash algorithms at
 seed 0 (the docs' own example: xxHash32('Hello, world!') =
 834093149 — reproduced by the model here). Spark's built-in
 ``F.xxhash64`` is the same XXH64 core but at seed 42 over Spark's
-type-tagged row encoding, so it can NEVER match CH for strings;
-until round 8 the engine shipped it as a documented "engine-native"
-spelling. This module renders the canonical algorithm itself, and
-its validation is the strongest in the hash family: the Python model
-is bit-identical to Spark's JVM XXH64 (seed 42, binary input) across
+type-tagged row encoding, so it can NEVER match CH for strings. The
+validation is the strongest in the hash family: the Python model is
+bit-identical to Spark's JVM XXH64 (seed 42, binary input) across
 all length classes — an independent implementation of the same
 public spec — plus the CH docs value and the published empty-input
 digests (XXH64('') = 0xEF46DB3751D8E999, XXH32('') = 0x02CC5D05).
 
-Renderings follow the house pattern (cityhash.py/siphash.py):
-text emitter (single F.expr parse, shipped), Column builder
-(fallback), DuckDB HUGEINT emitter (oracles), all wrap-mode —
-analyze under ``cityhash.wrap_arith``; run_ch_query auto-enters on
-the function names.
+Two faces, as in cityhash.py: the pure-Python models (``xxh64_py``,
+``xxh32_py`` — the executed code for string arguments, row by row
+inside the one Arrow hash kernel, functions/hash_np.hash_arrow) and
+the DuckDB HUGEINT emitter for oracles. The module imports no
+pyspark.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from .cityhash import _sl
-from .hashing import _let1, _ushr
 
 _M64 = (1 << 64) - 1
 _M32 = (1 << 32) - 1
@@ -144,552 +136,6 @@ def xxh32_py(data: bytes, seed: int = 0) -> int:
     h = (h * Q3) & _M32
     h ^= h >> 16
     return h
-
-
-# ------------------------------------------------- spark SQL text path
-def _f64le_sql(b: str, pos: str) -> str:
-    return (
-        f"CAST(conv(regexp_replace(reverse(hex(substring({b},{pos},8)))"
-        f",'(.)(.)','$2$1'),16,-10) AS BIGINT)"
-    )
-
-
-def _f32le_sql(b: str, pos: str) -> str:
-    return (
-        f"CAST(conv(regexp_replace(reverse(hex(substring({b},{pos},4)))"
-        f",'(.)(.)','$2$1'),16,10) AS BIGINT)"
-    )
-
-
-def _byte_sql(b: str, pos: str) -> str:
-    return f"CAST(conv(hex(substring({b},{pos},1)),16,10) AS BIGINT)"
-
-
-class _Lets:
-    def __init__(self, prefix: str) -> None:
-        self._k = 0
-        self._p = prefix
-
-    def let(self, val: str, body) -> str:
-        self._k += 1
-        var = f"{self._p}{self._k}"
-        return (
-            f"element_at(transform(array({val}),{var}->{body(var)}),1)"
-        )
-
-
-def xxh64_sql(input_sql: str, seed: int = 0) -> str:
-    """XXH64(seed) of a string/binary SQL fragment as ONE Spark-SQL
-    text expression. Analyze under wrap_arith."""
-    L = _Lets("xv")
-    p1, p2, p3, p4, p5 = (f"{_sl(p)}L" for p in (P1, P2, P3, P4, P5))
-
-    def rnd(acc: str, lane: str) -> str:
-        # rotl64(acc + lane*P2, 31) * P1 — acc/lane must be simple
-        return L.let(
-            f"({acc}+({lane})*{p2})",
-            lambda t: f"((shiftleft({t},31)|shiftrightunsigned({t},33))*{p1})",
-        )
-
-    # stripe fold: state struct(v1..v4), one 32-byte stripe per step
-    stripes = "CAST(nb DIV 32 AS INT)"
-    stripe_body = (
-        f"named_struct("
-        f"'v1',{rnd('xs.v1', _f64le_sql('bb', '(xi*32+1)'))},"
-        f"'v2',{rnd('xs.v2', _f64le_sql('bb', '(xi*32+9)'))},"
-        f"'v3',{rnd('xs.v3', _f64le_sql('bb', '(xi*32+17)'))},"
-        f"'v4',{rnd('xs.v4', _f64le_sql('bb', '(xi*32+25)'))})"
-    )
-    init = (
-        f"named_struct('v1',{_sl((seed + P1 + P2) & _M64)}L,"
-        f"'v2',{_sl((seed + P2) & _M64)}L,"
-        f"'v3',{_sl(seed & _M64)}L,"
-        f"'v4',{_sl((seed - P1) & _M64)}L)"
-    )
-
-    def merged(sv: str) -> str:
-        # converge + 4 merge rounds, one let each
-        conv0 = (
-            f"((shiftleft({sv}.v1,1)|shiftrightunsigned({sv}.v1,63))"
-            f"+(shiftleft({sv}.v2,7)|shiftrightunsigned({sv}.v2,57))"
-            f"+(shiftleft({sv}.v3,12)|shiftrightunsigned({sv}.v3,52))"
-            f"+(shiftleft({sv}.v4,18)|shiftrightunsigned({sv}.v4,46)))"
-        )
-        out = conv0
-        for lane in ("v1", "v2", "v3", "v4"):
-            prev = out
-            out = L.let(
-                prev,
-                lambda t, lane=lane: f"((({t}^{rnd('0L', f'{sv}.{lane}')})*{p1})+{p4})",
-            )
-        return out
-
-    body = L.let(
-        f"CASE WHEN {stripes}>0 THEN aggregate(sequence(0,{stripes}-1),"
-        f"{init},(xs,xi)->{stripe_body}) ELSE {init} END",
-        lambda sv: L.let(
-            f"(CASE WHEN nb>=32 THEN {merged(sv)} ELSE "
-            f"{_sl((seed + P5) & _M64)}L END)+nb",
-            lambda h0: _tail64(L, h0, p1, p2, p3, p4, p5),
-        ),
-    )
-    wrapped = (
-        f"element_at(transform(array(CAST(({input_sql}) AS BINARY)),"
-        f"bb->element_at(transform(array(CAST(length(bb) AS BIGINT)),"
-        f"nb->{body}),1)),1)"
-    )
-    return (
-        f"(CASE WHEN ({input_sql}) IS NULL THEN CAST(NULL AS BIGINT) "
-        f"ELSE {wrapped} END)"
-    )
-
-
-def _tail64(L: _Lets, h0: str, p1, p2, p3, p4, p5) -> str:
-    """Post-stripe tail: up to three 8-byte chunks, one 4-byte, up to
-    three single bytes, then the avalanche."""
-    out = h0
-    # 8-byte chunks at base + 8t (base = nb - nb%32), t = 0..2
-    for t in range(3):
-        prev = out
-        lane = _f64le_sql("bb", f"(nb-(nb%32)+{8 * t}+1)")
-        out = L.let(
-            prev,
-            lambda hh, t=t, lane=lane: (
-                f"CASE WHEN (nb%32) DIV 8 > {t} THEN "
-                + L.let(
-                    f"({hh}^{_rnd_text(L, lane, p1, p2)})",
-                    lambda m: f"((shiftleft({m},27)"
-                    f"|shiftrightunsigned({m},37))*{p1}+{p4})",
-                )
-                + f" ELSE {hh} END"
-            ),
-        )
-    # one 4-byte chunk if nb%8 >= 4, at nb - nb%8
-    prev = out
-    lane4 = _f32le_sql("bb", "(nb-(nb%8)+1)")
-    out = L.let(
-        prev,
-        lambda hh: (
-            f"CASE WHEN nb%8>=4 THEN "
-            + L.let(
-                f"({hh}^(({lane4})*{p1}))",
-                lambda m: f"((shiftleft({m},23)"
-                f"|shiftrightunsigned({m},41))*{p2}+{p3})",
-            )
-            + f" ELSE {hh} END"
-        ),
-    )
-    # up to three single bytes at nb - nb%4 + t
-    for t in range(3):
-        prev = out
-        byt = _byte_sql("bb", f"(nb-(nb%4)+{t}+1)")
-        out = L.let(
-            prev,
-            lambda hh, t=t, byt=byt: (
-                f"CASE WHEN nb%4 > {t} THEN "
-                + L.let(
-                    f"({hh}^(({byt})*{p5}))",
-                    lambda m: f"((shiftleft({m},11)"
-                    f"|shiftrightunsigned({m},53))*{p1})",
-                )
-                + f" ELSE {hh} END"
-            ),
-        )
-    # avalanche
-    out = L.let(
-        out, lambda hh: f"(({hh}^shiftrightunsigned({hh},33))*{p2})"
-    )
-    out = L.let(
-        out, lambda hh: f"(({hh}^shiftrightunsigned({hh},29))*{p3})"
-    )
-    return L.let(out, lambda hh: f"({hh}^shiftrightunsigned({hh},32))")
-
-
-def _rnd_text(L: _Lets, lane: str, p1: str, p2: str) -> str:
-    return L.let(
-        f"(({lane})*{p2})",
-        lambda t: f"((shiftleft({t},31)|shiftrightunsigned({t},33))*{p1})",
-    )
-
-
-def xxh32_sql(input_sql: str, seed: int = 0) -> str:
-    """XXH32(seed) as ONE Spark-SQL text expression (UInt32 as a
-    non-negative BIGINT). Analyze under wrap_arith."""
-    L = _Lets("xw")
-    m32 = str(_M32)
-
-    def rot_mul(val: str, r: int, mul: int) -> str:
-        # rotl32(val, r) * mul, all masked — val must be simple
-        return L.let(
-            val,
-            lambda t: f"((((shiftleft({t},{r})|shiftrightunsigned({t},{32 - r}))"
-            f"&{m32})*{mul})&{m32})",
-        )
-
-    stripes = "CAST(nb DIV 16 AS INT)"
-
-    def lane_step(vfield: str, off: int) -> str:
-        lane = _f32le_sql("bb", f"(xi*16+{4 * off}+1)")
-        return rot_mul(f"((xs.{vfield}+({lane})*{Q2})&{m32})", 13, Q1)
-
-    stripe_body = (
-        f"named_struct("
-        f"'v1',{lane_step('v1', 0)},'v2',{lane_step('v2', 1)},"
-        f"'v3',{lane_step('v3', 2)},'v4',{lane_step('v4', 3)})"
-    )
-    init = (
-        f"named_struct('v1',{(seed + Q1 + Q2) & _M32}L,"
-        f"'v2',{(seed + Q2) & _M32}L,'v3',{seed & _M32}L,"
-        f"'v4',{(seed - Q1) & _M32}L)"
-    )
-    conv = (
-        f"((((shiftleft(sv.v1,1)|shiftrightunsigned(sv.v1,31))&{m32})"
-        f"+((shiftleft(sv.v2,7)|shiftrightunsigned(sv.v2,25))&{m32})"
-        f"+((shiftleft(sv.v3,12)|shiftrightunsigned(sv.v3,20))&{m32})"
-        f"+((shiftleft(sv.v4,18)|shiftrightunsigned(sv.v4,14))&{m32}))"
-        f"&{m32})"
-    )
-    h0 = (
-        f"element_at(transform(array("
-        f"CASE WHEN {stripes}>0 THEN aggregate(sequence(0,{stripes}-1),"
-        f"{init},(xs,xi)->{stripe_body}) ELSE {init} END),"
-        f"sv->((CASE WHEN nb>=16 THEN {conv} ELSE "
-        f"{(seed + Q5) & _M32}L END)+nb)&{m32}),1)"
-    )
-    out = h0
-    # up to three 4-byte chunks at base = nb - nb%16
-    for t in range(3):
-        prev = out
-        lane = _f32le_sql("bb", f"(nb-(nb%16)+{4 * t}+1)")
-        out = L.let(
-            prev,
-            lambda hh, t=t, lane=lane: (
-                f"CASE WHEN (nb%16) DIV 4 > {t} THEN "
-                f"{rot_mul(f'(({hh}+({lane})*{Q3})&{m32})', 17, Q4)}"
-                f" ELSE {hh} END"
-            ),
-        )
-    # up to three single bytes at nb - nb%4 + t
-    for t in range(3):
-        prev = out
-        byt = _byte_sql("bb", f"(nb-(nb%4)+{t}+1)")
-        out = L.let(
-            prev,
-            lambda hh, t=t, byt=byt: (
-                f"CASE WHEN nb%4 > {t} THEN "
-                f"{rot_mul(f'(({hh}+({byt})*{Q5})&{m32})', 11, Q1)}"
-                f" ELSE {hh} END"
-            ),
-        )
-    out = L.let(
-        out,
-        lambda hh: f"((({hh}^shiftrightunsigned({hh},15))*{Q2})&{m32})",
-    )
-    out = L.let(
-        out,
-        lambda hh: f"((({hh}^shiftrightunsigned({hh},13))*{Q3})&{m32})",
-    )
-    body = L.let(out, lambda hh: f"({hh}^shiftrightunsigned({hh},16))")
-    wrapped = (
-        f"element_at(transform(array(CAST(({input_sql}) AS BINARY)),"
-        f"bb->element_at(transform(array(CAST(length(bb) AS BIGINT)),"
-        f"nb->{body}),1)),1)"
-    )
-    return (
-        f"(CASE WHEN ({input_sql}) IS NULL THEN CAST(NULL AS BIGINT) "
-        f"ELSE {wrapped} END)"
-    )
-
-
-# ------------------------------------------------------ column builders
-def _f64le_col(b: Column, pos: Column) -> Column:
-    hx = F.hex(F.substring(b, pos.cast("int"), F.lit(8)))
-    le = F.regexp_replace(F.reverse(hx), "(.)(.)", "$2$1")
-    return F.conv(le, 16, -10).cast("long")
-
-
-def _f32le_col(b: Column, pos: Column) -> Column:
-    hx = F.hex(F.substring(b, pos.cast("int"), F.lit(4)))
-    le = F.regexp_replace(F.reverse(hx), "(.)(.)", "$2$1")
-    return F.conv(le, 16, 10).cast("long")
-
-
-def _byte_col(b: Column, pos: Column) -> Column:
-    return F.conv(
-        F.hex(F.substring(b, pos.cast("int"), F.lit(1))), 16, 10
-    ).cast("long")
-
-
-def _rotl64_col(x: Column, r: int) -> Column:
-    return _let1(
-        x, lambda v: F.shiftleft(v, r).bitwiseOR(_ushr(v, 64 - r))
-    )
-
-
-def xxh64(col, seed: int = 0) -> Column:
-    """Column-builder rendering (fallback). Analyze under
-    wrap_arith."""
-    c = col if isinstance(col, Column) else F.col(col)
-
-    def rnd(acc: Column, lane: Column) -> Column:
-        return _rotl64_col(acc + lane * F.lit(_sl(P2)), 31) * F.lit(
-            _sl(P1)
-        )
-
-    def build(b: Column) -> Column:
-        nn = F.length(b).cast("long")
-        stripes = F.floor(nn / F.lit(32)).cast("int")
-        init = F.struct(
-            F.lit(_sl((seed + P1 + P2) & _M64)).cast("long").alias("v1"),
-            F.lit(_sl((seed + P2) & _M64)).cast("long").alias("v2"),
-            F.lit(_sl(seed & _M64)).cast("long").alias("v3"),
-            F.lit(_sl((seed - P1) & _M64)).cast("long").alias("v4"),
-        )
-
-        def stripe(st: Column, i: Column) -> Column:
-            return F.struct(
-                rnd(st["v1"], _f64le_col(b, i * 32 + 1)).alias("v1"),
-                rnd(st["v2"], _f64le_col(b, i * 32 + 9)).alias("v2"),
-                rnd(st["v3"], _f64le_col(b, i * 32 + 17)).alias("v3"),
-                rnd(st["v4"], _f64le_col(b, i * 32 + 25)).alias("v4"),
-            )
-
-        folded = F.when(
-            stripes > 0,
-            F.aggregate(F.sequence(F.lit(0), stripes - 1), init, stripe),
-        ).otherwise(init)
-
-        def merged(sv: Column) -> Column:
-            h = (
-                _rotl64_col(sv["v1"], 1)
-                + _rotl64_col(sv["v2"], 7)
-                + _rotl64_col(sv["v3"], 12)
-                + _rotl64_col(sv["v4"], 18)
-            )
-            def merge_body(lane):
-                # NOTE: the body must take exactly ONE parameter —
-                # F.transform passes (element, index) to two-param
-                # callables, silently binding default args to the
-                # index column
-                def body(t):
-                    return (
-                        t.bitwiseXOR(
-                            rnd(F.lit(0).cast("long"), sv[lane])
-                        )
-                    ) * F.lit(_sl(P1)) + F.lit(_sl(P4))
-
-                return body
-
-            for lane in ("v1", "v2", "v3", "v4"):
-                h = _let1(h, merge_body(lane))
-            return h
-
-        h = _let1(
-            folded,
-            lambda sv: F.when(nn >= 32, merged(sv)).otherwise(
-                F.lit(_sl((seed + P5) & _M64)).cast("long")
-            )
-            + nn,
-        )
-        def chunk_body(t):
-            def body(hh):
-                return F.when(
-                    (nn % 32) / 8 >= t + 1,
-                    _let1(
-                        hh.bitwiseXOR(
-                            rnd(
-                                F.lit(0).cast("long"),
-                                _f64le_col(b, nn - nn % 32 + 8 * t + 1),
-                            )
-                        ),
-                        lambda m: _rotl64_col(m, 27) * F.lit(_sl(P1))
-                        + F.lit(_sl(P4)),
-                    ),
-                ).otherwise(hh)
-
-            return body
-
-        for t in range(3):
-            h = _let1(h, chunk_body(t))
-        h = _let1(
-            h,
-            lambda hh: F.when(
-                nn % 8 >= 4,
-                _let1(
-                    hh.bitwiseXOR(
-                        _f32le_col(b, nn - nn % 8 + 1) * F.lit(_sl(P1))
-                    ),
-                    lambda m: _rotl64_col(m, 23) * F.lit(_sl(P2))
-                    + F.lit(_sl(P3)),
-                ),
-            ).otherwise(hh),
-        )
-        def byte_body(t):
-            def body(hh):
-                return F.when(
-                    nn % 4 > t,
-                    _let1(
-                        hh.bitwiseXOR(
-                            _byte_col(b, nn - nn % 4 + t + 1)
-                            * F.lit(_sl(P5))
-                        ),
-                        lambda m: _rotl64_col(m, 11) * F.lit(_sl(P1)),
-                    ),
-                ).otherwise(hh)
-
-            return body
-
-        for t in range(3):
-            h = _let1(h, byte_body(t))
-        h = _let1(
-            h, lambda hh: (hh.bitwiseXOR(_ushr(hh, 33))) * F.lit(_sl(P2))
-        )
-        h = _let1(
-            h, lambda hh: (hh.bitwiseXOR(_ushr(hh, 29))) * F.lit(_sl(P3))
-        )
-        return _let1(h, lambda hh: hh.bitwiseXOR(_ushr(hh, 32)))
-
-    return F.when(c.isNotNull(), _let1(c.cast("binary"), build))
-
-
-def xxh32(col, seed: int = 0) -> Column:
-    """Column-builder rendering (fallback). Analyze under
-    wrap_arith. All 32-bit wraps are &-masks — Spark's % keeps the
-    dividend's sign, so a wrap-negative product % 2^32 would stay
-    negative and poison every later step."""
-    c = col if isinstance(col, Column) else F.col(col)
-    m32 = F.lit(_M32)
-
-    def mul32(x: Column, k: int) -> Column:
-        return (x * F.lit(k)).bitwiseAND(m32)
-
-    def rotl(x: Column, r: int) -> Column:
-        return _let1(
-            x,
-            lambda v: (
-                F.shiftleft(v, r).bitwiseOR(
-                    _ushr(v.bitwiseAND(m32), 32 - r)
-                )
-            ).bitwiseAND(m32),
-        )
-
-    def build(b: Column) -> Column:
-        nn = F.length(b).cast("long")
-        stripes = F.floor(nn / F.lit(16)).cast("int")
-        init = F.struct(
-            F.lit((seed + Q1 + Q2) & _M32).cast("long").alias("v1"),
-            F.lit((seed + Q2) & _M32).cast("long").alias("v2"),
-            F.lit(seed & _M32).cast("long").alias("v3"),
-            F.lit((seed - Q1) & _M32).cast("long").alias("v4"),
-        )
-
-        def lane_mix(v: Column, lane: Column) -> Column:
-            return mul32(
-                rotl((v + lane * F.lit(Q2)).bitwiseAND(m32), 13), Q1
-            )
-
-        def stripe(st: Column, i: Column) -> Column:
-            return F.struct(
-                lane_mix(st["v1"], _f32le_col(b, i * 16 + 1)).alias("v1"),
-                lane_mix(st["v2"], _f32le_col(b, i * 16 + 5)).alias("v2"),
-                lane_mix(st["v3"], _f32le_col(b, i * 16 + 9)).alias("v3"),
-                lane_mix(st["v4"], _f32le_col(b, i * 16 + 13)).alias("v4"),
-            )
-
-        folded = F.when(
-            stripes > 0,
-            F.aggregate(F.sequence(F.lit(0), stripes - 1), init, stripe),
-        ).otherwise(init)
-        h = _let1(
-            folded,
-            lambda sv: (
-                F.when(
-                    nn >= 16,
-                    (
-                        rotl(sv["v1"], 1)
-                        + rotl(sv["v2"], 7)
-                        + rotl(sv["v3"], 12)
-                        + rotl(sv["v4"], 18)
-                    ).bitwiseAND(m32),
-                ).otherwise(F.lit((seed + Q5) & _M32).cast("long"))
-                + nn
-            ).bitwiseAND(m32),
-        )
-
-        def chunk_body(t):
-            def body(hh):
-                return F.when(
-                    (nn % 16) / 4 >= t + 1,
-                    mul32(
-                        rotl(
-                            (
-                                hh
-                                + _f32le_col(b, nn - nn % 16 + 4 * t + 1)
-                                * F.lit(Q3)
-                            ).bitwiseAND(m32),
-                            17,
-                        ),
-                        Q4,
-                    ),
-                ).otherwise(hh)
-
-            return body
-
-        for t in range(3):
-            h = _let1(h, chunk_body(t))
-
-        def byte_body(t):
-            def body(hh):
-                return F.when(
-                    nn % 4 > t,
-                    mul32(
-                        rotl(
-                            (
-                                hh
-                                + _byte_col(b, nn - nn % 4 + t + 1)
-                                * F.lit(Q5)
-                            ).bitwiseAND(m32),
-                            11,
-                        ),
-                        Q1,
-                    ),
-                ).otherwise(hh)
-
-            return body
-
-        for t in range(3):
-            h = _let1(h, byte_body(t))
-        h = _let1(h, lambda hh: mul32(hh.bitwiseXOR(_ushr(hh, 15)), Q2))
-        h = _let1(h, lambda hh: mul32(hh.bitwiseXOR(_ushr(hh, 13)), Q3))
-        return _let1(h, lambda hh: hh.bitwiseXOR(_ushr(hh, 16)))
-
-    return F.when(c.isNotNull(), _let1(c.cast("binary"), build))
-
-
-def xxh64_fast(col, seed: int = 0) -> Column:
-    from .cityhash import col_sql
-
-    c = col if isinstance(col, Column) else F.col(col)
-    inp = col_sql(c)
-    if inp is not None:
-        try:
-            return F.expr(xxh64_sql(f"({inp})", seed))
-        except Exception:
-            pass
-    return xxh64(c, seed)
-
-
-def xxh32_fast(col, seed: int = 0) -> Column:
-    from .cityhash import col_sql
-
-    c = col if isinstance(col, Column) else F.col(col)
-    inp = col_sql(c)
-    if inp is not None:
-        try:
-            return F.expr(xxh32_sql(f"({inp})", seed))
-        except Exception:
-            pass
-    return xxh32(c, seed)
 
 
 # --------------------------------------------------------------- duckdb

@@ -51,6 +51,11 @@ GOLD = 0x9E3779B9  # golden-ratio odd constant; gear table generator
 MOD = 1 << 61
 WINDOW = 32  # the oracles' and the test model's replay width
 MASK_BITS = 6  # boundary iff h % 64 == 0 -> ~64-char expected chunks
+# shared-chunk eligibility: chunks shorter than MIN_LEN are the trivial
+# slivers the 2^MASK_BITS boundary density makes common; a chunk is
+# shared once it appears in MIN_DOCS distinct documents
+MIN_LEN = 8
+MIN_DOCS = 2
 
 
 def _pow_mod_np(base: int, n: int, mod: int):
@@ -184,7 +189,6 @@ def cdc_chunks(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    mask_bits: int = MASK_BITS,
 ) -> DataFrame:
     """(id, chunk_ord, chunk_start, chunk_len, chunk_fp) — one row
     per content-defined chunk; chunk_start is 1-based and chunk_fp is
@@ -218,7 +222,7 @@ def cdc_chunks(
                 pw = _pow_mod_np(POLY_BASE, maxlen, POLY_MOD)
                 ipw = _pow_mod_np(binv, maxlen, POLY_MOD)
             d_of, ords, starts, lens, fps = _chunk_batch_np(
-                texts, mask_bits, pw, ipw
+                texts, MASK_BITS, pw, ipw
             )
             yield pd.DataFrame(
                 {
@@ -250,27 +254,24 @@ def cdc_shared_chunks(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_docs: int = 2,
-    min_len: int = 8,
-    mask_bits: int = MASK_BITS,
 ) -> DataFrame:
-    """Chunk fingerprints appearing in >= min_docs distinct
+    """Chunk fingerprints appearing in >= ``MIN_DOCS`` distinct
     documents (the cross-document duplicate-content relation):
-    (chunk_fp, n_docs, n_occurrences, max_len). ``min_len`` drops
-    trivial slivers the 2^mask_bits boundary density makes common.
+    (chunk_fp, n_docs, n_occurrences, max_len), over chunks of at
+    least ``MIN_LEN`` characters.
     Shuffle inventory: ONE groupBy on chunk_fp — fingerprints are
     uniform (polynomial hash), so no hot keys; at corpus scale this
     is the same band-key shape as MinHash LSH."""
-    chunks = cdc_chunks(docs, text_col, id_col, mask_bits=mask_bits)
+    chunks = cdc_chunks(docs, text_col, id_col)
     return (
-        chunks.where(F.col("chunk_len") >= min_len)
+        chunks.where(F.col("chunk_len") >= MIN_LEN)
         .groupBy("chunk_fp")
         .agg(
             F.countDistinct(id_col).alias("n_docs"),
             F.count(F.lit(1)).alias("n_occurrences"),
             F.max("chunk_len").alias("max_len"),
         )
-        .where(F.col("n_docs") >= min_docs)
+        .where(F.col("n_docs") >= MIN_DOCS)
     )
 
 
@@ -278,8 +279,6 @@ def cdc_duplication_ratio(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_len: int = 8,
-    mask_bits: int = MASK_BITS,
 ) -> DataFrame:
     """Per-document duplicate-content ratio: the fraction of a
     document's characters covered by chunks whose fingerprint
@@ -289,7 +288,7 @@ def cdc_duplication_ratio(
 
     Returns (id, n_chars, dup_chars, n_dup_chunks, dup_ratio);
     dup_ratio rounds to 6 places for cross-engine compare. Documents
-    whose chunks are all shorter than ``min_len`` score 0.
+    whose chunks are all shorter than ``MIN_LEN`` score 0.
 
     Shuffle inventory (single lineage — optimization round 11): CDC
     chunks exactly TILE each document (``sum(chunk_len) ==
@@ -297,7 +296,7 @@ def cdc_duplication_ratio(
     chunk), so the base-document join and the cached double scan of
     the old shape are unnecessary. One window over ``chunk_fp``
     decides sharing — ``min(id) != max(id)`` over the *eligible*
-    (``chunk_len >= min_len``) rows of the fingerprint, expressed as
+    (``chunk_len >= MIN_LEN``) rows of the fingerprint, expressed as
     conditional min/max so ineligible rows still flow through for
     the ``n_chars`` sum — then one groupBy on the document id rolls
     everything up. Two uniform-key shuffles total; no persist, no
@@ -305,14 +304,14 @@ def cdc_duplication_ratio(
     countDistinct >= 2)."""
     from pyspark.sql import Window
 
-    chunks = cdc_chunks(docs, text_col, id_col, mask_bits=mask_bits)
+    chunks = cdc_chunks(docs, text_col, id_col)
 
     w = Window.partitionBy("chunk_fp")
     elig_id = F.when(
-        F.col("chunk_len") >= min_len, F.col(id_col)
+        F.col("chunk_len") >= MIN_LEN, F.col(id_col)
     )
     dup_row = (
-        (F.col("chunk_len") >= min_len)
+        (F.col("chunk_len") >= MIN_LEN)
         & (F.min(elig_id).over(w) != F.max(elig_id).over(w))
     )
     dup_len = F.when(dup_row, F.col("chunk_len"))

@@ -414,17 +414,6 @@ def _run_ch_alter_column(sql: str, tables: dict[str, DataFrame]) -> DataFrame:
     return out
 
 
-_DDL_HEADS = (
-    "CREATE", "DROP", "ALTER", "TRUNCATE", "RENAME", "EXCHANGE",
-    "DESCRIBE", "DESC", "SHOW", "OPTIMIZE", "KILL", "USE", "EXISTS",
-)
-
-
-def is_ddl(sql: str) -> bool:
-    head = sql.split(maxsplit=1)
-    return bool(head) and head[0].upper() in _DDL_HEADS
-
-
 def run_ch_ddl(
     sql: str,
     tables: dict[str, DataFrame],

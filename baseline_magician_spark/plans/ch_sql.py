@@ -2203,16 +2203,6 @@ def _exec_with_set_expr(
     return _exec_set_expr(p, tables)
 
 
-# hash functions whose compiled form needs wrap-mode (non-ANSI) long
-# arithmetic at ANALYSIS time — see run_ch_query below
-_WRAP_HASH_RE = re.compile(
-    r"\b(intHash64|intHash32|cityHash64|URLHash|sipHash64"
-    r"|murmurHash2_64|murmurHash3_32|xxHash64|xxHash32"
-    r"|murmurHash2_32|murmurHash3_64|murmurHash3_128"
-    r"|kafkaMurmurHash|gccMurmurHash)\s*\(",
-    re.IGNORECASE
-)
-
 # the byte-exact family whose arguments carry the HashArg identity
 # marker (numeric-layout parity; intHash64/32 are already
 # value-domain and URLHash is string-domain)
@@ -2272,13 +2262,13 @@ def run_ch_query(
 
     # Publish the table env's bare-column dtypes for the byte-exact
     # hash family (round 9): CH hashes numeric arguments' native
-    # layouts, and the type-blind Column builders resolve each
-    # argument through the compiler's HashArg marker against this
-    # map. Names whose dtype differs across tables are dropped
-    # (ambiguous -> string rendering, the conservative pre-round-9
-    # behavior). A zero-row probe frame over the same columns types
-    # COMPUTED expressions by Catalyst analysis (round 10) — built
-    # only when the query actually calls a byte-family hash.
+    # layouts, and the hash builders resolve each argument through
+    # the compiler's HashArg marker against this map. Names whose
+    # dtype differs across tables are dropped (ambiguous -> string
+    # rendering, the conservative pre-round-9 behavior). A zero-row
+    # probe frame over the same columns types COMPUTED expressions by
+    # Catalyst analysis (round 10) — built only when the query
+    # actually calls a byte-family hash.
     from ..functions.ch_compat import hash_arg_types
 
     dmap: dict[str, str] = {}
@@ -2314,32 +2304,6 @@ def _run_ch_parsed(
     sql: str,
     tables: dict[str, DataFrame],
 ) -> DataFrame:
-    # Wrap-dependent hash functions (intHash64/32, cityHash64,
-    # URLHash) compile to PLAIN long arithmetic that relies on Java
-    # wrap-on-overflow — the expressions must be ANALYZED under
-    # spark.sql.ansi.enabled=false (evalMode is baked in at analysis
-    # time; execution under any setting then wraps). Queries using
-    # them enter cityhash.wrap_arith automatically here; everything
-    # else keeps the session's ANSI semantics untouched.
-    if _WRAP_HASH_RE.search(sql) is not None:
-        from pyspark.sql import SparkSession
-
-        from ..functions.cityhash import wrap_arith
-
-        sess = (
-            next(iter(tables.values())).sparkSession
-            if tables
-            else SparkSession.getActiveSession()
-        )
-        if (
-            sess is not None
-            and sess.conf.get("spark.sql.ansi.enabled", "true") != "false"
-        ):
-            # recursion terminates: inside wrap_arith the conf reads
-            # "false" and this branch is skipped
-            with wrap_arith(sess):
-                return run_ch_query(sql, tables)
-
     p = _Parser(_tokenize(sql), tables)
     # EXPLAIN [AST|SYNTAX|PLAN|PIPELINE|ESTIMATE] SELECT ...: the CH
     # introspection statement — one text row per plan line, like the

@@ -3514,13 +3514,10 @@ def ch_sql_sequence_next_node(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # CH sampling-key hashes end-to-end (round 7): intHash64 / intHash32
 # are SAMPLE BY keys and therefore byte-compatible with CH's spec
-# (fmix64 of x^seed; Wang 64->32 with CH's salt). Since round 8 the
-# Spark side compiles them to PLAIN long arithmetic analyzed under
-# wrap_arith (run_ch_query auto-enters it) — the round-7 limb
-# convolution's ~3000-node tree cost ~2.3 s of driver re-analysis per
-# bench pass; the wrap spelling is ~30 nodes and whole-stage-codegen
-# primitive. The oracle replays the same math in DuckDB HUGEINT
-# through staged CTE columns. URLHash moved to its own value-exact
+# (fmix64 of x^seed; Wang 64->32 with CH's salt). The Spark side runs
+# them as the one Arrow hash kernel (functions/hash_np.py, numpy
+# uint64 arithmetic). The oracle replays the same math in DuckDB
+# HUGEINT through staged CTE columns. URLHash moved to its own value-exact
 # query (ch_sql_cityhash64) when it was retargeted onto genuine
 # CityHash64 — a per-row CityHash over all 100k bench rows does not
 # belong in the sampling-key microbenchmark.
@@ -3639,11 +3636,9 @@ def ch_sql_sampling_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (empty, 1-3, 4-8, 9-16, 17-32, 33-64, and the >64 chunk loop at 1,
 # 2 and 3 iterations; probes never end in /?#, so URLHash == plain
 # cityHash64 on them) and a URL exercising the trailing-separator
-# trim. One call site = one expression tree: the CityHash tree costs
-# ~2 s of driver-side analysis per occurrence (the analyzer fixpoint
-# over ~60 nested lambda-lets), so the query is designed around a
-# single occurrence — the same consideration that moved URLHash out
-# of ch_sql_sampling_hashes. The oracle replays the full algorithm in
+# trim. The query keeps a single URLHash call site, which hashes
+# every row through the CityHash model in the Arrow hash kernel. The
+# oracle replays the full algorithm in
 # DuckDB HUGEINT: CityEmitter emits one straight-line chain per
 # length class (546 staged CTE columns) and CASE-selects per row, so
 # the driver compare is value-exact against an independent rendering,
@@ -3945,8 +3940,8 @@ def ch_sql_cityhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stream is arithmetic on the value, the length class is statically
 # 8; cityHash64-on-numeric replays as the IntHash64Emitter fmix
 # chain). Each side renders the algorithms independently of the
-# Spark Column builders, so the driver compare is value-exact, not
-# stored constants.
+# Spark kernels, so the driver compare is value-exact, not stored
+# constants.
 _NUMHASH_SQL = """
 SELECT et,
        count(*) AS n,

@@ -1130,7 +1130,6 @@ CDC_SPAN_SUBSET = 25  # the SQL replay pays O(window) per position;
 # per-length-class, not row count — dedup_cdc_shared_chunks covers
 # the full corpus)
 CDC_SHARED_SUBSET = 2  # a microbenchmark at driver-check scale
-CDC_MIN_SHARED_LEN = 8
 
 
 def _cdc_base_ctes(where: str) -> str:
@@ -1223,19 +1222,21 @@ def dedup_cdc_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cdc_shared_oracle() -> str:
+    from ..operators.cdc import MIN_DOCS, MIN_LEN
+
     return f"""
     WITH {_cdc_base_ctes(f"doc_id % {CDC_SHARED_SUBSET} = 0")},
     fp AS (
       SELECT doc_id, chunk_len,
              {_cdc_chunk_fp_sql()} AS chunk_fp
-      FROM sp WHERE chunk_len >= {CDC_MIN_SHARED_LEN}
+      FROM sp WHERE chunk_len >= {MIN_LEN}
     )
     SELECT chunk_fp,
            count(DISTINCT doc_id) AS n_docs,
            count(*) AS n_occurrences,
            max(chunk_len) AS max_len
     FROM fp GROUP BY chunk_fp
-    HAVING count(DISTINCT doc_id) >= 2
+    HAVING count(DISTINCT doc_id) >= {MIN_DOCS}
     """
 
 
@@ -1251,20 +1252,22 @@ def dedup_cdc_shared_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % CDC_SHARED_SUBSET == 0
     )
-    return cdc_shared_chunks(docs, min_len=CDC_MIN_SHARED_LEN)
+    return cdc_shared_chunks(docs)
 
 
 def _cdc_ratio_oracle() -> str:
+    from ..operators.cdc import MIN_DOCS, MIN_LEN
+
     return f"""
     WITH {_cdc_base_ctes(f"doc_id % {CDC_SHARED_SUBSET} = 0")},
     fp AS (
       SELECT doc_id, chunk_len,
              {_cdc_chunk_fp_sql()} AS chunk_fp
-      FROM sp WHERE chunk_len >= {CDC_MIN_SHARED_LEN}
+      FROM sp WHERE chunk_len >= {MIN_LEN}
     ),
     shx AS (
       SELECT chunk_fp FROM fp GROUP BY chunk_fp
-      HAVING count(DISTINCT doc_id) >= 2
+      HAVING count(DISTINCT doc_id) >= {MIN_DOCS}
     ),
     per AS (
       SELECT doc_id,
@@ -1302,4 +1305,4 @@ def dedup_cdc_duplication_ratio(
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % CDC_SHARED_SUBSET == 0
     )
-    return cdc_duplication_ratio(docs, min_len=CDC_MIN_SHARED_LEN)
+    return cdc_duplication_ratio(docs)

@@ -519,15 +519,14 @@ def main() -> None:
         return out.count()
 
     def wrap_hash_scan(k: int) -> int:
-        """Round-8 wrap-mode hash projections: byte-exact cityHash64
-        (all length classes incl. the chunk loop), canonical
-        SipHash-2-4, and the intHash sampling keys — one projection,
-        no shuffle, no Python. Per-row cost is O(len) interpreted-HOF
-        work, so total must track rows; this rung also pins the
-        fixed driver-side analysis cost (~2 s/tree) AMORTIZING: it is
-        paid once per rung invocation regardless of k, so the x4
-        ratios must stay well under 4 even though each rung repays
-        it."""
+        """String hash projections: byte-exact cityHash64 (all
+        length classes incl. the chunk loop), canonical SipHash-2-4,
+        and the intHash sampling keys — one projection through the
+        Arrow hash kernel, no shuffle before the groupBy. Per-row
+        cost is O(len) model work, so total must track rows; the
+        fixed per-rung cost (plan build, Python-worker start) is paid
+        once per rung invocation regardless of k, so the x4 ratios
+        must stay well under 4."""
         from baseline_magician_spark.plans.ch_sql import run_ch_query
 
         ev = replicate(ev0, k, ["event_id", "user_id"],
@@ -552,11 +551,11 @@ def main() -> None:
         """Round-9 numeric-layout + combine-chain hash projections:
         bare BIGINT columns hash their native LE bytes (fixed
         8-byte chains, no per-row length dispatch), multi-arg runs
-        the pair-combine fold, and murmurHash3_64 exercises the
-        x64_128 struct-accumulator fold. One projection, no shuffle,
-        no Python — per-row cost is O(1)/O(len), total must track
-        rows; the per-tree driver analysis cost is fixed per rung
-        and amortizes exactly like wrap_hash_scan's."""
+        the pair-combine fold, and murmurHash3_64 hashes a
+        variable-length string. One projection through the Arrow
+        hash kernel — per-row cost is O(1)/O(len), total must track
+        rows; the fixed per-rung cost amortizes exactly like
+        wrap_hash_scan's."""
         from baseline_magician_spark.plans.ch_sql import run_ch_query
 
         ev = replicate(ev0, k, ["event_id", "user_id"],
@@ -593,7 +592,7 @@ def main() -> None:
         dd = replicate(docs0, k, ["doc_id"], salt_text=True).repartition(
             32
         )
-        return cdc_shared_chunks(dd, min_docs=2, min_len=8).count()
+        return cdc_shared_chunks(dd).count()
 
     def binary_code_scan(k: int) -> int:
         """Round-10 binary-quantization ANN: sign-pack the corpus

@@ -1,26 +1,24 @@
-"""Byte-exact CityHash64: the three renderings (Spark Column, DuckDB
-emitter SQL, pure-Python model) must agree bit-for-bit on every
-length class, including the >64-byte chunk loop. The Python model is
-a transcription of the public CityHash v1.0.2 spec (the reference
-vendors it: clickhouse-go/lib/cityhash102/cityhash.go:122-248); the
-empty-string pin (k2) anchors all three to the spec constant."""
+"""Byte-exact CityHash64: the dialect's cityHash64 (the Arrow hash
+kernel over the model), the DuckDB emitter SQL and the pure-Python
+model must agree bit-for-bit on every length class, including the
+>64-byte chunk loop. The Python model is a transcription of the
+public CityHash v1.0.2 spec (the reference vendors it:
+clickhouse-go/lib/cityhash102/cityhash.go:122-248); the empty-string
+pin (k2) anchors all three to the spec constant."""
 
 from __future__ import annotations
 
 import random
 
 import duckdb
-import pyspark.sql.functions as F
 
 from baseline_magician_spark.functions.cityhash import (
     K2,
     CityEmitter,
     _hl16_py,
     _sl,
-    city_hash64,
     city_hash64_py,
     staged_ctes,
-    wrap_arith,
 )
 from baseline_magician_spark.plans.ch_sql import run_ch_query
 
@@ -58,8 +56,7 @@ def test_model_empty_is_k2():
 def test_spark_matches_model_all_classes(spark):
     rows = [(i, c.decode("ascii")) for i, c in enumerate(CASES)]
     df = spark.createDataFrame(rows, "i int, s string")
-    with wrap_arith(spark):
-        sel = df.select("i", city_hash64(F.col("s")).alias("h"))
+    sel = run_ch_query("SELECT i, cityHash64(s) AS h FROM t", {"t": df})
     got = {r["i"]: r["h"] for r in sel.collect()}
     for i, c in enumerate(CASES):
         assert got[i] == _sl(city_hash64_py(c)), (i, len(c))
@@ -160,8 +157,7 @@ def test_spark_vs_model_random_lengths(spark):
     df = spark.createDataFrame(
         [(i, s) for i, s in enumerate(cases)], "i int, s string"
     )
-    with wrap_arith(spark):
-        sel = df.select("i", city_hash64(F.col("s")).alias("h"))
+    sel = run_ch_query("SELECT i, cityHash64(s) AS h FROM t", {"t": df})
     got = {r["i"]: r["h"] for r in sel.collect()}
     for i, s in enumerate(cases):
         assert got[i] == _sl(city_hash64_py(s.encode())), len(s)

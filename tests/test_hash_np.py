@@ -1,9 +1,7 @@
 """The vectorized numeric-hash kernels (functions/hash_np.py) must be
-bit-exact against the pure-Python byte models — the same ground truth
-the Column/text expression renderings are pinned against — and the
-Arrow-UDF rendering in ch_compat must agree with the expression
-rendering end-to-end, including NULL propagation and the string-
-argument fallback."""
+bit-exact against the pure-Python byte models, and the dialect's
+Arrow-UDF rendering must equal the models end-to-end on numeric
+arguments, including NULL propagation and mixed widths."""
 
 from __future__ import annotations
 
@@ -11,11 +9,13 @@ import random
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from baseline_magician_spark.functions import hash_np as H
 from baseline_magician_spark.functions.cityhash import _hl16_py
-from baseline_magician_spark.functions.hashing import int_hash64_py
+from baseline_magician_spark.functions.hashing import (
+    int_hash32_py,
+    int_hash64_py,
+)
 from baseline_magician_spark.functions.murmur import (
     GCC_SEED,
     KAFKA_SEED,
@@ -23,7 +23,10 @@ from baseline_magician_spark.functions.murmur import (
     murmur2_64_py,
     murmur3_32_py,
 )
-from baseline_magician_spark.functions.murmur3_128 import murmur3_64_py
+from baseline_magician_spark.functions.murmur3_128 import (
+    murmur3_64_py,
+    murmur3_128_py,
+)
 from baseline_magician_spark.functions.siphash import sip_hash64_py
 from baseline_magician_spark.functions.xxhash import xxh32_py, xxh64_py
 
@@ -68,6 +71,9 @@ def test_single_arg_kernels_match_models(w):
     }
     for name, (got, want) in cases.items():
         assert (got == np.array(want, dtype=np.uint64)).all(), (name, w)
+    got = H.murmur3_128_np(Vw, w)
+    want = np.array([murmur3_128_py(_le(v, w)) for v in VALS], np.uint64)
+    assert (got == want).all(), ("m3_128", w)
 
 
 def test_pair_and_scalar_kernels_match_models():
@@ -111,96 +117,19 @@ def test_pair_and_scalar_kernels_match_models():
         == np.array([int_hash64_py(v) for v in VALS], dtype=np.uint64)
     ).all()
     assert (
+        H.int_hash32_np(A)
+        == np.array([int_hash32_py(v) for v in VALS], dtype=np.uint64)
+    ).all()
+    d0, d1 = H.murmur3_128_np(A, 8), H.murmur3_128_np(B, 8)
+    want = [
+        murmur3_128_py(b"".join(_le(int(x), 8) for x in (*r0, *r1)))
+        for r0, r1 in zip(d0, d1)
+    ]
+    assert (H.murmur3_128_pair_np(d0, d1) == np.array(want, np.uint64)).all()
+    assert (
         H.hl16_np(A, B)
         == np.array([_hl16_py(a, b) for a, b in pairs], dtype=np.uint64)
     ).all()
-
-
-_HASH_SQL = (
-    "SELECT i, cityHash64(a, b) AS cc, sipHash64(a, b) AS sc, "
-    "xxHash64(a, b) AS xc, murmurHash3_64(a, b) AS mc, "
-    "kafkaMurmurHash(a, b) AS kc, murmurHash2_64(a, b) AS m2, "
-    "gccMurmurHash(a, b) AS gc, xxHash32(a, b) AS x32, "
-    "murmurHash3_32(a, b) AS m32 FROM t"
-)
-
-
-def _run(spark, df, disable_np):
-    from baseline_magician_spark.functions import ch_compat
-    from baseline_magician_spark.plans.ch_sql import run_ch_query
-
-    if disable_np:
-        orig = ch_compat._np_hash_multi
-        ch_compat._np_hash_multi = lambda *a, **k: None
-        try:
-            out = run_ch_query(_HASH_SQL, {"t": df}).collect()
-        finally:
-            ch_compat._np_hash_multi = orig
-        return sorted(map(tuple, out))
-    return sorted(map(tuple, run_ch_query(_HASH_SQL, {"t": df}).collect()))
-
-
-def test_udf_rendering_equals_expression_rendering(spark):
-    rows = [
-        (i, rng.randrange(-(2**63), 2**63), rng.randrange(-(2**63), 2**63))
-        for i in range(200)
-    ]
-    rows += [(1000, None, 5), (1001, 7, None), (1002, None, None)]
-    df = spark.createDataFrame(rows, "i long, a long, b long")
-    got = _run(spark, df, disable_np=False)
-    want = _run(spark, df, disable_np=True)
-    assert got == want
-    assert len(got) == len(rows)
-
-
-def test_string_arguments_keep_expression_path(spark):
-    # string args have no fixed numeric layout: _np_hash_multi must
-    # decline and the expression rendering must still answer
-    from baseline_magician_spark.plans.ch_sql import run_ch_query
-
-    df = spark.createDataFrame([(1, "abc")], "i long, s string")
-    out = run_ch_query(
-        "SELECT sipHash64(s) AS h FROM t", {"t": df}
-    ).collect()
-    assert out[0].h == np.int64(
-        np.uint64(sip_hash64_py(b"abc"))
-    )
-
-
-def test_mixed_width_arguments(spark):
-    # int (4-byte layout) combined with bigint (8-byte layout)
-    from baseline_magician_spark.plans.ch_sql import run_ch_query
-
-    df = spark.createDataFrame(
-        [(7, -3), (0, 0), (2**31 - 1, -(2**62))], "a int, b long"
-    )
-    for fn in (
-        "sipHash64",
-        "xxHash64",
-        "murmurHash3_64",
-        "xxHash32",
-        "murmurHash3_32",
-    ):
-        got = _run2 = sorted(
-            r.h
-            for r in run_ch_query(
-                f"SELECT {fn}(a, b) AS h FROM t", {"t": df}
-            ).collect()
-        )
-        from baseline_magician_spark.functions import ch_compat
-
-        orig = ch_compat._np_hash_multi
-        ch_compat._np_hash_multi = lambda *a, **k: None
-        try:
-            want = sorted(
-                r.h
-                for r in run_ch_query(
-                    f"SELECT {fn}(a, b) AS h FROM t", {"t": df}
-                ).collect()
-            )
-        finally:
-            ch_compat._np_hash_multi = orig
-        assert got == want, fn
 
 
 def _sl64(u: int) -> int:
@@ -274,3 +203,30 @@ def test_adversarial_single_batch_matches_models(spark):
                 )
             assert r[f"s{k}"] == want_s, (fn, a)
             assert r[f"p{k}"] == want_p, (fn, a, b)
+
+
+def test_mixed_width_arguments(spark):
+    """An int (4-byte layout) combined with a bigint (8-byte layout)."""
+    from baseline_magician_spark.plans.ch_sql import run_ch_query
+
+    rows = [(7, -3), (0, 0), (2**31 - 1, -(2**62)), (-5, 2**63 - 1)]
+    df = spark.createDataFrame(rows, "a int, b long")
+    for fn in (
+        "sipHash64",
+        "xxHash64",
+        "murmurHash3_64",
+        "xxHash32",
+        "murmurHash3_32",
+    ):
+        one, combine, signed = _MODELS[fn]
+        out = _sl64 if signed else (lambda u: u)
+        got = sorted(
+            r.h
+            for r in run_ch_query(
+                f"SELECT {fn}(a, b) AS h FROM t", {"t": df}
+            ).collect()
+        )
+        want = sorted(
+            out(combine(one(_le(a, 4)), one(_le(b, 8)))) for a, b in rows
+        )
+        assert got == want, fn

@@ -1,12 +1,12 @@
-"""CH sampling-key hashes (intHash64 / intHash32 / URLHash): the Spark
-wrap-mode arithmetic (analyzed under cityhash.wrap_arith) must land
-on the exact bits of the CH spec — pinned against a direct Python
+"""CH sampling-key hashes (intHash64 / intHash32 / URLHash): the numpy
+kernels, their Python models and the dialect calls must land on the
+exact bits of the CH spec — pinned against a direct Python
 transcription of src/Functions/FunctionsHashing.h (IntHash64Impl /
 IntHash32Impl) and src/Common/HashTable/Hash.h."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import numpy as np
 
 from baseline_magician_spark.plans.ch_sql import run_ch_query
 
@@ -41,27 +41,19 @@ def _signed(u: int) -> int:
 VALS = [0, 1, 2, 42, 123456789, 2**31, 2**40 + 7, 2**63 - 1, -1, -123456]
 
 
-def test_int_hashes_match_spec(spark):
-    from baseline_magician_spark.functions.cityhash import wrap_arith
+def test_int_hashes_match_spec():
+    from baseline_magician_spark.functions import hash_np as H
     from baseline_magician_spark.functions.hashing import (
-        int_hash32,
-        int_hash64,
+        int_hash32_py,
+        int_hash64_py,
     )
 
-    df = spark.createDataFrame([(v,) for v in VALS], "x long")
-    # wrap-mode arithmetic: direct Column users analyze under
-    # wrap_arith (run_ch_query does this automatically)
-    with wrap_arith(spark):
-        sel = df.select(
-            "x",
-            int_hash64(F.col("x")).alias("h64"),
-            int_hash32(F.col("x")).alias("h32"),
-        )
-    got = sel.collect()
-    for r in got:
-        xu = r.x & M
-        assert r.h64 == _signed(ref_int_hash64(xu)), r.x
-        assert r.h32 == ref_int_hash32(xu), r.x
+    xs = [v & M for v in VALS]
+    v = np.array(xs, dtype=np.uint64)
+    h64, h32 = H.int_hash64_np(v), H.int_hash32_np(v)
+    for i, xu in enumerate(xs):
+        assert int(h64[i]) == int_hash64_py(xu) == ref_int_hash64(xu), xu
+        assert int(h32[i]) == int_hash32_py(xu) == ref_int_hash32(xu), xu
 
 
 def test_int_hashes_via_ch_sql(spark):

@@ -3,8 +3,9 @@ models anchor to published canonical values (m3('hello') and
 m3('test') are the smhasher-verified constants every public
 implementation reproduces) and, for murmur3's word path, to Spark's
 own JVM Murmur3_x86_32 (canonical for 4-byte-aligned inputs; its tail
-handling deviates, ours must not). The Spark text/Column renderings
-and the DuckDB emitters are pinned bit-for-bit against the models."""
+handling deviates, ours must not). The dialect's murmurHash2_64 and
+murmurHash3_32 (the Arrow hash kernel over the models) and the DuckDB
+emitters are pinned bit-for-bit against the models."""
 
 from __future__ import annotations
 
@@ -12,16 +13,10 @@ import random
 import struct
 
 import duckdb
-import pyspark.sql.functions as F
-
-from baseline_magician_spark.functions.cityhash import _sl, wrap_arith
+from baseline_magician_spark.functions.cityhash import _sl
 from baseline_magician_spark.functions.murmur import (
     MurmurEmitter,
-    murmur2_64,
-    murmur2_64_fast,
     murmur2_64_py,
-    murmur3_32,
-    murmur3_32_fast,
     murmur3_32_py,
 )
 from baseline_magician_spark.plans.ch_sql import run_ch_query
@@ -71,23 +66,16 @@ def test_spark_renderings_match_models(spark):
         [(i, c.decode("ascii")) for i, c in enumerate(CASES)],
         "i int, s string",
     )
-    with wrap_arith(spark):
-        sel = df.select(
-            "i",
-            murmur2_64_fast(F.col("s")).alias("m2t"),
-            murmur2_64(F.col("s")).alias("m2c"),
-            murmur3_32_fast(F.col("s")).alias("m3t"),
-            murmur3_32(F.col("s")).alias("m3c"),
-        )
+    sel = run_ch_query(
+        "SELECT i, murmurHash2_64(s) AS m2, murmurHash3_32(s) AS m3 FROM t",
+        {"t": df},
+    )
     got = {r["i"]: r for r in sel.collect()}
     for i, c in enumerate(CASES):
-        w2, w3 = _sl(murmur2_64_py(c)), murmur3_32_py(c)
         r = got[i]
-        assert (r["m2t"], r["m2c"], r["m3t"], r["m3c"]) == (
-            w2,
-            w2,
-            w3,
-            w3,
+        assert (r["m2"], r["m3"]) == (
+            _sl(murmur2_64_py(c)),
+            murmur3_32_py(c),
         ), (i, len(c))
 
 

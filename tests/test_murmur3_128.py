@@ -9,8 +9,9 @@ ports. Anchors:
 - murmur2-32 model at the Kafka seed == Kafka's published
   UtilsTest.testMurmur2 vectors (every code path: word-only, tails
   1-3, long input).
-- Spark renderings and the DuckDB 128 emitter are pinned bit-for-bit
-  against the models across every length class.
+- the dialect's calls (the Arrow hash kernel over the models) and the
+  DuckDB 128 emitter are pinned bit-for-bit against the models across
+  every length class.
 """
 
 from __future__ import annotations
@@ -19,23 +20,17 @@ import random
 import struct
 
 import duckdb
-import pyspark.sql.functions as F
-
-from baseline_magician_spark.functions.cityhash import _sl, wrap_arith
+from baseline_magician_spark.functions.cityhash import _sl
 from baseline_magician_spark.functions.murmur import (
     GCC_SEED,
     KAFKA_SEED,
     MurmurEmitter,
-    murmur2_32,
     murmur2_32_py,
-    murmur2_64,
     murmur2_64_py,
 )
 from baseline_magician_spark.functions.murmur3_128 import (
     Murmur128Emitter,
-    murmur3_64,
     murmur3_64_py,
-    murmur3_128_hex,
     murmur3_128_py,
 )
 from baseline_magician_spark.plans.ch_sql import run_ch_query
@@ -88,16 +83,13 @@ def test_kafka_published_vectors():
 def test_spark_renderings_match_models(spark):
     rows = [(i, c.decode()) for i, c in enumerate(CASES)]
     df = spark.createDataFrame(rows, "i int, s string")
-    with wrap_arith(spark):
-        sel = df.select(
-            "i",
-            murmur3_64(F.col("s")).alias("m64"),
-            murmur3_128_hex(F.col("s")).alias("m128"),
-            murmur2_32(F.col("s")).alias("m232"),
-            murmur2_32(F.col("s"), KAFKA_SEED).alias("mk"),
-            murmur2_64(F.col("s"), GCC_SEED).alias("mg"),
-        )
-        got = {r["i"]: r for r in sel.collect()}
+    sel = run_ch_query(
+        "SELECT i, murmurHash3_64(s) AS m64, murmurHash3_128(s) AS m128,"
+        " murmurHash2_32(s) AS m232, kafkaMurmurHash(s) AS mk,"
+        " gccMurmurHash(s) AS mg FROM t",
+        {"t": df},
+    )
+    got = {r["i"]: r for r in sel.collect()}
     for i, c in enumerate(CASES):
         h1, h2 = murmur3_128_py(c)
         hex128 = (
@@ -107,7 +99,10 @@ def test_spark_renderings_match_models(spark):
         assert r["m64"] == _sl(murmur3_64_py(c)), (i, "m64")
         assert r["m128"] == hex128, (i, "m128")
         assert r["m232"] == murmur2_32_py(c), (i, "m232")
-        assert r["mk"] == murmur2_32_py(c, KAFKA_SEED), (i, "kafka")
+        assert r["mk"] == murmur2_32_py(c, KAFKA_SEED) & 0x7FFFFFFF, (
+            i,
+            "kafka",
+        )
         assert r["mg"] == _sl(murmur2_64_py(c, GCC_SEED)), (i, "gcc")
 
 

@@ -282,43 +282,3 @@ def test_table_qualified_column_hashes_numeric_layout(tabs):
     assert got == want
     gotx = _vals(tabs, "SELECT xxHash64(t.lg) AS r FROM t")
     assert gotx == [_sl(xxh64_py(_le8(r[0]))) for r in ROWS]
-
-
-def test_text_combines_equal_column_fallback(spark):
-    """A/B guard for the round-10 single-parse combine path: the
-    same multi-arg hash SQL evaluated with the text path enabled vs
-    FORCED onto the Column-builder fallback (by stubbing _try_expr)
-    must be value-identical for every family, across bare columns,
-    computed expressions, string literals and string columns."""
-    from unittest import mock
-
-    from baseline_magician_spark.functions import ch_compat
-
-    df = spark.createDataFrame(
-        [(i, -i * 977, f"s{i}") for i in range(8)]
-        + [(2**62, -(2**63), "tail")],
-        "a long, b long, s string",
-    )
-    sql = (
-        "SELECT a,"
-        " cityHash64(a, b) AS c1, cityHash64(a, s, 'lit') AS c2,"
-        " sipHash64(a, b) AS s1, sipHash64(s, a + 1) AS s2,"
-        " xxHash64(a, b) AS x1, xxHash32(a, b) AS x2,"
-        " murmurHash2_64(a, b) AS m1, murmurHash3_32(a, b) AS m2,"
-        " murmurHash3_64(a, b) AS m3, murmurHash3_64(s, b) AS m4,"
-        " kafkaMurmurHash(a, b) AS k1, murmurHash2_32(a, s) AS k2,"
-        " gccMurmurHash(a, b) AS g1,"
-        # numeric-only xxHash32/murmurHash3_32 take the Arrow kernel on
-        # both sides; a string argument keeps their text and Column
-        # combine renderings compared
-        " xxHash32(s, b) AS x3, murmurHash3_32(a, s) AS m5"
-        " FROM t"
-    )
-    fast = sorted(
-        map(tuple, run_ch_query(sql, {"t": df}).collect())
-    )
-    with mock.patch.object(ch_compat, "_try_expr", lambda t: None):
-        slow = sorted(
-            map(tuple, run_ch_query(sql, {"t": df}).collect())
-        )
-    assert fast == slow

@@ -1,8 +1,11 @@
 """Each operator has one executable rendering: no function under
 ``operators/`` takes an ``impl`` switch between a default kernel and a
 second, test-only rendering, and no test, stress or bench script
-selects one. Likewise no caller picks a join strategy (the IP-range
-join, the dialect's broadcast-right joins) or the CDC window."""
+selects one. Each CH hash has one rendering too, the Arrow kernel: no
+Spark-SQL text twin chooser (``col_sql``), no ANSI-off analysis scope
+(``wrap_arith``) and no model module that imports pyspark. Likewise no
+caller picks a join strategy (the IP-range join, the dialect's
+broadcast-right joins) or a CDC setting."""
 
 from __future__ import annotations
 
@@ -47,9 +50,13 @@ _NO_KNOBS = {
     ("plans/baseline.py", "baseline_aggregate"): {"use_bucketed_join"},
     ("plans/baseline.py", "generate_hostgroups"): {"use_bucketed_join"},
     ("operators/range_join.py", "broadcast_range_join"): {"how"},
-    ("operators/cdc.py", "cdc_chunks"): {"window"},
-    ("operators/cdc.py", "cdc_shared_chunks"): {"window"},
-    ("operators/cdc.py", "cdc_duplication_ratio"): {"window", "min_docs"},
+    ("operators/cdc.py", "cdc_chunks"): {"window", "mask_bits"},
+    ("operators/cdc.py", "cdc_shared_chunks"): {
+        "window", "mask_bits", "min_len", "min_docs",
+    },
+    ("operators/cdc.py", "cdc_duplication_ratio"): {
+        "window", "min_docs", "mask_bits", "min_len",
+    },
     ("functions/ip.py", "parse_cidr_py"): {"reference_quirk"},
 }
 
@@ -86,3 +93,25 @@ def test_one_range_join_and_no_broadcast_switch():
         if re.search(r"\bbroadcast_dims\b", line)
     ]
     assert not offenders, offenders
+
+
+_HASH_MODELS = ("cityhash", "xxhash", "murmur", "siphash", "murmur3_128")
+
+
+def test_one_hash_rendering():
+    offenders = [
+        f"{p.relative_to(REPO)}:{i}"
+        for p in sorted(PKG.rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if re.search(r"\b(wrap_arith|col_sql|_WRAP_HASH_RE)\b", line)
+    ]
+    assert not offenders, offenders
+    for name in _HASH_MODELS:
+        tree = ast.parse((PKG / "functions" / f"{name}.py").read_text())
+        imported = [
+            a.name if isinstance(n, ast.Import) else (n.module or "")
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Import, ast.ImportFrom))
+            for a in n.names
+        ]
+        assert not [m for m in imported if m.startswith("pyspark")], name

@@ -1,21 +1,17 @@
 """SipHash-2-4: the Python model is anchored to the SipHash paper's
 reference vectors (key 000102..0f, the only independent ground truth
-available offline); the Spark text + Column renderings and the DuckDB
-emitter are then pinned bit-for-bit against the model with the zero
-key CH's sipHash64 documents."""
+available offline); the dialect's sipHash64 (the Arrow hash kernel
+over the model) and the DuckDB emitter are then pinned bit-for-bit
+against the model with the zero key CH's sipHash64 documents."""
 
 from __future__ import annotations
 
 import random
 
 import duckdb
-import pyspark.sql.functions as F
-
-from baseline_magician_spark.functions.cityhash import _sl, wrap_arith
+from baseline_magician_spark.functions.cityhash import _sl
 from baseline_magician_spark.functions.siphash import (
     SipEmitter,
-    sip_hash64,
-    sip_hash64_fast,
     sip_hash64_py,
 )
 from baseline_magician_spark.plans.ch_sql import run_ch_query
@@ -60,16 +56,10 @@ def test_spark_text_and_column_match_model(spark):
         [(i, c.decode("ascii")) for i, c in enumerate(CASES)],
         "i int, s string",
     )
-    with wrap_arith(spark):
-        sel = df.select(
-            "i",
-            sip_hash64_fast(F.col("s")).alias("ht"),
-            sip_hash64(F.col("s")).alias("hc"),
-        )
-    got = {r["i"]: (r["ht"], r["hc"]) for r in sel.collect()}
+    sel = run_ch_query("SELECT i, sipHash64(s) AS h FROM t", {"t": df})
+    got = {r["i"]: r["h"] for r in sel.collect()}
     for i, c in enumerate(CASES):
-        want = _sl(sip_hash64_py(c))
-        assert got[i] == (want, want), (i, len(c))
+        assert got[i] == _sl(sip_hash64_py(c)), (i, len(c))
 
 
 def test_ch_sql_siphash_and_raw_bytes(spark):

@@ -1,5 +1,7 @@
 """A Python worker that unpickles a hash or MinHash kernel imports the
-kernel's module, not the 6k-line ``functions.ch_compat``.
+kernel's module, not the 5k-line ``functions.ch_compat``: the hash
+kernel (``hash_np``) and the five hash model modules it imports for a
+non-numeric argument, and the dedup operators.
 
 ``baseline_magician_spark.functions`` is a docstring-only package, so
 importing one of its modules loads no sibling. Each check runs in a
@@ -21,6 +23,11 @@ REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     "module",
     [
         "baseline_magician_spark.functions.hash_np",
+        "baseline_magician_spark.functions.cityhash",
+        "baseline_magician_spark.functions.xxhash",
+        "baseline_magician_spark.functions.murmur",
+        "baseline_magician_spark.functions.siphash",
+        "baseline_magician_spark.functions.murmur3_128",
         "baseline_magician_spark.operators.dedup",
     ],
 )

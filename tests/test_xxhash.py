@@ -3,8 +3,9 @@ anchored hash family in the engine — the Python model must be
 bit-identical to Spark's own JVM XXH64 (seed 42 over binary input:
 an independent implementation of the same public spec), reproduce
 the CH docs' own xxHash32 example, and match the published
-empty-input digests; the Spark text/Column renderings and the DuckDB
-emitters are then pinned against the model."""
+empty-input digests; the dialect's xxHash64/xxHash32 (the Arrow hash
+kernel over the model) and the DuckDB emitters are then pinned
+against the model."""
 
 from __future__ import annotations
 
@@ -13,14 +14,10 @@ import random
 import duckdb
 import pyspark.sql.functions as F
 
-from baseline_magician_spark.functions.cityhash import _sl, wrap_arith
+from baseline_magician_spark.functions.cityhash import _sl
 from baseline_magician_spark.functions.xxhash import (
     XxEmitter,
-    xxh32,
-    xxh32_fast,
     xxh32_py,
-    xxh64,
-    xxh64_fast,
     xxh64_py,
 )
 from baseline_magician_spark.plans.ch_sql import run_ch_query
@@ -62,23 +59,16 @@ def test_spark_renderings_match_model(spark):
     df = spark.createDataFrame(
         [(i, s) for i, s in enumerate(cases)], "i int, s string"
     )
-    with wrap_arith(spark):
-        sel = df.select(
-            "i",
-            xxh64(F.col("s")).alias("c64"),
-            xxh64_fast(F.col("s")).alias("t64"),
-            xxh32(F.col("s")).alias("c32"),
-            xxh32_fast(F.col("s")).alias("t32"),
-        )
+    sel = run_ch_query(
+        "SELECT i, xxHash64(s) AS h64, xxHash32(s) AS h32 FROM t",
+        {"t": df},
+    )
     got = {r["i"]: r for r in sel.collect()}
     for i, s in enumerate(cases):
-        w64, w32 = _sl(xxh64_py(s.encode())), xxh32_py(s.encode())
         r = got[i]
-        assert (r["c64"], r["t64"], r["c32"], r["t32"]) == (
-            w64,
-            w64,
-            w32,
-            w32,
+        assert (r["h64"], r["h32"]) == (
+            _sl(xxh64_py(s.encode())),
+            xxh32_py(s.encode()),
         ), len(s)
 
 
