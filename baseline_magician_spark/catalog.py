@@ -27,10 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-# Tables small enough to broadcast-join at any scale factor (dimensions).
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
-
-
 # Set-once guard for the per-session SQL confs below and memo for the
 # scan split count load_for_compute probes (optimization round 11,
 # guide §1/§5: both are pure driver-side metadata — conf.set is two

@@ -545,11 +545,6 @@ CH_FUNCTIONS: dict[str, Callable[..., Column]] = {
     # dateTrunc('unit', ts) — both CH spellings; unit is driver-literal
     "dateTrunc": lambda unit, c: F.date_trunc(_unquote(unit), c),
     "date_trunc": lambda unit, c: F.date_trunc(_unquote(unit), c),
-    # sub-hour flooring: CH's fixed-window variants (unix-second
-    # arithmetic — exact, tz-independent, codegen-folded)
-    "toStartOfFiveMinutes": lambda c: _floor_seconds(c, 300),
-    "toStartOfTenMinutes": lambda c: _floor_seconds(c, 600),
-    "toStartOfFifteenMinutes": lambda c: _floor_seconds(c, 900),
     "formatDateTime": lambda c, fmt: F.date_format(c, _ch_format(fmt)),
     "toYear": F.year,
     "toISOWeek": F.weekofyear,
@@ -859,9 +854,6 @@ CH_FUNCTIONS: dict[str, Callable[..., Column]] = {
     "toDayOfWeek": lambda c: ((F.dayofweek(c) + F.lit(5)) % 7 + 1),
     "toQuarter": F.quarter,
     "toStartOfQuarter": lambda c: F.date_trunc("quarter", c).cast("date"),
-    "toStartOfWeek": lambda c: F.date_sub(
-        F.to_date(c), F.dayofweek(c) - 1
-    ),
     "addMonths": lambda c, n: F.timestamp_add("MONTH", _as_col(n), c),
     "subtractMonths": lambda c, n: F.timestamp_add("MONTH", -_as_col(n), c),
     "addHours": lambda c, n: F.timestamp_add("HOUR", _as_col(n), c),
@@ -930,8 +922,6 @@ CH_FUNCTIONS: dict[str, Callable[..., Column]] = {
     )
     / F.sum(F.when(_nn2(x, w), _as_col(w))),
     # --- nondeterministic generators (no oracle pairing by nature) ---
-    "rand": lambda: (F.rand() * F.lit(4294967296.0)).cast("long"),
-    "randCanonical": lambda: F.rand(),
     "generateUUIDv4": lambda: F.expr("uuid()"),
 }
 
@@ -1534,9 +1524,6 @@ def _date_name(part, c) -> Column:
     return F.date_format(_as_col(c), fmts[p])
 
 
-_BIT_MASKS = None  # built lazily; F.array of 63 literal powers of two
-
-
 def _bitmask_to_list(c) -> Column:
     masks = F.array(*[F.lit(1 << i).cast("long") for i in range(63)])
     kept = F.filter(masks, lambda m: _as_col(c).bitwiseAND(m) != 0)
@@ -1615,7 +1602,10 @@ CH_FUNCTIONS.update(
         # IntHash64Impl/IntHash32Impl, src/Common/HashTable/Hash.h).
         "intHash64": _int_hash("city"),
         "intHash32": _int_hash("int32"),
-        "URLHash": lambda c: _url_hash(_as_col(c)),
+        # the 1-arg form hashes the URL, the 2-arg form its hierarchy level
+        "URLHash": lambda u, *n: (
+            _url_hash_level(u, n[0]) if n else _url_hash(_as_col(u))
+        ),
         "tryBase64Decode": CH_FUNCTIONS["base64Decode"],
         "bin": lambda c: F.bin(_as_col(c)),
         "bitmaskToList": _bitmask_to_list,
@@ -2557,7 +2547,6 @@ CH_FUNCTIONS.update(
         + F.randn() * _as_col(sd),
         "randUniform": lambda lo, hi: _as_col(lo)
         + F.rand() * (_as_col(hi) - _as_col(lo)),
-        "randCanonical": lambda *a: F.rand(),
     }
 )
 
@@ -2920,9 +2909,6 @@ CH_FUNCTIONS.update(
         "toModifiedJulianDay": lambda d: F.datediff(
             _as_col(d).cast("date"), F.lit("1858-11-17").cast("date")
         ).cast("long"),
-        "fromModifiedJulianDay": lambda n: F.date_add(
-            F.lit("1858-11-17").cast("date"), _as_col(n).cast("int")
-        ),
         "toUnixTimestamp64Milli": lambda t: F.unix_millis(
             _as_col(t).cast("timestamp")
         ),
@@ -4446,12 +4432,6 @@ CH_FUNCTIONS.update(
             u, with_base=False
         ),
     }
-)
-
-# extend URLHash to the 2-arg level form
-_URL_HASH_1 = CH_FUNCTIONS["URLHash"]
-CH_FUNCTIONS["URLHash"] = lambda u, *n: (
-    _url_hash_level(u, n[0]) if n else _URL_HASH_1(u)
 )
 
 

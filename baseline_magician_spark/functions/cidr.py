@@ -22,10 +22,11 @@ Semantics follow vendor/github.com/apparentlymart/go-cidr/cidr/cidr.go:
 - ``verify_no_overlap`` — cidr.go:171-228 (every subnet inside the
   base and pairwise disjoint)
 
-Columnar variants of the two operations the engine uses in plans
-(range bounds, address count) live in functions/ip.py; these helpers
-serve network-list preprocessing on the driver, where the reference
-does the same work per-process.
+The engine's plans take each network's range bounds from
+``functions.ip.parse_cidr_py`` on the driver (first address and one
+past the broadcast address, the reference's off-by-one upper bound);
+these helpers serve the rest of network-list preprocessing on the
+driver, where the reference does the same work per-process.
 """
 
 from __future__ import annotations

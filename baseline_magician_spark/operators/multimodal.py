@@ -1,34 +1,39 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` payloads
-with typed metadata, processed by Arrow-batched pandas stages.
+with typed metadata, processed by narrow Arrow stages.
 
 Design (the 100 TB shape):
 
 - A media row is ``(id, payload: binary, meta: struct<media_type, byte_len,
   width, height, n_frames>)``. The payload is NEVER interpreted by
   Catalyst — it flows through scans/shuffles as opaque bytes; only
-  explicitly-invoked ``mapInPandas`` stages touch it, in Arrow batches,
-  so Python sees columnar ``bytes`` without per-row pickling.
+  explicitly-invoked Python stages touch it.
 
-- Decode / feature-extract / resize / frame-sample are ``mapInPandas``
-  stages with declared output schemas. Each is embarrassingly parallel
-  per-partition (no shuffle); partitioning by id ranges carries through.
+- Every operator here is one ``mapInArrow`` stage built by
+  :func:`_stage`: each Arrow ``RecordBatch`` goes to a per-batch body
+  that reads and writes Arrow arrays, with a declared output schema and
+  no pandas in between (a nullable bigint stays int64, never float64).
+  Each stage is embarrassingly parallel per partition (no shuffle). The
+  byte statistics read the Arrow offsets and data buffer directly, and a
+  NULL payload raises rather than reading as an empty one.
 
 - Codec decode: ``decode_media(df, decoder=...)`` is the extension
-  seam, with two REAL zero-dependency codecs behind
+  seam, with four REAL zero-dependency codecs behind
   :func:`real_decoder`: WAV audio (:func:`wav_encode` /
   :func:`wav_decoder`, a genuine RIFF/WAVE codec on the stdlib
-  ``wave`` module, round 4), BMP images (:func:`bmp_encode` /
+  ``wave`` module), BMP images (:func:`bmp_encode` /
   :func:`bmp_decoder`, a struct-level Windows-BMP codec — headers,
-  palette, row padding, bottom-up flip — round 5), and YUV4MPEG2
-  video (:func:`y4m_encode` / :func:`y4m_decoder`, the mjpegtools/
-  ffmpeg interchange stream — tag-list header + FRAME markers, Cmono
-  and C420 colorspaces — round 5). Other containers
-  (JPEG/PNG) dispatch to PIL when installed and otherwise raise
-  the codec's ordinary unsupported-container error. The default
-  :func:`synthetic_decoder` fake-decodes deterministically so
-  ``decode_stats`` / ``extract_features`` / ``sample_frames`` stay
-  runnable with zero dependencies — schema, Arrow batch shape, UDF
-  signatures, explode semantics are identical either way.
+  palette, row padding, bottom-up flip), YUV4MPEG2 video
+  (:func:`y4m_encode` / :func:`y4m_decoder`, the mjpegtools/ffmpeg
+  interchange stream — tag-list header + FRAME markers, Cmono and C420
+  colorspaces) and PNG images (:func:`png_encode` /
+  :func:`png_decoder`, zlib scanlines with all five filter types and
+  chunk CRCs). Other containers (JPEG/WebP) dispatch to PIL when
+  installed and otherwise raise the codec's ordinary
+  unsupported-container error. The default :func:`synthetic_decoder`
+  fake-decodes deterministically so ``decode_stats`` /
+  ``extract_features`` / ``sample_frames`` stay runnable with zero
+  dependencies — schema, Arrow batch shape and explode semantics are
+  identical either way.
 
 Deterministic payload model (shared with the DuckDB oracles): byte ``i``
 of document ``d``'s payload is ``(d*131 + i*197 + 23) % 256`` and the
@@ -44,14 +49,16 @@ the training-data-pipeline extension surface.
 
 from __future__ import annotations
 
-import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Sequence
+from functools import partial
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..pyship import ensure_shipped
 
@@ -76,10 +83,86 @@ META_SCHEMA = T.StructType(
 )
 
 
-def _r4(x: float) -> float:
+FEATURE_DIM = 8  # stripes per extract_features vector
+FRAME_SAMPLE_EVERY = 4  # sample_frames keeps frames 0, 4, 8, ...
+
+
+def _stage(
+    df: DataFrame,
+    name: str,
+    schema: T.StructType,
+    body: Callable[[pa.RecordBatch], Sequence],
+    read: str,
+    cols: Sequence[str] = (),
+) -> DataFrame:
+    """The one Python stage of this module: a single ``mapInArrow`` over
+    ``df`` (only its ``cols`` when given) whose ``body`` maps each
+    non-empty Arrow batch to the columns of ``schema``, as Arrow arrays
+    or anything ``pa.array`` converts to the declared type. A NULL in
+    the column the body reads, ``read``, raises ``ValueError`` naming
+    ``name``: a NULL payload is not an empty one."""
+    ensure_shipped(df.sparkSession)
+    out = to_arrow_schema(schema)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            if nulls := batch.column(read).null_count:
+                raise ValueError(
+                    f"{name}: {read} is NULL in {nulls} row(s); {name} "
+                    f"reads every row's {read}, and NULL is not empty"
+                )
+            arrays = body(batch)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(a, type=f.type) for a, f in zip(arrays, out, strict=True)],
+                schema=out,
+            )
+
+    return (df.select(*cols) if cols else df).mapInArrow(run, schema)
+
+
+def _floor4(x: np.ndarray) -> np.ndarray:
     """floor-to-4-decimals — identical IEEE op sequence in DuckDB's
     ``floor(x*10000)/10000``, unlike round() (banker's vs half-up)."""
-    return math.floor(x * 10000.0) / 10000.0
+    return np.floor(x * 10000.0) / 10000.0
+
+
+def _binary(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(starts, lens, data)`` read straight from a binary array's
+    offsets and data buffers: row ``r``'s bytes are
+    ``data[starts[r] : starts[r] + lens[r]]``, and the rows lie back to
+    back in ``data``."""
+    off_type = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    _, offsets, data = arr.buffers()
+    off = np.frombuffer(offsets, off_type)[arr.offset : arr.offset + len(arr) + 1]
+    off = off.astype(np.int64)
+    data = np.zeros(0, np.uint8) if data is None else np.frombuffer(data, np.uint8)
+    return off[:-1], np.diff(off), data
+
+
+def _byte_stats(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per payload: byte count, exact integer checksum and floor-4 mean.
+    The checksum is a difference of prefix sums read at the payload's
+    offsets, so an empty payload is a zero-width segment: checksum 0,
+    mean NaN."""
+    starts, lens, data = _binary(arr)
+    csum = np.concatenate(([0], np.cumsum(data, dtype=np.int64)))
+    sums = csum[starts + lens] - csum[starts]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return lens, sums, _floor4(sums / lens)
+
+
+def _frames(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Every whole ``FRAME_BYTES``-byte frame of every payload, in order:
+    ``(row, frame index, bytes as an int64 [n, FRAME_BYTES] array)``. A
+    trailing partial frame is dropped (standard frame semantics)."""
+    starts, lens, data = _binary(arr)
+    counts = lens // FRAME_BYTES
+    rows = np.repeat(np.arange(len(lens)), counts)
+    k = np.arange(len(rows)) - np.repeat(np.cumsum(counts) - counts, counts)
+    at = (starts[rows] + k * FRAME_BYTES)[:, None] + np.arange(FRAME_BYTES)
+    return rows, k, data[at].astype(np.int64)
 
 
 def _payload_bytes(doc_id: int) -> bytes:
@@ -88,45 +171,37 @@ def _payload_bytes(doc_id: int) -> bytes:
     return ((doc_id * BYTE_A + i * BYTE_B + BYTE_C) % 256).astype(np.uint8).tobytes()
 
 
-def attach_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _attach(
+    df: DataFrame, name: str, encode: Callable[[int], tuple[bytes, tuple]]
+) -> DataFrame:
+    """Input columns + (payload binary, meta struct). ``encode(doc_id)``
+    gives one row's payload and its meta tuple in ``META_SCHEMA`` order;
+    the input columns pass through as the Arrow arrays they arrived as."""
+    schema = T.StructType(
+        [*df.schema.fields, T.StructField("payload", T.BinaryType())]
+    ).add("meta", META_SCHEMA)
+
+    def body(batch: pa.RecordBatch) -> list:
+        rows = [encode(d) for d in batch.column("doc_id").to_pylist()]
+        return [*batch.columns, [p for p, _ in rows], [m for _, m in rows]]
+
+    return _stage(df, name, schema, body, read="doc_id")
+
+
+def _raw_row(d: int) -> tuple[bytes, tuple]:
+    p = _payload_bytes(d)
+    n = len(p)
+    return p, (MEDIA_TYPES[d % 3], n, n // 8, 8, n // FRAME_BYTES)
+
+
+def attach_media(df: DataFrame) -> DataFrame:
     """Attach the deterministic binary payload + metadata struct.
 
     Output schema: input columns + (payload binary, meta struct). The
-    generation itself is a mapInPandas stage (narrow, per-partition);
-    in production this column would come straight off the parquet scan.
+    generation itself is a narrow Arrow stage; in production this
+    column would come straight off the parquet scan.
     """
-    ensure_shipped(df.sparkSession)
-    in_schema = df.schema
-    out_schema = T.StructType(
-        list(in_schema.fields)
-        + [
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("meta", META_SCHEMA),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            payloads = [_payload_bytes(int(d)) for d in ids]
-            lens = np.array([len(p) for p in payloads], dtype=np.int64)
-            width = (lens // 8).astype(np.int32)
-            metas = [
-                {
-                    "media_type": MEDIA_TYPES[int(d) % 3],
-                    "byte_len": int(n),
-                    "width": int(w),
-                    "height": 8,
-                    "n_frames": int(n) // FRAME_BYTES,
-                }
-                for d, n, w in zip(ids, lens, width)
-            ]
-            out = pdf.copy()
-            out["payload"] = payloads
-            out["meta"] = metas
-            yield out
-
-    return df.mapInPandas(gen, schema=out_schema)
+    return _attach(df, "attach_media", _raw_row)
 
 
 DECODED_SCHEMA = T.StructType(
@@ -158,7 +233,7 @@ WAV_SAMPLE_RATE = 8000
 WAV_HEADER_BYTES = 44  # RIFF(12) + fmt chunk(24) + data header(8), PCM
 
 
-def wav_encode(samples: bytes, sample_rate: int = WAV_SAMPLE_RATE) -> bytes:
+def wav_encode(samples: bytes) -> bytes:
     """Encode 8-bit unsigned mono PCM samples into a genuine RIFF/WAVE
     container (stdlib ``wave`` writer — a real, spec-compliant codec,
     not a fake). Round-trips through any standard WAV reader."""
@@ -169,7 +244,7 @@ def wav_encode(samples: bytes, sample_rate: int = WAV_SAMPLE_RATE) -> bytes:
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
         w.setsampwidth(1)  # 8-bit PCM — stored unsigned per the spec
-        w.setframerate(sample_rate)
+        w.setframerate(WAV_SAMPLE_RATE)
         w.writeframes(samples)
     return buf.getvalue()
 
@@ -558,8 +633,8 @@ def real_decoder(payload: bytes, meta: dict) -> dict:
     except ImportError:
         raise ValueError(
             f"unsupported container (magic {payload[:4]!r}): native "
-            "codecs cover WAV, BMP and Y4M; install PIL or pass your "
-            "own decoder to decode_media(df, decoder=...)"
+            "codecs cover WAV, BMP, Y4M and PNG; install PIL or pass "
+            "your own decoder to decode_media(df, decoder=...)"
         ) from None
     img = PIL.Image.open(io.BytesIO(payload))  # pragma: no cover
     img.load()
@@ -572,91 +647,41 @@ def real_decoder(payload: bytes, meta: dict) -> dict:
     }
 
 
-def attach_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _wav_row(d: int) -> tuple[bytes, tuple]:
+    samples = _payload_bytes(d)
+    p = wav_encode(samples)
+    n = len(samples)
+    return p, ("audio", len(p), n, 1, n // FRAME_BYTES)
+
+
+def attach_wav(df: DataFrame) -> DataFrame:
     """Attach a GENUINE RIFF/WAVE payload per row: the deterministic
     sample model (byte ``i`` = ``(d*131 + i*197 + 23) % 256``) encoded
     through the stdlib ``wave`` writer. Unlike :func:`attach_media`'s
     raw plane, this payload is a real container — header plus PCM data
     — so a decoder must actually parse it to recover the samples."""
-    ensure_shipped(df.sparkSession)
-    in_schema = df.schema
-    out_schema = T.StructType(
-        list(in_schema.fields)
-        + [
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("meta", META_SCHEMA),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            payloads = [wav_encode(_payload_bytes(int(d))) for d in ids]
-            metas = []
-            for d, p in zip(ids, payloads):
-                n = LEN_BASE + int(d) % LEN_MOD
-                metas.append(
-                    {
-                        "media_type": "audio",
-                        "byte_len": len(p),
-                        "width": n,
-                        "height": 1,
-                        "n_frames": n // FRAME_BYTES,
-                    }
-                )
-            out = pdf.copy()
-            out["payload"] = payloads
-            out["meta"] = metas
-            yield out
-
-    return df.mapInPandas(gen, schema=out_schema)
+    return _attach(df, "attach_wav", _wav_row)
 
 
-def attach_bmp(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _image_row(encode: Callable, d: int) -> tuple[bytes, tuple]:
+    """The byte model's first ``width*8`` bytes as a row-major 8-row
+    grayscale plane, through an image encoder ``(pixels, w, h)``."""
+    w = (LEN_BASE + d % LEN_MOD) // 8
+    p = encode(_payload_bytes(d)[: w * 8], w, 8)
+    return p, ("image", len(p), w, 8, w * 8 // FRAME_BYTES)
+
+
+def attach_bmp(df: DataFrame) -> DataFrame:
     """Attach a GENUINE BMP payload per row: the deterministic byte
     model's first ``width*8`` bytes as a row-major grayscale plane,
     encoded through :func:`bmp_encode` (headers + palette + bottom-up
     padded rows). A decoder must actually parse the container to
     recover the plane — a passthrough would include the 1078 header
     bytes and the row flip in its output."""
-    ensure_shipped(df.sparkSession)
-    in_schema = df.schema
-    out_schema = T.StructType(
-        list(in_schema.fields)
-        + [
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("meta", META_SCHEMA),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            payloads, metas = [], []
-            for d in ids:
-                n = LEN_BASE + int(d) % LEN_MOD
-                w, h = n // 8, 8
-                plane = _payload_bytes(int(d))[: w * h]
-                p = bmp_encode(plane, w, h)
-                payloads.append(p)
-                metas.append(
-                    {
-                        "media_type": "image",
-                        "byte_len": len(p),
-                        "width": w,
-                        "height": h,
-                        "n_frames": (w * h) // FRAME_BYTES,
-                    }
-                )
-            out = pdf.copy()
-            out["payload"] = payloads
-            out["meta"] = metas
-            yield out
-
-    return df.mapInPandas(gen, schema=out_schema)
+    return _attach(df, "attach_bmp", partial(_image_row, bmp_encode))
 
 
-def attach_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_png(df: DataFrame) -> DataFrame:
     """Attach a GENUINE PNG payload per row: the deterministic byte
     model's first ``width*8`` bytes as a row-major grayscale plane,
     encoded through :func:`png_encode` (zlib-compressed scanlines,
@@ -665,85 +690,23 @@ def attach_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     passthrough is compressed bytes, and a decoder that skips any
     filter type corrupts 8 of every 40 rows... at height 8, rows
     0-7 exercise filters 0,1,2,3,4,0,1,2."""
-    ensure_shipped(df.sparkSession)
-    in_schema = df.schema
-    out_schema = T.StructType(
-        list(in_schema.fields)
-        + [
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("meta", META_SCHEMA),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            payloads, metas = [], []
-            for d in ids:
-                n = LEN_BASE + int(d) % LEN_MOD
-                w, h = n // 8, 8
-                plane = _payload_bytes(int(d))[: w * h]
-                p = png_encode(plane, w, h)
-                payloads.append(p)
-                metas.append(
-                    {
-                        "media_type": "image",
-                        "byte_len": len(p),
-                        "width": w,
-                        "height": h,
-                        "n_frames": (w * h) // FRAME_BYTES,
-                    }
-                )
-            out = pdf.copy()
-            out["payload"] = payloads
-            out["meta"] = metas
-            yield out
-
-    return df.mapInPandas(gen, schema=out_schema)
+    return _attach(df, "attach_png", partial(_image_row, png_encode))
 
 
-def attach_y4m(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _y4m_row(d: int) -> tuple[bytes, tuple]:
+    nf = (LEN_BASE + d % LEN_MOD) // 64
+    p = y4m_encode(_payload_bytes(d)[: nf * 64], 8, 8)
+    return p, ("video", len(p), 8, 8, nf)
+
+
+def attach_y4m(df: DataFrame) -> DataFrame:
     """Attach a GENUINE YUV4MPEG2 payload per row: the deterministic
     byte model's first ``(n // 64) * 64`` bytes as 8x8 mono frames,
     encoded through :func:`y4m_encode` (stream header + FRAME
     markers). A decoder must actually walk the container to recover
     the planes — a passthrough would include the textual headers and
     markers in its output."""
-    ensure_shipped(df.sparkSession)
-    in_schema = df.schema
-    out_schema = T.StructType(
-        list(in_schema.fields)
-        + [
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("meta", META_SCHEMA),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            payloads, metas = [], []
-            for d in ids:
-                n = LEN_BASE + int(d) % LEN_MOD
-                nf = n // 64
-                frames = _payload_bytes(int(d))[: nf * 64]
-                p = y4m_encode(frames, 8, 8)
-                payloads.append(p)
-                metas.append(
-                    {
-                        "media_type": "video",
-                        "byte_len": len(p),
-                        "width": 8,
-                        "height": 8,
-                        "n_frames": nf,
-                    }
-                )
-            out = pdf.copy()
-            out["payload"] = payloads
-            out["meta"] = metas
-            yield out
-
-    return df.mapInPandas(gen, schema=out_schema)
+    return _attach(df, "attach_y4m", _y4m_row)
 
 
 PCM_STATS_SCHEMA = T.StructType(
@@ -760,42 +723,17 @@ def pcm_stats(decoded: DataFrame) -> DataFrame:
     """Statistics over a DECODED pixel/sample plane (the output of
     :func:`decode_media`): sample count from the decoded header, exact
     integer checksum and floor-4-decimal mean over the decoded bytes.
-    Narrow Arrow stage, vectorized ``np.add.reduceat`` — same shape as
-    :func:`decode_stats`, but over post-codec bytes, which is what
-    proves the container was actually parsed (a passthrough would
-    include header bytes in the checksum and mismatch the oracle)."""
-    ensure_shipped(decoded.sparkSession)
+    The same byte-statistics kernel as :func:`decode_stats`, but over
+    post-codec bytes, which is what proves the container was actually
+    parsed (a passthrough would include header bytes in the checksum
+    and mismatch the oracle)."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            planes = list(pdf["pixels"])
-            lens = np.fromiter((len(p) for p in planes), dtype=np.int64)
-            sums = np.zeros(len(planes), dtype=np.int64)
-            nonempty = lens > 0
-            if nonempty.any():
-                flat = np.frombuffer(
-                    b"".join(p for p in planes if len(p) > 0),
-                    dtype=np.uint8,
-                ).astype(np.int64)
-                offsets = np.concatenate(
-                    ([0], np.cumsum(lens[nonempty])[:-1])
-                )
-                sums[nonempty] = np.add.reduceat(flat, offsets)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                means = np.floor(sums / lens * 10000.0) / 10000.0
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy(),
-                    "n_samples": lens,
-                    "checksum": sums,
-                    "mean_sample": means,
-                }
-            )
+    def body(batch: pa.RecordBatch) -> list:
+        return [batch.column("doc_id"), *_byte_stats(batch.column("pixels"))]
 
-    return decoded.select("doc_id", "pixels").mapInPandas(
-        stats, schema=PCM_STATS_SCHEMA
+    return _stage(
+        decoded, "pcm_stats", PCM_STATS_SCHEMA, body,
+        read="pixels", cols=("doc_id", "pixels"),
     )
 
 
@@ -810,32 +748,23 @@ def decode_media(df: DataFrame, decoder=None) -> DataFrame:
     plumbing (Arrow batches, narrow stage, output schema) is identical
     either way, so swapping decoders changes no plan shape.
     """
-    ensure_shipped(df.sparkSession)
     decoder = decoder or synthetic_decoder
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = []
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["payload"], pdf["meta"]
-            ):
-                d = decoder(payload, meta)
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "media_type": meta["media_type"],
-                        "width": int(d.get("width", meta["width"])),
-                        "height": int(d.get("height", meta["height"])),
-                        "n_frames": int(d.get("n_frames", meta["n_frames"])),
-                        "pixels": d.get("pixels", payload),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def body(batch: pa.RecordBatch) -> list:
+        meta = batch.column("meta")
+        rows = [
+            {**m, "pixels": p, **decoder(p, m)}
+            for p, m in zip(batch.column("payload").to_pylist(), meta.to_pylist())
+        ]
+        return [
+            batch.column("doc_id"),
+            pc.struct_field(meta, "media_type"),
+            *([r[k] for r in rows] for k in ("width", "height", "n_frames", "pixels")),
+        ]
 
-    return df.select("doc_id", "payload", "meta").mapInPandas(
-        dec, schema=DECODED_SCHEMA
+    return _stage(
+        df, "decode_media", DECODED_SCHEMA, body,
+        read="payload", cols=("doc_id", "payload", "meta"),
     )
 
 
@@ -853,250 +782,165 @@ DECODE_STATS_SCHEMA = T.StructType(
 def decode_stats(media: DataFrame) -> DataFrame:
     """Fake-decode each payload and emit per-item statistics.
 
-    Narrow mapInPandas stage: bytes arrive as Arrow binary, stats are
-    vectorized numpy over ``frombuffer`` views (no per-row Python work
-    beyond the buffer wrap). Sum/mean are exact-integer in float64, so
-    the oracle's arithmetic recomputation matches bit-for-bit.
+    Narrow Arrow stage: the byte count, exact integer checksum and
+    floor-4 mean come from prefix sums over the batch's byte buffer, read
+    at the Arrow offsets (no per-row Python work). Sum/mean are
+    exact-integer in float64, so the oracle's arithmetic recomputation
+    matches bit-for-bit; real corpora do contain truncated/empty blobs,
+    which report checksum 0, mean NaN.
     """
-    ensure_shipped(media.sparkSession)
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # one concatenated buffer + reduceat: fully vectorized over
-            # the whole Arrow batch, no per-row numpy allocation.
-            # Empty payloads need masking — reduceat on an empty
-            # segment STEALS the next row's first byte (and a trailing
-            # empty offset is out of bounds); real corpora do contain
-            # truncated/empty blobs, which report checksum 0, mean NaN.
-            payloads = list(pdf["payload"])
-            lens = np.fromiter((len(p) for p in payloads), dtype=np.int64)
-            sums = np.zeros(len(payloads), dtype=np.int64)
-            nonempty = lens > 0
-            if nonempty.any():
-                ne_payloads = [p for p in payloads if len(p) > 0]
-                ne_lens = lens[nonempty]
-                flat = np.frombuffer(
-                    b"".join(ne_payloads), dtype=np.uint8
-                ).astype(np.int64)
-                offsets = np.concatenate(([0], np.cumsum(ne_lens)[:-1]))
-                sums[nonempty] = np.add.reduceat(flat, offsets)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                means = np.floor(sums / lens * 10000.0) / 10000.0
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy(),
-                    "media_type": [m["media_type"] for m in pdf["meta"]],
-                    "byte_len": lens,
-                    "checksum": sums,
-                    "mean_byte": means,
-                }
-            )
+    def body(batch: pa.RecordBatch) -> list:
+        return [
+            batch.column("doc_id"),
+            pc.struct_field(batch.column("meta"), "media_type"),
+            *_byte_stats(batch.column("payload")),
+        ]
 
-    return media.select("doc_id", "payload", "meta").mapInPandas(
-        stats, schema=DECODE_STATS_SCHEMA
+    return _stage(
+        media, "decode_stats", DECODE_STATS_SCHEMA, body,
+        read="payload", cols=("doc_id", "payload", "meta"),
     )
 
 
-def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Fixed-dim feature vector per payload: stripe-mean pooling
-    (feature[k] = mean of bytes at positions ≡ k mod dim). Output
+    (feature[k] = mean of bytes at positions ≡ k mod ``FEATURE_DIM``;
+    NaN for a stripe with no bytes). Output
     ``(doc_id, feature array<double>)`` — the embedding-extraction
     plumbing for the similarity operators."""
-    ensure_shipped(media.sparkSession)
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("feature", T.ArrayType(T.DoubleType())),
-        ]
+    out_schema = T.StructType().add("doc_id", "long")
+    out_schema = out_schema.add("feature", T.ArrayType(T.DoubleType()))
+
+    def body(batch: pa.RecordBatch) -> list:
+        starts, lens, data = _binary(batch.column("payload"))
+        n = len(lens)
+        row = np.repeat(np.arange(n), lens)
+        at = np.arange(len(row))  # offset into the batch's contiguous bytes
+        pos = at - np.repeat(starts - starts[0], lens)
+        stripe = row * FEATURE_DIM + pos % FEATURE_DIM
+        sums = np.bincount(stripe, data[starts[0] + at], n * FEATURE_DIM)
+        counts = np.bincount(stripe, minlength=n * FEATURE_DIM)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            means = _floor4(sums / counts)
+        offsets = np.arange(0, n * FEATURE_DIM + 1, FEATURE_DIM, dtype=np.int32)
+        return [batch.column("doc_id"), pa.ListArray.from_arrays(offsets, means)]
+
+    return _stage(
+        media, "extract_features", out_schema, body,
+        read="payload", cols=("doc_id", "payload"),
     )
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, vecs = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-                vec = [
-                    _r4(float(b[k::dim].sum()) / len(b[k::dim]))
-                    for k in range(dim)
-                ]
-                ids.append(int(doc_id))
-                vecs.append(vec)
-            yield pd.DataFrame({"doc_id": ids, "feature": vecs})
 
-    return media.select("doc_id", "payload").mapInPandas(feats, schema=out_schema)
-
-
-def sample_frames(media: DataFrame, every: int = 4) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame sampling for 'video' payloads: split into FRAME_BYTES-byte
-    frames, keep every ``every``-th, explode one row per kept frame.
+    frames, keep every ``FRAME_SAMPLE_EVERY``-th, explode one row per
+    kept frame.
 
-    Output ``(doc_id, frame_idx, frame_checksum)``. mapInPandas handles
-    the 1→N fan-out natively (output batch is longer than input batch).
+    Output ``(doc_id, frame_idx, frame_checksum)``: the Arrow stage
+    handles the 1→N fan-out natively (output batch is longer than input
+    batch).
     """
-    ensure_shipped(media.sparkSession)
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame_checksum", T.LongType()),
-        ]
-    )
+    out_schema = T.StructType().add("doc_id", "long").add("frame_idx", "integer")
+    out_schema = out_schema.add("frame_checksum", "long")
 
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, sums = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-                n_frames = len(b) // FRAME_BYTES
-                for j in range(0, n_frames, every):
-                    fr = b[j * FRAME_BYTES : (j + 1) * FRAME_BYTES]
-                    ids.append(int(doc_id))
-                    idxs.append(j)
-                    sums.append(int(fr.sum()))
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame_checksum": sums},
-            ).astype({"frame_idx": "int32"})
+    def body(batch: pa.RecordBatch) -> list:
+        rows, k, frames = _frames(batch.column("payload"))
+        keep = k % FRAME_SAMPLE_EVERY == 0
+        doc_id = batch.column("doc_id").take(rows[keep])
+        return [doc_id, k[keep], frames[keep].sum(axis=1)]
 
     videos = media.where(F.col("meta.media_type") == "video")
-    return videos.select("doc_id", "payload").mapInPandas(frames, schema=out_schema)
+    return _stage(
+        videos, "sample_frames", out_schema, body,
+        read="payload", cols=("doc_id", "payload"),
+    )
 
 
 def resize_stub(media: DataFrame, new_width: int, new_height: int) -> DataFrame:
     """Resize metadata transform: rewrites (width, height) and truncates
     the payload to the new pixel budget — a deterministic stand-in for a
-    real resampler, exercising binary slicing through Arrow."""
-    ensure_shipped(media.sparkSession)
-    out_schema = media.schema
+    real resampler, exercising binary slicing through Arrow. The other
+    columns pass through as the Arrow arrays they arrived as."""
+    budget = new_width * new_height
 
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        budget = new_width * new_height
-        for pdf in batches:
-            out = pdf.copy()
-            out["payload"] = [p[:budget] for p in out["payload"]]
-            out["meta"] = [
-                {
-                    **m,
-                    "width": new_width,
-                    "height": new_height,
-                    "byte_len": min(m["byte_len"], budget),
-                    "n_frames": min(m["byte_len"], budget) // FRAME_BYTES,
-                }
-                for m in out["meta"]
-            ]
-            yield out
+    def body(batch: pa.RecordBatch) -> list:
+        out = batch.columns
+        names = batch.schema.names
+        out[names.index("payload")] = pc.binary_slice(
+            batch.column("payload"), 0, budget
+        )
+        out[names.index("meta")] = [
+            {
+                **m,
+                "width": new_width,
+                "height": new_height,
+                "byte_len": min(m["byte_len"], budget),
+                "n_frames": min(m["byte_len"], budget) // FRAME_BYTES,
+            }
+            for m in batch.column("meta").to_pylist()
+        ]
+        return out
 
-    return media.mapInPandas(rs, schema=out_schema)
+    return _stage(media, "resize_stub", media.schema, body, read="payload")
 
 
 AUDIO_WINDOW = FRAME_BYTES  # samples per RMS window
 
 
-def audio_window_rms(media: DataFrame, window: int = AUDIO_WINDOW) -> DataFrame:
+def audio_window_rms(media: DataFrame) -> DataFrame:
     """Windowed RMS loudness over a PCM payload — the audio analogue of
     frame sampling: payload bytes are 8-bit unsigned samples, centered
-    to [-1, 1), and each ``window``-sample block yields its root-mean-
-    square energy (the feature VAD/silence-trim/loudness-normalization
-    stages consume).
+    to [-1, 1), and each ``AUDIO_WINDOW``-sample block yields its root-
+    mean-square energy (the feature VAD/silence-trim/loudness-
+    normalization stages consume).
 
-    One narrow Arrow stage; per-window sums via ``np.add.reduceat``
-    (vectorized segment reduction — no Python per-window loop), same
-    shape as the resize/stripe stages. Trailing partial windows are
-    dropped (standard frame semantics).
+    One narrow Arrow stage over every whole window of the batch at once
+    (no Python per-window loop). Trailing partial windows are dropped
+    (standard frame semantics). Each squared sample is a multiple of
+    2^-14, so the window sums are exact in any order.
     """
-    ensure_shipped(media.sparkSession)
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("window_id", T.IntegerType()),
-            T.StructField("rms", T.DoubleType()),
-        ]
-    )
+    out_schema = T.StructType().add("doc_id", "long").add("window_id", "integer")
+    out_schema = out_schema.add("rms", "double")
 
-    def rms(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            wins: list[int] = []
-            vals: list[float] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                a = np.frombuffer(payload, dtype=np.uint8).astype(np.float64)
-                s = (a - 128.0) / 128.0
-                n_w = len(s) // window
-                if n_w == 0:
-                    continue
-                sq = s[: n_w * window] * s[: n_w * window]
-                sums = np.add.reduceat(sq, np.arange(0, n_w * window, window))
-                r = np.floor(np.sqrt(sums / window) * 10000.0) / 10000.0
-                ids.extend([int(doc_id)] * n_w)
-                wins.extend(range(n_w))
-                vals.extend(float(x) for x in r)
-            yield pd.DataFrame(
-                {"doc_id": ids, "window_id": wins, "rms": vals}
-            )
+    def body(batch: pa.RecordBatch) -> list:
+        rows, k, frames = _frames(batch.column("payload"))
+        s = (frames - 128.0) / 128.0
+        rms = _floor4(np.sqrt((s * s).sum(axis=1) / AUDIO_WINDOW))
+        return [batch.column("doc_id").take(rows), k, rms]
 
-    return media.select("doc_id", "payload").mapInPandas(
-        rms, schema=out_schema
+    return _stage(
+        media, "audio_window_rms", out_schema, body,
+        read="payload", cols=("doc_id", "payload"),
     )
 
 
 SCENE_CUT_THRESHOLD = 110.5  # mean abs inter-frame byte delta (splits the synthetic corpus ~50/50 so the flag carries signal)
 
 
-def frame_deltas(
-    media: DataFrame, threshold: float = SCENE_CUT_THRESHOLD
-) -> DataFrame:
+def frame_deltas(media: DataFrame) -> DataFrame:
     """Inter-frame deltas + scene-cut flags over a video payload — the
     keyframe-selection primitive: frame k's delta is the mean absolute
-    byte difference against frame k-1, and a delta above ``threshold``
-    marks a cut (where a sampler would emit a keyframe).
+    byte difference against frame k-1, and a delta above
+    ``SCENE_CUT_THRESHOLD`` marks a cut (where a sampler would emit a
+    keyframe).
 
-    One narrow Arrow stage; per-frame sums via ``np.add.reduceat``
-    (sequential within each segment — the order the SQL oracle's fold
-    replays). Frame 0 has no predecessor and emits no row.
+    One narrow Arrow stage over every frame of the batch at once; the
+    per-frame sums are exact integers, as in the SQL oracle's fold.
+    Frame 0 has no predecessor and emits no row.
     """
-    ensure_shipped(media.sparkSession)
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("delta", T.DoubleType()),
-            T.StructField("is_cut", T.BooleanType()),
-        ]
-    )
+    out_schema = T.StructType().add("doc_id", "long").add("frame_idx", "integer")
+    out_schema = out_schema.add("delta", "double").add("is_cut", "boolean")
 
-    def deltas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            idxs: list[int] = []
-            vals: list[float] = []
-            cuts: list[bool] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                a = np.frombuffer(payload, dtype=np.uint8).astype(np.float64)
-                n_f = len(a) // FRAME_BYTES
-                if n_f < 2:
-                    continue
-                frames = a[: n_f * FRAME_BYTES]
-                diff = np.abs(
-                    frames[FRAME_BYTES:] - frames[:-FRAME_BYTES]
-                )
-                sums = np.add.reduceat(
-                    diff, np.arange(0, len(diff), FRAME_BYTES)
-                )
-                d = np.floor(sums / FRAME_BYTES * 10000.0) / 10000.0
-                ids.extend([int(doc_id)] * (n_f - 1))
-                idxs.extend(range(1, n_f))
-                vals.extend(float(x) for x in d)
-                cuts.extend(bool(x > threshold) for x in d)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "frame_idx": idxs,
-                    "delta": vals,
-                    "is_cut": cuts,
-                }
-            )
+    def body(batch: pa.RecordBatch) -> list:
+        rows, k, frames = _frames(batch.column("payload"))
+        same = rows[1:] == rows[:-1]  # frame k and k-1 of one payload
+        diff = np.abs(frames[1:] - frames[:-1]).sum(axis=1)[same]
+        delta = _floor4(diff / FRAME_BYTES)
+        doc_id = batch.column("doc_id").take(rows[1:][same])
+        return [doc_id, k[1:][same], delta, delta > SCENE_CUT_THRESHOLD]
 
-    return media.select("doc_id", "payload").mapInPandas(
-        deltas, schema=out_schema
+    return _stage(
+        media, "frame_deltas", out_schema, body,
+        read="payload", cols=("doc_id", "payload"),
     )

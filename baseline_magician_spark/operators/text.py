@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from ..functions.hashing import poly_hash, shingle_hashes, tokens
 
 PUNCT_PATTERN = "[.,;:!?]"
-DIGIT_PATTERN = "[0-9]"
 # BPE-ish pre-tokenizer: letter runs | digit runs | single non-space symbol
 BPE_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n]"
 

@@ -2215,10 +2215,7 @@ _HASH_BYTE_FNS = frozenset(
     }
 )
 _BYTE_HASH_RE = re.compile(
-    r"\b(cityHash64|sipHash64|xxHash64|xxHash32|murmurHash2_64"
-    r"|murmurHash2_32|murmurHash3_32|murmurHash3_64|murmurHash3_128"
-    r"|kafkaMurmurHash|gccMurmurHash)\s*\(",
-    re.IGNORECASE,
+    r"\b(" + "|".join(sorted(_HASH_BYTE_FNS)) + r")\s*\(", re.IGNORECASE
 )
 
 

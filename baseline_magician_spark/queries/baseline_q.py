@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..config import BaselineConfig
 from ..functions.ip import long_to_ip4, parse_cidr_py
-from ..plans.baseline import ThresholdChannel, generate_hostgroups, networks_dataframe
+from ..plans.baseline import REFERENCE_CHANNELS, generate_hostgroups, networks_dataframe
 from ..registry import query
 
 IP_BASE = 167772160  # 10.0.0.0
@@ -51,15 +51,6 @@ CHANNEL_EXPRS: dict[str, str] = {
     "incoming_flows": "value * 2",
     "outgoing_flows": "value + 10",
 }
-
-CHANNELS = (
-    ThresholdChannel("incoming_packets", "packets_incoming", "threshold_pps_incoming", "ban_for_pps_incoming"),
-    ThresholdChannel("outgoing_packets", "packets_outgoing", "threshold_pps_outgoing", "ban_for_pps_outgoing"),
-    ThresholdChannel("incoming_bits", "bits_incoming", "threshold_mbps_incoming", "ban_for_mbps_incoming", mbps=True),
-    ThresholdChannel("outgoing_bits", "bits_outgoing", "threshold_mbps_outgoing", "ban_for_mbps_outgoing", mbps=True),
-    ThresholdChannel("incoming_flows", "flows_incoming", "threshold_flows_incoming", "ban_for_flows_incoming"),
-    ThresholdChannel("outgoing_flows", "flows_outgoing", "threshold_flows_outgoing", "ban_for_flows_outgoing"),
-)
 
 WINDOW_SECONDS = 7 * 24 * 3600
 
@@ -113,7 +104,7 @@ def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         now=F.col("now_ts"),
     )
     ordered = ["network", "hostgroup_name", "samples", *METRIC_COLS]
-    for ch in CHANNELS:
+    for ch in REFERENCE_CHANNELS:
         ordered += [ch.threshold_col, ch.ban_col]
     return out.select(*ordered)
 
@@ -131,7 +122,7 @@ def _oracle() -> str:
     # threshold math mirrors threshold_columns: value(double) -> expr ->
     # cast_to_uint (NULL/negative -> 0, else floor) -> mbps intdiv.
     thr_cols = []
-    for ch in CHANNELS:
+    for ch in REFERENCE_CHANNELS:
         expr = CHANNEL_EXPRS[ch.name].replace(
             "value", f"CAST({ch.source_col} AS DOUBLE)"
         )

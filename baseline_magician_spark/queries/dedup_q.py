@@ -492,7 +492,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import lsh_bucketed_pairs
 
     docs = load_for_compute(spark, sf_dir, "documents")
-    feats = extract_features(attach_media(docs), dim=8)
+    feats = extract_features(attach_media(docs))
     return lsh_bucketed_pairs(
         feats,
         id_col="doc_id",

@@ -1,6 +1,6 @@
 """Multimodal queries over `documents` + the deterministic payload
-model. The Spark path round-trips REAL binary payloads through Arrow
-mapInPandas stages; the DuckDB oracle recomputes the same statistics
+model. The Spark path round-trips REAL binary payloads through narrow
+Arrow (``mapInArrow``) stages; the DuckDB oracle recomputes the same statistics
 from the shared byte arithmetic ((d*131 + i*197 + 23) % 256, length
 64 + d % 191) without constructing the blob — so the check validates
 both the math and the binary plumbing end-to-end.
@@ -13,19 +13,28 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.multimodal import (
+    AUDIO_WINDOW,
     BYTE_A,
-    attach_wav,
-    decode_media,
-    pcm_stats,
-    real_decoder,
     BYTE_B,
     BYTE_C,
+    FEATURE_DIM,
     FRAME_BYTES,
+    FRAME_SAMPLE_EVERY,
     LEN_BASE,
     LEN_MOD,
+    SCENE_CUT_THRESHOLD,
+    attach_bmp,
     attach_media,
+    attach_png,
+    attach_wav,
+    attach_y4m,
+    audio_window_rms,
+    decode_media,
     decode_stats,
     extract_features,
+    frame_deltas,
+    pcm_stats,
+    real_decoder,
     sample_frames,
 )
 from ..registry import query
@@ -61,7 +70,8 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_stats(_media(spark, sf_dir))
 
 
-def _features_oracle(dim: int = 8) -> str:
+def _features_oracle() -> str:
+    dim = FEATURE_DIM
     # exploded (doc_id, k, value): one row per stripe, flat-hashable.
     stripe = f"list_filter(range(0, {_LEN}), i -> i % {dim} = t.k)"
     s = f"list_sum(list_transform({stripe}, i -> {_BYTE}))"
@@ -74,14 +84,14 @@ def _features_oracle(dim: int = 8) -> str:
 
 @query("multimodal_stripe_features", _features_oracle())
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feats = extract_features(_media(spark, sf_dir), dim=8)
+    feats = extract_features(_media(spark, sf_dir))
     return feats.select(
         "doc_id", F.posexplode("feature").alias("k", "value")
     )
 
 
-def _frames_oracle(every: int = 4) -> str:
-    fb = FRAME_BYTES
+def _frames_oracle() -> str:
+    fb, every = FRAME_BYTES, FRAME_SAMPLE_EVERY
     return f"""
     WITH v AS (
       SELECT doc_id, {_LEN} AS L FROM documents WHERE doc_id % 3 = 2
@@ -101,12 +111,10 @@ def _frames_oracle(every: int = 4) -> str:
 
 @query("multimodal_frame_sample", _frames_oracle())
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sample_frames(_media(spark, sf_dir), every=4)
+    return sample_frames(_media(spark, sf_dir))
 
 
 def _audio_rms_oracle() -> str:
-    from ..operators.multimodal import AUDIO_WINDOW
-
     w = AUDIO_WINDOW
     sample = f"((CAST({_BYTE} AS DOUBLE) - 128) / 128)"
     return f"""
@@ -128,16 +136,12 @@ def multimodal_audio_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow stage (pushdown keeps the decode narrow on 1/3 of the rows);
     the oracle recomputes the identical arithmetic from the shared
     byte formula."""
-    from ..operators.multimodal import audio_window_rms
-
     media = _media(spark, sf_dir)
     audio = media.where(F.col("meta.media_type") == "audio")
     return audio_window_rms(audio)
 
 
 def _frame_deltas_oracle() -> str:
-    from ..operators.multimodal import SCENE_CUT_THRESHOLD
-
     f = FRAME_BYTES
     max_f = (LEN_BASE + LEN_MOD - 1) // f + 1
     byte_at = lambda pos: f"CAST((doc_id*{BYTE_A} + ({pos})*{BYTE_B} + {BYTE_C}) % 256 AS DOUBLE)"  # noqa: E731
@@ -162,8 +166,6 @@ def multimodal_frame_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyframe-selection primitive (sample at cuts instead of every Nth
     frame). Filter to video BEFORE the Arrow stage; the oracle replays
     the identical per-frame arithmetic from the shared byte formula."""
-    from ..operators.multimodal import frame_deltas
-
     media = _media(spark, sf_dir)
     video = media.where(F.col("meta.media_type") == "video")
     return frame_deltas(video)
@@ -227,8 +229,6 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     which must parse the container, strip padding, un-flip the rows
     and resolve palette indices — and emit stats over the DECODED
     plane. Three chained narrow Arrow stages, no shuffle."""
-    from ..operators.multimodal import attach_bmp
-
     bmp = attach_bmp(load_table(spark, sf_dir, "documents"))
     dec = decode_media(bmp, decoder=real_decoder)
     return pcm_stats(dec)
@@ -261,8 +261,6 @@ def multimodal_y4m_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     real_decoder)`` — which must walk the container to recover the
     concatenated frame planes — and emit stats over the DECODED bytes.
     Three chained narrow Arrow stages, no shuffle."""
-    from ..operators.multimodal import attach_y4m
-
     y4m = attach_y4m(load_table(spark, sf_dir, "documents"))
     dec = decode_media(y4m, decoder=real_decoder)
     return pcm_stats(dec)
@@ -297,8 +295,6 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decoded bytes. First compressed container in the family
     (WAV/BMP/Y4M are uncompressed layouts). Three chained narrow
     Arrow stages, no shuffle."""
-    from ..operators.multimodal import attach_png
-
     png = attach_png(load_table(spark, sf_dir, "documents"))
     dec = decode_media(png, decoder=real_decoder)
     return pcm_stats(dec)

@@ -3,7 +3,10 @@
 Local-mode defaults mirror what we would set on a real cluster:
 AQE on (runtime re-plan, skew-join handling, partition coalescing),
 UTC session timezone (required for oracle comparison vs DuckDB),
-Arrow for the pandas interchange used by Pandas-UDF operators.
+Arrow for driver-side pandas conversions (``toPandas``,
+``createDataFrame`` from pandas). The Python stages (pandas UDFs and
+UDAFs, ``mapInArrow`` and ``arrow_udf`` kernels) always cross in Arrow
+batches.
 """
 
 from __future__ import annotations

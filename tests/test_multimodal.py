@@ -4,6 +4,8 @@ and frame fan-out shape."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 
 from conftest import SF_SMOKE
@@ -81,16 +83,19 @@ def test_decode_media_custom_decoder_plugs_in(media):
 
 
 def test_frame_fanout_only_videos(media):
-    from baseline_magician_spark.operators.multimodal import sample_frames
+    from baseline_magician_spark.operators.multimodal import (
+        FRAME_SAMPLE_EVERY,
+        sample_frames,
+    )
 
-    frames = sample_frames(media, every=4)
+    frames = sample_frames(media)
     rows = frames.collect()
     assert rows, "expected at least one sampled frame"
     video_ids = {
         r.doc_id for r in media.where("meta.media_type = 'video'").collect()
     }
     assert {r.doc_id for r in rows} <= video_ids
-    assert all(r.frame_idx % 4 == 0 for r in rows)
+    assert all(r.frame_idx % FRAME_SAMPLE_EVERY == 0 for r in rows)
 
 
 # ---------------------------------------------------------------- #
@@ -379,3 +384,143 @@ def test_y4m_decoder_foreign_streams():
         y4m_decoder(b"YUV4MPEG2 W2 H2 C444\nFRAME\n" + bytes(12), {})
     with pytest.raises(ValueError, match="lacks W/H"):
         y4m_decoder(b"YUV4MPEG2 F25:1\n", {})
+
+
+# ---------------------------------------------------------------- #
+# the Arrow stage: passthrough columns and NULL payloads            #
+# ---------------------------------------------------------------- #
+
+_WIDE = {1: 2**53 + 1, 2: None, 3: -(2**62) - 3}
+
+
+@pytest.mark.parametrize(
+    "build",
+    ["attach_media", "attach_wav", "attach_bmp", "attach_png", "attach_y4m",
+     "resize_stub"],
+)
+def test_passthrough_keeps_nullable_bigint_exact(spark, build):
+    """A nullable bigint input column with values above 2^53 and a NULL
+    in the same Arrow batch comes back bit for bit: it passes through
+    as the Arrow array it arrived as, never via float64."""
+    from baseline_magician_spark.operators import multimodal as mm
+
+    if build == "resize_stub":
+        rows = [
+            (d, v, bytearray(64), ("image", 64, 8, 8, 4))
+            for d, v in sorted(_WIDE.items())
+        ]
+        ddl = "doc_id long, v long, payload binary, meta " + (
+            mm.META_SCHEMA.simpleString()
+        )
+        df = spark.createDataFrame(rows, ddl).coalesce(1)
+        out = mm.resize_stub(df, new_width=4, new_height=8)
+    else:
+        df = spark.createDataFrame(sorted(_WIDE.items()), "doc_id long, v long")
+        # one partition, so one Arrow batch holds all three rows
+        out = getattr(mm, build)(df.coalesce(1))
+    assert {r.doc_id: r.v for r in out.collect()} == _WIDE
+
+
+def _media_rows(spark, payloads, column="payload"):
+    """One 'video' media row per payload, all in one Arrow batch."""
+    from pyspark.sql import types as T
+
+    from baseline_magician_spark.operators.multimodal import META_SCHEMA
+
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField(column, T.BinaryType()),
+            T.StructField("meta", META_SCHEMA),
+        ]
+    )
+    rows = [(i, p, ("video", 0, 4, 8, 0)) for i, p in enumerate(payloads)]
+    return spark.createDataFrame(rows, schema).coalesce(1)
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["decode_stats", "pcm_stats", "extract_features", "sample_frames",
+     "audio_window_rms", "frame_deltas", "decode_media", "resize_stub"],
+)
+def test_null_payload_raises_named_error(spark, op):
+    """A NULL payload has no bytes: every payload-reading operator
+    refuses it with a ValueError naming the operator, instead of
+    reading it as empty (checksum 0) or failing deep in a kernel."""
+    from pyspark.errors import PythonException
+
+    from baseline_magician_spark.operators import multimodal as mm
+
+    payloads = [bytearray(range(40)), None, bytearray(b"")]
+    if op == "pcm_stats":
+        df = mm.pcm_stats(_media_rows(spark, payloads, column="pixels"))
+    elif op == "resize_stub":
+        df = mm.resize_stub(_media_rows(spark, payloads), 4, 8)
+    else:
+        df = getattr(mm, op)(_media_rows(spark, payloads))
+    with pytest.raises(PythonException, match=rf"ValueError: {op}: \w+ is NULL"):
+        df.collect()
+
+
+def _floor4(x: float) -> float:
+    return math.floor(x * 10000.0) / 10000.0
+
+
+def _model(op: str, b: bytes) -> list[tuple]:
+    """Pure-Python reference rows (less doc_id) of one payload."""
+    fr = [b[i : i + 16] for i in range(0, len(b) - 15, 16)]
+    if op in ("decode_stats", "pcm_stats"):
+        mean = _floor4(sum(b) / len(b)) if b else math.nan
+        kind = ("video",) if op == "decode_stats" else ()
+        return [(*kind, len(b), sum(b), mean)]
+    if op == "extract_features":
+        return [
+            (
+                [
+                    _floor4(sum(b[k::8]) / len(b[k::8])) if b[k::8] else math.nan
+                    for k in range(8)
+                ],
+            )
+        ]
+    if op == "sample_frames":
+        return [(j, sum(f)) for j, f in enumerate(fr) if j % 4 == 0]
+    if op == "audio_window_rms":
+        return [
+            (j, _floor4(math.sqrt(sum(((x - 128) / 128) ** 2 for x in f) / 16)))
+            for j, f in enumerate(fr)
+        ]
+    deltas = [
+        (j, _floor4(sum(abs(x - y) for x, y in zip(fr[j], fr[j - 1])) / 16))
+        for j in range(1, len(fr))
+    ]
+    return [(j, d, d > 110.5) for j, d in deltas]
+
+
+def _norm(v):
+    if isinstance(v, float) and math.isnan(v):
+        return "NaN"
+    return tuple(map(_norm, v)) if isinstance(v, list | tuple) else v
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["decode_stats", "pcm_stats", "extract_features", "sample_frames",
+     "audio_window_rms", "frame_deltas"],
+)
+def test_kernels_match_python_model_on_odd_payloads(spark, op):
+    """Empty, sub-frame, frame-edge and ragged payloads side by side in
+    one batch: each vectorized kernel equals its pure-Python model, and
+    an empty payload reads checksum 0, mean NaN."""
+    from baseline_magician_spark.operators import multimodal as mm
+
+    payloads = [
+        bytes((7 * n + 13 * i) % 256 for i in range(n))
+        for n in (0, 1, 15, 16, 17, 31, 0, 32, 33, 48, 100, 0)
+    ]
+    column = "pixels" if op == "pcm_stats" else "payload"
+    rows = getattr(mm, op)(_media_rows(spark, payloads, column)).collect()
+    got = sorted(_norm(list(r)) for r in rows)
+    want = sorted(
+        _norm((d, *r)) for d, b in enumerate(payloads) for r in _model(op, b)
+    )
+    assert got == want

@@ -5,7 +5,9 @@ selects one. Each CH hash has one rendering too, the Arrow kernel: no
 Spark-SQL text twin chooser (``col_sql``), no ANSI-off analysis scope
 (``wrap_arith``) and no model module that imports pyspark. Likewise no
 caller picks a join strategy (the IP-range join, the dialect's
-broadcast-right joins) or a CDC setting."""
+broadcast-right joins), a CDC setting or a media-stage setting. The
+media operators run on one Arrow stage shape, and each ClickHouse
+function name is registered once."""
 
 from __future__ import annotations
 
@@ -42,8 +44,9 @@ def test_no_impl_keyword_in_callers():
 
 PKG = REPO / "baseline_magician_spark"
 
-# function -> parameters it must not take: the engine picks its joins
-# and the CDC window itself, so no caller can choose either
+# function -> parameters it must not take: the engine picks its joins,
+# the CDC window and the media stages' one-value settings itself, so
+# no caller can choose them
 _NO_KNOBS = {
     ("plans/ch_sql.py", "run_ch_query"): {"broadcast_dims"},
     ("plans/ch_ddl.py", "run_ch_ddl"): {"broadcast_dims"},
@@ -58,6 +61,15 @@ _NO_KNOBS = {
         "window", "min_docs", "mask_bits", "min_len",
     },
     ("functions/ip.py", "parse_cidr_py"): {"reference_quirk"},
+    **{
+        ("operators/multimodal.py", f"attach_{codec}"): {"id_col"}
+        for codec in ("media", "wav", "bmp", "png", "y4m")
+    },
+    ("operators/multimodal.py", "extract_features"): {"dim"},
+    ("operators/multimodal.py", "sample_frames"): {"every"},
+    ("operators/multimodal.py", "audio_window_rms"): {"window"},
+    ("operators/multimodal.py", "frame_deltas"): {"threshold"},
+    ("operators/multimodal.py", "wav_encode"): {"sample_rate"},
 }
 
 
@@ -115,3 +127,68 @@ def test_one_hash_rendering():
             for a in n.names
         ]
         assert not [m for m in imported if m.startswith("pyspark")], name
+
+
+def test_media_operators_are_one_arrow_stage():
+    """operators/multimodal.py has no pandas boundary: no ``mapInPandas``,
+    no pandas import, and exactly one ``mapInArrow`` call (its stage
+    helper)."""
+    src = (PKG / "operators" / "multimodal.py").read_text()
+    tree = ast.parse(src)
+    imported = [
+        a.name if isinstance(n, ast.Import) else (n.module or "")
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Import, ast.ImportFrom))
+        for a in n.names
+    ]
+    assert not [m for m in imported if m.split(".")[0] == "pandas"], imported
+    assert "mapInPandas" not in src
+    calls = [
+        n.func.attr
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+    ]
+    assert calls.count("mapInArrow") == 1, calls.count("mapInArrow")
+
+
+def _ch_registrations() -> list[tuple[str, int]]:
+    """(name, line) of every literal key put into ``CH_FUNCTIONS`` in
+    ch_compat.py: its dict literal, ``CH_FUNCTIONS.update({...})`` and
+    ``CH_FUNCTIONS["name"] = ...``."""
+    tree = ast.parse((PKG / "functions" / "ch_compat.py").read_text())
+
+    def is_ch(node) -> bool:
+        return isinstance(node, ast.Name) and node.id == "CH_FUNCTIONS"
+
+    dicts, regs = [], []
+    for n in ast.walk(tree):
+        if isinstance(n, ast.AnnAssign) and is_ch(n.target):
+            dicts.append(n.value)
+        elif isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute):
+            if is_ch(n.func.value) and n.func.attr == "update":
+                dicts += [a for a in n.args if isinstance(a, ast.Dict)]
+        elif isinstance(n, ast.Assign):
+            regs += [
+                (t.slice.value, n.lineno)
+                for t in n.targets
+                if isinstance(t, ast.Subscript) and is_ch(t.value)
+            ]
+    regs += [
+        (k.value, k.lineno)
+        for d in dicts
+        for k in d.keys
+        if isinstance(k, ast.Constant)
+    ]
+    return regs
+
+
+def test_each_ch_function_registered_once():
+    """A second registration of a name silently replaces the first, so
+    the first is dead code that still reads as the definition."""
+    regs = _ch_registrations()
+    assert len(regs) > 500, len(regs)
+    lines: dict[str, list[int]] = {}
+    for name, line in regs:
+        lines.setdefault(name, []).append(line)
+    twice = {k: sorted(v) for k, v in lines.items() if len(v) > 1}
+    assert not twice, twice

@@ -65,7 +65,7 @@ def test_multimodal_stays_narrow(spark, queries):
     plan = plan_of(queries["multimodal_decode_stats"](spark, SF_ORACLE))
     # decode is a pure map pipeline: no exchange anywhere
     assert "Exchange" not in plan
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 def test_lsh_pair_join_computes_features_once(spark, queries):
@@ -79,7 +79,8 @@ def test_lsh_pair_join_computes_features_once(spark, queries):
         queries["dedup_embedding_cosine_pairs"](spark, SF_ORACLE), execute=True
     )
     final = plan.split("== Initial Plan ==")[0]  # AQE prints both plans
-    assert final.count("MapInPandas") == 3, final
+    stages = final.count("MapInPandas") + final.count("MapInArrow")
+    assert stages == 3, final
     assert (
         "TableCacheQueryStage" in final
         or "InMemoryTableScan" in final
