@@ -11,8 +11,13 @@ trick, main.go:275, maps to that directly).
 
 from __future__ import annotations
 
+import json
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -27,16 +32,44 @@ TABLES = (
     "embeddings",
 )
 
-# Set-once guard for the per-session SQL confs below and memo for the
-# scan split count load_for_compute probes (optimization round 11,
-# guide §1/§5: both are pure driver-side metadata — conf.set is two
-# py4j round-trips per load, and df.rdd.getNumPartitions() re-plans
-# the scan physically at ~80 ms per call, ~65 calls x 2 passes = ~10 s
-# of bench driver time. The split count of an immutable input under
-# fixed session confs is static, so one exact probe per
-# (application, sf_dir, table) is re-used; no DATA is memoized).
+# Set-once guard for the per-session SQL confs in load_table: conf.set
+# is two py4j round-trips per load.
 _SESSION_CONFED: set[str] = set()
-_SCAN_PARTS: dict[tuple[str, str, str], int] = {}
+
+# Two driver-side metadata memos; no DATA is memoized.
+#
+# _SCHEMAS: the schema Spark inferred for a table file, as the JVM
+# StructType and its JSON, keyed by (application, path, inode, size,
+# mtime_ns). Without it every load runs a one-task schema-inference job
+# ("parquet at NativeMethodAccessorImpl") even when the file was read a
+# moment ago. The first load in an
+# application still infers, after load_table has pinned nanosAsLong, so
+# the memo only ever holds Spark's own answer under the confs every
+# later load sees. A rewritten, replaced or new file changes the key
+# and is inferred again; a new application starts empty. Only regular
+# files are memoized: a directory (a partitioned dataset) can change
+# under an unchanged stat of its root, so it keeps plain inference.
+#
+# _SCAN_PARTS: the scan split count load_for_compute probes;
+# df.rdd.getNumPartitions() re-plans the scan physically at ~80 ms per
+# call. The count is static for unchanged input under fixed session
+# confs, so one exact probe per key is re-used. Its key is the same file
+# key (a directory: application and path), so a rewritten file is
+# probed again.
+_SCHEMAS: dict[tuple, tuple] = {}
+_SCAN_PARTS: dict[tuple, int] = {}
+
+
+def _file_key(app_id: str, path: str) -> tuple | None:
+    """(application, path, inode, size, mtime_ns) of a regular local
+    file; None for a directory, a missing path or a non-local URI."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (app_id, path, st.st_ino, st.st_size, st.st_mtime_ns)
 
 
 def _patch_pyspark_driver_overheads() -> None:
@@ -116,7 +149,26 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # _patch_pyspark_driver_overheads (guarded, results unchanged).
         _patch_pyspark_driver_overheads()
         _SESSION_CONFED.add(app_id)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    key = _file_key(app_id, path)
+    memo = _SCHEMAS.get(key) if key else None
+    if memo is None:
+        df = spark.read.parquet(path)
+        jschema = df._jdf.schema()
+        memo = (jschema, jschema.json())
+        if key:
+            _SCHEMAS[key] = memo
+    else:
+        # Hand the JVM StructType straight to the reader: what
+        # DataFrameReader.schema(StructType) does after re-parsing the
+        # schema's JSON in the JVM and looking up the active session
+        # (4 more py4j round-trips).
+        reader = spark.read
+        reader._jreader = reader._jreader.schema(memo[0])
+        df = reader.parquet(path)
+    # DataFrame.schema is a cached_property that asks the JVM for the
+    # same JSON; fill it from the memo (a fresh object per DataFrame).
+    df.__dict__["schema"] = StructType.fromJson(json.loads(memo[1]))
     # events.ts is TIMESTAMP(NANOS) parquet, surfaced as int64 epoch-ns
     # under spark.sql.legacy.parquet.nanosAsLong; convert to µs
     # timestamps with integer division (exact — doubles would lose
@@ -149,7 +201,9 @@ def load_for_compute(
     """
     df = load_table(spark, sf_dir, name)
     target = min_parallelism or spark.sparkContext.defaultParallelism
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    app_id = spark.sparkContext.applicationId
+    path = f"{sf_dir}/{name}.parquet"
+    key = _file_key(app_id, path) or (app_id, path)
     n_parts = _SCAN_PARTS.get(key)
     if n_parts is None:
         n_parts = df.rdd.getNumPartitions()

@@ -6,8 +6,9 @@ Impl sets use_int_hash_for_pods (cityHash64) route the ZERO-EXTENDED
 bit pattern through IntHash64Impl — replayed here by
 :class:`IntHash64Emitter`; the rest (sipHash64, xxHash64/32, the
 murmur family) apply the byte hash to the value's native
-little-endian layout (sizeof(T) bytes). Since round 9 the engine
-does the same (ch_compat._hash_arg_bytes / _city_one). The U64
+little-endian layout (sizeof(T) bytes). The engine does the same:
+ch_compat._hash_udf hands each argument to hash_np.hash_arrow, one
+Arrow kernel for every argument type. The U64
 subclasses replay the byte-stream algorithms in DuckDB HUGEINT with
 the input as a 64-bit VALUE instead of an ASCII string: byte k of
 the stream is plain arithmetic on the value ((v >> 8*(k-1)) & 0xFF),

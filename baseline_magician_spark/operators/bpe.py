@@ -121,13 +121,9 @@ def _pair_counts(vocab_syms: DataFrame) -> DataFrame:
 # broadcast-class metadata (word_token_counts broadcast-joins it), so
 # collecting (word, c) once for training spends the same budget class;
 # past the cap — a web-scale tail vocabulary — training falls back to
-# the distributed per-iteration loop. Env-overridable so a cluster
-# deployment can raise/lower it without code changes.
-import os as _os
-
-DRIVER_VOCAB_CAP = int(
-    _os.environ.get("BMS_BPE_DRIVER_VOCAB_CAP", "200000")
-)
+# the distributed per-iteration loop. Callers that need another
+# ceiling pass ``driver_vocab_cap=``.
+DRIVER_VOCAB_CAP = 200_000
 
 
 def _merge_once(syms: list, a: str, b: str, ab: str) -> list:

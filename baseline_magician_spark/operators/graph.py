@@ -23,8 +23,6 @@ DuckDB oracle (recursive-CTE label closure) must hash-match exactly.
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -42,8 +40,9 @@ LAST_ROUNDS: int = 0
 # bounded collect (union-find, min-id representative: the identical
 # fixpoint) instead of log-depth rounds of join jobs. Past the cap — a
 # web-scale pair graph — the distributed pointer-jumping loop below
-# runs unchanged. Env-overridable for cluster deployments.
-DRIVER_EDGE_CAP = int(_os.environ.get("BMS_CC_DRIVER_EDGE_CAP", "2000000"))
+# runs unchanged. Callers that need another ceiling pass
+# ``driver_edge_cap=``.
+DRIVER_EDGE_CAP = 2_000_000
 
 
 def _cc_driver(spark, pdf, a_type) -> DataFrame:

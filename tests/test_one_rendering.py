@@ -6,8 +6,9 @@ Spark-SQL text twin chooser (``col_sql``), no ANSI-off analysis scope
 (``wrap_arith``) and no model module that imports pyspark. Likewise no
 caller picks a join strategy (the IP-range join, the dialect's
 broadcast-right joins), a CDC setting or a media-stage setting. The
-media operators run on one Arrow stage shape, and each ClickHouse
-function name is registered once."""
+media operators run on one Arrow stage shape, each ClickHouse
+function name is registered once, and the package reads no ``BMS_*``
+environment variable."""
 
 from __future__ import annotations
 
@@ -192,3 +193,26 @@ def test_each_ch_function_registered_once():
         lines.setdefault(name, []).append(line)
     twice = {k: sorted(v) for k, v in lines.items() if len(v) > 1}
     assert not twice, twice
+
+
+def test_no_bms_environment_knobs():
+    """The package reads no ``BMS_*`` environment variable: a setting
+    that nothing sets is a constant, and a caller that needs another
+    value passes a keyword."""
+
+    def is_bms(node) -> bool:
+        return isinstance(node, ast.Constant) and str(node.value).startswith("BMS_")
+
+    offenders = []
+    for p in sorted(PKG.rglob("*.py")):
+        for n in ast.walk(ast.parse(p.read_text())):
+            if isinstance(n, ast.Call) and n.args and is_bms(n.args[0]):
+                target = ast.unparse(n.func)
+                hit = target.endswith("getenv") or ".environ." in f".{target}."
+            elif isinstance(n, ast.Subscript) and is_bms(n.slice):
+                hit = ast.unparse(n.value).endswith("environ")
+            else:
+                continue
+            if hit:
+                offenders.append(f"{p.relative_to(REPO)}:{n.lineno}")
+    assert not offenders, offenders
