@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import os
 import stat
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,6 +59,18 @@ _SESSION_CONFED: set[str] = set()
 # probed again.
 _SCHEMAS: dict[tuple, tuple] = {}
 _SCAN_PARTS: dict[tuple, int] = {}
+
+# A SparkContext's application id never changes, and reading it costs
+# two gateway commands, so it is read once per context object.
+_APP_IDS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _app_id(spark: SparkSession) -> str:
+    sc = spark.sparkContext
+    app_id = _APP_IDS.get(sc)
+    if app_id is None:
+        app_id = _APP_IDS[sc] = sc.applicationId
+    return app_id
 
 
 def _file_key(app_id: str, path: str) -> tuple | None:
@@ -133,7 +146,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # hand us a bare session. TIMESTAMP(NANOS) parquet errors outright
     # without nanosAsLong; UTC keeps timestamp rendering identical to
     # the DuckDB oracle on non-UTC machines. Set once per application.
-    app_id = spark.sparkContext.applicationId
+    app_id = _app_id(spark)
     if app_id not in _SESSION_CONFED:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -201,7 +214,7 @@ def load_for_compute(
     """
     df = load_table(spark, sf_dir, name)
     target = min_parallelism or spark.sparkContext.defaultParallelism
-    app_id = spark.sparkContext.applicationId
+    app_id = _app_id(spark)
     path = f"{sf_dir}/{name}.parquet"
     key = _file_key(app_id, path) or (app_id, path)
     n_parts = _SCAN_PARTS.get(key)

@@ -927,7 +927,7 @@ CH_FUNCTIONS: dict[str, Callable[..., Column]] = {
 
 
 def _register_udafs() -> None:
-    # grouped-agg pandas UDAFs (SURVEY §2.10) resolve by name like any
+    # grouped-agg Arrow UDAFs (SURVEY §2.10) resolve by name like any
     # CH aggregate; import deferred so ch_compat stays import-light
     from .udaf import UDAF_FUNCTIONS
 

@@ -43,7 +43,6 @@ __all__ = [
     "merge_pair",
     "bpe_train",
     "bpe_encode",
-    "bpe_encode_pandas",
     "word_token_counts",
     "doc_token_counts",
 ]
@@ -281,73 +280,6 @@ def bpe_encode(
     for _rank, a, b, _f in merges:
         syms = merge_pair(syms, a, b)
     return syms
-
-
-def bpe_encode_pandas(
-    words: DataFrame,
-    merges: list[tuple[int, str, str, int]],
-    word_col: str = "word",
-) -> DataFrame:
-    """Arrow-batched scale-path encoder: same semantics as
-    :func:`bpe_encode`, run in Python per batch. A production merge
-    table has 30k-100k ranks — far past what a nested Column fold
-    chain should express — so the scale path ships the table to the
-    executors once (captured in the closure, broadcast by Spark's
-    task serialization) and encodes with the classic min-rank
-    fixpoint over a pair->rank dict. Output: input columns +
-    ``syms array<string>``. Pinned value-identical to the Column
-    path in tests (the CDC pandas≡JVM pattern)."""
-    import pandas as pd
-
-    rank_of = {(a, b): r for r, a, b, _f in merges}
-    joined = {(a, b): a + b for _r, a, b, _f in merges}
-
-    def enc(w: str) -> list[str]:
-        syms = list(w)
-        while len(syms) >= 2:
-            best = None
-            for i in range(len(syms) - 1):
-                r = rank_of.get((syms[i], syms[i + 1]))
-                if r is not None and (best is None or r < best[0]):
-                    best = (r, syms[i], syms[i + 1])
-            if best is None:
-                break
-            _r, a, b = best
-            out, i = [], 0
-            while i < len(syms):
-                if (
-                    i + 1 < len(syms)
-                    and syms[i] == a
-                    and syms[i + 1] == b
-                ):
-                    out.append(joined[(a, b)])
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return syms
-
-    from pyspark.sql.types import (
-        ArrayType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    # fresh StructType: .add() mutates the frame's live schema object
-    schema = StructType(
-        list(words.schema.fields)
-        + [StructField("syms", ArrayType(StringType()))]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["syms"] = [enc(w) for w in pdf[word_col].astype(str)]
-            yield pdf
-
-    return words.mapInPandas(run, schema=schema)
 
 
 def word_token_counts(

@@ -32,7 +32,7 @@ peaks at 256 * 2^31.5 — every intermediate fits a signed long, in
 Spark and in the DuckDB BIGINT oracle replay
 (queries/dedup_q.py:_cdc_*_oracle).
 
-Scale shape: one map-side ``mapInPandas`` pass, no shuffle until the
+Scale shape: one map-side Arrow stage, no shuffle until the
 caller aggregates chunk fingerprints. The closed form runs as numpy
 vector ops — ``mask_bits`` shift-adds for the rolling states
 (uint64 wraparound is exact mod 2^61 because 2^64 is a multiple of
@@ -44,8 +44,13 @@ closed form in SQL.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from ..functions.hashing import POLY_BASE, POLY_MOD, POLY_SEED
+from ._arrow_stage import arrow_stage
 
 GOLD = 0x9E3779B9  # golden-ratio odd constant; gear table generator
 MOD = 1 << 61
@@ -62,8 +67,6 @@ def _pow_mod_np(base: int, n: int, mod: int):
     """numpy uint64 array of base^0..base^n (mod ``mod``), built by
     block doubling (log2(n) vectorized multiplies; every product is
     < mod^2 < 2^60, exact in uint64)."""
-    import numpy as np
-
     out = np.ones(1, dtype=np.uint64)
     m = np.uint64(mod)
     while len(out) <= n:
@@ -114,10 +117,6 @@ def _chunk_batch_np(texts, mask_bits: int, pw, ipw):
     document, so ``pw``/``ipw`` (B^i / B^-i tables) only need to
     cover the longest document. Every character is read once; no
     per-char Python loop."""
-    import numpy as np
-
-    from ..functions.hashing import POLY_MOD, POLY_SEED
-
     joined = "".join(texts)
     n = len(joined)
     empty = np.zeros(0, dtype=np.int64)
@@ -193,61 +192,36 @@ def cdc_chunks(
     """(id, chunk_ord, chunk_start, chunk_len, chunk_fp) — one row
     per content-defined chunk; chunk_start is 1-based and chunk_fp is
     the engine's cross-engine polynomial hash of the chunk text.
-    Empty documents produce no rows (no characters, no chunks). One
-    ``mapInPandas`` pass with the numpy closed form
+    Empty and NULL documents produce no rows (no characters, no
+    chunks). One Arrow stage with the numpy closed form
     (:func:`_chunk_batch_np`); narrow, no shuffle. The output id
-    column keeps the SOURCE id dtype (string doc ids work, not just
-    bigint)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from ..functions.hashing import POLY_BASE, POLY_MOD
-    from ..pyship import ensure_shipped
-
-    ensure_shipped(docs.sparkSession)
+    column is the SOURCE id's Arrow values (string doc ids work, and a
+    NULL id stays NULL)."""
     src = docs.where(F.length(F.col(text_col)) > 0).select(
         F.col(id_col), F.col(text_col).alias("_t")
     )
-    id_type = docs.schema[id_col].dataType
-
-    def gen(batches):
-        import pandas as pd
-
-        binv = pow(POLY_BASE, POLY_MOD - 2, POLY_MOD)
-        pw = _pow_mod_np(POLY_BASE, 0, POLY_MOD)
-        ipw = _pow_mod_np(binv, 0, POLY_MOD)
-        for pdf in batches:
-            texts = list(pdf["_t"])
-            maxlen = max(map(len, texts)) if texts else 0
-            if len(pw) <= maxlen:
-                pw = _pow_mod_np(POLY_BASE, maxlen, POLY_MOD)
-                ipw = _pow_mod_np(binv, maxlen, POLY_MOD)
-            d_of, ords, starts, lens, fps = _chunk_batch_np(
-                texts, MASK_BITS, pw, ipw
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy()[d_of]
-                    if len(d_of)
-                    else pdf[id_col].iloc[:0],
-                    "chunk_ord": ords,
-                    "chunk_start": starts,
-                    "chunk_len": lens,
-                    "chunk_fp": fps,
-                }
-            )
-
-    return src.mapInPandas(
-        gen,
-        schema=StructType(
-            [StructField(id_col, id_type)]
-            + [
-                StructField(c, LongType())
-                for c in (
-                    "chunk_ord", "chunk_start", "chunk_len", "chunk_fp"
-                )
-            ]
-        ),
+    schema = StructType(
+        [StructField(id_col, docs.schema[id_col].dataType)]
+        + [
+            StructField(c, LongType())
+            for c in ("chunk_ord", "chunk_start", "chunk_len", "chunk_fp")
+        ]
     )
+    binv = pow(POLY_BASE, POLY_MOD - 2, POLY_MOD)
+    pows = [np.ones(1, np.uint64), np.ones(1, np.uint64)]  # B^i, B^-i
+
+    def body(batch):
+        texts = batch.column("_t").to_pylist()
+        maxlen = max(map(len, texts))
+        if len(pows[0]) <= maxlen:
+            pows[:] = [
+                _pow_mod_np(POLY_BASE, maxlen, POLY_MOD),
+                _pow_mod_np(binv, maxlen, POLY_MOD),
+            ]
+        d_of, *cols = _chunk_batch_np(texts, MASK_BITS, *pows)
+        return [batch.column(id_col).take(d_of), *cols]
+
+    return arrow_stage(src, "cdc_chunks", schema, body)
 
 
 def cdc_shared_chunks(

@@ -4,7 +4,7 @@ Every variant keeps the expensive parts map-side:
 
 - **exact**: hash-groupBy on md5(text). One shuffle on a uniform key.
 - **MinHash + LSH**: signatures and band hashes are computed per row in
-  one Arrow-batched numpy pass (shingle -> k permuted hashes -> min ->
+  one Arrow stage (``_arrow_stage.arrow_stage``, numpy over each batch) (shingle -> k permuted hashes -> min ->
   band hash) — NO explode/shuffle for signature computation, unlike
   the textbook unnest-and-regroup formulation. Only the tiny (doc,
   band, bandhash) relation shuffles for the LSH bucket self-join.
@@ -19,8 +19,19 @@ polynomial hash in functions.hashing, not engine-native hashes.
 
 from __future__ import annotations
 
+import re
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..functions.hashing import (
     POLY_BASE,
@@ -28,6 +39,7 @@ from ..functions.hashing import (
     POLY_SEED,
     minhash_params,
 )
+from ._arrow_stage import arrow_stage
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -47,6 +59,15 @@ def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
+_SPLIT_WS = re.compile("[ \t\n\x0b\f\r]+").split
+
+
+def _tokens(s: str | None) -> list[str]:
+    """The tokens of one text, as :func:`_token_hashes_np` defines them;
+    a NULL text has none, like an empty one."""
+    return [t for t in _SPLIT_WS(s.strip(" ")) if t] if s else []
+
+
 def _token_hashes_np(texts):
     """Per-token (poly hash seed 0, 31^len mod p) for a batch of
     documents, flattened across docs — the shared numpy tokenizer +
@@ -63,15 +84,7 @@ def _token_hashes_np(texts):
     31^len table lookups, and per-doc token counts. th/pw are empty
     when the batch has no tokens.
     """
-    import re
-
-    import numpy as np
-
-    split_ws = re.compile("[ \t\n\x0b\f\r]+").split
-    tok_lists = [
-        [t for t in split_ws(s.strip(" ")) if t] if s else []
-        for s in texts
-    ]
+    tok_lists = [_tokens(s) for s in texts]
     tok_counts = np.fromiter(
         (len(ts) for ts in tok_lists), dtype=np.int64, count=len(tok_lists)
     )
@@ -120,8 +133,6 @@ def _shingle_hashes_np(texts, n: int):
     docs, the per-doc segment starts into ``sh``, and the per-doc
     shingle counts (0 for docs with < n tokens).
     """
-    import numpy as np
-
     th, pw, tok_counts = _token_hashes_np(texts)
     n_sh = np.maximum(tok_counts - (n - 1), 0)
     seg = np.concatenate([[0], np.cumsum(n_sh)[:-1]])
@@ -143,8 +154,6 @@ def _shingle_hashes_np(texts, n: int):
 
 def _ranges_np(counts):
     """[0..c0-1, 0..c1-1, ...] — per-segment position indices."""
-    import numpy as np
-
     total = int(counts.sum())
     if total == 0:
         return np.zeros(0, dtype=np.int64)
@@ -163,7 +172,8 @@ def minhash_band_relation(
 ) -> DataFrame:
     """(_id, band, bh) — one row per (document, LSH band): the bucket
     relation both sides of the LSH self-join consume. Docs with no
-    shingles (< shingle_n tokens) emit nothing.
+    shingles (< shingle_n tokens) emit nothing; a NULL text reads as
+    empty, and the id passes through as its Arrow value, NULL included.
 
     Computed in ONE Arrow-batched numpy pass (guide §4.2 — the
     interpreted higher-order-function fold it replaced was the
@@ -180,61 +190,39 @@ def minhash_band_relation(
             "silently excluded from banding, lowering recall below "
             "what the parameters imply"
         )
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    from ..pyship import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
     params = minhash_params(k)
     n_bands = k // rows_per_band
-    id_type = df.schema[id_col].dataType
-    src = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        mod = np.int64(POLY_MOD)
-        for pdf in batches:
-            texts = pdf["_t"].astype(object).fillna("").tolist()
-            sh, seg, n_sh = _shingle_hashes_np(texts, shingle_n)
-            keep = n_sh > 0
-            if not keep.any():
-                continue
-            seg_keep = seg[keep]
-            # k permuted mins per doc -> band hashes, all segment ops
-            sig = np.empty((k, int(keep.sum())), dtype=np.int64)
-            for i, (a, b) in enumerate(params):
-                perm = (sh * np.int64(a) + np.int64(b)) % mod
-                sig[i] = np.minimum.reduceat(perm, seg_keep)
-            bhs = np.empty((n_bands, sig.shape[1]), dtype=np.int64)
-            for b in range(n_bands):
-                bh = np.full(sig.shape[1], 7, dtype=np.int64)
-                for r in range(rows_per_band):
-                    bh = (bh * POLY_BASE + sig[b * rows_per_band + r]) % mod
-                bhs[b] = bh
-            ids = pdf["_id"].iloc[np.flatnonzero(keep)]
-            yield pd.DataFrame(
-                {
-                    "_id": np.tile(ids.to_numpy(), n_bands),
-                    "band": np.repeat(
-                        np.arange(n_bands, dtype=np.int32),
-                        sig.shape[1],
-                    ),
-                    "bh": bhs.reshape(-1),
-                }
-            )
-
-    return src.mapInPandas(
-        gen,
-        schema=StructType(
-            [
-                StructField("_id", id_type),
-                StructField("band", IntegerType()),
-                StructField("bh", LongType()),
-            ]
-        ),
+    mod = np.int64(POLY_MOD)
+    schema = StructType(
+        [
+            StructField("_id", df.schema[id_col].dataType),
+            StructField("band", IntegerType()),
+            StructField("bh", LongType()),
+        ]
     )
+
+    def body(batch):
+        sh, seg, n_sh = _shingle_hashes_np(batch.column("_t").to_pylist(), shingle_n)
+        keep = np.flatnonzero(n_sh > 0)
+        # k permuted mins per doc -> band hashes, all segment ops
+        sig = np.empty((k, len(keep)), dtype=np.int64)
+        for i, (a, b) in enumerate(params):
+            perm = (sh * np.int64(a) + np.int64(b)) % mod
+            sig[i] = np.minimum.reduceat(perm, seg[keep])
+        bhs = np.empty((n_bands, len(keep)), dtype=np.int64)
+        for b in range(n_bands):
+            bh = np.full(len(keep), 7, dtype=np.int64)
+            for r in range(rows_per_band):
+                bh = (bh * POLY_BASE + sig[b * rows_per_band + r]) % mod
+            bhs[b] = bh
+        return [
+            batch.column("_id").take(np.tile(keep, n_bands)),
+            np.repeat(np.arange(n_bands, dtype=np.int32), len(keep)),
+            bhs.reshape(-1),
+        ]
+
+    src = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
+    return arrow_stage(src, "minhash_band", schema, body)
 
 
 def shingle_hash_relation(
@@ -247,56 +235,36 @@ def shingle_hash_relation(
     per-doc distinct mirrors :func:`~..functions.hashing.shingle_hashes`'s
     ``array_distinct``, which the Jaccard set sizes and
     decontamination counts depend on). Docs with < n tokens emit
-    nothing, like the empty-array explode.
+    nothing, like the empty-array explode; a NULL text reads as empty,
+    and the id passes through as its Arrow value, NULL included.
 
     Computed in one Arrow-batched numpy pass (guide §4.2 — same
     measured hot spot as the MinHash signature fold); pinned against
     ``explode(shingle_hashes(...))`` in tests/test_minhash_np.py.
     """
-    from ..pyship import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    id_type = df.schema[id_col].dataType
-    src = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            texts = pdf["_t"].astype(object).fillna("").tolist()
-            sh, seg, n_sh = _shingle_hashes_np(texts, n)
-            if len(sh) == 0:
-                continue
-            # per-doc distinct: one sort over (doc-index << 31 | h)
-            # composite keys — ONLY sound while h < 2^31 (ADVICE r11
-            # #3: raising POLY_MOD past 2^31 would silently corrupt
-            # the distinct; fail loudly instead)
-            assert POLY_MOD <= (1 << 31), (
-                "shingle_hash_relation packs (doc_idx << 31) | h; "
-                f"POLY_MOD={POLY_MOD} no longer fits 31 bits"
-            )
-            doc_idx = np.repeat(
-                np.arange(len(texts), dtype=np.int64), n_sh
-            )
-            uniq = np.unique((doc_idx << np.int64(31)) | sh)
-            u_idx = uniq >> np.int64(31)
-            u_h = uniq & np.int64((1 << 31) - 1)
-            yield pd.DataFrame(
-                {
-                    "_id": pdf["_id"].iloc[u_idx].to_numpy(),
-                    "h": u_h,
-                }
-            )
-
-    return src.mapInPandas(
-        gen,
-        schema=StructType(
-            [StructField("_id", id_type), StructField("h", LongType())]
-        ),
+    schema = StructType(
+        [StructField("_id", df.schema[id_col].dataType), StructField("h", LongType())]
     )
+
+    def body(batch):
+        sh, _seg, n_sh = _shingle_hashes_np(batch.column("_t").to_pylist(), n)
+        # per-doc distinct: one sort over (doc-index << 31 | h)
+        # composite keys — ONLY sound while h < 2^31 (ADVICE r11
+        # #3: raising POLY_MOD past 2^31 would silently corrupt
+        # the distinct; fail loudly instead)
+        assert POLY_MOD <= (1 << 31), (
+            "shingle_hash_relation packs (doc_idx << 31) | h; "
+            f"POLY_MOD={POLY_MOD} no longer fits 31 bits"
+        )
+        doc_idx = np.repeat(np.arange(len(n_sh), dtype=np.int64), n_sh)
+        uniq = np.unique((doc_idx << np.int64(31)) | sh)
+        return [
+            batch.column("_id").take(uniq >> np.int64(31)),
+            uniq & np.int64((1 << 31) - 1),
+        ]
+
+    src = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
+    return arrow_stage(src, "shingle_hash", schema, body)
 
 
 def shingle_term_relation(
@@ -312,56 +280,45 @@ def shingle_term_relation(
     :func:`shingle_hashes` uses — every character hashed once), so
     Bloom/CMS-style consumers skip the interpreted per-term char fold
     entirely while keeping the term string for exact joins. The
-    distinct is on the TERM STRING (pandas drop_duplicates), matching
-    ``array_distinct(token_shingles(...))`` even under hash
+    distinct is on the TERM STRING (first occurrence per document),
+    matching ``array_distinct(token_shingles(...))`` even under hash
     collisions. ``text_col`` may be any string Column (e.g.
     ``F.lower(text)``) — normalization stays JVM-side so case
     semantics match the expression path. Docs with < n tokens emit
-    nothing, like the empty-array explode."""
-    import re
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from ..pyship import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
+    nothing, like the empty-array explode; a NULL text reads as empty.
+    The id columns pass through as Arrow arrays, NULLs included."""
     text_c = F.col(text_col) if isinstance(text_col, str) else text_col
-    src = df.select(*id_cols, text_c.alias("_t"))
     schema = StructType(
         [df.schema[c] for c in id_cols]
         + [StructField("term", StringType()), StructField("_h", LongType())]
     )
-    split_ws = re.compile("[ \t\n\x0b\f\r]+").split
 
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
+    def body(batch):
+        texts = batch.column("_t").to_pylist()
+        sh, _seg, _n_sh = _shingle_hashes_np(texts, n)
+        # (doc, term) distinct, first occurrence kept; shingle j of the
+        # batch is sh[j], in the order the loop below meets it
+        rows, terms, first, j = [], [], [], 0
+        for d, s in enumerate(texts):
+            toks = _tokens(s)
+            seen = set()
+            for i in range(len(toks) - (n - 1)):
+                term = " ".join(toks[i : i + n])
+                if term not in seen:
+                    seen.add(term)
+                    rows.append(d)
+                    terms.append(term)
+                    first.append(j)
+                j += 1
+        rows = np.asarray(rows, dtype=np.int64)
+        return [
+            *(batch.column(c).take(rows) for c in id_cols),
+            terms,
+            sh[np.asarray(first, dtype=np.int64)],
+        ]
 
-        for pdf in batches:
-            texts = pdf["_t"].astype(object).fillna("").tolist()
-            sh, _seg, n_sh = _shingle_hashes_np(texts, n)
-            if len(sh) == 0:
-                continue
-            terms: list[str] = []
-            for s in texts:
-                toks = (
-                    [t for t in split_ws(s.strip(" ")) if t] if s else []
-                )
-                for i in range(len(toks) - (n - 1)):
-                    terms.append(" ".join(toks[i : i + n]))
-            doc_idx = np.repeat(np.arange(len(texts)), n_sh)
-            out = pd.DataFrame(
-                {c: pdf[c].iloc[doc_idx].to_numpy() for c in id_cols}
-            )
-            out["term"] = terms
-            out["_h"] = sh
-            out["_d"] = doc_idx
-            out = out.drop_duplicates(subset=["_d", "term"]).drop(
-                columns="_d"
-            )
-            yield out
-
-    return src.mapInPandas(gen, schema=schema)
+    src = df.select(*id_cols, text_c.alias("_t"))
+    return arrow_stage(src, "shingle_term", schema, body)
 
 
 def minhash_lsh_pairs(
@@ -448,55 +405,35 @@ def simhash_relation(
     — as a per-token x per-bit zip_with fold it was interpreted JVM
     expression evaluation, the same hot spot as the MinHash
     signature). Degenerate rows: NULL text -> NULL fingerprint, zero
-    tokens -> all ``bits`` bits set (zero votes are >= 0).
+    tokens -> all ``bits`` bits set (zero votes are >= 0). The id
+    passes through as its Arrow value, NULL included.
     """
-    from ..pyship import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    id_type = df.schema[id_col].dataType
-    src = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        mod = np.int64(POLY_MOD)
-        all_ones = np.int64((1 << bits) - 1)
-        for pdf in batches:
-            raw = pdf["_t"].astype(object)
-            isnull = raw.isna().to_numpy()
-            texts = raw.fillna("").tolist()
-            th0, pw, tok_counts = _token_hashes_np(texts)
-            # seed-7 token hash from the seed-0 fold:
-            # h_seed(tok) = (seed * 31^len + h_0(tok)) mod p
-            th = (np.int64(POLY_SEED) * pw + th0) % mod
-            sh = np.full(len(texts), all_ones, dtype=np.int64)
-            has = tok_counts > 0
-            if has.any():
-                seg = np.concatenate(
-                    [[0], np.cumsum(tok_counts)[:-1]]
-                )[has]
-                acc = np.zeros(int(has.sum()), dtype=np.int64)
-                for j in range(bits):
-                    votes = np.add.reduceat(
-                        ((th >> np.int64(j)) & 1) * 2 - 1, seg
-                    )
-                    acc += (votes >= 0).astype(np.int64) << np.int64(j)
-                sh[has] = acc
-            out = pd.DataFrame({"_id": pdf["_id"], "sh": sh})
-            if isnull.any():
-                out["sh"] = out["sh"].astype("object")
-                out.loc[isnull, "sh"] = None
-            yield out
-
-    return src.mapInPandas(
-        gen,
-        schema=StructType(
-            [StructField("_id", id_type), StructField("sh", LongType())]
-        ),
+    mod = np.int64(POLY_MOD)
+    all_ones = np.int64((1 << bits) - 1)
+    schema = StructType(
+        [StructField("_id", df.schema[id_col].dataType), StructField("sh", LongType())]
     )
+
+    def body(batch):
+        text = batch.column("_t")
+        th0, pw, tok_counts = _token_hashes_np(text.to_pylist())
+        # seed-7 token hash from the seed-0 fold:
+        # h_seed(tok) = (seed * 31^len + h_0(tok)) mod p
+        th = (np.int64(POLY_SEED) * pw + th0) % mod
+        sh = np.full(len(text), all_ones, dtype=np.int64)
+        has = tok_counts > 0
+        if has.any():
+            seg = np.concatenate([[0], np.cumsum(tok_counts)[:-1]])[has]
+            acc = np.zeros(int(has.sum()), dtype=np.int64)
+            for j in range(bits):
+                votes = np.add.reduceat(((th >> np.int64(j)) & 1) * 2 - 1, seg)
+                acc += (votes >= 0).astype(np.int64) << np.int64(j)
+            sh[has] = acc
+        isnull = text.is_null().to_numpy(zero_copy_only=False)
+        return [batch.column("_id"), pa.array(sh, mask=isnull)]
+
+    src = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
+    return arrow_stage(src, "simhash", schema, body)
 
 
 def ngram_jaccard_pairs(

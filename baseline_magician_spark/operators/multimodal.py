@@ -8,10 +8,11 @@ Design (the 100 TB shape):
   Catalyst — it flows through scans/shuffles as opaque bytes; only
   explicitly-invoked Python stages touch it.
 
-- Every operator here is one ``mapInArrow`` stage built by
-  :func:`_stage`: each Arrow ``RecordBatch`` goes to a per-batch body
-  that reads and writes Arrow arrays, with a declared output schema and
-  no pandas in between (a nullable bigint stays int64, never float64).
+- Every operator here is one ``mapInArrow`` stage built by the
+  package's stage helper (:mod:`._arrow_stage`): each Arrow
+  ``RecordBatch`` goes to a per-batch body that reads and writes Arrow
+  arrays, with a declared output schema and no pandas in between (a
+  nullable bigint stays int64, never float64).
   Each stage is embarrassingly parallel per partition (no shuffle). The
   byte statistics read the Arrow offsets and data buffer directly, and a
   NULL payload raises rather than reading as an empty one.
@@ -49,7 +50,7 @@ the training-data-pipeline extension surface.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable
 from functools import partial
 
 import numpy as np
@@ -58,9 +59,8 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..pyship import ensure_shipped
+from ._arrow_stage import arrow_stage
 
 # payload byte model — keep in sync with the oracle SQL in
 # queries/multimodal_q.py
@@ -85,41 +85,6 @@ META_SCHEMA = T.StructType(
 
 FEATURE_DIM = 8  # stripes per extract_features vector
 FRAME_SAMPLE_EVERY = 4  # sample_frames keeps frames 0, 4, 8, ...
-
-
-def _stage(
-    df: DataFrame,
-    name: str,
-    schema: T.StructType,
-    body: Callable[[pa.RecordBatch], Sequence],
-    read: str,
-    cols: Sequence[str] = (),
-) -> DataFrame:
-    """The one Python stage of this module: a single ``mapInArrow`` over
-    ``df`` (only its ``cols`` when given) whose ``body`` maps each
-    non-empty Arrow batch to the columns of ``schema``, as Arrow arrays
-    or anything ``pa.array`` converts to the declared type. A NULL in
-    the column the body reads, ``read``, raises ``ValueError`` naming
-    ``name``: a NULL payload is not an empty one."""
-    ensure_shipped(df.sparkSession)
-    out = to_arrow_schema(schema)
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            if nulls := batch.column(read).null_count:
-                raise ValueError(
-                    f"{name}: {read} is NULL in {nulls} row(s); {name} "
-                    f"reads every row's {read}, and NULL is not empty"
-                )
-            arrays = body(batch)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(a, type=f.type) for a, f in zip(arrays, out, strict=True)],
-                schema=out,
-            )
-
-    return (df.select(*cols) if cols else df).mapInArrow(run, schema)
 
 
 def _floor4(x: np.ndarray) -> np.ndarray:
@@ -185,7 +150,7 @@ def _attach(
         rows = [encode(d) for d in batch.column("doc_id").to_pylist()]
         return [*batch.columns, [p for p, _ in rows], [m for _, m in rows]]
 
-    return _stage(df, name, schema, body, read="doc_id")
+    return arrow_stage(df, name, schema, body, nonnull=("doc_id",))
 
 
 def _raw_row(d: int) -> tuple[bytes, tuple]:
@@ -731,9 +696,9 @@ def pcm_stats(decoded: DataFrame) -> DataFrame:
     def body(batch: pa.RecordBatch) -> list:
         return [batch.column("doc_id"), *_byte_stats(batch.column("pixels"))]
 
-    return _stage(
+    return arrow_stage(
         decoded, "pcm_stats", PCM_STATS_SCHEMA, body,
-        read="pixels", cols=("doc_id", "pixels"),
+        nonnull=("pixels",), cols=("doc_id", "pixels"),
     )
 
 
@@ -762,9 +727,9 @@ def decode_media(df: DataFrame, decoder=None) -> DataFrame:
             *([r[k] for r in rows] for k in ("width", "height", "n_frames", "pixels")),
         ]
 
-    return _stage(
+    return arrow_stage(
         df, "decode_media", DECODED_SCHEMA, body,
-        read="payload", cols=("doc_id", "payload", "meta"),
+        nonnull=("payload",), cols=("doc_id", "payload", "meta"),
     )
 
 
@@ -797,9 +762,9 @@ def decode_stats(media: DataFrame) -> DataFrame:
             *_byte_stats(batch.column("payload")),
         ]
 
-    return _stage(
+    return arrow_stage(
         media, "decode_stats", DECODE_STATS_SCHEMA, body,
-        read="payload", cols=("doc_id", "payload", "meta"),
+        nonnull=("payload",), cols=("doc_id", "payload", "meta"),
     )
 
 
@@ -826,9 +791,9 @@ def extract_features(media: DataFrame) -> DataFrame:
         offsets = np.arange(0, n * FEATURE_DIM + 1, FEATURE_DIM, dtype=np.int32)
         return [batch.column("doc_id"), pa.ListArray.from_arrays(offsets, means)]
 
-    return _stage(
+    return arrow_stage(
         media, "extract_features", out_schema, body,
-        read="payload", cols=("doc_id", "payload"),
+        nonnull=("payload",), cols=("doc_id", "payload"),
     )
 
 
@@ -851,9 +816,9 @@ def sample_frames(media: DataFrame) -> DataFrame:
         return [doc_id, k[keep], frames[keep].sum(axis=1)]
 
     videos = media.where(F.col("meta.media_type") == "video")
-    return _stage(
+    return arrow_stage(
         videos, "sample_frames", out_schema, body,
-        read="payload", cols=("doc_id", "payload"),
+        nonnull=("payload",), cols=("doc_id", "payload"),
     )
 
 
@@ -882,7 +847,7 @@ def resize_stub(media: DataFrame, new_width: int, new_height: int) -> DataFrame:
         ]
         return out
 
-    return _stage(media, "resize_stub", media.schema, body, read="payload")
+    return arrow_stage(media, "resize_stub", media.schema, body, nonnull=("payload",))
 
 
 AUDIO_WINDOW = FRAME_BYTES  # samples per RMS window
@@ -909,9 +874,9 @@ def audio_window_rms(media: DataFrame) -> DataFrame:
         rms = _floor4(np.sqrt((s * s).sum(axis=1) / AUDIO_WINDOW))
         return [batch.column("doc_id").take(rows), k, rms]
 
-    return _stage(
+    return arrow_stage(
         media, "audio_window_rms", out_schema, body,
-        read="payload", cols=("doc_id", "payload"),
+        nonnull=("payload",), cols=("doc_id", "payload"),
     )
 
 
@@ -940,7 +905,7 @@ def frame_deltas(media: DataFrame) -> DataFrame:
         doc_id = batch.column("doc_id").take(rows[1:][same])
         return [doc_id, k[1:][same], delta, delta > SCENE_CUT_THRESHOLD]
 
-    return _stage(
+    return arrow_stage(
         media, "frame_deltas", out_schema, body,
-        read="payload", cols=("doc_id", "payload"),
+        nonnull=("payload",), cols=("doc_id", "payload"),
     )

@@ -24,8 +24,19 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+)
+
+from ._arrow_stage import arrow_stage
 
 # Hyperplane component for (plane p, dim d): pseudo-random signed value
 # from pure integer arithmetic — identical in Spark and any SQL oracle.
@@ -242,7 +253,7 @@ def lsh_bucketed_pairs(
       add order as the fold — bit-identical results).
     - The pre-explode ``repartition(_bucket)`` exchange is computed
       once and reused by both join sides, so the upstream feature
-      pipeline (often a Python mapInPandas stage) runs a single time.
+      pipeline (often a Python Arrow stage) runs a single time.
     """
     with_bucket = _lsh_bucket_relation(
         embeddings.select(
@@ -256,7 +267,7 @@ def lsh_bucketed_pairs(
     ).repartition("_bucket")
     if salt == "auto":
         # The histogram job would otherwise re-run the upstream
-        # feature pipeline (often a Python mapInPandas stage) a third
+        # feature pipeline (often a Python Arrow stage) a third
         # time — persist the tiny (id, vec, norm, bucket) projection
         # so histogram + both join sides read one materialization.
         # Blocks are O(corpus × vec) and evict LRU.
@@ -443,17 +454,6 @@ def pq_encode(
     Arrow-batched numpy pass, no shuffle: per subspace the argmin
     squared-L2 code, ties to the lowest code id (guide §4.2).
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from ..pyship import ensure_shipped
-
-    ensure_shipped(embeddings.sparkSession)
     pq_tables = _pq_tables_np(codebooks)
     schema = StructType(
         [
@@ -462,25 +462,15 @@ def pq_encode(
             StructField("_recon", ArrayType(DoubleType())),
         ]
     )
-    src = embeddings.select(id_col, F.col(vec_col).alias("_vec"))
 
-    def gen(batches):
-        import pandas as pd
+    def body(batch):
+        codes, recon = _np_pq_encode(_np_vecs(batch.column(1), vec_col), pq_tables)
+        return [batch.column(0), _np_lists(codes), _np_lists(recon)]
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = _np_stack_vecs(pdf["_vec"], vec_col)
-            codes, recon = _np_pq_encode(V, pq_tables)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "codes": list(codes),
-                    "_recon": list(recon),
-                }
-            )
-
-    return src.mapInPandas(gen, schema=schema)
+    return arrow_stage(
+        embeddings.select(id_col, F.col(vec_col).alias("_vec")),
+        "pq_encode", schema, body, nonnull=("_vec",),
+    )
 
 
 def pq_adc_topk(
@@ -936,14 +926,23 @@ def binary_rerank_topk(
 
 # ------------------------------------------------------ numpy kernels
 # Guide §4.2: IVF assignment and probing, PQ encoding, LSH bucketing and
-# the per-pair cosine/L2 rescore run as Arrow-batched numpy. As JVM
-# higher-order-function folds they were interpreted per row (Spark does
-# not codegen lambda bodies) and their expression trees dominated plan
-# build time. The kernels keep the fold order of :func:`dot`,
-# :func:`norm` and :func:`l2_sq` (loop over dims, vectorize over rows),
-# so each double equals the DuckDB oracles' left-to-right folds, and
-# every argmax/argmin/sort uses uint64 keys whose order equals
-# java.lang.Double.compare's total order (ties, NaN, -0.0).
+# the per-pair cosine/L2 rescore run as numpy over Arrow batches, each
+# one :func:`arrow_stage`. As JVM higher-order-function folds they were
+# interpreted per row (Spark does not codegen lambda bodies) and their
+# expression trees dominated plan build time. The kernels keep the fold
+# order of :func:`dot`, :func:`norm` and :func:`l2_sq` (loop over dims,
+# vectorize over rows), so each double equals the DuckDB oracles'
+# left-to-right folds, and every argmax/argmin/sort uses uint64 keys
+# whose order equals java.lang.Double.compare's total order (ties, NaN,
+# -0.0).
+#
+# NULL contract, shared by every kernel below: a NULL vector raises the
+# stage's named ValueError, and a NULL element or a ragged batch raises
+# in :func:`_np_vecs`. Ids and passthrough columns are never read, so
+# any value, NULL included, passes through bit for bit. A zero-norm
+# vector's cosine is 0/0, returned as the IEEE NaN, never NULL. SQL
+# division differs there (DuckDB gives NULL, ANSI Spark raises), so the
+# oracles do not cover a zero vector; the embeddings table has none.
 # tests/test_similarity_np.py pins each kernel against a pure-Python
 # fold.
 
@@ -953,8 +952,6 @@ def _np_dkeys(x):
     (-0.0 < 0.0; every NaN equal to every NaN and greater than +inf) —
     the total order Spark's struct array_max/array_min/array_sort and
     window ORDER BY use on doubles."""
-    import numpy as np
-
     x = np.ascontiguousarray(x, dtype=np.float64)
     x = np.where(np.isnan(x), np.float64("nan"), x)  # canonical NaN bits
     b = x.view(np.uint64)
@@ -964,32 +961,35 @@ def _np_dkeys(x):
     )
 
 
-def _np_stack_vecs(series, what: str):
-    """pandas Series of fixed-dim float vectors -> (n, d) float64.
-
-    Raises on NULL or ragged rows: every relation these kernels serve
+def _np_vecs(arr: pa.Array, what: str) -> np.ndarray:
+    """An Arrow list array of fixed-dim float vectors -> (n, d) float64,
+    read from its offsets and flattened values. Raises on a NULL vector,
+    a NULL element or a ragged batch: every relation these kernels serve
     (the embeddings table and projections of it) is uniform-dim and
-    non-null by construction, and silently padding/propagating would
-    corrupt results — fail loudly instead."""
-    import numpy as np
+    non-null by construction, and a padded or NaN-filled row would
+    corrupt results silently."""
+    if arr.null_count:
+        raise ValueError(f"{what}: NULL vector in Arrow batch")
+    lens = np.diff(arr.offsets.to_numpy())
+    flat = arr.flatten()
+    if flat.null_count:
+        raise ValueError(f"{what}: NULL vector element in Arrow batch")
+    d = int(lens[0]) if len(lens) else 0
+    if (lens != d).any():
+        raise ValueError(f"{what}: ragged vectors in Arrow batch")
+    return flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(len(lens), d)
 
-    vals = series.to_numpy()
-    if len(vals) == 0:
-        return np.zeros((0, 0))
-    try:
-        out = np.stack([np.asarray(v, dtype=np.float64) for v in vals])
-    except (TypeError, ValueError) as ex:
-        raise ValueError(
-            f"{what}: NULL or ragged vector in Arrow batch"
-        ) from ex
-    return out
+
+def _np_lists(M: np.ndarray) -> pa.ListArray:
+    """(n, w) matrix -> an Arrow list array of n length-w rows."""
+    n, w = M.shape
+    offsets = pa.array(np.arange(n + 1, dtype=np.int32) * np.int32(w))
+    return pa.ListArray.from_arrays(offsets, pa.array(M.reshape(-1)))
 
 
 def _np_seq_norm(V):
     """Row norms with the exact fold order of :func:`norm` (left-to-
     right sum of squares, then sqrt — both IEEE-identical per row)."""
-    import numpy as np
-
     acc = np.zeros(V.shape[0])
     for j in range(V.shape[1]):
         acc = acc + V[:, j] * V[:, j]
@@ -999,8 +999,6 @@ def _np_seq_norm(V):
 def _np_seq_dot_mat(V, C):
     """(n, K) dot products of every row of V with every row of C, fold
     order per (row, k) identical to :func:`dot`."""
-    import numpy as np
-
     acc = np.zeros((V.shape[0], C.shape[0]))
     for j in range(V.shape[1]):
         acc = acc + V[:, j, None] * C[None, :, j]
@@ -1008,8 +1006,6 @@ def _np_seq_dot_mat(V, C):
 
 
 def _np_seq_dot_pairs(A, B):
-    import numpy as np
-
     acc = np.zeros(A.shape[0])
     for j in range(A.shape[1]):
         acc = acc + A[:, j] * B[:, j]
@@ -1018,8 +1014,6 @@ def _np_seq_dot_pairs(A, B):
 
 def _np_seq_l2_pairs(A, B):
     """Row-aligned squared L2, fold order identical to :func:`l2_sq`."""
-    import numpy as np
-
     acc = np.zeros(A.shape[0])
     for j in range(A.shape[1]):
         d = A[:, j] - B[:, j]
@@ -1032,8 +1026,6 @@ def _centroid_np(centroids: list[tuple[int, list[float]]]):
     driver-side left-to-right sum of squares then IEEE sqrt, the fold
     order of :func:`norm` and of the row norms."""
     import math
-
-    import numpy as np
 
     cids = np.asarray([int(c) for c, _ in centroids], dtype=np.int64)
     C = np.asarray(
@@ -1050,8 +1042,6 @@ def _centroid_np(centroids: list[tuple[int, list[float]]]):
 
 def _pq_tables_np(codebooks: list[list[tuple[int, list[float]]]]):
     """Per-subspace (codes int64, CB (n_codes, sub) float64) tables."""
-    import numpy as np
-
     return [
         (
             np.asarray([int(c) for c, _ in cb], dtype=np.int64),
@@ -1063,19 +1053,23 @@ def _pq_tables_np(codebooks: list[list[tuple[int, list[float]]]]):
     ]
 
 
+def _np_div(a, b):
+    """IEEE division: x/0 is ±inf and 0/0 is NaN, without a warning."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return a / b
+
+
 def _np_cos_matrix(V, cids, C, cnorms):
     """(n, K) cosines: dot / (row_norm * centroid_norm), in that
     arithmetic order."""
     nv = _np_seq_norm(V)
-    return _np_seq_dot_mat(V, C) / (nv[:, None] * cnorms[None, :])
+    return _np_div(_np_seq_dot_mat(V, C), nv[:, None] * cnorms[None, :])
 
 
 def _np_pq_encode(V, pq_tables):
     """(codes (n, m) int64, recon (n, d) float64) — per subspace the
     argmin squared-L2 code under Double.compare, ties to the lowest
     code id."""
-    import numpy as np
-
     n = V.shape[0]
     m = len(pq_tables)
     sub = pq_tables[0][1].shape[1]
@@ -1108,21 +1102,10 @@ def _ivf_assign_relation(
     top2: bool = False,
     codebooks: list[list[tuple[int, list[float]]]] | None = None,
 ) -> DataFrame:
-    """(out_id[, out_vec], cell[, _sim][, _c2][, _recon]) — one Arrow-
-    batched numpy pass computing the IVF cell assignment (argmax
-    cosine, ties to the lowest cid) and optionally the winning cosine,
-    the runner-up cosine (null when K < 2) and the PQ reconstruction."""
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from ..pyship import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
+    """(out_id[, out_vec], cell[, _sim][, _c2][, _recon]) — one Arrow
+    stage computing the IVF cell assignment (argmax cosine, ties to the
+    lowest cid) and optionally the winning cosine, the runner-up cosine
+    (NULL when K < 2) and the PQ reconstruction."""
     cids, C, cnorms = _centroid_np(centroids)
     pq_tables = _pq_tables_np(codebooks) if codebooks is not None else None
     k = len(centroids)
@@ -1137,45 +1120,33 @@ def _ivf_assign_relation(
         fields.append(StructField("_c2", DoubleType()))
     if pq_tables is not None:
         fields.append(StructField("_recon", ArrayType(DoubleType())))
-    src = df.select(
-        F.col(id_col).alias(out_id), F.col(vec_col).alias(out_vec)
+
+    def body(batch):
+        V = _np_vecs(batch.column(1), vec_col)
+        cos = _np_cos_matrix(V, cids, C, cnorms)
+        keys = _np_dkeys(cos)
+        rows = np.arange(len(V))
+        if top2:
+            order = np.argsort(~keys, axis=1, kind="stable")
+            b0 = order[:, 0]
+        else:
+            b0 = keys.argmax(axis=1)  # first max = lowest cid tie
+        out = [batch.column(0)]
+        if keep_vec:
+            out.append(batch.column(1))
+        out.append(cids[b0])
+        if with_sim:
+            out.append(cos[rows, b0])
+        if top2:
+            out.append(cos[rows, order[:, 1]] if k >= 2 else pa.nulls(len(V)))
+        if pq_tables is not None:
+            out.append(_np_lists(_np_pq_encode(V, pq_tables)[1]))
+        return out
+
+    src = df.select(F.col(id_col).alias(out_id), F.col(vec_col).alias(out_vec))
+    return arrow_stage(
+        src, "ivf_assign", StructType(fields), body, nonnull=(out_vec,)
     )
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = _np_stack_vecs(pdf[out_vec], vec_col)
-            cos = _np_cos_matrix(V, cids, C, cnorms)
-            keys = _np_dkeys(cos)
-            rows = np.arange(len(pdf))
-            if top2:
-                order = np.argsort(~keys, axis=1, kind="stable")
-                b0 = order[:, 0]
-            else:
-                b0 = keys.argmax(axis=1)  # first max = lowest cid tie
-            data = {out_id: pdf[out_id]}
-            if keep_vec:
-                data[out_vec] = pdf[out_vec]
-            data["cell"] = cids[b0]
-            if with_sim:
-                data["_sim"] = cos[rows, b0]
-            if top2:
-                data["_c2"] = (
-                    cos[rows, order[:, 1]] if k >= 2 else np.nan
-                )
-            out = pd.DataFrame(data)
-            if top2 and k < 2:
-                out["_c2"] = None
-            if pq_tables is not None:
-                _, recon = _np_pq_encode(V, pq_tables)
-                out["_recon"] = list(recon)
-            yield out
-
-    return src.mapInPandas(gen, schema=StructType(fields))
 
 
 def _ivf_probe_relation(
@@ -1190,11 +1161,6 @@ def _ivf_probe_relation(
 ) -> DataFrame:
     """(out_id, out_vec, cell) — the exploded n_probe nearest-centroid
     rows per query (cos DESC, cid ASC under Double.compare)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from ..pyship import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
     cids, C, cnorms = _centroid_np(centroids)
     n_probe = min(n_probe, len(centroids))
 
@@ -1205,30 +1171,20 @@ def _ivf_probe_relation(
             StructField("cell", LongType()),
         ]
     )
-    src = df.select(
-        F.col(id_col).alias(out_id), F.col(vec_col).alias(out_vec)
-    )
 
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
+    def body(batch):
+        V = _np_vecs(batch.column(1), vec_col)
+        keys = _np_dkeys(_np_cos_matrix(V, cids, C, cnorms))
+        order = np.argsort(~keys, axis=1, kind="stable")[:, :n_probe]
+        idx = np.repeat(np.arange(len(V)), n_probe)
+        return [
+            batch.column(0).take(idx),
+            batch.column(1).take(idx),
+            cids[order.reshape(-1)],
+        ]
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = _np_stack_vecs(pdf[out_vec], vec_col)
-            keys = _np_dkeys(_np_cos_matrix(V, cids, C, cnorms))
-            order = np.argsort(~keys, axis=1, kind="stable")[:, :n_probe]
-            idx = np.repeat(np.arange(len(pdf)), n_probe)
-            yield pd.DataFrame(
-                {
-                    out_id: pdf[out_id].iloc[idx].to_numpy(),
-                    out_vec: pdf[out_vec].iloc[idx].to_numpy(),
-                    "cell": cids[order.reshape(-1)],
-                }
-            )
-
-    return src.mapInPandas(gen, schema=schema)
+    src = df.select(F.col(id_col).alias(out_id), F.col(vec_col).alias(out_vec))
+    return arrow_stage(src, "ivf_probe", schema, body, nonnull=(out_vec,))
 
 
 def _lsh_bucket_relation(
@@ -1240,30 +1196,17 @@ def _lsh_bucket_relation(
     with_norm: bool = False,
 ) -> DataFrame:
     """(keep..., [_n,] _bucket) — the P-bit sign-bucket relation in one
-    Arrow-batched numpy pass (guide §4.2). Bit p is set iff the
+    Arrow stage (guide §4.2). Bit p is set iff the
     left-to-right fold of (x_d - mean) * component(p, d) is >= 0, with
     component(p, d) = (_HP_A*p + _HP_B*d) % _HP_MOD - (_HP_MOD-1)/2
     and mean the row's left-to-right component mean when ``center``
     (else 0); a NaN projection counts as non-negative, as Spark's
     NaN >= 0 does. ``with_norm`` adds the row norm (the :func:`norm`
     fold order)."""
-    import numpy as np
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from ..pyship import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
     fields = [df.schema[c] for c in keep]
     if with_norm:
         fields.append(StructField("_n", DoubleType()))
     fields.append(StructField("_bucket", LongType()))
-    src = df.select(*keep, F.col(vec_col).alias("_vec"))
     half = (_HP_MOD - 1) // 2
     # hyperplane component table in int64 arithmetic (a*p overflows
     # int32), exact as float64 (|component| <= 501001 << 2^53)
@@ -1274,39 +1217,33 @@ def _lsh_bucket_relation(
             - half
         ).astype(np.float64)
 
-    def gen(batches):
-        import pandas as pd
+    hp = {}  # dim -> (n_planes, dim) component table, per worker
 
-        hp = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = _np_stack_vecs(pdf["_vec"], vec_col)
-            n, d = V.shape
-            if hp is None or hp.shape[1] != d:
-                hp = np.stack([_hp_row(p, d) for p in range(n_planes)])
-            if center:
-                acc = np.zeros(n)
-                for j in range(d):
-                    acc = acc + V[:, j]
-                mean = acc / d
-            else:
-                mean = np.zeros(n)
-            bucket = np.zeros(n, dtype=np.int64)
-            for p in range(n_planes):
-                proj = np.zeros(n)
-                for j in range(d):
-                    proj = proj + (V[:, j] - mean) * hp[p, j]
-                # Spark comparison semantics: NaN >= 0 is TRUE
-                bit = (proj >= 0) | np.isnan(proj)
-                bucket += bit.astype(np.int64) << np.int64(p)
-            data = {c: pdf[c] for c in keep}
-            if with_norm:
-                data["_n"] = _np_seq_norm(V)
-            data["_bucket"] = bucket
-            yield pd.DataFrame(data)
+    def body(batch):
+        V = _np_vecs(batch.column("_vec"), vec_col)
+        n, d = V.shape
+        if d not in hp:
+            hp[d] = np.stack([_hp_row(p, d) for p in range(n_planes)])
+        if center:
+            acc = np.zeros(n)
+            for j in range(d):
+                acc = acc + V[:, j]
+            mean = acc / d
+        else:
+            mean = np.zeros(n)
+        bucket = np.zeros(n, dtype=np.int64)
+        for p in range(n_planes):
+            proj = np.zeros(n)
+            for j in range(d):
+                proj = proj + (V[:, j] - mean) * hp[d][p, j]
+            # Spark comparison semantics: NaN >= 0 is TRUE
+            bit = (proj >= 0) | np.isnan(proj)
+            bucket += bit.astype(np.int64) << np.int64(p)
+        norm = [_np_seq_norm(V)] if with_norm else []
+        return [*(batch.column(c) for c in keep), *norm, bucket]
 
-    return src.mapInPandas(gen, schema=StructType(fields))
+    src = df.select(*keep, F.col(vec_col).alias("_vec"))
+    return arrow_stage(src, "lsh_bucket", StructType(fields), body, nonnull=("_vec",))
 
 
 def _pairwise_score_relation(
@@ -1316,39 +1253,28 @@ def _pairwise_score_relation(
     "cos" (dot/(norm*norm)) or "l2" (squared L2) — and DROP the two
     vector columns; every other column passes through. Rounding stays
     JVM-side in the caller so F.round semantics are untouched."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from ..pyship import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
     keep = [f for f in df.schema.fields if f.name not in (a_col, b_col)]
-    names = [f.name for f in keep]
-    out_schema = StructType(list(keep) + [StructField(out_col, DoubleType())])
+    out_schema = StructType([*keep, StructField(out_col, DoubleType())])
 
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = _np_stack_vecs(pdf[a_col], a_col)
-            B = _np_stack_vecs(pdf[b_col], b_col)
-            if A.shape[1] != B.shape[1]:
-                raise ValueError(
-                    f"{a_col}/{b_col}: dim mismatch "
-                    f"{A.shape[1]} vs {B.shape[1]}"
-                )
-            if metric == "cos":
-                s = _np_seq_dot_pairs(A, B) / (
-                    _np_seq_norm(A) * _np_seq_norm(B)
-                )
-            elif metric == "l2":
-                s = _np_seq_l2_pairs(A, B)
-            else:  # pragma: no cover
-                raise ValueError(metric)
-            out = pdf[names].copy()
-            out[out_col] = s
-            yield out
+    def body(batch):
+        A = _np_vecs(batch.column(a_col), a_col)
+        B = _np_vecs(batch.column(b_col), b_col)
+        if A.shape[1] != B.shape[1]:
+            raise ValueError(
+                f"{a_col}/{b_col}: dim mismatch "
+                f"{A.shape[1]} vs {B.shape[1]}"
+            )
+        if metric == "cos":
+            s = _np_div(_np_seq_dot_pairs(A, B), _np_seq_norm(A) * _np_seq_norm(B))
+        elif metric == "l2":
+            s = _np_seq_l2_pairs(A, B)
+        else:  # pragma: no cover
+            raise ValueError(metric)
+        return [*(batch.column(f.name) for f in keep), s]
 
-    return df.mapInPandas(gen, schema=out_schema)
+    return arrow_stage(
+        df, "pairwise_score", out_schema, body, nonnull=(a_col, b_col)
+    )
 
 
 def ivf_cell_report(

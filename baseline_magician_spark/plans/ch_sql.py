@@ -108,7 +108,7 @@ _AGGS = {
     "sumstate", "summerge", "minstate", "minmerge",
     "maxstate", "maxmerge", "countstate", "countmerge",
     "avgstate", "avgmerge", "topk", "topkweighted",
-    # grouped-agg pandas UDAFs (functions/udaf.py, SURVEY §2.10)
+    # grouped-agg Arrow UDAFs (functions/udaf.py, SURVEY §2.10)
     "weightedavg", "geometricmean",
     # ANSI DISTINCT-qualified aggregates (count(DISTINCT x), ...)
     "count__distinct", "sum__distinct", "avg__distinct",

@@ -1,8 +1,9 @@
 """Ship this package to Python workers, and keep their per-task set-up cheap.
 
-Operators built on mapInPandas/pandas UDFs close over functions in this
-package; cloudpickle serializes those by reference, so every Python
-worker must be able to ``import baseline_magician_spark``. The driver
+Operators built on ``mapInArrow`` stages and ``arrow_udf`` kernels close
+over functions in this package; cloudpickle serializes those by
+reference, so every Python worker must be able to
+``import baseline_magician_spark``. The driver
 contract gives us a bare SparkSession (no PYTHONPATH guarantees), so any
 operator that runs Python on executors calls :func:`ensure_shipped`
 first — it zips the package once per SparkContext and registers it with

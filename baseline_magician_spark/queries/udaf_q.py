@@ -1,4 +1,4 @@
-"""Grouped-agg pandas UDAF queries (SURVEY §2.10 — the surface the
+"""Grouped-agg Arrow UDAF queries (SURVEY §2.10 — the surface the
 reference lacks entirely; its UDF registry is scalar-only,
 gov/expressionFunctions.go:1-9).
 

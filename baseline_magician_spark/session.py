@@ -4,9 +4,9 @@ Local-mode defaults mirror what we would set on a real cluster:
 AQE on (runtime re-plan, skew-join handling, partition coalescing),
 UTC session timezone (required for oracle comparison vs DuckDB),
 Arrow for driver-side pandas conversions (``toPandas``,
-``createDataFrame`` from pandas). The Python stages (pandas UDFs and
-UDAFs, ``mapInArrow`` and ``arrow_udf`` kernels) always cross in Arrow
-batches.
+``createDataFrame`` from pandas). The Python stages (``mapInArrow``
+operators, ``arrow_udf`` kernels and grouped-agg UDAFs) always cross in
+Arrow batches.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """BPE training/encoding: fold semantics, train determinism, and the
-Column-vs-pandas encoder A/B pin (the CDC pandas≡JVM pattern)."""
+rank-order encode against the min-rank fixpoint."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from baseline_magician_spark.operators.bpe import (
     bpe_encode,
-    bpe_encode_pandas,
     bpe_train,
     bpe_vocab,
     doc_token_counts,
@@ -134,28 +133,7 @@ def test_encode_column_equals_training_replay(spark):
     assert got == want
 
 
-def test_encode_pandas_equals_column_path(spark):
-    from baseline_magician_spark.catalog import load_for_compute
-
-    docs = load_for_compute(spark, SF_SMOKE, "documents")
-    vocab = bpe_vocab(docs)
-    merges, _ = bpe_train(vocab, 10)
-    jvm = {
-        r["word"]: r["syms"]
-        for r in vocab.select(
-            "word", bpe_encode(F.col("word"), merges).alias("syms")
-        ).collect()
-    }
-    pd_path = {
-        r["word"]: r["syms"]
-        for r in bpe_encode_pandas(
-            vocab.select("word"), merges
-        ).collect()
-    }
-    assert jvm == pd_path
-
-
-def test_encode_pandas_min_rank_fixpoint_edge(spark):
+def test_encode_min_rank_fixpoint_edge(spark):
     """A later merge must not unlock an earlier one (rank-order
     single pass == min-rank fixpoint): construct the classic case
     where pair (1) 'e'+'r' and (2) 'er'+'t' interact in 'erert'."""
@@ -169,11 +147,6 @@ def test_encode_pandas_min_rank_fixpoint_edge(spark):
             "word", bpe_encode(F.col("word"), merges).alias("syms")
         ).collect()
     }
-    pd_path = {
-        r["word"]: r["syms"]
-        for r in bpe_encode_pandas(words, merges).collect()
-    }
-    assert jvm == pd_path
     # rank 2 (er+t) outranks rank 3 (er+er): e r e r t -> [er, er, t]
     # -> [er, ert]; the rank-3 merge then finds no (er, er) adjacency
     assert jvm["erert"] == ["er", "ert"]

@@ -109,12 +109,40 @@ def test_memoized_events_load_equals_uncached_read(spark, tmp_path, source):
 def test_another_application_infers_again(spark, monkeypatch):
     catalog.load_table(spark, SF_SMOKE, "nation")
     assert _jobs(spark, lambda: catalog.load_table(spark, SF_SMOKE, "nation")) == 0
-    sc_type = type(spark.sparkContext)
     other = f"{spark.sparkContext.applicationId}-next"
-    monkeypatch.setattr(sc_type, "applicationId", property(lambda self: other))
+    monkeypatch.setitem(catalog._APP_IDS, spark.sparkContext, other)
     assert _jobs(spark, lambda: catalog.load_table(spark, SF_SMOKE, "nation")) == 1
     assert catalog._file_key(other, f"{SF_SMOKE}/nation.parquet") in catalog._SCHEMAS
     monkeypatch.undo()
     for k in [k for k in catalog._SCHEMAS if k[0] == other]:
         del catalog._SCHEMAS[k]
     catalog._SESSION_CONFED.discard(other)
+
+
+def _gateway_commands(spark, monkeypatch, call) -> int:
+    """py4j gateway commands sent while ``call()`` runs, not counting
+    the object releases Python's garbage collector fires."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counted(command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    call()
+    monkeypatch.undo()
+    return len(sent)
+
+
+def test_warm_load_reads_no_application_id(spark, monkeypatch):
+    """The application id is fixed per SparkContext; a warm load takes it
+    from the per-context memo instead of two gateway commands."""
+    catalog.load_table(spark, SF_SMOKE, "nation")
+    n = _gateway_commands(
+        spark, monkeypatch, lambda: catalog.load_table(spark, SF_SMOKE, "nation")
+    )
+    assert n == 8, n
+    assert catalog._APP_IDS[spark.sparkContext] == spark.sparkContext.applicationId

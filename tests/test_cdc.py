@@ -253,3 +253,21 @@ def test_duplication_ratio_bounds_and_signal(spark):
         r = got[i]
         assert (r["dup_chars"], r["n_dup_chunks"]) == (sum(dup), len(dup)), i
         assert abs(r["dup_ratio"] - sum(dup) / len(t)) <= 5e-7, i
+
+
+def test_null_text_and_null_ids(spark):
+    """A NULL text has no chunks, like an empty one; string ids (a NULL,
+    an empty and a non-BMP one among them) come back as their Arrow
+    values, with the model's spans."""
+    rows = [
+        (None, DOC),
+        ("", "short \U0001f600 text with an astral char " * 3),
+        ("\U0001f600", "é世" * 50),
+        ("null-text", None),
+        ("empty-text", ""),
+    ]
+    df = spark.createDataFrame(rows, "doc_id string, text string").coalesce(1)
+    got = sorted((tuple(r) for r in cdc_chunks(df).collect()), key=repr)
+    want = sorted((r for i, t in rows if t for r in ref_chunks(i, t)), key=repr)
+    assert got == want
+    assert {r[0] for r in got} == {None, "", "\U0001f600"}

@@ -156,3 +156,27 @@ def test_simhash_relation(adv_df, docs):
     for bits in (30, 20):
         got = _rows(simhash_relation(docs, "text", "doc_id", bits=bits))
         assert got == _rows(_simhash_expr(docs, bits))
+
+
+def test_string_and_null_ids_adversarial(spark):
+    """String ids (empty and non-BMP among them) and a NULL id pass
+    through every text kernel as their Arrow values; a NULL text reads
+    as empty for the shingle kernels and gives a NULL SimHash."""
+    ids = ["", "\U0001f600", None, "é"]  # ids of ADVERSARIAL's first 4 rows
+    df = spark.createDataFrame(
+        [(ids[i] if i < len(ids) else f"id-{d}", t) for i, (d, t) in enumerate(ADVERSARIAL)],
+        "doc_id string, text string",
+    ).coalesce(1)
+
+    def rows(d):
+        return sorted((tuple(r) for r in d.collect()), key=repr)
+
+    assert rows(minhash_band_relation(df, "text", "doc_id")) == sorted(ref_bands(df), key=repr)
+    want = df.select(
+        F.col("doc_id").alias("_id"), F.explode(shingle_hashes("text", 3)).alias("h")
+    )
+    assert rows(shingle_hash_relation(df, "text", "doc_id")) == rows(want)
+    got = rows(simhash_relation(df, "text", "doc_id"))
+    assert got == rows(_simhash_expr(df, 30))
+    assert ("é", None) in got  # NULL text -> NULL fingerprint
+    assert (None, (1 << 30) - 1) in got  # NULL id, empty text

@@ -5,8 +5,8 @@ selects one. Each CH hash has one rendering too, the Arrow kernel: no
 Spark-SQL text twin chooser (``col_sql``), no ANSI-off analysis scope
 (``wrap_arith``) and no model module that imports pyspark. Likewise no
 caller picks a join strategy (the IP-range join, the dialect's
-broadcast-right joins), a CDC setting or a media-stage setting. The
-media operators run on one Arrow stage shape, each ClickHouse
+broadcast-right joins), a CDC setting or a media-stage setting. Every
+Python operator runs on one Arrow stage shape, each ClickHouse
 function name is registered once, and the package reads no ``BMS_*``
 environment variable."""
 
@@ -130,26 +130,29 @@ def test_one_hash_rendering():
         assert not [m for m in imported if m.startswith("pyspark")], name
 
 
-def test_media_operators_are_one_arrow_stage():
-    """operators/multimodal.py has no pandas boundary: no ``mapInPandas``,
-    no pandas import, and exactly one ``mapInArrow`` call (its stage
-    helper)."""
-    src = (PKG / "operators" / "multimodal.py").read_text()
-    tree = ast.parse(src)
-    imported = [
-        a.name if isinstance(n, ast.Import) else (n.module or "")
-        for n in ast.walk(tree)
-        if isinstance(n, (ast.Import, ast.ImportFrom))
-        for a in n.names
-    ]
-    assert not [m for m in imported if m.split(".")[0] == "pandas"], imported
-    assert "mapInPandas" not in src
-    calls = [
-        n.func.attr
-        for n in ast.walk(tree)
-        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
-    ]
-    assert calls.count("mapInArrow") == 1, calls.count("mapInArrow")
+def test_python_operators_are_one_arrow_stage():
+    """The package has no pandas boundary: no ``mapInPandas``, no
+    ``pandas_udf``, no pandas import outside ``streaming/stateful.py``
+    (its ``applyInPandasWithState`` operators), and exactly one
+    ``mapInArrow`` call, in the stage helper every Python operator
+    builds on."""
+    stage_calls, pandas_imports, named = [], [], []
+    for p in sorted(PKG.rglob("*.py")):
+        rel = str(p.relative_to(PKG))
+        src = p.read_text()
+        named += [f"{rel}: {w}" for w in ("mapInPandas", "pandas_udf") if w in src]
+        for n in ast.walk(ast.parse(src)):
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute):
+                if n.func.attr == "mapInArrow":
+                    stage_calls.append(f"{rel}:{n.lineno}")
+            if isinstance(n, (ast.Import, ast.ImportFrom)):
+                mods = [a.name for a in n.names] if isinstance(n, ast.Import) else [n.module or ""]
+                if any(m.split(".")[0] == "pandas" for m in mods):
+                    pandas_imports.append(f"{rel}:{n.lineno}")
+    assert not named, named
+    assert all(x.startswith("streaming/stateful.py:") for x in pandas_imports), pandas_imports
+    assert len(stage_calls) == 1, stage_calls
+    assert stage_calls[0].startswith("operators/_arrow_stage.py:"), stage_calls
 
 
 def _ch_registrations() -> list[tuple[str, int]]:

@@ -485,7 +485,7 @@ def test_int8_topk_broadcasts_queries_and_stays_jvm(spark, queries):
     plan = plan_of(queries["similarity_int8_topk"](spark, SF_ORACLE))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "MapInPandas" not in plan
+    assert "MapIn" not in plan  # neither MapInPandas nor MapInArrow
 
 
 def test_bigram_lm_broadcasts_vocab_tables(spark, queries):
@@ -517,7 +517,7 @@ def test_round7b_functions_map_side_only(spark, queries):
     plan = plan_of(queries["ch_sql_round7b_functions"](spark, SF_ORACLE))
     assert "Join" not in plan, plan[:1500]
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "MapInPandas" not in plan
+    assert "MapIn" not in plan  # neither MapInPandas nor MapInArrow
 
 
 def test_base58_is_one_jvm_projection(spark, queries):

@@ -46,8 +46,17 @@ def ref_norm(a):
     return math.sqrt(fold(x * x for x in a))
 
 
+def ieee_div(a: float, b: float) -> float:
+    """a / b in IEEE arithmetic: x/0 is ±inf and 0/0 NaN, where Python
+    raises."""
+    import numpy as np
+
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return float(np.float64(a) / np.float64(b))
+
+
 def ref_cos(a, b):
-    return fold(x * y for x, y in zip(a, b)) / (ref_norm(a) * ref_norm(b))
+    return ieee_div(fold(x * y for x, y in zip(a, b)), ref_norm(a) * ref_norm(b))
 
 
 def ref_l2(a, b):
@@ -94,8 +103,7 @@ def _mkvec(seed: int) -> list[float]:
 def emb(spark):
     rows = [(i, _mkvec(i)) for i in range(64)]
     # an exact duplicate (cosine ties) and a negated duplicate (cosine
-    # -1 ties). NO zero vector: a zero norm divides by zero, which is
-    # out of contract for the cosine operators.
+    # -1 ties); the zero vector and other edge values are in ADV below
     rows.append((64, rows[10][1]))
     rows.append((66, [-x for x in rows[12][1]]))
     df = spark.createDataFrame(rows, "vec_id long, v array<float>")
@@ -252,6 +260,112 @@ def test_on_real_embeddings(spark):
         ),
         [(i, ref_bucket(v, 8, True)) for i, v in vecs.items()],
     )
+
+
+# --------------------------------------------------- adversarial rows
+NAN, INF = float("nan"), float("inf")
+ADV = {
+    # a zero-norm vector: every cosine is 0/0 = NaN, kept as NaN
+    "zero": [0.0] * DIM,
+    "neg-zero": [-0.0] * DIM,
+    "signed-zeros": [0.0, -0.0] * (DIM // 2),
+    "nan-element": [NAN] + [0.5] * (DIM - 1),
+    "inf-element": [INF] + [-0.5] * (DIM - 1),
+    "tiny": [5e-324, -5e-324] * (DIM // 2),
+    "\U0001f600 astral id": _mkvec(3),
+    "": _mkvec(5),  # the empty string is an id like any other
+}
+
+
+@pytest.fixture(scope="module")
+def adv(spark):
+    return spark.createDataFrame(
+        list(ADV.items()), "vec_id string, embedding array<double>"
+    ).coalesce(1)
+
+
+def test_adversarial_rows_equal_the_folds(adv, cents, books):
+    _pin(
+        _ivf_assign_relation(
+            adv, cents, "vec_id", "embedding", with_sim=True, top2=True,
+            codebooks=books,
+        ),
+        [
+            (i, r[0][1], r[0][0], r[1][0], ref_pq(v, books)[1])
+            for i, v in ADV.items()
+            for r in [ref_ranked(v, cents)]
+        ],
+    )
+    _pin(
+        _ivf_probe_relation(adv, cents, 3, "vec_id", "embedding"),
+        [(i, v, cid) for i, v in ADV.items() for _c, cid in ref_ranked(v, cents)[:3]],
+    )
+    _pin(pq_encode(adv, books), [(i, *ref_pq(v, books)) for i, v in ADV.items()])
+    for center in (False, True):
+        _pin(
+            _lsh_bucket_relation(
+                adv, keep=("vec_id",), vec_col="embedding", center=center,
+                with_norm=True,
+            ),
+            [(i, ref_norm(v), ref_bucket(v, 8, center)) for i, v in ADV.items()],
+        )
+    pairs = adv.crossJoin(adv.select(F.col("vec_id").alias("q"), F.col("embedding").alias("qv")))
+    for metric, ref in (("cos", ref_cos), ("l2", ref_l2)):
+        _pin(
+            _pairwise_score_relation(pairs, "embedding", "qv", "_s", metric),
+            [(i, j, ref(a, b)) for i, a in ADV.items() for j, b in ADV.items()],
+        )
+
+
+def test_zero_vector_cosine_is_nan_not_null(adv, cents):
+    sims = {
+        r["_id"]: r["_sim"]
+        for r in _ivf_assign_relation(
+            adv, cents, "vec_id", "embedding", with_sim=True
+        ).collect()
+    }
+    assert sims["zero"] is not None and math.isnan(sims["zero"])
+    scores = _pairwise_score_relation(
+        adv.where(F.col("vec_id") == "zero").withColumn("qv", F.col("embedding")),
+        "embedding", "qv", "_s", "cos",
+    ).collect()
+    assert scores[0]["_s"] is not None and math.isnan(scores[0]["_s"])
+
+
+KERNELS = {
+    "ivf_assign": lambda df, c, b: _ivf_assign_relation(df, c, "vec_id", "embedding"),
+    "ivf_probe": lambda df, c, b: _ivf_probe_relation(df, c, 2, "vec_id", "embedding"),
+    "pq_encode": lambda df, c, b: pq_encode(df, b),
+    "lsh_bucket": lambda df, c, b: _lsh_bucket_relation(
+        df, keep=("vec_id",), vec_col="embedding"
+    ),
+    "pairwise_score": lambda df, c, b: _pairwise_score_relation(
+        df.withColumn("qv", F.col("embedding")), "embedding", "qv", "_s", "l2"
+    ),
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(KERNELS))
+@pytest.mark.parametrize(
+    "bad,error",
+    [
+        (None, r"ValueError: {kernel}: \w+ is NULL"),
+        ([1.0, None] + [0.0] * (DIM - 2), "NULL vector element"),
+        ([1.0] * (DIM - 1), "ragged vectors"),
+    ],
+    ids=["null-vector", "null-element", "ragged"],
+)
+def test_bad_vectors_raise(spark, cents, books, kernel, bad, error):
+    """A NULL vector raises the stage's named error; a NULL element or a
+    ragged batch raises in the vector reader. None of them reads as
+    zeros or NaN."""
+    from pyspark.errors import PythonException
+
+    df = spark.createDataFrame(
+        [(1, _mkvec(1)), (2, bad)], "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    with pytest.raises(PythonException, match=error.format(kernel=kernel)):
+        KERNELS[kernel](df, cents, books).collect()
 
 
 def test_dkeys_total_order():
